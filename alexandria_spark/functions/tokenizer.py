@@ -105,15 +105,19 @@ def token_counts(text: pd.Series) -> pd.DataFrame:
             }
         )
     doc_lens = np.bincount(row_idx, minlength=len(text)).astype(np.int64)
-    df = pd.DataFrame({"row": row_idx, "term": words})
-    grouped = df.groupby(["row", "term"], sort=False).size().reset_index(name="tf")
-    # hash unique terms once, then map back
-    uniq, inv = np.unique(grouped["term"].to_numpy(), return_inverse=True)
-    ids = to_i64(murmur2_64(uniq))
-    grouped["term_id"] = ids[inv]
-    grouped["doc_len"] = doc_lens[grouped["row"].to_numpy()]
-    grouped["tf"] = grouped["tf"].astype(np.int64)
-    return grouped[["row", "term", "term_id", "tf", "doc_len"]]
+    # group on integer term codes: pandas' string hash tables compare C
+    # strings, so tokens differing only after an embedded NUL ("\x00" vs
+    # "\x000") would merge into one group. np.unique compares Python str.
+    uniq, inv = np.unique(words, return_inverse=True)
+    keys, tf = np.unique(row_idx * len(uniq) + inv, return_counts=True)
+    rows, codes = np.divmod(keys, len(uniq))
+    return pd.DataFrame({
+        "row": rows,
+        "term": uniq[codes],
+        "term_id": to_i64(murmur2_64(uniq))[codes],
+        "tf": tf.astype(np.int64),
+        "doc_len": doc_lens[rows],
+    })
 
 
 def query_terms(query: str, limit: int = 10,

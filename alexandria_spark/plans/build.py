@@ -251,6 +251,26 @@ BLOCK_SCHEMA = StructType(
 )
 
 
+# the partition columns each block table adds to BLOCK_SCHEMA; ``shard``
+# is already a BLOCK_SCHEMA column (a partition column of postings and
+# postings_impact, a data column of postings_doc)
+BLOCK_TABLE_PARTITIONS = {
+    "postings": ("wave",),
+    "postings_impact": (),
+    "postings_doc": ("bucket",),
+}
+
+
+def block_read_schema(table: str) -> StructType:
+    """The explicit read schema of a block table. A read that passes it
+    skips Spark's parquet schema inference (a one-task job per read), and an
+    empty table reads as an empty relation with every column."""
+    return StructType(
+        BLOCK_SCHEMA.fields
+        + [StructField(c, IntegerType()) for c in BLOCK_TABLE_PARTITIONS[table]]
+    )
+
+
 SCORED_POSTING_SCHEMA = StructType(
     [
         StructField("term_id", LongType()),
@@ -454,19 +474,10 @@ class Index:
         return EngineConfig(**self.meta()["config"])
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        # an empty build writes no files; surface an empty, correctly-typed
-        # relation instead of a schema-inference error
-        has_files = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(self.postings_path)
-            for f in files
-        ) if os.path.isdir(self.postings_path) else False
-        if not has_files:
-            empty = spark.createDataFrame([], BLOCK_SCHEMA)
-            return empty.withColumn("wave", F.lit(0)).select(
-                *BLOCK_SCHEMA.fieldNames(), "wave"
-            )
-        return spark.read.parquet(self.postings_path)
+        schema = block_read_schema(os.path.basename(self.postings_path))
+        if not os.path.isdir(self.postings_path):
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(self.postings_path)
 
     def doc_lengths(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.path, "doc_lengths"))
@@ -623,7 +634,8 @@ def build_index(
         if len(pdf) > gate:
             stats_df = agg.persist()
             stats_df.where(F.col("kind") == 0).select(
-                F.col("key").alias("doc_id"), F.col("val").alias("doc_len"),
+                F.col("key").alias("doc_id"),
+                F.col("val").cast("int").alias("doc_len"),
                 F.lit(0).cast("long").alias("version"),
             ).write.mode("overwrite").parquet(dl_path)
             stats_df.where(F.col("kind") == 1).select(
@@ -643,8 +655,12 @@ def build_index(
             import numpy as _np
 
             for p, tbl in (
-                (dl_path, pa.table({"doc_id": dl_pd["key"], "doc_len": dl_pd["val"],
-                                    "version": _np.zeros(len(dl_pd), dtype=_np.int64)})),
+                (dl_path, pa.table({
+                    "doc_id": dl_pd["key"],
+                    # INT like term_doc.doc_len and every other doc_lengths
+                    # writer: mixed widths cannot be schema-merged
+                    "doc_len": dl_pd["val"].to_numpy(_np.int32),
+                    "version": _np.zeros(len(dl_pd), dtype=_np.int64)})),
                 (ts_path, pa.table({"term_id": ts_pd["key"], "df": ts_pd["val"]})),
             ):
                 os.makedirs(p, exist_ok=True)
@@ -717,8 +733,10 @@ def build_index(
 
     if not materialize_stage1:
         term_doc.unpersist()
+    from alexandria_spark.plans.delete import resolve_deletes
     from alexandria_spark.plans.snapshots import commit_snapshot
 
     commit_snapshot(index_path, "build",
                     {"run_id": run_id, "n_docs": n_docs, "waves": cfg.build_waves})
+    resolve_deletes(spark, idx)  # doc_lengths changed under any tombstones
     return idx

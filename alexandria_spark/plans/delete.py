@@ -6,12 +6,24 @@ offline. The Spark-native equivalent: deletes append doc ids to a tombstone
 table (query paths anti-filter it — cheap, immediate), and ``compact``
 physically rebuilds postings + stats from the retained documents (BM25
 refreshes, like the reference's calculate_scores after a rebuild).
+
+Which tombstoned docs are hidden depends on doc_lengths too (a re-ingested,
+refreshed doc escapes its tombstone), so the writers resolve the effective
+set once per state and store it; queries read that file instead of joining
+tombstones to doc_lengths on every call — as the reference's readers take
+their deletions from already-built state (index_reader.cpp:59-89).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -20,9 +32,31 @@ from alexandria_spark.plans.build import Index
 from alexandria_spark.plans.checkpoint import atomic_swap_dir, recover_swap
 from alexandria_spark.plans.merge import rebuild_from_term_doc
 
+# The effective hidden set, resolved by the writers: the doc ids sorted in
+# unsigned order, with the state they were resolved from in the file's
+# metadata. Spark skips "_"-prefixed files, so tombstone reads never see it,
+# and compact's rmtree of the tombstone directory removes it with them.
+EFFECTIVE_FILE = "_effective.parquet"
+_STAMP_KEY = b"alexandria.resolved_from"
+
+# resolved sets up to this size are shipped through the driver (a broadcast
+# anti-join, the driver-side drops); past it (a mass deletion at scale) the
+# anti-join is planned over the tombstone tables and AQE picks the join
+_BROADCAST_DELETES_MAX_BYTES = 64 * 1024 * 1024
+
+# resolved sets up to this many ids ride the plan as a NOT IN literal list
+# (Catalyst's InSet: no job); larger ones anti-join a broadcast local
+# relation, whose broadcast is one small job. On 4 cores the two cost the
+# same near 1-2k ids; below that the literal list is 30-100 ms cheaper.
+_INLINE_DELETES_MAX = 1024
+
 
 def deletes_path(index: Index) -> str:
     return os.path.join(index.path, "deletes")
+
+
+def effective_path(index: Index) -> str:
+    return os.path.join(deletes_path(index), EFFECTIVE_FILE)
 
 
 def delete_docs(spark: SparkSession, index: Index, doc_ids) -> None:
@@ -31,16 +65,38 @@ def delete_docs(spark: SparkSession, index: Index, doc_ids) -> None:
     The tombstone records the CURRENT ingest version — "delete every
     version up to and including v" (the reference hash table's versioned
     remove). A later re-ingest gets a higher version and escapes the
-    tombstone, so delete→re-ingest needs no interposed compact."""
+    tombstone, so delete→re-ingest needs no interposed compact.
+
+    Each call appends one tombstone file, then re-resolves the effective
+    set. The old resolved file goes first, so a crash in between leaves no
+    set that claims to be current."""
     from alexandria_spark.plans.versioning import current_version
 
     v = current_version(index.path)
+    d = deletes_path(index)
+    os.makedirs(d, exist_ok=True)
+    try:
+        os.remove(effective_path(index))
+    except FileNotFoundError:
+        pass
     if isinstance(doc_ids, DataFrame):
-        df = doc_ids.select("doc_id")
+        doc_ids.select("doc_id").withColumn(
+            "version", F.lit(v).cast("long")
+        ).coalesce(1).write.mode("append").parquet(d)
     else:
-        df = spark.createDataFrame([(int(d),) for d in doc_ids], ["doc_id"])
-    df.withColumn("version", F.lit(v).cast("long")).write.mode(
-        "append").parquet(deletes_path(index))
+        ids = np.array([int(x) for x in doc_ids], dtype=np.int64)
+        _write_atomic(pa.table({"doc_id": ids,
+                                "version": np.full(len(ids), v, np.int64)}),
+                      os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+    resolve_deletes(spark, index)
+
+
+def _write_atomic(table: pa.Table, path: str) -> None:
+    """Write ``table`` so that ``path`` appears complete in one rename; the
+    temporary name starts with "." so no reader lists it."""
+    tmp = os.path.join(os.path.dirname(path), f".{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
 
 
 def load_tombstones(spark: SparkSession, index: Index) -> DataFrame | None:
@@ -48,16 +104,16 @@ def load_tombstones(spark: SparkSession, index: Index) -> DataFrame | None:
     physical paths (compact / doc-store GC) filter rows against. Tombstone
     files written before versioning read as LEGACY_DELETE_VERSION (hide
     every version until a compact clears them)."""
-    from alexandria_spark.plans.versioning import LEGACY_DELETE_VERSION
+    from alexandria_spark.plans.versioning import (
+        ID_VERSION_SCHEMA,
+        LEGACY_DELETE_VERSION,
+    )
 
     p = deletes_path(index)
     if not os.path.exists(p):
         return None
-    df = spark.read.parquet(p)
-    if "version" not in df.columns:
-        df = df.withColumn("version", F.lit(LEGACY_DELETE_VERSION))
-    return df.groupBy("doc_id").agg(
-        F.coalesce(F.max("version"), F.lit(LEGACY_DELETE_VERSION))
+    return spark.read.schema(ID_VERSION_SCHEMA).parquet(p).groupBy("doc_id").agg(
+        F.max(F.coalesce(F.col("version"), F.lit(LEGACY_DELETE_VERSION)))
         .alias("del_version")
     )
 
@@ -67,9 +123,11 @@ def load_deletes(spark: SparkSession, index: Index) -> DataFrame | None:
     last-refreshed doc_lengths) is <= their tombstoned version. A doc
     re-ingested at a higher version AND folded in by a refresh escapes its
     tombstone; one re-ingested but not yet refreshed stays hidden (its
-    servable postings are still the old content). Returns (doc_id) rows —
-    every serving path anti-joins / sorted-array-drops this set unchanged."""
-    from alexandria_spark.plans.versioning import read_versioned
+    servable postings are still the old content). Returns (doc_id) rows.
+    This is the Spark resolution; serving paths take the set through
+    ``effective_deletes`` / ``filter_deleted``, which read the copy the
+    writers resolved."""
+    from alexandria_spark.plans.versioning import read_doc_versions
 
     tombs = load_tombstones(spark, index)
     if tombs is None:
@@ -79,38 +137,140 @@ def load_deletes(spark: SparkSession, index: Index) -> DataFrame | None:
         return tombs.select("doc_id")
     # slim two-column scan of doc_lengths joined to the (small) tombstone
     # set; output is at most the tombstone count
-    dl = read_versioned(spark, dl_path).select(
+    dl = read_doc_versions(spark, dl_path).select(
         "doc_id", F.col("version").alias("cur_version"))
-    eff = (
+    return (
         tombs.join(dl, "doc_id", "left")
         .where(F.col("cur_version").isNull()
                | (F.col("cur_version") <= F.col("del_version")))
         .select("doc_id")
     )
-    return eff
 
 
-# tombstone files up to this size get the broadcast hint; past it (a mass
-# deletion at scale) the anti-join falls back to Catalyst/AQE's own join
-# choice instead of forcing a giant broadcast through the driver
-_BROADCAST_DELETES_MAX_BYTES = 64 * 1024 * 1024
+def _visible_files(d: str) -> list[list]:
+    """[name, size, mtime_ns] of each file a Spark read of ``d`` sees (it
+    skips "_" and "." names); [] when ``d`` is missing. A file that vanishes
+    while listed gets size -1, which no stamp carries."""
+    try:
+        names = sorted(os.listdir(d))
+    except FileNotFoundError:
+        return []
+    out = []
+    for n in names:
+        if n.startswith(("_", ".")):
+            continue
+        try:
+            st = os.stat(os.path.join(d, n))
+            out.append([n, st.st_size, st.st_mtime_ns])
+        except FileNotFoundError:
+            out.append([n, -1, -1])
+    return out
 
 
-def _deletes_small(index: Index) -> bool:
-    from alexandria_spark.plans.checkpoint import parquet_dir_bytes
+def _state(index: Index) -> dict | None:
+    """The state the effective set is resolved from: the tombstone files
+    and the doc_lengths files. None when nothing is tombstoned."""
+    tombs = _visible_files(deletes_path(index))
+    if not tombs:
+        return None
+    return {"deletes": tombs,
+            "doc_lengths": _visible_files(os.path.join(index.path, "doc_lengths"))}
 
-    return parquet_dir_bytes(deletes_path(index)) <= _BROADCAST_DELETES_MAX_BYTES
+
+def _resolve(spark: SparkSession, index: Index) -> np.ndarray:
+    """The Spark resolution, collected: sorted unsigned doc ids."""
+    dels = load_deletes(spark, index)
+    if dels is None:
+        return np.empty(0, np.uint64)
+    # Arrow toPandas, not collect(): Row objects cost ~100x the numpy bytes
+    return np.sort(dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64))
+
+
+def resolve_deletes(spark: SparkSession, index: Index) -> None:
+    """Resolve the effective set with Spark and store it as one small
+    parquet file, stamped with the state it was resolved from. Every writer
+    of the tombstones or of doc_lengths calls it after its change, so
+    readers load the set without a Spark job. Commits that leave both alone
+    (derived layouts, stream appends) keep the stamp valid. A no-op while
+    nothing is tombstoned."""
+    state = _state(index)
+    if state is None:
+        return
+    ids = _resolve(spark, index)
+    table = pa.table({"doc_id": ids.view(np.int64)})
+    _write_atomic(
+        table.replace_schema_metadata({_STAMP_KEY: json.dumps(state)}),
+        effective_path(index))
+
+
+def _load_resolved(index: Index, state: dict) -> np.ndarray | None:
+    """The resolved set when its stamp matches ``state``, else None."""
+    try:
+        table = pq.read_table(effective_path(index))
+    except (OSError, pa.ArrowInvalid):
+        return None
+    stamp = (table.schema.metadata or {}).get(_STAMP_KEY)
+    if stamp is None or json.loads(stamp) != state:
+        return None
+    return table.column("doc_id").to_numpy().view(np.uint64)
+
+
+def effective_deletes(spark: SparkSession, index: Index) -> np.ndarray:
+    """The effective hidden set as sorted unsigned doc ids (empty when
+    nothing is tombstoned). Read with pyarrow when the writers' resolved
+    file matches the current state; otherwise (a crash before the resolve,
+    tombstones from before resolved sets existed) resolved with Spark —
+    slower, never wrong. Readers never write the file."""
+    state = _state(index)
+    if state is None:
+        return np.empty(0, np.uint64)
+    ids = _load_resolved(index, state)
+    return ids if ids is not None else _resolve(spark, index)
+
+
+def deletes_small(index: Index) -> bool:
+    """The mass-deletion gate: may the effective set pass through the
+    driver? One stat of the resolved file. Tombstones without a resolved
+    file count as large, so callers take the distributed path, which is
+    exact at any size."""
+    try:
+        return os.stat(effective_path(index)).st_size <= _BROADCAST_DELETES_MAX_BYTES
+    except FileNotFoundError:
+        return not os.path.exists(deletes_path(index))
+
+
+def drop_deleted(docs_u: np.ndarray, scores: np.ndarray,
+                 deleted_u: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Drop the sorted unsigned ``deleted_u`` from unsigned doc ids and
+    their scores — the driver-side tombstone filter of search_bmw, the
+    impact walks and LocalIndex."""
+    if len(deleted_u) == 0 or len(docs_u) == 0:
+        return docs_u, scores
+    pos = np.minimum(np.searchsorted(deleted_u, docs_u), len(deleted_u) - 1)
+    keep = deleted_u[pos] != docs_u
+    return docs_u[keep], scores[keep]
 
 
 def filter_deleted(spark: SparkSession, index: Index, results: DataFrame) -> DataFrame:
-    """Anti-join results against the tombstones (no-op without any). Small
-    tombstone sets broadcast; large ones let AQE pick the join strategy."""
-    dels = load_deletes(spark, index)
-    if dels is None:
+    """Anti-join results against the effective deletes (no-op without any).
+    A resolved set filters as a literal list or joins as a broadcast local
+    relation; a stale or missing one is resolved inside the plan, and a mass
+    deletion's join strategy is left to AQE."""
+    state = _state(index)
+    if state is None:
         return results
-    if _deletes_small(index):
-        dels = F.broadcast(dels)
-    return results.join(dels, "doc_id", "left_anti")
+    small = deletes_small(index)
+    ids = _load_resolved(index, state) if small else None
+    if ids is None:
+        dels = load_deletes(spark, index)
+    elif len(ids) == 0:
+        return results
+    elif len(ids) <= _INLINE_DELETES_MAX:
+        listed = ",".join(map(str, ids.view(np.int64).tolist()))
+        return results.where(F.expr(f"doc_id NOT IN ({listed})"))
+    else:
+        dels = spark.createDataFrame(pd.DataFrame({"doc_id": ids.view(np.int64)}))
+    return results.join(F.broadcast(dels) if small else dels, "doc_id", "left_anti")
 
 
 def compact(spark: SparkSession, index: Index,
@@ -151,7 +311,7 @@ def compact(spark: SparkSession, index: Index,
     if vmin != vmax:
         td = latest_versions_only(td)
     if dels is not None:
-        if _deletes_small(index):
+        if deletes_small(index):
             dels = F.broadcast(dels)
         td = td.join(dels, "doc_id", "left").where(
             F.col("del_version").isNull()

@@ -42,6 +42,7 @@ from alexandria_spark.plans.build import (
     corpus_stats_pass,
     tokenize_docs,
 )
+from alexandria_spark.plans.delete import filter_deleted
 from alexandria_spark.plans.query import (
     RESULT_SCHEMA,
     _query_term_ids,
@@ -58,10 +59,9 @@ class DocPartitionedIndex(Index):
         return os.path.join(self.path, "postings_doc")
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        # distinguish "layout never built" (clear error, not an
-        # unresolved-column failure downstream) from "built over an empty
-        # corpus" (empty relation WITH the bucket column, so searches
-        # return zero rows like the term layout does)
+        # "layout never built" is a clear error, not an unresolved-column
+        # failure downstream; a layout built over an empty corpus reads as
+        # an empty relation with the bucket column
         if not os.path.isdir(self.postings_path):
             raise FileNotFoundError(
                 f"no doc-partitioned layout under {self.postings_path!r} — "
@@ -69,10 +69,7 @@ class DocPartitionedIndex(Index):
                 f"--layout docpart|both), or query the term layout with "
                 f"engine dist/bmw"
             )
-        df = super().postings(spark)
-        if "bucket" not in df.columns:  # the empty-build fallback schema
-            df = df.withColumn("bucket", F.col("salt").cast("int"))
-        return df
+        return super().postings(spark)
 
 
 def build_docpart_index(
@@ -329,8 +326,6 @@ def search_docpart(
         )
 
     per = blocks.groupBy("bucket").applyInPandas(per_bucket, RESULT_SCHEMA)
-    from alexandria_spark.plans.delete import filter_deleted
-
     live = filter_deleted(spark, index, per)
     return live if k is None else top_k(live, k)
 

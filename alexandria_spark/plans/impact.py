@@ -35,7 +35,8 @@ from pyspark.sql import SparkSession
 
 from alexandria_spark.config import EngineConfig
 from alexandria_spark.plans.blocks import build_blocks, decode_blocks
-from alexandria_spark.plans.build import BLOCK_SCHEMA, Index
+from alexandria_spark.plans.build import BLOCK_SCHEMA, Index, block_read_schema
+from alexandria_spark.plans.delete import deletes_small, drop_deleted, effective_deletes
 from alexandria_spark.plans.query import _query_term_ids, _shard_of
 
 # phase-2 completion: most payload blocks a single query may pull to the
@@ -202,7 +203,13 @@ def _pinned_scan(spark: SparkSession, index: Index, table: str):
     except (ValueError, FileNotFoundError, OSError):
         if table == "postings":
             return index.postings(spark)
-        return spark.read.parquet(os.path.join(index.path, table))
+        return _read_impact(spark, index)
+
+
+def _read_impact(spark: SparkSession, index: Index):
+    """Directory read of the impact table, with its explicit schema."""
+    return spark.read.schema(block_read_schema("postings_impact")).parquet(
+        os.path.join(index.path, "postings_impact"))
 
 
 def _block_key_pd(pdf: pd.DataFrame) -> pd.Series:
@@ -247,8 +254,7 @@ def _impact_meta_multi(spark: SparkSession, index: Index, tids: list[int],
         pdf = _pinned[_pinned["term_id"].isin(tids)]
     else:
         shards = sorted({_shard_of(t, num_shards) for t in tids})
-        path = os.path.join(index.path, "postings_impact")
-        src = _blocks if _blocks is not None else spark.read.parquet(path)
+        src = _blocks if _blocks is not None else _read_impact(spark, index)
         cap = len(tids) * _META_GUARD_ROWS + 1
         pdf = (
             src.where(F.col("shard").isin(shards) & F.col("term_id").isin(list(tids)))
@@ -326,7 +332,7 @@ class _ImpactBlockReader:
                  meta: pd.DataFrame, num_shards: int, first_batch: int,
                  _blocks=None):
         self.spark = spark
-        self.path = os.path.join(index.path, "postings_impact")
+        self.index = index
         self._blocks = _blocks
         self.shard = _shard_of(tid, num_shards)
         self.tid = tid
@@ -366,7 +372,7 @@ class _ImpactBlockReader:
         sel = self.meta.iloc[lo:hi]
         keys = _block_key_pd(sel).tolist()
         src = (self._blocks if self._blocks is not None
-               else self.spark.read.parquet(self.path))
+               else _read_impact(self.spark, self.index))
         pdf = (
             src.where((F.col("shard") == self.shard) & (F.col("term_id") == self.tid))
             .where(_block_key_col().isin(keys))
@@ -394,35 +400,6 @@ def _search_fallback(spark: SparkSession, index: Index, query: str,
     return _collect_topk(spark, index, query, mode, k, cfg, _blocks=_doc_blocks)
 
 
-def _deletes_gate(index: Index) -> bool:
-    """True when the tombstone set is small enough for the driver-side
-    impact walk; past it the callers fall back to the distributed path
-    (which anti-joins tombstones on the executors)."""
-    from alexandria_spark.plans.delete import _deletes_small, deletes_path
-
-    return not os.path.exists(deletes_path(index)) or _deletes_small(index)
-
-
-def _deleted_u(spark: SparkSession, index: Index) -> np.ndarray:
-    """Sorted unsigned tombstoned doc ids (empty when none)."""
-    from alexandria_spark.plans.delete import load_deletes
-
-    dels = load_deletes(spark, index)
-    if dels is None:
-        return np.empty(0, np.uint64)
-    arr = dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64)
-    return np.sort(arr)
-
-
-def _drop_deleted_u(docs_u: np.ndarray, scores: np.ndarray,
-                    deleted_u: np.ndarray):
-    if len(deleted_u) == 0 or len(docs_u) == 0:
-        return docs_u, scores
-    pos = np.minimum(np.searchsorted(deleted_u, docs_u), len(deleted_u) - 1)
-    keep = deleted_u[pos] != docs_u
-    return docs_u[keep], scores[keep]
-
-
 def impact_single_topk(spark: SparkSession, index: Index, query: str,
                        k: int = 10, cfg: EngineConfig | None = None,
                        _stats: dict | None = None,
@@ -446,7 +423,7 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
     # fallbacks reuse _blocks when a warm engine passed its cached impact
     # scan: the impact layout decodes to the identical posting multiset
     # (test_impact_layout_same_postings), so search() serves exactly from it
-    if not _deletes_gate(index):  # mass deletion: serve distributed
+    if not deletes_small(index):  # mass deletion: serve distributed
         return _search_fallback(spark, index, query, "or", k, cfg, _stats,
                                 _doc_blocks=_blocks)
     if _blocks is None:  # pin meta scan + payload fetches to one snapshot
@@ -461,7 +438,7 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
             _stats.update(blocks_read=0, blocks_total=0,
                           payload_blocks_fetched=0, fetch_jobs=0)
         return []
-    deleted_u = _deleted_u(spark, index)
+    deleted_u = effective_deletes(spark, index)
     # first batch = the smallest impact-order prefix that can hold k postings
     cum = meta["n"].to_numpy(np.int64).cumsum()
     first = int(np.searchsorted(cum, k) + 1)
@@ -487,7 +464,7 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
             return _search_fallback(spark, index, query, "or", k, cfg,
                                     _stats, _doc_blocks=_blocks)
         bdu, bsc = reader.block(i)
-        du, sc = _drop_deleted_u(bdu, bsc, deleted_u)
+        du, sc = drop_deleted(bdu, bsc, deleted_u)
         docs.append(du.view(np.int64))
         scores.append(sc)
         n_collected += len(du)
@@ -537,10 +514,10 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     if len(term_ids) == 1:
         return impact_single_topk(spark, index, query, k, cfg, _stats, _blocks,
                                   _meta_pinned)
-    if not _deletes_gate(index):  # mass deletion: serve distributed
+    if not deletes_small(index):  # mass deletion: serve distributed
         return _search_fallback(spark, index, query, "or", k, cfg, _stats,
                                 _doc_blocks=_doc_blocks)
-    deleted_u = _deleted_u(spark, index)
+    deleted_u = effective_deletes(spark, index)
 
     if _blocks is None:  # pin meta scans + payload fetches to one snapshot
         _blocks = _pinned_scan(spark, index, "postings_impact")
@@ -611,7 +588,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
                                     _stats, _doc_blocks=_doc_blocks)
         t = max(live, key=bound.__getitem__)
         bdu, bsc = readers[t].block(ptr[t])
-        du, sc = _drop_deleted_u(bdu, bsc, deleted_u)
+        du, sc = drop_deleted(bdu, bsc, deleted_u)
         chunks[t].append((du, sc))
         n_seen_docs += len(du)
         ptr[t] += 1
@@ -628,7 +605,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
         for t, rd in readers.items():
             while ptr[t] < len(metas[t]):
                 bdu, bsc = rd.block(ptr[t])
-                du, sc = _drop_deleted_u(bdu, bsc, deleted_u)
+                du, sc = drop_deleted(bdu, bsc, deleted_u)
                 chunks[t].append((du, sc))
                 ptr[t] += 1
                 drained += 1
@@ -827,9 +804,7 @@ class ImpactEngine:
         self.spark = spark
         self.index = index
         self.cfg = cfg or index.config()
-        self.blocks = spark.read.parquet(
-            os.path.join(index.path, "postings_impact")
-        )
+        self.blocks = _read_impact(spark, index)
         self.doc_blocks = index.postings(spark)
         self.meta_pinned: pd.DataFrame | None = None
         self.doc_meta_pinned: pd.DataFrame | None = None

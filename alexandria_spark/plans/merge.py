@@ -112,9 +112,11 @@ def rebuild_from_term_doc(
         rebuild_docpart_from_postings(spark, index_path, cfg)
     log.mark_done("rebuild", run_id, run_id, docs_processed=n_docs,
                   wall_ms=int(1000 * (time.time() - t0)))
+    from alexandria_spark.plans.delete import resolve_deletes
     from alexandria_spark.plans.snapshots import commit_snapshot
 
     commit_snapshot(index_path, "rebuild", {"run_id": run_id, "n_docs": n_docs})
+    resolve_deletes(spark, idx)  # doc_lengths changed under any tombstones
     return idx
 
 

@@ -30,8 +30,6 @@ order as tie-break (index_manager.cpp:279-282, generic_record.h:50-68).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -51,6 +49,12 @@ from alexandria_spark.functions.tokenizer import query_terms, tokenize
 from alexandria_spark.plans.blocks import decode_blocks, varint_decode
 from alexandria_spark.plans.build import MIN_I64, Index
 from alexandria_spark.plans.checkpoint import parquet_dir_bytes
+from alexandria_spark.plans.delete import (
+    deletes_small,
+    drop_deleted,
+    effective_deletes,
+    filter_deleted,
+)
 
 POSTING_SCHEMA = StructType(
     [
@@ -244,8 +248,6 @@ def search(
     if mode == "and":
         agg = agg.where(F.col("n_terms") == len(term_ids))
     agg = agg.withColumn("n_terms", F.col("n_terms").cast("int"))
-    from alexandria_spark.plans.delete import filter_deleted
-
     live = filter_deleted(spark, index, agg)
     return live if k is None else top_k(live, k)
 
@@ -329,8 +331,6 @@ def search_phrase_long(
         F.col("score").cast("double").alias("score"),
         F.lit(1).cast("int").alias("n_terms"),
     )
-    from alexandria_spark.plans.delete import filter_deleted
-
     live = filter_deleted(spark, index, scored)
     return live if k is None else top_k(live, k)
 
@@ -445,9 +445,7 @@ def search_bmw(
     term_ids = _query_term_ids(query, mode, cfg)
     if not term_ids:
         return []
-    from alexandria_spark.plans.delete import _deletes_small, deletes_path
-
-    if os.path.exists(deletes_path(index)) and not _deletes_small(index):
+    if not deletes_small(index):
         # the bucket walk needs the tombstone set driver-side; a mass
         # deletion makes that a giant array — serve exactly via the
         # distributed path, which anti-joins tombstones on the executors
@@ -539,23 +537,8 @@ def search_bmw(
             uniq, summed = uniq[keep], summed[keep]
         return uniq, summed
 
-    from alexandria_spark.plans.delete import load_deletes
-
-    dels = load_deletes(spark, index)
-    # Arrow toPandas, not collect(): Row objects cost ~100x the numpy bytes
-    deleted_u = (
-        np.sort(dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64))
-        if dels is not None else np.empty(0, np.uint64)
-    )
-
-    def _drop_deleted(docs_u, scores):
-        if len(deleted_u) == 0 or len(docs_u) == 0:
-            return docs_u, scores
-        pos = np.minimum(np.searchsorted(deleted_u, docs_u), len(deleted_u) - 1)
-        keep = deleted_u[pos] != docs_u
-        return docs_u[keep], scores[keep]
-
-    docs_u, scores = _drop_deleted(*_eval_buckets(phase1))
+    deleted_u = effective_deletes(spark, index)
+    docs_u, scores = drop_deleted(*_eval_buckets(phase1), deleted_u)
     if len(scores) >= k:
         tau = np.partition(scores, len(scores) - k)[len(scores) - k]
     else:
@@ -574,7 +557,7 @@ def search_bmw(
         # serve exactly via that path instead
         return _collect_topk(spark, index, query, mode, k, cfg)
     if remaining:
-        d2, s2 = _drop_deleted(*_eval_buckets(remaining))
+        d2, s2 = drop_deleted(*_eval_buckets(remaining), deleted_u)
         docs_u = np.concatenate([docs_u, d2])
         scores = np.concatenate([scores, s2])
     if len(docs_u) == 0:
@@ -687,8 +670,6 @@ class QueryEngine:
         )
         if mode == "and":
             agg = agg.where(F.col("n_terms") == len(term_ids))
-        from alexandria_spark.plans.delete import filter_deleted
-
         agg = filter_deleted(self.spark, self.index, agg)
         return top_k(agg.withColumn("n_terms", F.col("n_terms").cast("int")), k)
 
@@ -844,8 +825,6 @@ class LocalIndex:
     def __init__(self, spark: SparkSession, index: Index, cfg: EngineConfig | None = None,
                  max_pin_bytes: int | None = None):
         self.cfg = cfg or index.config()
-        from alexandria_spark.plans.checkpoint import parquet_dir_bytes
-
         limit = max_pin_bytes if max_pin_bytes is not None else self.MAX_PIN_BYTES
         total = parquet_dir_bytes(index.postings_path)
         if total > limit:
@@ -855,15 +834,7 @@ class LocalIndex:
                 f"through QueryEngine / DocPartEngine / search() instead, "
                 f"or raise max_pin_bytes explicitly."
             )
-        from alexandria_spark.plans.delete import load_deletes
-
-        dels = load_deletes(spark, index)
-        # Arrow toPandas, not collect(): Row objects cost ~100x the numpy bytes
-        self.deleted = (
-            np.sort(dels.toPandas()["doc_id"].to_numpy(np.int64).view(np.uint64))
-            if dels is not None
-            else np.empty(0, np.uint64)
-        )
+        self.deleted = effective_deletes(spark, index)
         pdf = index.postings(spark).select(
             "term_id", "salt", "block_id", "n", "min_doc", "max_doc",
             "max_score", "doc_deltas", "scores",
@@ -878,12 +849,7 @@ class LocalIndex:
             res = self._search_and(tids)
         else:  # or | phrase (a phrase is a single-term disjunction)
             res = self._search_or(tids, k)
-        docs_u, scores = res
-        if len(self.deleted) and len(docs_u):
-            pos = np.searchsorted(self.deleted, docs_u)
-            pos_c = np.minimum(pos, len(self.deleted) - 1)
-            keep = self.deleted[pos_c] != docs_u
-            docs_u, scores = docs_u[keep], scores[keep]
+        docs_u, scores = drop_deleted(*res, self.deleted)
         if len(docs_u) == 0:
             return []
         order = np.lexsort((docs_u, -scores))[:k]

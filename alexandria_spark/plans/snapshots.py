@@ -32,6 +32,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from alexandria_spark.plans.build import BLOCK_TABLE_PARTITIONS, block_read_schema
+
 TABLES = ("postings", "postings_doc", "postings_impact",
           "doc_lengths", "term_stats", "term_doc")
 
@@ -129,7 +131,8 @@ def read_table(spark: SparkSession, index_path: str, table: str,
     cannot tear the read and old snapshots stay queryable (time travel).
 
     Partition columns (wave=/shard=/bucket= path segments) are recovered
-    with basePath so the frame matches a directory read of that state.
+    with basePath so the frame matches a directory read of that state;
+    block tables read with their explicit schema (no inference job).
     """
     rec = load_snapshot(index_path, snapshot_id)
     if rec is None or table not in rec["tables"]:
@@ -138,7 +141,10 @@ def read_table(spark: SparkSession, index_path: str, table: str,
     files = [os.path.join(tdir, f["path"]) for f in rec["tables"][table]["files"]]
     if not files:
         raise ValueError(f"snapshot has no files for table {table!r}")
-    return spark.read.option("basePath", tdir).parquet(*files)
+    reader = spark.read.option("basePath", tdir)
+    if table in BLOCK_TABLE_PARTITIONS:
+        reader = reader.schema(block_read_schema(table))
+    return reader.parquet(*files)
 
 
 def _dir_age_sec(path: str) -> float:

@@ -64,6 +64,17 @@ def next_version(index_path: str) -> int:
     return v
 
 
+# (doc_id, version) reads of doc_lengths and tombstones name their schema:
+# no inference job, no mergeSchema footer walk, and doc_lengths.doc_len's
+# width never matters. Files written before versioning read version as null.
+ID_VERSION_SCHEMA = "doc_id long, version long"
+
+
+def read_doc_versions(spark, path: str) -> DataFrame:
+    """(doc_id, version) of a doc_lengths directory, legacy rows at 0."""
+    return with_version(spark.read.schema(ID_VERSION_SCHEMA).parquet(path))
+
+
 def read_versioned(spark, path: str) -> DataFrame:
     """Read a term_doc / doc_lengths directory whose part files may MIX
     pre-versioning (no ``version`` column) and versioned writes — a

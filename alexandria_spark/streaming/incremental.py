@@ -219,6 +219,7 @@ def refresh_index(spark: SparkSession, index_path: str,
     import json
 
     from alexandria_spark.plans.build import blockify
+    from alexandria_spark.plans.delete import resolve_deletes
     from alexandria_spark.plans.snapshots import commit_snapshot
 
     idx = Index(index_path)
@@ -228,10 +229,10 @@ def refresh_index(spark: SparkSession, index_path: str,
     meta = idx.meta()
     n_docs, avg_dl = int(meta["n_docs"]), float(meta["avg_dl"])
 
-    from alexandria_spark.plans.versioning import read_versioned
+    from alexandria_spark.plans.versioning import read_doc_versions, read_versioned
 
     dl_path = os.path.join(index_path, "doc_lengths")
-    existing = read_versioned(spark, dl_path).select(
+    existing = read_doc_versions(spark, dl_path).select(
         "doc_id", F.col("version").alias("cur_version"))
 
     td_raw = read_versioned(spark, td_path).where(F.col("shard").isin(shards))
@@ -341,4 +342,5 @@ def refresh_index(spark: SparkSession, index_path: str,
     commit_snapshot(index_path, "partial_refresh",
                     {"shards": shards, "stale_stats": True,
                      "docs_since_full": since})
+    resolve_deletes(spark, idx)  # doc_lengths changed under any tombstones
     return idx

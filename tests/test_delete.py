@@ -1,12 +1,37 @@
 """Tombstone deletes + compaction (doc-store remove/versioning analogue)."""
 
+import os
+import uuid
+
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from alexandria_spark.config import EngineConfig
+from alexandria_spark.plans import delete as delete_mod
+from alexandria_spark.plans import query as query_mod
 from alexandria_spark.plans.build import build_index, with_doc_ids
-from alexandria_spark.plans.delete import compact, delete_docs
-from alexandria_spark.plans.query import LocalIndex, QueryEngine, search
+from alexandria_spark.plans.delete import (
+    compact,
+    delete_docs,
+    deletes_path,
+    deletes_small,
+    effective_deletes,
+    effective_path,
+    filter_deleted,
+)
+from alexandria_spark.plans.docpart import (
+    DocPartitionedIndex,
+    rebuild_docpart_from_postings,
+    search_docpart,
+)
+from alexandria_spark.plans.impact import (
+    build_impact_postings,
+    impact_or_topk,
+    impact_single_topk,
+)
+from alexandria_spark.plans.query import LocalIndex, QueryEngine, search, search_bmw
+from alexandria_spark.plans.snapshots import read_table
 from alexandria_spark.sources.tables import synth_corpus, synth_corpus_pdf
 from tests.oracle import OracleIndex
 
@@ -85,8 +110,6 @@ def test_compact_multiwave_no_stale_partitions(spark, tmp_path):
 def test_compact_recovers_from_crashed_swap(spark, tmp_path):
     """A crash between the two renames of the term_doc swap leaves only
     term_doc_old; the next compact must restore it and proceed."""
-    import os
-
     docs = with_doc_ids(synth_corpus(spark, 30, seed=55))
     idx = build_index(spark, docs, str(tmp_path / "idx"), CFG, text_col="content")
     td = os.path.join(idx.path, "term_doc")
@@ -133,3 +156,205 @@ def test_compact_rederives_docpart(spark, tmp_path):
               for r in search(spark, idx, "def", "or", 20, CFG).collect()]
     got = [(r["doc_id"], round(r["score"], 6)) for r in after]
     assert got == expect
+
+
+# ---------------------------------------------------------------------------
+# The effective set resolved at write time (deletes/_effective.parquet).
+
+ALL = 500  # above every match count below: results are whole match sets
+
+
+def _tombstone_index(spark, path, n_victims=2, seed=71):
+    """A 60-doc index with both derived layouts, and the ids of the top
+    docs for "def" (the victims the tests tombstone)."""
+    docs = with_doc_ids(synth_corpus(spark, 60, seed=seed))
+    idx = build_index(spark, docs, path, CFG, text_col="content")
+    build_impact_postings(spark, idx, CFG)
+    rebuild_docpart_from_postings(spark, path, CFG)
+    victims = [r.doc_id for r in search(spark, idx, "def", "or", k=n_victims).collect()]
+    return idx, victims
+
+
+def _served(spark, idx):
+    """Doc-id sets through every path that drops tombstones."""
+    out = {}
+    local = LocalIndex(spark, idx, CFG)
+    dpi = DocPartitionedIndex(idx.path)
+    for q, mode in (("def", "or"), ("def return", "and"), ("def return", "or")):
+        out["dist", q, mode] = {r.doc_id for r in
+                                search(spark, idx, q, mode, ALL, CFG).collect()}
+        out["docpart", q, mode] = {r.doc_id for r in search_docpart(
+            spark, dpi, q, mode, ALL, CFG).collect()}
+        out["bmw", q, mode] = {d for d, _ in search_bmw(spark, idx, q, mode, ALL, CFG)}
+        out["local", q, mode] = {d for d, _ in local.search(q, mode, ALL)}
+    out["impact_or"] = {d for d, _ in impact_or_topk(spark, idx, "def return", ALL, CFG)}
+    out["impact_single"] = {d for d, _ in impact_single_topk(spark, idx, "def", ALL, CFG)}
+    return out
+
+
+def _u64(ids):
+    return np.sort(np.array(ids, dtype=np.int64).view(np.uint64))
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches on this thread."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resolved_set_fresh_missing_or_stale(spark, tmp_path):
+    """The Spark fallback behind a missing or stale stamp serves exactly
+    what the fresh resolved file serves."""
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    delete_docs(spark, idx, victims[:1])
+    with open(effective_path(idx), "rb") as fh:
+        stale = fh.read()  # stamped before the second delete
+    delete_docs(spark, idx, spark.createDataFrame(
+        [(int(v),) for v in victims[1:]], "doc_id long"))
+    # one tombstone file per call, list or DataFrame input
+    tombs = [f for f in os.listdir(deletes_path(idx)) if not f.startswith(("_", "."))]
+    assert len(tombs) == 2, tombs
+    fresh_ids = effective_deletes(spark, idx)
+    assert np.array_equal(fresh_ids, _u64(victims))
+    fresh = _served(spark, idx)
+    assert all(not (ids & set(victims)) for ids in fresh.values())
+    assert fresh["dist", "def", "or"]
+
+    with open(effective_path(idx), "wb") as fh:
+        fh.write(stale)  # a resolved file that misses the second victim
+    assert np.array_equal(effective_deletes(spark, idx), fresh_ids)
+    assert _served(spark, idx) == fresh
+
+    os.remove(effective_path(idx))
+    assert np.array_equal(effective_deletes(spark, idx), fresh_ids)
+    assert _served(spark, idx) == fresh
+
+
+def test_crash_before_resolve_keeps_doc_hidden(spark, tmp_path, monkeypatch):
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    delete_docs(spark, idx, victims[:1])
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash between append and resolve")
+
+    monkeypatch.setattr(delete_mod, "resolve_deletes", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        delete_docs(spark, idx, victims[1:])
+    monkeypatch.undo()
+    # the pre-append resolved file is gone, not left claiming to be current
+    assert not os.path.exists(effective_path(idx))
+    assert np.array_equal(effective_deletes(spark, idx), _u64(victims))
+    assert all(not (ids & set(victims)) for ids in _served(spark, idx).values())
+
+
+def test_reingested_doc_escapes_through_the_fast_path(spark, tmp_path, monkeypatch):
+    """delete → re-ingest → refresh: the refresh re-resolves the set, and
+    readers then serve the new version without any Spark resolution.
+    The stream append in between leaves the stamp valid."""
+    from alexandria_spark.streaming.incremental import ingest_stream, refresh_index
+
+    in_dir, idx_path = str(tmp_path / "incoming"), str(tmp_path / "idx")
+    rows = [(i, f"common kw{i} oldmark{i} body {i % 3}") for i in range(1, 41)]
+    schema = "doc_id long, text string"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(in_dir)
+    ingest_stream(spark, in_dir, idx_path, spark.createDataFrame(rows, schema).schema, CFG)
+    idx = refresh_index(spark, idx_path, CFG, mode="full")
+    delete_docs(spark, idx, [7])
+
+    def no_spark_resolution(*_a, **_k):
+        raise AssertionError("readers fell back to the Spark resolution")
+
+    v2 = spark.createDataFrame([(7, "common kw7 newmark7 risen body")], schema)
+    v2.coalesce(1).write.mode("append").parquet(in_dir)
+    ingest_stream(spark, in_dir, idx_path, v2.schema, CFG)
+    with monkeypatch.context() as m:
+        m.setattr(delete_mod, "_resolve", no_spark_resolution)
+        # appended but not refreshed: still hidden, from the same file
+        assert np.array_equal(effective_deletes(spark, idx), _u64([7]))
+        assert [r.doc_id for r in search(spark, idx, "kw7", "or", 5, CFG).collect()] == []
+    refresh_index(spark, idx_path, CFG, mode="partial")  # an update: escalates
+    monkeypatch.setattr(delete_mod, "_resolve", no_spark_resolution)
+    assert len(effective_deletes(spark, idx)) == 0
+    assert [r.doc_id for r in search(spark, idx, "newmark7", "or", 5, CFG).collect()] == [7]
+    assert [d for d, _ in search_bmw(spark, idx, "newmark7", "or", 5, CFG)] == [7]
+    assert [d for d, _ in LocalIndex(spark, idx, CFG).search("newmark7", "or", 5)] == [7]
+    assert [r.doc_id for r in search(spark, idx, "oldmark7", "or", 5, CFG).collect()] == []
+
+
+def test_mass_deletion_gate_both_sides(spark, tmp_path, monkeypatch):
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    delete_docs(spark, idx, victims)
+    calls = []
+    real = query_mod._collect_topk
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(query_mod, "_collect_topk", spy)
+
+    def impact_fallback():
+        stats = {}
+        impact_or_topk(spark, idx, "def return", 10, CFG, _stats=stats)
+        return stats.get("fallback")
+
+    def joins(df):
+        return "LeftAnti" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    probe = spark.createDataFrame([(int(v),) for v in victims], "doc_id long")
+    assert deletes_small(idx)
+    small = _served(spark, idx)
+    assert not calls and impact_fallback() is None
+    assert not joins(filter_deleted(spark, idx, probe))  # a literal list
+    with monkeypatch.context() as m:  # past the literal-list size
+        m.setattr(delete_mod, "_INLINE_DELETES_MAX", 1)
+        assert joins(filter_deleted(spark, idx, probe))
+        assert filter_deleted(spark, idx, probe).count() == 0
+        assert _served(spark, idx) == small
+
+    monkeypatch.setattr(delete_mod, "_BROADCAST_DELETES_MAX_BYTES", 1)
+    assert not deletes_small(idx)
+    del calls[:]
+    assert _served(spark, idx) == small
+    assert calls  # search_bmw served through the distributed path
+    assert impact_fallback() == "distributed"
+    assert joins(filter_deleted(spark, idx, probe))
+    assert filter_deleted(spark, idx, probe).count() == 0
+
+
+def test_block_frames_and_resolved_set_launch_no_jobs(spark, tmp_path):
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    delete_docs(spark, idx, victims)
+
+    def frames():
+        idx.postings(spark)
+        DocPartitionedIndex(idx.path).postings(spark)
+        read_table(spark, idx.path, "postings_impact")
+        read_table(spark, idx.path, "postings")
+        assert np.array_equal(effective_deletes(spark, idx), _u64(victims))
+
+    assert _jobs(spark, frames) == 0
+
+
+def test_cold_search_jobs_unchanged_by_tombstones(spark, tmp_path):
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    dpi = DocPartitionedIndex(idx.path)
+    calls = {
+        (mode, engine): (lambda mode=mode, engine=engine: (
+            search(spark, idx, "def return", mode, 10, CFG) if engine == "dist"
+            else search_docpart(spark, dpi, "def return", mode, 10, CFG)
+        ).collect())
+        for mode in ("and", "or") for engine in ("dist", "docpart")
+    }
+    for fn in calls.values():
+        fn()  # first run of each shape outside the count
+    before = {key: _jobs(spark, fn) for key, fn in calls.items()}
+    delete_docs(spark, idx, victims)
+    after = {key: _jobs(spark, fn) for key, fn in calls.items()}
+    assert all(after[key] <= before[key] for key in calls), (before, after)

@@ -3,7 +3,7 @@ to the reference-golden pandas tokenizer on any input."""
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from alexandria_spark.functions.fast_tokenizer import (
@@ -58,6 +58,7 @@ def test_matches_scalar_tokenizer(docs):
 
 @settings(max_examples=60, deadline=None)
 @given(st.lists(st.text(TEXT_ALPHABET, max_size=80), max_size=6))
+@example(docs=["\x00", "\x000"])  # tokens that differ only after a NUL
 def test_counts_match_pandas_variant(docs):
     s = pd.Series(docs)
     fast = token_counts_fast(s, keep_term=True)

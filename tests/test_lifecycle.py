@@ -333,3 +333,38 @@ def test_pending_multiversion_update_partial_refresh(spark, tmp_path):
     n_v2_tokens = tokenize_docs(
         _manual_docs(spark, v2), CFG).agg(F.sum("tf")).collect()[0][0]
     assert dl[50] == n_v2_tokens
+
+
+def test_build_index_base_takes_partial_refreshes_and_deletes(spark, tmp_path):
+    """A build_index base, then append → partial refresh → delete → search
+    → a second partial refresh. build_index once wrote doc_lengths.doc_len
+    as BIGINT while partial refresh appends INT, and the next read that
+    merged the table's schema failed with CANNOT_MERGE_SCHEMAS."""
+    from pyspark.sql.types import IntegerType
+
+    from alexandria_spark.plans.snapshots import history
+
+    in_dir = str(tmp_path / "incoming")
+    idx_path = str(tmp_path / "idx")
+    base = [(i, f"common base kw{i} body text {i % 4}") for i in range(1, 61)]
+    idx = build_index(spark, _manual_docs(spark, base), idx_path, CFG)
+    schema = _manual_docs(spark, base).schema
+
+    def append(rows):
+        _manual_docs(spark, rows).coalesce(1).write.mode("append").parquet(in_dir)
+        ingest_stream(spark, in_dir, idx_path, schema, CFG)
+        refresh_index(spark, idx_path, CFG, mode="partial")
+        # under max_stale_doc_ratio: the refresh stayed partial
+        assert history(idx_path)[-1]["operation"] == "partial_refresh"
+
+    append([(101, "common fresh appendone body")])
+    delete_docs(spark, idx, [5])
+    assert _hits(spark, idx_path, "kw5") == []
+    assert _hits(spark, idx_path, "appendone") == [101]
+    append([(102, "common fresh appendtwo body")])
+    assert _hits(spark, idx_path, "appendtwo") == [102]
+    assert _hits(spark, idx_path, "kw5") == []
+    dl = spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(idx_path, "doc_lengths"))
+    assert dl.schema["doc_len"].dataType == IntegerType()
+    assert dl.count() == 62
