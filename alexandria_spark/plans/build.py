@@ -274,11 +274,86 @@ def block_read_schema(table: str) -> StructType:
 SCORED_POSTING_SCHEMA = StructType(
     [
         StructField("term_id", LongType()),
+        StructField("salt", IntegerType()),
         StructField("doc_id", LongType()),
         StructField("tf", IntegerType()),
         StructField("score", FloatType()),
     ]
 )
+
+
+def decode_block_frame(blocks: DataFrame) -> DataFrame:
+    """Encoded block rows → the scored postings they hold, in
+    SCORED_POSTING_SCHEMA (blocks stored without tfs read tf 0)."""
+    from alexandria_spark.plans.blocks import decode_blocks
+
+    def fn(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            dec = decode_blocks(pdf, want_tf=True)
+            dec["salt"] = np.repeat(pdf["salt"].to_numpy(np.int32),
+                                    pdf["n"].to_numpy(np.int64))
+            dec["tf"] = dec["tf"].astype(np.int32)
+            yield dec[SCORED_POSTING_SCHEMA.fieldNames()]
+
+    return blocks.mapInPandas(fn, SCORED_POSTING_SCHEMA)
+
+
+def stream_groups(batches, finish, cols: list[str] | None = None):
+    """Feed ``finish`` whole (term_id, salt) groups of a stream of Arrow
+    batches that arrive sorted by those two keys. Blocks must not split a
+    group across batches, so each batch's trailing (possibly incomplete)
+    group is buffered until the next batch confirms its end."""
+    buf: list[pd.DataFrame] = []
+    tail_key = None
+    for pdf in batches:
+        if cols is not None:
+            pdf = pdf[cols]
+        if len(pdf) == 0:
+            continue
+        t = pdf["term_id"].to_numpy()
+        s = pdf["salt"].to_numpy()
+        first_key = (int(t[0]), int(s[0]))
+        if buf and first_key != tail_key:
+            yield finish(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0])
+            buf = []
+        not_tail = (t != t[-1]) | (s != s[-1])
+        idx = np.nonzero(not_tail)[0]
+        if len(idx):  # batch contains complete groups + a tail run
+            cut = int(idx[-1]) + 1
+            head, tail = pdf.iloc[:cut], pdf.iloc[cut:]
+            if buf:
+                head = pd.concat(buf + [head], ignore_index=True)
+                buf = []
+            yield finish(head)
+            buf = [tail.reset_index(drop=True)]
+        else:
+            buf.append(pdf)
+        tail_key = (int(t[-1]), int(s[-1]))
+    if buf:
+        whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
+        if len(whole):
+            yield finish(whole)
+
+
+def _with_shard(blocks: pd.DataFrame, num_shards: int) -> pd.DataFrame:
+    tid = blocks["term_id"].to_numpy(np.int64)
+    blocks["shard"] = (tid.view(np.uint64) % np.uint64(num_shards)).astype(np.int32)
+    return blocks
+
+
+def term_blocks(scored: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Scored postings, still in blockify's partitions and order → the
+    doc-sorted term blocks ``blockify`` would have written from them."""
+    block_size, keep_tf, num_shards = cfg.block_size, cfg.keep_tf, cfg.num_shards
+
+    def fn(batches):
+        yield from stream_groups(
+            batches,
+            lambda pdf: _with_shard(build_blocks(pdf, block_size, keep_tf), num_shards))
+
+    return scored.mapInPandas(fn, BLOCK_SCHEMA)
 
 
 def blockify(
@@ -293,11 +368,12 @@ def blockify(
     """term_doc postings → scored, encoded block rows — ONE shuffle total.
 
     ``emit_postings=True`` stops after scoring: the SAME one-shuffle
-    local-df machinery, but the output is scored (term_id, doc_id, tf,
-    score) rows instead of encoded blocks — the term-sharded scoring
-    pre-pass a doc-partitioned build needs (doc-major layouts must re-
-    cluster by doc AFTER term-global df is known, so they consume scored
-    postings, not term blocks).
+    local-df machinery, but the output is scored (term_id, salt, doc_id,
+    tf, score) rows instead of encoded blocks, still in the (shard, salt)
+    partitions and (term, salt, doc) order of the block build. Doc-major
+    layouts must re-cluster by doc AFTER term-global df is known, so they
+    consume scored postings; ``term_blocks`` and the impact layout encode
+    the same frame without another shuffle.
 
     Document frequency (the only BM25 input that needs term-global state) is
     computed *locally*: after the repartition by (shard, salt), a non-salted
@@ -407,47 +483,13 @@ def blockify(
         if postings_acc is not None:
             postings_acc.add(int(len(pdf)))
         if emit_postings:
-            out = scored[["term_id", "doc_id", "tf", "score"]].copy()
+            out = scored[SCORED_POSTING_SCHEMA.fieldNames()].copy()
             out["tf"] = out["tf"].astype(np.int32)
             return out
-        out = build_blocks(scored, block_size, keep_tf)
-        tid = out["term_id"].to_numpy(np.int64)
-        out["shard"] = (tid.view(np.uint64) % np.uint64(num_shards)).astype(np.int32)
-        return out
+        return _with_shard(build_blocks(scored, block_size, keep_tf), num_shards)
 
     def fn(batches):
-        # group-aware streaming: blocks must not split a (term, salt) group
-        # across Arrow batches, so the trailing (possibly incomplete) group
-        # of each batch is buffered until the next batch confirms its end.
-        buf: list[pd.DataFrame] = []
-        tail_key = None
-        for pdf in batches:
-            pdf = pdf[cols]
-            if len(pdf) == 0:
-                continue
-            t = pdf["term_id"].to_numpy()
-            s = pdf["salt"].to_numpy()
-            first_key = (int(t[0]), int(s[0]))
-            if buf and first_key != tail_key:
-                yield _finish(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0])
-                buf = []
-            not_tail = (t != t[-1]) | (s != s[-1])
-            idx = np.nonzero(not_tail)[0]
-            if len(idx):  # batch contains complete groups + a tail run
-                cut = int(idx[-1]) + 1
-                head, tail = pdf.iloc[:cut], pdf.iloc[cut:]
-                if buf:
-                    head = pd.concat(buf + [head], ignore_index=True)
-                    buf = []
-                yield _finish(head)
-                buf = [tail.reset_index(drop=True)]
-            else:
-                buf.append(pdf)
-            tail_key = (int(t[-1]), int(s[-1]))
-        if buf:
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            if len(whole):
-                yield _finish(whole)
+        yield from stream_groups(batches, _finish, cols)
 
     return parts.mapInPandas(
         fn, SCORED_POSTING_SCHEMA if emit_postings else BLOCK_SCHEMA
@@ -492,20 +534,8 @@ class Index:
         """Full posting iteration surface — (term_id, doc_id, score, tf) rows
         decoded from the blocks (the reference's for_each, sharded.h:171-188).
         Lazy/distributed: decoding happens per partition in Arrow batches."""
-        from alexandria_spark.plans.blocks import decode_blocks
-        from pyspark.sql.types import (FloatType as _F, LongType as _L,
-                                       StructField as _SF, StructType as _ST)
-
-        schema = _ST([_SF("term_id", _L()), _SF("doc_id", _L()),
-                      _SF("score", _F()), _SF("tf", _L())])
-
-        def fn(batches):
-            for pdf in batches:
-                yield decode_blocks(pdf, want_tf=True)[
-                    ["term_id", "doc_id", "score", "tf"]
-                ]
-
-        return self.postings(spark).mapInPandas(fn, schema)
+        return decode_block_frame(self.postings(spark)).select(
+            "term_id", "doc_id", "score", "tf")
 
 
 def _fingerprint(cfg: EngineConfig, docs: DataFrame, extra: str = "") -> str:
@@ -560,8 +590,6 @@ def build_index(
     idx = Index(index_path)
     td_path = os.path.join(index_path, "term_doc")
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     # ---- stage 1: tokenize + count -------------------------------------
     if materialize_stage1:
         if not log.is_done("stage1_term_doc", fp):
@@ -574,7 +602,8 @@ def build_index(
             ).withColumn(
                 "wave", F.pmod(F.col("shard"), F.lit(cfg.build_waves))
             )
-            term_doc.write.partitionBy("wave").mode("overwrite").parquet(td_path)
+            term_doc.write.partitionBy("wave").mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic").parquet(td_path)
             log.mark_done("stage1_term_doc", fp, run_id, wall_ms=int(1000 * (time.time() - t0)))
         # explicit schema: an empty corpus writes no files, which would
         # otherwise fail schema inference
@@ -682,6 +711,8 @@ def build_index(
             "config": asdict(cfg),
             "fingerprint": fp,
             "run_id": run_id,
+            # a batch build holds one version (0) per doc
+            "superseded_versions": False,
         }
         with open(meta_path, "w") as fh:
             json.dump(meta, fh)
@@ -719,6 +750,7 @@ def build_index(
         (
             blocks.write.partitionBy("wave", "shard")
             .mode("overwrite")  # dynamic: only this wave's partitions
+            .option("partitionOverwriteMode", "dynamic")
             .parquet(idx.postings_path)
         )
         log.mark_done(

@@ -289,7 +289,7 @@ def compact(spark: SparkSession, index: Index,
     leaves no bytes behind anywhere."""
     from alexandria_spark.plans.versioning import (
         latest_versions_only,
-        read_versioned,
+        read_term_doc,
         version_span,
     )
 
@@ -299,8 +299,7 @@ def compact(spark: SparkSession, index: Index,
     if not os.path.exists(td_path):
         raise ValueError("compact requires a materialized stage-1 term_doc table")
     dels = load_tombstones(spark, index)
-    td = read_versioned(spark, td_path).select(
-        "doc_id", "term_id", "shard", "tf", "doc_len", "version")
+    td = read_term_doc(spark, td_path)
     # physical cleanup is row-level and version-aware: a tombstone at
     # del_version drops only rows up to that version, so a doc re-ingested
     # AFTER its delete keeps the new version's postings through the compact
@@ -346,9 +345,7 @@ def compact(spark: SparkSession, index: Index,
     atomic_swap_dir(tmp, td_path)
     import shutil
     idx = rebuild_from_term_doc(
-        spark, read_versioned(spark, td_path), index.path, cfg,
-        run_id="compact", versions_resolved=True
-    )
+        spark, read_term_doc(spark, td_path), index.path, cfg, run_id="compact")
     p = deletes_path(index)
     if os.path.exists(p):
         shutil.rmtree(p)

@@ -34,12 +34,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from alexandria_spark.config import DEFAULT, EngineConfig
-from alexandria_spark.plans.blocks import build_blocks, decode_blocks
+from alexandria_spark.plans.blocks import build_blocks
 from alexandria_spark.plans.build import (
     MIN_I64,
     BLOCK_SCHEMA,
     Index,
     corpus_stats_pass,
+    decode_block_frame,
+    stream_groups,
     tokenize_docs,
 )
 from alexandria_spark.plans.delete import filter_deleted
@@ -151,52 +153,69 @@ def _scored_to_docpart_blocks(scored: DataFrame, cfg: EngineConfig) -> DataFrame
     cols = [c for c in ("term_id", "salt", "doc_id", "score", "tf")
             if c in scored.columns]
 
+    def _finish(pdf):
+        # build_blocks groups by (term_id, salt): salt is constant per
+        # bucket run, so blocks are per (bucket, term) — what WAND wants
+        out = build_blocks(
+            pdf.sort_values(["salt", "term_id"], kind="stable")
+               .reset_index(drop=True)[cols],
+            block_size, keep_tf,
+        )
+        out["shard"] = out["salt"].astype(np.int32)
+        return out
+
     def fn(batches):
         # one bucket's rows arrive contiguously; group integrity across Arrow
-        # batches is handled the same way as the term layout (tail buffering)
-        buf: list[pd.DataFrame] = []
-        tail_key = None
-
-        def _finish(pdf):
-            # build_blocks groups by (term_id, salt): salt is constant per
-            # bucket run, so blocks are per (bucket, term) — what WAND wants
-            out = build_blocks(
-                pdf.sort_values(["salt", "term_id"], kind="stable")
-                   .reset_index(drop=True)[cols],
-                block_size, keep_tf,
-            )
-            out["shard"] = out["salt"].astype(np.int32)
-            return out
-
-        for pdf in batches:
-            pdf = pdf[cols]
-            if len(pdf) == 0:
-                continue
-            t = pdf["term_id"].to_numpy()
-            sbk = pdf["salt"].to_numpy()
-            first_key = (int(sbk[0]), int(t[0]))
-            if buf and first_key != tail_key:
-                yield _finish(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0])
-                buf = []
-            not_tail = (t != t[-1]) | (sbk != sbk[-1])
-            idx_ = np.nonzero(not_tail)[0]
-            if len(idx_):
-                cut = int(idx_[-1]) + 1
-                head, tail = pdf.iloc[:cut], pdf.iloc[cut:]
-                if buf:
-                    head = pd.concat(buf + [head], ignore_index=True)
-                    buf = []
-                yield _finish(head)
-                buf = [tail.reset_index(drop=True)]
-            else:
-                buf.append(pdf)
-            tail_key = (int(sbk[-1]), int(t[-1]))
-        if buf:
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            if len(whole):
-                yield _finish(whole)
+        # batches is handled the same way as the term layout
+        yield from stream_groups(batches, _finish, cols)
 
     return parts.mapInPandas(fn, BLOCK_SCHEMA).withColumn("bucket", F.col("salt"))
+
+
+def _docpart_buckets(idx: DocPartitionedIndex, cfg: EngineConfig) -> int:
+    """The layout's own bucket count: meta.json when the docpart build wrote
+    it last, else the existing partition dirs (a term rebuild may have
+    clobbered meta), else the config default."""
+    try:
+        n_buckets = int(idx.meta().get("n_buckets") or 0) or None
+    except (OSError, ValueError):
+        n_buckets = None
+    if n_buckets is None and os.path.isdir(idx.postings_path):
+        seen = [int(d.split("=", 1)[1]) for d in os.listdir(idx.postings_path)
+                if d.startswith("bucket=")]
+        n_buckets = max(seen) + 1 if seen else None
+    return n_buckets or cfg.num_shards
+
+
+def write_docpart(spark: SparkSession, index_path: str, postings: DataFrame,
+                  cfg: EngineConfig, n_buckets: int | None = None) -> int:
+    """Scored postings (SCORED_POSTING_SCHEMA) of the WHOLE index → the
+    doc-partitioned table: re-bucket by doc (the bucket takes the salt
+    slot), re-encode, write aside and swap in atomically. Returns the
+    bucket count used.
+
+    keep_tf honesty: a keep_tf=False source stores NO tf payload and
+    decodes as tf=0 — a maintenance rebuild must not diverge from a fresh
+    build by writing zeroed tfs, so tf is encoded only when the index's own
+    build config kept it too."""
+    from alexandria_spark.plans.checkpoint import atomic_swap_dir, recover_swap
+
+    idx = DocPartitionedIndex(index_path)
+    n_buckets = n_buckets or _docpart_buckets(idx, cfg)
+    try:
+        src_keep_tf = bool(getattr(Index(index_path).config(), "keep_tf", True))
+    except (OSError, ValueError, KeyError):
+        src_keep_tf = True
+    want_tf = cfg.keep_tf and src_keep_tf
+    scored = postings.withColumn(
+        "salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
+    ).select("term_id", "salt", "doc_id", "score", *(["tf"] if want_tf else []))
+    out = _scored_to_docpart_blocks(scored, cfg)
+    recover_swap(idx.postings_path)
+    tmp = idx.postings_path.rstrip("/") + "_rebuilding"
+    out.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
+    atomic_swap_dir(tmp, idx.postings_path)
+    return n_buckets
 
 
 def rebuild_docpart_from_postings(spark: SparkSession, index_path: str,
@@ -204,70 +223,17 @@ def rebuild_docpart_from_postings(spark: SparkSession, index_path: str,
                                   n_buckets: int | None = None
                                   ) -> DocPartitionedIndex:
     """Re-derive the doc-partitioned table from the CURRENT term-sharded
-    postings (decode → re-bucket → re-encode, atomic swap) — called whenever
-    the source-of-truth postings are rewritten (rebuild / compact / partial
-    refresh), so the doc layout can never serve stale or resurrected docs.
-    Deriving from the postings (not from term_doc) guarantees byte-level
-    score identity between the two layouts."""
-    from alexandria_spark.plans.checkpoint import atomic_swap_dir, recover_swap
-
-    idx = DocPartitionedIndex(index_path)
-    if n_buckets is None:
-        # honor the layout's own bucket count: meta.json when the docpart
-        # build wrote it last, else the existing partition dirs (a term
-        # rebuild may have clobbered meta), else the config default
-        try:
-            n_buckets = int(idx.meta().get("n_buckets") or 0) or None
-        except (OSError, ValueError):
-            n_buckets = None
-        if n_buckets is None and os.path.isdir(idx.postings_path):
-            seen = [int(d.split("=", 1)[1]) for d in os.listdir(idx.postings_path)
-                    if d.startswith("bucket=")]
-            n_buckets = max(seen) + 1 if seen else None
-        n_buckets = n_buckets or cfg.num_shards
-    src_idx = Index(index_path)
-    # keep_tf honesty: a keep_tf=False source stores NO tf payload, and
-    # decode_blocks would silently backfill tf=0 — a maintenance rebuild
-    # must not diverge from a fresh build by writing zeroed tfs. Derive the
-    # effective keep_tf from the source's own build config.
-    try:
-        src_keep_tf = bool(getattr(src_idx.config(), "keep_tf", True))
-    except (OSError, ValueError, KeyError):
-        src_keep_tf = True
-    want_tf = cfg.keep_tf and src_keep_tf
-    blocks = src_idx.postings(spark)
-
-    def decode_fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            dec = decode_blocks(pdf, want_tf=want_tf)
-            yield dec[["term_id", "doc_id", "score"]
-                      + (["tf"] if want_tf else [])]
-
-    import pyspark.sql.types as T
-
-    dec_schema = T.StructType(
-        [
-            T.StructField("term_id", T.LongType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("score", T.FloatType()),
-        ]
-        + ([T.StructField("tf", T.LongType())] if want_tf else [])
-    )
-    scored = blocks.mapInPandas(decode_fn, dec_schema).withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
-    ).select("term_id", "salt", "doc_id", "score",
-             *(["tf"] if want_tf else []))
-    out = _scored_to_docpart_blocks(scored, cfg)
-    recover_swap(idx.postings_path)
-    tmp = idx.postings_path.rstrip("/") + "_rebuilding"
-    out.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
-    atomic_swap_dir(tmp, idx.postings_path)
+    postings (decode → ``write_docpart``) — so the doc layout can never
+    serve stale or resurrected docs. Deriving from the postings (not from
+    term_doc) guarantees byte-level score identity between the two
+    layouts; maintenance writes the same table from its scored postings
+    (plans/merge.py write_layouts)."""
+    postings = decode_block_frame(Index(index_path).postings(spark))
+    n_buckets = write_docpart(spark, index_path, postings, cfg, n_buckets)
     from alexandria_spark.plans.snapshots import commit_snapshot
 
     commit_snapshot(index_path, "docpart_rebuild", {"n_buckets": n_buckets})
-    return idx
+    return DocPartitionedIndex(index_path)
 
 
 def search_docpart(

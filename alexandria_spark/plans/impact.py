@@ -31,11 +31,16 @@ import os
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from alexandria_spark.config import EngineConfig
 from alexandria_spark.plans.blocks import build_blocks, decode_blocks
-from alexandria_spark.plans.build import BLOCK_SCHEMA, Index, block_read_schema
+from alexandria_spark.plans.build import (
+    BLOCK_SCHEMA,
+    Index,
+    block_read_schema,
+    decode_block_frame,
+)
 from alexandria_spark.plans.delete import deletes_small, drop_deleted, effective_deletes
 from alexandria_spark.plans.query import _query_term_ids, _shard_of
 
@@ -102,45 +107,10 @@ def _impact_arrange(pdf: pd.DataFrame, block_size: int, keep_tf: bool,
     return out
 
 
-def build_impact_postings(spark: SparkSession, index: Index,
-                          cfg: EngineConfig | None = None,
-                          shards: list[int] | None = None) -> str:
-    """Derive the impact-ordered table from the index's doc-sorted postings
-    (decode → per-(term,salt) impact re-block → parquet by shard). One
-    shuffle (re-co-locating groups), same block codec.
-
-    ``shards`` re-derives ONLY those shard partitions (dynamic overwrite) —
-    the delta path for a partial refresh: terms are hash-sharded identically
-    in both tables, so a postings shard maps 1:1 to an impact shard and the
-    untouched partitions stay byte-identical."""
-    cfg = cfg or index.config()
-    blocks = index.postings(spark)
-    if shards is not None:
-        blocks = blocks.where(F.col("shard").isin(list(shards)))
-
-    def decode_fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ns = pdf["n"].to_numpy(np.int64)
-            dec = decode_blocks(pdf, want_tf=True)
-            dec["salt"] = np.repeat(pdf["salt"].to_numpy(np.int32), ns)
-            yield dec[["term_id", "salt", "doc_id", "score", "tf"]]
-
-    import pyspark.sql.types as T
-
-    dec_schema = T.StructType([
-        T.StructField("term_id", T.LongType()),
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.FloatType()),
-        T.StructField("tf", T.LongType()),
-    ])
-    postings = blocks.mapInPandas(decode_fn, dec_schema)
-    parts = postings.repartition(
-        cfg.shuffle_partitions,
-        F.pmod(F.col("term_id"), F.lit(cfg.num_shards)), F.col("salt"),
-    )
+def impact_blocks(parts: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Postings clustered by (pmod(term_id, num_shards), salt) — so every
+    (term, salt) group is whole inside one partition — → impact-ordered
+    encoded blocks, one arrange per partition."""
     block_size, keep_tf, num_shards = cfg.block_size, cfg.keep_tf, cfg.num_shards
 
     def arrange_fn(batches):
@@ -152,26 +122,48 @@ def build_impact_postings(spark: SparkSession, index: Index,
             block_size, keep_tf, num_shards,
         )
 
-    out_path = os.path.join(index.path, "postings_impact")
-    arranged = parts.mapInPandas(arrange_fn, BLOCK_SCHEMA)
-    if shards is not None:
-        # replace exactly the re-derived shards' partitions, nothing else
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            arranged.write.partitionBy("shard").mode("overwrite").parquet(out_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    else:
-        # full derive: write aside + atomic swap, so a session-wide dynamic
-        # partitionOverwriteMode (build_index sets it) can never leave
-        # vanished shards behind, and a crash never yields a half table
-        from alexandria_spark.plans.checkpoint import atomic_swap_dir, recover_swap
+    return parts.mapInPandas(arrange_fn, BLOCK_SCHEMA)
 
-        recover_swap(out_path)
-        tmp = out_path + "_rebuilding"
-        arranged.write.partitionBy("shard").mode("overwrite").parquet(tmp)
-        atomic_swap_dir(tmp, out_path)
+
+def write_impact(blocks: DataFrame, index_path: str,
+                 shards: list[int] | None = None) -> str:
+    """Write impact blocks partitioned by shard: just ``shards`` (dynamic
+    overwrite; the other partitions stay byte-identical), or the whole table
+    written aside and swapped in, so vanished shards never linger and a
+    crash never yields a half table."""
+    from alexandria_spark.plans.checkpoint import atomic_swap_dir, recover_swap
+
+    out_path = os.path.join(index_path, "postings_impact")
+    out = blocks.write.partitionBy("shard").mode("overwrite")
+    if shards is not None:
+        out.option("partitionOverwriteMode", "dynamic").parquet(out_path)
+        return out_path
+    recover_swap(out_path)
+    tmp = out_path + "_rebuilding"
+    out.parquet(tmp)
+    atomic_swap_dir(tmp, out_path)
+    return out_path
+
+
+def build_impact_postings(spark: SparkSession, index: Index,
+                          cfg: EngineConfig | None = None,
+                          shards: list[int] | None = None) -> str:
+    """Derive the impact-ordered table from the index's doc-sorted postings
+    (decode → per-(term,salt) impact re-block → parquet by shard). One
+    shuffle (re-co-locating groups), same block codec.
+
+    ``shards`` re-derives ONLY those shard partitions — terms are
+    hash-sharded identically in both tables, so a postings shard maps 1:1
+    to an impact shard and the untouched partitions stay byte-identical."""
+    cfg = cfg or index.config()
+    blocks = index.postings(spark)
+    if shards is not None:
+        blocks = blocks.where(F.col("shard").isin(list(shards)))
+    parts = decode_block_frame(blocks).repartition(
+        cfg.shuffle_partitions,
+        F.pmod(F.col("term_id"), F.lit(cfg.num_shards)), F.col("salt"),
+    )
+    out_path = write_impact(impact_blocks(parts, cfg), index.path, shards)
     from alexandria_spark.plans.snapshots import commit_snapshot
 
     commit_snapshot(index.path, "impact_build",

@@ -19,10 +19,11 @@ from dataclasses import asdict
 from functools import reduce
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from alexandria_spark.config import DEFAULT, EngineConfig
-from alexandria_spark.plans.build import Index, blockify
+from alexandria_spark.plans.build import Index
 from alexandria_spark.plans.checkpoint import CheckpointLog, atomic_swap_dir
 
 
@@ -32,36 +33,43 @@ def rebuild_from_term_doc(
     index_path: str,
     cfg: EngineConfig = DEFAULT,
     run_id: str = "rebuild",
-    versions_resolved: bool = False,
 ) -> Index:
     """Finalize an index from a (possibly merged/appended) term_doc stream:
     recompute doc_lengths / term_stats / meta, then re-block every shard.
     Used by merge_indexes and the streaming refresh."""
-    from alexandria_spark.plans.versioning import (
-        latest_versions_only,
-        version_span,
-        with_version,
-    )
+    from alexandria_spark.plans.versioning import latest_versions_only, with_version
 
     os.makedirs(index_path, exist_ok=True)
     idx = Index(index_path)
     log = CheckpointLog(index_path)
     t0 = time.time()
 
-    # update semantics (the reference hash table's latest-version-wins,
-    # hash_table.h:42-67): when the stream holds more than one ingest
-    # version, keep only each doc's LATEST version's rows — a re-ingested
-    # doc REPLACES its postings (a term present only in the old version
-    # disappears); the version_span probe skips the extra doc-key pass on
-    # the common append-only/batch case, and ``versions_resolved=True``
-    # callers (compact, which just ran the resolution itself) skip both
-    # probes — surviving docs at distinct versions would otherwise pay a
-    # provably-no-op full window shuffle here on every compact
+    # ONE doc-level aggregate gives doc_lengths, n_docs/avg_dl and the
+    # count of docs holding rows at more than one version. Update
+    # semantics (the reference hash table's latest-version-wins,
+    # hash_table.h:42-67) keep only each doc's LATEST version's rows — a
+    # re-ingested doc REPLACES its postings (a term present only in the old
+    # version disappears) — and the window that resolves it runs only when
+    # some doc really has two versions
     term_doc = with_version(term_doc)
-    if not versions_resolved:
-        vmin, vmax = version_span(term_doc)
-        if vmin != vmax:
-            term_doc = latest_versions_only(term_doc)
+    docs = term_doc.groupBy("doc_id").agg(
+        F.max_by("doc_len", "version").alias("doc_len"),
+        F.max("version").alias("version"),
+        F.min("version").alias("min_version"),
+    ).persist()
+    try:
+        docs.select("doc_id", "doc_len", "version").write.mode("overwrite").parquet(
+            os.path.join(index_path, "doc_lengths"))
+        stats = docs.agg(
+            F.count("*").alias("n"), F.avg("doc_len").alias("avg"),
+            F.count(F.when(F.col("min_version") < F.col("version"), 1)).alias("multi"),
+        ).collect()[0]
+    finally:
+        docs.unpersist()
+    n_docs, avg_dl = int(stats["n"] or 0), float(stats["avg"] or 0.0)
+    superseded = int(stats["multi"] or 0) > 0
+    if superseded:
+        term_doc = latest_versions_only(term_doc)
 
     # duplicate (term, doc) pairs from overlapping SAME-version sources
     # (partial-index merges) still combine via +=
@@ -70,19 +78,16 @@ def rebuild_from_term_doc(
         .agg(F.sum("tf").alias("tf"), F.max("doc_len").alias("doc_len"),
              F.max("version").alias("version"))
     )
-    dl = td.groupBy("doc_id").agg(F.max_by("doc_len", "version").alias("doc_len"),
-                                  F.max("version").alias("version"))
-    dl.write.mode("overwrite").parquet(os.path.join(index_path, "doc_lengths"))
     ts = td.groupBy("term_id").agg(F.count("*").alias("df"))
     ts.write.mode("overwrite").parquet(os.path.join(index_path, "term_stats"))
-    stats = spark.read.parquet(os.path.join(index_path, "doc_lengths")).agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avg")
-    ).collect()[0]
-    n_docs, avg_dl = int(stats["n"] or 0), float(stats["avg"] or 0.0)
+    # superseded_versions: the term_doc rows still hold an old version of
+    # some doc, so a partial refresh must resolve latest-version-wins over
+    # the shards it re-blocks (streaming/incremental.py)
     with open(os.path.join(index_path, "meta.json"), "w") as fh:
         json.dump(
             {"n_docs": n_docs, "avg_dl": avg_dl, "config": asdict(cfg),
-             "fingerprint": run_id, "run_id": run_id}, fh,
+             "fingerprint": run_id, "run_id": run_id,
+             "superseded_versions": superseded}, fh,
         )
 
     hot_df = {
@@ -90,26 +95,7 @@ def rebuild_from_term_doc(
         for r in spark.read.parquet(os.path.join(index_path, "term_stats"))
         .where(F.col("df") > cfg.max_postings_per_salt).collect()
     }
-    # Full rebuild replaces the whole postings table: write to a sibling tmp
-    # dir and atomically swap it in. A dynamic partition-overwrite of wave=0
-    # would leave stale wave=1..N-1 (and vanished-shard) partitions behind —
-    # duplicated postings and resurrected tombstoned docs.
-    blocks = blockify(td, cfg, n_docs, avg_dl, hot_df).withColumn("wave", F.lit(0))
-    tmp = idx.postings_path.rstrip("/") + "_rebuilding"
-    blocks.write.partitionBy("wave", "shard").mode("overwrite").parquet(tmp)
-    atomic_swap_dir(tmp, idx.postings_path)
-    # derived acceleration tables must follow the source of truth: a stale
-    # impact or doc-partitioned table would serve pre-rebuild postings
-    # (after a compact, even docs whose tombstones were just cleared —
-    # resurrected deletes)
-    if os.path.isdir(os.path.join(index_path, "postings_impact")):
-        from alexandria_spark.plans.impact import build_impact_postings
-
-        build_impact_postings(spark, idx, cfg)
-    if os.path.isdir(os.path.join(index_path, "postings_doc")):
-        from alexandria_spark.plans.docpart import rebuild_docpart_from_postings
-
-        rebuild_docpart_from_postings(spark, index_path, cfg)
+    write_layouts(spark, index_path, td, cfg, n_docs, avg_dl, hot_df)
     log.mark_done("rebuild", run_id, run_id, docs_processed=n_docs,
                   wall_ms=int(1000 * (time.time() - t0)))
     from alexandria_spark.plans.delete import resolve_deletes
@@ -118,6 +104,64 @@ def rebuild_from_term_doc(
     commit_snapshot(index_path, "rebuild", {"run_id": run_id, "n_docs": n_docs})
     resolve_deletes(spark, idx)  # doc_lengths changed under any tombstones
     return idx
+
+
+def write_layouts(spark: SparkSession, index_path: str, td: DataFrame,
+                  cfg: EngineConfig, n_docs: int, avg_dl: float,
+                  hot_df: dict[int, int], shards: list[int] | None = None) -> None:
+    """Score ``td`` once and write the term blocks plus every derived layout
+    the index carries (impact, docpart) from that one scored frame.
+
+    ``shards=None`` replaces each table whole: written aside and swapped in
+    atomically, since a dynamic overwrite would leave vanished-shard
+    partitions behind (duplicated postings, resurrected tombstoned docs).
+    Otherwise ``td`` holds exactly those term shards: their postings and
+    impact partitions are overwritten in place, and the docpart table, whose
+    doc buckets mix every shard, is rewritten from the scored frame plus the
+    decoded blocks of the untouched shards."""
+    from alexandria_spark.plans.build import blockify, decode_block_frame, term_blocks
+
+    idx = Index(index_path)
+    has_impact = os.path.isdir(os.path.join(index_path, "postings_impact"))
+    has_doc = os.path.isdir(os.path.join(index_path, "postings_doc"))
+    if not (has_impact or has_doc):
+        _write_term_blocks(blockify(td, cfg, n_docs, avg_dl, hot_df), idx, cfg, shards)
+        return
+    scored = blockify(td, cfg, n_docs, avg_dl, hot_df, emit_postings=True).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    try:
+        _write_term_blocks(term_blocks(scored, cfg), idx, cfg, shards)
+        if has_impact:
+            from alexandria_spark.plans.impact import impact_blocks, write_impact
+
+            # blockify's partitioner is the impact layout's own key, so each
+            # (term, salt) group is already whole in one partition
+            write_impact(impact_blocks(scored, cfg), index_path, shards)
+        if has_doc:
+            from alexandria_spark.plans.docpart import write_docpart
+
+            postings = scored
+            if shards is not None:
+                rest = idx.postings(spark).where(~F.col("shard").isin(list(shards)))
+                postings = scored.unionByName(decode_block_frame(rest))
+            write_docpart(spark, index_path, postings, cfg)
+    finally:
+        scored.unpersist()
+
+
+def _write_term_blocks(blocks: DataFrame, idx: Index, cfg: EngineConfig,
+                       shards: list[int] | None) -> None:
+    """Term blocks → ``postings`` partitioned by (wave, shard), as build_index
+    lays them out: whole (aside + swap) or just ``shards`` (dynamic)."""
+    out = blocks.withColumn(
+        "wave", F.pmod(F.col("shard"), F.lit(cfg.build_waves))
+    ).write.partitionBy("wave", "shard").mode("overwrite")
+    if shards is not None:
+        out.option("partitionOverwriteMode", "dynamic").parquet(idx.postings_path)
+        return
+    tmp = idx.postings_path.rstrip("/") + "_rebuilding"
+    out.parquet(tmp)
+    atomic_swap_dir(tmp, idx.postings_path)
 
 
 def merge_indexes(
@@ -145,17 +189,14 @@ def merge_indexes(
     B's fresh one)."""
     from alexandria_spark.plans.versioning import (
         latest_versions_only,
-        read_versioned,
+        read_term_doc,
         version_span,
     )
 
     cfg = cfg or sources[0].config()
-    tds = [
-        read_versioned(
-            spark, os.path.join(s.path, "term_doc")
-        ).select("doc_id", "term_id", "shard", "tf", "doc_len", "version")
-        for s in sources
-    ]
+    tds = [read_term_doc(spark, os.path.join(s.path, "term_doc"))
+           .select("doc_id", "term_id", "shard", "tf", "doc_len", "version")
+           for s in sources]
     if not shared_versions:
         # a source's INTERNAL update history still resolves (within one
         # index the counter is authoritative); only cross-source
@@ -168,5 +209,4 @@ def merge_indexes(
             resolved.append(t.withColumn("version", F.lit(0).cast("long")))
         tds = resolved
     merged = reduce(lambda a, b: a.unionByName(b), tds)
-    return rebuild_from_term_doc(spark, merged, out_path, cfg, run_id="merge",
-                                 versions_resolved=not shared_versions)
+    return rebuild_from_term_doc(spark, merged, out_path, cfg, run_id="merge")

@@ -75,18 +75,19 @@ def read_doc_versions(spark, path: str) -> DataFrame:
     return with_version(spark.read.schema(ID_VERSION_SCHEMA).parquet(path))
 
 
-def read_versioned(spark, path: str) -> DataFrame:
-    """Read a term_doc / doc_lengths directory whose part files may MIX
-    pre-versioning (no ``version`` column) and versioned writes — a
-    batch-built index that later took streaming appends. A plain
-    ``spark.read.parquet`` picks its schema from one arbitrary part file;
-    if a legacy file wins, the version column silently vanishes for EVERY
-    row and latest-version-wins never fires. ``mergeSchema`` unions the
-    footers (legacy rows read the column as null, which ``with_version``
-    coalesces to 0 — exactly the legacy semantics)."""
-    return with_version(
-        spark.read.option("mergeSchema", "true").parquet(path)
-    )
+# the stage-1 columns every maintenance op reads back from term_doc
+TERM_DOC_SCHEMA = ("doc_id long, term_id long, shard int, tf int, "
+                   "doc_len int, version long")
+
+
+def read_term_doc(spark, path: str) -> DataFrame:
+    """A term_doc directory under its explicit schema: no inference or
+    mergeSchema job, and part files that MIX pre-versioning writes (no
+    ``version`` column — a batch-built index that later took streaming
+    appends) with versioned ones read the column for every row, legacy rows
+    as version 0. Inferring the schema from one arbitrary footer could drop
+    the column for every row and disable latest-version-wins."""
+    return with_version(spark.read.schema(TERM_DOC_SCHEMA).parquet(path))
 
 
 def with_version(df: DataFrame, default: int = 0) -> DataFrame:

@@ -63,6 +63,10 @@ def ingest_stream(
         version = next_version(index_path)
         tok = tokenize_docs(batch_df, cfg, id_col, text_col).persist()
         try:
+            # the version is recorded BEFORE the append, so a write that
+            # crashes half-way and is retried at a new version leaves both
+            # versions pending for the refresh gates
+            _record_pending(index_path, int(batch_id), [], version)
             (
                 tok.withColumn("version", F.lit(version).cast("long"))
                 .withColumn(
@@ -76,7 +80,7 @@ def ingest_stream(
             shards = sorted(
                 int(r["shard"]) for r in tok.select("shard").distinct().collect()
             )
-            _record_pending(index_path, int(batch_id), shards)
+            _record_pending(index_path, int(batch_id), shards, version)
             if doc_store is not None:
                 from alexandria_spark.sources.docstore import append_doc_store
 
@@ -105,31 +109,39 @@ def _pending_dir(index_path: str) -> str:
     return os.path.join(index_path, "_pending_refresh")
 
 
-def _record_pending(index_path: str, batch_id: int, shards: list[int]) -> None:
-    """Atomically note the shards a micro-batch appended into."""
+def _record_pending(index_path: str, batch_id: int, shards: list[int],
+                    version: int) -> None:
+    """Atomically note the shards a micro-batch appended into, and the
+    ingest version its term_doc rows carry (one record per version: a
+    retried batch keeps its failed attempt's record)."""
     import json
 
     d = _pending_dir(index_path)
     os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".tmp-{batch_id}")
+    tmp = os.path.join(d, f".tmp-{version}")
     with open(tmp, "w") as fh:
-        json.dump({"batch_id": batch_id, "shards": shards}, fh)
-    os.replace(tmp, os.path.join(d, f"batch-{batch_id}.json"))
+        json.dump({"batch_id": batch_id, "shards": shards, "version": version}, fh)
+    os.replace(tmp, os.path.join(d, f"batch-v{version}.json"))
 
 
-def pending_shards(index_path: str) -> list[int]:
-    """Union of shards touched by appends since the last refresh."""
+def _pending_records(index_path: str) -> list[dict]:
+    """The batch records appended since the last refresh."""
     import json
 
     d = _pending_dir(index_path)
     if not os.path.isdir(d):
         return []
-    out: set[int] = set()
-    for name in os.listdir(d):
+    out = []
+    for name in sorted(os.listdir(d)):
         if name.startswith("batch-") and name.endswith(".json"):
             with open(os.path.join(d, name)) as fh:
-                out.update(json.load(fh)["shards"])
-    return sorted(out)
+                out.append(json.load(fh))
+    return out
+
+
+def pending_shards(index_path: str) -> list[int]:
+    """Union of shards touched by appends since the last refresh."""
+    return sorted({int(s) for r in _pending_records(index_path) for s in r["shards"]})
 
 
 def _clear_pending(index_path: str) -> None:
@@ -204,11 +216,11 @@ def refresh_index(spark: SparkSession, index_path: str,
     frozen global stats can introduce stays capped at any append cadence
     (the reference merger daemon's final append+merge plays the same
     re-anchoring role, merger.cpp:176-181)."""
+    from alexandria_spark.plans.versioning import read_term_doc
+
     td_path = os.path.join(index_path, "term_doc")
     if mode == "full":
-        from alexandria_spark.plans.versioning import read_versioned
-
-        td = read_versioned(spark, td_path)
+        td = read_term_doc(spark, td_path)
         idx = rebuild_from_term_doc(spark, td, index_path, cfg, run_id="refresh")
         _clear_pending(index_path)
         _write_staleness(index_path, 0)  # global stats re-anchored
@@ -216,127 +228,96 @@ def refresh_index(spark: SparkSession, index_path: str,
     if mode != "partial":
         raise ValueError(f"unknown refresh mode {mode!r}")
 
-    import json
-
-    from alexandria_spark.plans.build import blockify
     from alexandria_spark.plans.delete import resolve_deletes
+    from alexandria_spark.plans.merge import write_layouts
     from alexandria_spark.plans.snapshots import commit_snapshot
+    from alexandria_spark.plans.versioning import latest_versions_only, read_doc_versions
 
     idx = Index(index_path)
-    shards = pending_shards(index_path)
+    records = _pending_records(index_path)
+    shards = sorted({int(s) for r in records for s in r["shards"]})
     if not shards:
         return idx
     meta = idx.meta()
     n_docs, avg_dl = int(meta["n_docs"]), float(meta["avg_dl"])
 
-    from alexandria_spark.plans.versioning import read_doc_versions, read_versioned
-
     dl_path = os.path.join(index_path, "doc_lengths")
     existing = read_doc_versions(spark, dl_path).select(
         "doc_id", F.col("version").alias("cur_version"))
-
-    td_raw = read_versioned(spark, td_path).where(F.col("shard").isin(shards))
-    # latest-version-wins must apply WITHIN the pending appends too: a doc
-    # ingested at v1 then re-ingested at v2 before any refresh is in
-    # NEITHER doc_lengths nor the escalation gate below (cur_version is
-    # null), and summing across its versions would serve both contents
-    # forever. Resolution over the touched shards is complete — every
-    # shard v1 touched is still pending, because v1 itself arrived after
-    # the last refresh. Two cheap probes keep the common cases free: a
-    # single-version span (one batch pending) skips everything, and an
-    # append-only multi-batch span (distinct docs at distinct versions —
-    # the usual stream) is proven by countDistinct(doc, version) ==
-    # countDistinct(doc), so the window shuffle runs only when some doc
-    # truly has two pending versions.
-    from alexandria_spark.plans.versioning import latest_versions_only, version_span
-
-    vmin, vmax = version_span(td_raw)
-    if vmin != vmax:
-        probe = td_raw.agg(
-            F.countDistinct("doc_id", "version").alias("dv"),
-            F.countDistinct("doc_id").alias("d")).collect()[0]
-        if int(probe["dv"]) != int(probe["d"]):
-            td_raw = latest_versions_only(td_raw)
-    # duplicate SAME-version (term, doc) pairs across appends combine via
-    # += ; the shard filter is pushed into the parquet scan (shard is a
-    # leading stats column)
-    td = (
-        td_raw.groupBy("term_id", "doc_id", "shard")
-        .agg(F.sum("tf").alias("tf"), F.max("doc_len").alias("doc_len"),
-             F.max("version").alias("version"))
-    )
-    # one left join decides BOTH gates below: which incoming docs are new
-    # (staleness meter / doc_lengths append) and whether any existing doc
-    # arrived at a higher version (an UPDATE)
-    doc_vers = td.groupBy("doc_id").agg(
+    # the shard filter is pushed into the parquet scan (shard is a leading
+    # stats column)
+    td_raw = read_term_doc(spark, td_path).where(F.col("shard").isin(shards))
+    # The gates read only the pending batches' rows: each append file holds
+    # one constant version, so parquet stats prune every other file.
+    # Records written without a version fall back to every touched-shard
+    # row — a superset whose already-refreshed docs are neither new nor
+    # updated.
+    versions = [r.get("version") for r in records]
+    pending = (td_raw if None in versions
+               else td_raw.where(F.col("version").isin(versions)))
+    # ONE aggregate decides every gate below: which incoming docs are new
+    # (staleness meter / doc_lengths append), whether any existing doc
+    # arrived at a higher version (an UPDATE), and whether a doc has two
+    # pending versions (ingested at v1, re-ingested at v2 before any
+    # refresh: it is in NEITHER doc_lengths nor the update gate, and
+    # summing across its versions would serve both contents forever)
+    doc_vers = pending.groupBy("doc_id").agg(
         F.max_by("doc_len", "version").alias("doc_len"),
         F.max("version").alias("version"),
+        F.min("version").alias("min_version"),
     ).join(existing, "doc_id", "left").persist()
+    gate = doc_vers.agg(
+        F.count(F.when(F.col("version") > F.col("cur_version"), 1)).alias("updated"),
+        F.count(F.when(F.col("cur_version").isNull(), 1)).alias("new"),
+        F.count(F.when(F.col("min_version") < F.col("version"), 1)).alias("multi"),
+    ).collect()[0]
     # UPDATE gate: an updated doc's OLD version may hold terms in shards
     # these appends never touched — their stale postings are unreachable
     # from a shard-local re-block, so updates always escalate to a full
     # refresh (which resolves latest-version-wins globally). The reference
     # pays the same shape: its delta merge handles appends; versioned
     # replacement resolves at full-merge/read time (hash_table.h:42-67).
-    updated = doc_vers.where(
-        F.col("cur_version").isNotNull()
-        & (F.col("version") > F.col("cur_version"))).count()
-    if updated:
+    if gate["updated"]:
         doc_vers.unpersist()
         return refresh_index(spark, index_path, cfg, mode="full")
     # staleness gate: the NEW docs these appends bring decide whether the
-    # partial path is still allowed. new_dl is the same persisted frame the
-    # doc_lengths append writes below.
-    new_dl = doc_vers.where(F.col("cur_version").isNull()).select(
-        "doc_id", "doc_len", "version")
-    incoming_new = new_dl.count()
-    since = staleness(index_path)["docs_since_full"] + incoming_new
+    # partial path is still allowed
+    since = staleness(index_path)["docs_since_full"] + int(gate["new"])
     if n_docs > 0 and since / n_docs > cfg.max_stale_doc_ratio:
         doc_vers.unpersist()
         return refresh_index(spark, index_path, cfg, mode="full")
 
-    hot_df = {
-        int(r["term_id"]): int(r["df"])
-        for r in td.groupBy("term_id").agg(F.count("*").alias("df"))
-        .where(F.col("df") > cfg.max_postings_per_salt).collect()
-    }
-    blocks = blockify(td, cfg, n_docs, avg_dl, hot_df).withColumn(
-        "wave", F.pmod(F.col("shard"), F.lit(cfg.build_waves))
+    # latest-version-wins over the touched shards: needed when a pending doc
+    # has two versions, or when term_doc still holds an updated doc's old
+    # rows (a full refresh resolves them in its scan but leaves them on
+    # disk until a compact; indexes that predate the flag count as dirty)
+    superseded = bool(meta.get("superseded_versions", True)) or gate["multi"] > 0
+    if superseded:
+        td_raw = latest_versions_only(td_raw)
+    # duplicate SAME-version (term, doc) pairs across appends combine via +=
+    td = (
+        td_raw.groupBy("term_id", "doc_id", "shard")
+        .agg(F.sum("tf").alias("tf"), F.max("doc_len").alias("doc_len"),
+             F.max("version").alias("version"))
     )
-    # wave is a pure function of shard, so dynamic overwrite replaces
-    # exactly the touched shards' partitions and nothing else; the session
-    # setting is restored afterwards so later plain overwrites in the same
-    # session don't silently become dynamic
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    hot_df = _hot_terms(index_path, td, cfg, since)
     try:
-        blocks.write.partitionBy("wave", "shard").mode("overwrite").parquet(
-            idx.postings_path
-        )
+        write_layouts(spark, index_path, td, cfg, n_docs, avg_dl, hot_df, shards)
+        # doc_lengths: append rows (with their ingest version) for docs the
+        # touched shards introduced — updates never reach this line (they
+        # escalated above), so these are all genuinely new docs whose full
+        # token set landed in one batch
+        doc_vers.where(F.col("cur_version").isNull()).select(
+            "doc_id", "doc_len", "version").write.mode("append").parquet(dl_path)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    # doc_lengths: append rows (with their ingest version) for docs the
-    # touched shards introduced — updates never reach this line (they
-    # escalated above), so these are all genuinely new docs whose full
-    # token set landed in one batch.
-    new_dl.write.mode("append").parquet(dl_path)
-    doc_vers.unpersist()
-    # keep the derived impact table in lockstep with the touched shards
-    # (terms are hash-sharded identically in both tables, so only those
-    # shard partitions are re-derived)
-    if os.path.isdir(os.path.join(index_path, "postings_impact")):
-        from alexandria_spark.plans.impact import build_impact_postings
+        doc_vers.unpersist()
+    if superseded and meta.get("superseded_versions") is False:
+        import json
 
-        build_impact_postings(spark, idx, cfg, shards=shards)
-    # the doc-partitioned layout buckets by doc hash, not term shard, and a
-    # re-blocked term touches every bucket holding one of its docs — so it
-    # re-derives in full from the refreshed postings (score-identical by
-    # construction); the honest cost of a doc-major derived layout under
-    # term-major deltas
-    if os.path.isdir(os.path.join(index_path, "postings_doc")):
-        from alexandria_spark.plans.docpart import rebuild_docpart_from_postings
-
-        rebuild_docpart_from_postings(spark, index_path, cfg)
+        p = os.path.join(index_path, "meta.json")
+        with open(p + ".tmp", "w") as fh:
+            json.dump({**meta, "superseded_versions": True}, fh)
+        os.replace(p + ".tmp", p)
     _clear_pending(index_path)
     _write_staleness(index_path, since)
     commit_snapshot(index_path, "partial_refresh",
@@ -344,3 +325,42 @@ def refresh_index(spark: SparkSession, index_path: str,
                      "docs_since_full": since})
     resolve_deletes(spark, idx)  # doc_lengths changed under any tombstones
     return idx
+
+
+def _hot_terms(index_path: str, td, cfg: EngineConfig, since: int) -> dict[int, int]:
+    """Exact df of the re-blocked terms above the salt cap. A term's df is
+    at most its anchored df plus the docs appended since that anchor, so
+    when the anchored maximum (parquet footer statistics of term_stats)
+    plus ``since`` is within the cap, no term can be hot and the df job is
+    skipped."""
+    top = _anchored_max_df(index_path)
+    if top is not None and top + since <= cfg.max_postings_per_salt:
+        return {}
+    return {
+        int(r["term_id"]): int(r["df"])
+        for r in td.groupBy("term_id").agg(F.count("*").alias("df"))
+        .where(F.col("df") > cfg.max_postings_per_salt).collect()
+    }
+
+
+def _anchored_max_df(index_path: str) -> int | None:
+    """max(term_stats.df) from the parquet footers; None when a footer
+    lacks the statistic or the table is missing."""
+    import pyarrow.parquet as pq
+
+    d = os.path.join(index_path, "term_stats")
+    try:
+        names = [n for n in os.listdir(d) if n.endswith(".parquet")
+                 and not n.startswith(("_", "."))]
+    except OSError:
+        return None
+    top = 0
+    for name in names:
+        md = pq.read_metadata(os.path.join(d, name))
+        col = md.schema.names.index("df")
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(col).statistics
+            if st is None or not st.has_min_max:
+                return None
+            top = max(top, int(st.max))
+    return top

@@ -154,8 +154,9 @@ def test_partial_refresh_reblocks_only_touched_shards(spark, tmp_path):
     mode_before = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     idx = refresh_index(spark, idx_path, CFG, mode="partial")
     assert pending_shards(idx_path) == []  # consumed
-    # partial refresh must not leak dynamic partitionOverwriteMode into the
-    # session (later plain overwrites would silently become dynamic)
+    # partial refresh and build_index must not leak dynamic
+    # partitionOverwriteMode into the session (later plain overwrites would
+    # silently become dynamic)
     assert spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static") == mode_before
 
@@ -178,9 +179,12 @@ def test_partial_refresh_reblocks_only_touched_shards(spark, tmp_path):
 
     # full refresh re-anchors global stats == clean batch build
     refresh_index(spark, idx_path, CFG, mode="full")
+    # build_index's dynamic writes leave the session's default alone too
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     batch = build_index(
         spark, docs.unionByName(new_doc), str(tmp_path / "batch"), CFG
     )
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
     assert _postings_set(spark, Index(idx_path)) == _postings_set(spark, batch)
 
 

@@ -636,7 +636,7 @@ def test_read_versioned_mixed_schema(spark, tmp_path):
     silently drop the column for every row (legacy file wins), which would
     disable latest-version-wins exactly where it matters — a batch-built
     index that later took streaming appends."""
-    from alexandria_spark.plans.versioning import read_versioned
+    from alexandria_spark.plans.versioning import read_term_doc
 
     d = str(tmp_path / "mixed")
     legacy = spark.range(3).select(
@@ -647,7 +647,7 @@ def test_read_versioned_mixed_schema(spark, tmp_path):
         F.lit(3).cast("long").alias("version"))
     versioned.write.mode("append").parquet(d)
 
-    got = {(r.doc_id, r.version) for r in read_versioned(spark, d).collect()}
+    got = {(r.doc_id, r.version) for r in read_term_doc(spark, d).collect()}
     assert got == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (5, 3)}
 
 
