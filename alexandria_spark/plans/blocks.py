@@ -166,6 +166,21 @@ def build_blocks(pdf: pd.DataFrame, block_size: int, keep_tf: bool = True) -> pd
     )
 
 
+def decode_runs(doc_deltas, scores, ns: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a run of blocks, given as their payloads in order and their
+    posting counts, into (docs_u64, scores_f32): one varint pass over the
+    concatenated deltas, then a cumsum that restarts at each block."""
+    deltas = varint_decode(b"".join(doc_deltas))
+    assert len(deltas) == int(ns.sum()), (len(deltas), int(ns.sum()))
+    # segment-wise cumsum: global cumsum minus per-block offset
+    starts = np.zeros(len(ns), dtype=np.int64)
+    np.cumsum(ns[:-1], out=starts[1:])
+    cs = np.cumsum(deltas, dtype=np.uint64)
+    base = cs[starts] - deltas[starts]  # mod-2^64 exact
+    docs_u = cs - np.repeat(base, ns)
+    return docs_u, np.frombuffer(b"".join(scores), dtype="<f4")
+
+
 def decode_blocks(pdf: pd.DataFrame, want_tf: bool = False) -> pd.DataFrame:
     """Inverse of build_blocks for a batch of block rows.
 
@@ -181,17 +196,7 @@ def decode_blocks(pdf: pd.DataFrame, want_tf: bool = False) -> pd.DataFrame:
 
     ns = pdf["n"].to_numpy(np.int64)
     total = int(ns.sum())
-    deltas = varint_decode(b"".join(pdf["doc_deltas"]))
-    assert len(deltas) == total, (len(deltas), total)
-
-    # segment-wise cumsum: global cumsum minus per-block offset
-    starts = np.zeros(len(pdf), dtype=np.int64)
-    np.cumsum(ns[:-1], out=starts[1:])
-    cs = np.cumsum(deltas, dtype=np.uint64)
-    base = cs[starts] - deltas[starts]  # mod-2^64 exact
-    docs_u = cs - np.repeat(base, ns)
-
-    scores = np.frombuffer(b"".join(pdf["scores"]), dtype="<f4")
+    docs_u, scores = decode_runs(pdf["doc_deltas"], pdf["scores"], ns)
     term = np.repeat(pdf["term_id"].to_numpy(np.int64), ns)
     out = pd.DataFrame(
         {"term_id": term, "doc_id": docs_u.view(np.int64), "score": scores}

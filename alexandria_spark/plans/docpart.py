@@ -258,12 +258,6 @@ def search_docpart(
     if not term_ids:
         return spark.createDataFrame([], RESULT_SCHEMA)
     source = _blocks if _blocks is not None else index.postings(spark)
-    if "bucket" not in source.columns:
-        raise FileNotFoundError(
-            f"no doc-partitioned layout under {index.postings_path!r} — build "
-            f"one with build_docpart_index (CLI: build_submit.py --layout "
-            f"docpart|both), or query the term layout with engine dist/bmw"
-        )
     blocks = source.where(F.col("term_id").isin(term_ids))
     nt = len(term_ids)
     kernel_mode = "and" if mode == "and" else "or"

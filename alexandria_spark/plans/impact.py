@@ -42,7 +42,18 @@ from alexandria_spark.plans.build import (
     decode_block_frame,
 )
 from alexandria_spark.plans.delete import deletes_small, drop_deleted, effective_deletes
-from alexandria_spark.plans.query import _query_term_ids, _shard_of
+from alexandria_spark.plans.query import (
+    _PRUNE_COLS,
+    BlockTable,
+    _decode_map,
+    _guarded_meta,
+    _pin_table,
+    _query_term_ids,
+    _semi_join_blocks,
+    _shard_of,
+    _term_rows,
+    _topk_pairs,
+)
 
 # phase-2 completion: most payload blocks a single query may pull to the
 # driver for local numpy summing. Past this, candidate ranges intersect so
@@ -65,6 +76,9 @@ _P2_FLAT_MAX_ROWS = 2_000_000
 # the exact distributed fallback instead. 512 blocks ≈ 2M postings ≈ tens
 # of MB of decoded chunks, far past any case where the walk still wins.
 _P1_MAX_DRIVER_BLOCKS = 512
+
+# the impact table's metadata columns the walk plans from
+_IMPACT_COLS = ("term_id", "salt", "block_id", "n", "max_score")
 
 
 def _impact_arrange(pdf: pd.DataFrame, block_size: int, keep_tf: bool,
@@ -214,53 +228,29 @@ def _block_key_col():
     return F.col("salt").cast("long") * (1 << 31) + F.col("block_id").cast("long")
 
 
-def _impact_meta(spark: SparkSession, index: Index, tid: int,
-                 num_shards: int, _blocks=None,
-                 _pinned: pd.DataFrame | None = None) -> pd.DataFrame | None:
-    """Metadata-only scan of ONE term's impact blocks, sorted by descending
-    block max (the merged impact order across salts) — the single-term face
-    of ``_impact_meta_multi`` so the guard/sort contract lives in exactly
-    one place. None when the term trips the driver metadata guard."""
-    return _impact_meta_multi(spark, index, [tid], num_shards, _blocks,
-                              _pinned)[tid]
-
-
-def _impact_meta_multi(spark: SparkSession, index: Index, tids: list[int],
-                       num_shards: int, _blocks=None,
-                       _pinned: pd.DataFrame | None = None,
+def _impact_meta_multi(impact: BlockTable, tids: list[int], num_shards: int,
                        ) -> dict[int, pd.DataFrame | None]:
-    """All query terms' impact metadata in ONE job (per-term scans cost a
+    """Each query term's impact metadata, sorted by descending block max
+    (the merged impact order across salts); None for a term past the
+    driver metadata guard. All terms come in ONE job (per-term scans cost a
     scheduler round-trip each — on a warm engine that round-trip IS the
-    query cost). Guard semantics match the per-term fetch exactly: the
-    collective limit is n_terms x guard + 1, so exceeding it implies (by
-    pigeonhole) at least one term alone exceeds the per-term guard; under
-    it, any individual term over the guard is marked None, same as before.
+    query cost), or in none when ``impact`` carries the engine's pinned
+    copy. The collective limit is n_terms x guard, so exceeding it implies
+    (by pigeonhole) at least one term alone exceeds the per-term guard."""
+    from alexandria_spark.plans import query as qmod
 
-    ``_pinned`` (ImpactEngine) substitutes the engine's one-time
-    driver-pinned copy of the whole metadata table for the per-query scan:
-    zero Spark jobs here on a warm engine. The per-term guard still
-    applies; pinning itself is guard-bounded at engine init."""
-    from alexandria_spark.plans.query import _META_GUARD_ROWS
-
-    if _pinned is not None:
-        pdf = _pinned[_pinned["term_id"].isin(tids)]
+    if impact.meta is not None:
+        pdf = impact.meta[impact.meta["term_id"].isin(tids)]
     else:
-        shards = sorted({_shard_of(t, num_shards) for t in tids})
-        src = _blocks if _blocks is not None else _read_impact(spark, index)
-        cap = len(tids) * _META_GUARD_ROWS + 1
-        pdf = (
-            src.where(F.col("shard").isin(shards) & F.col("term_id").isin(list(tids)))
-            .select("term_id", "salt", "block_id", "n", "max_score")
-            .limit(cap)
-            .toPandas()
-        )
-        if len(pdf) >= cap:
+        pdf = _guarded_meta(_term_rows(impact.scan, tids, num_shards),
+                            _IMPACT_COLS, len(tids))
+        if pdf is None:
             return {t: None for t in tids}
     out: dict[int, pd.DataFrame | None] = {}
     for t in tids:
         m = pdf[pdf["term_id"] == t]
         out[t] = (
-            None if len(m) > _META_GUARD_ROWS
+            None if len(m) > qmod._META_GUARD_ROWS
             else m.drop(columns=["term_id"])
             # fully-keyed deterministic order: the walk (and its _stats
             # accounting) must not depend on scan row order, which differs
@@ -320,12 +310,9 @@ class _ImpactBlockReader:
     so driver bytes track blocks_read, not blocks_total.
     """
 
-    def __init__(self, spark: SparkSession, index: Index, tid: int,
-                 meta: pd.DataFrame, num_shards: int, first_batch: int,
-                 _blocks=None):
-        self.spark = spark
-        self.index = index
-        self._blocks = _blocks
+    def __init__(self, scan: DataFrame, tid: int, meta: pd.DataFrame,
+                 num_shards: int, first_batch: int):
+        self.scan = scan
         self.shard = _shard_of(tid, num_shards)
         self.tid = tid
         self.meta = meta
@@ -363,10 +350,9 @@ class _ImpactBlockReader:
     def _fetch(self, lo: int, hi: int) -> None:
         sel = self.meta.iloc[lo:hi]
         keys = _block_key_pd(sel).tolist()
-        src = (self._blocks if self._blocks is not None
-               else _read_impact(self.spark, self.index))
         pdf = (
-            src.where((F.col("shard") == self.shard) & (F.col("term_id") == self.tid))
+            self.scan.where((F.col("shard") == self.shard)
+                            & (F.col("term_id") == self.tid))
             .where(_block_key_col().isin(keys))
             .toPandas()
         )
@@ -374,29 +360,30 @@ class _ImpactBlockReader:
         self.fetch_jobs += 1
 
 
-def _search_fallback(spark: SparkSession, index: Index, query: str,
-                     mode: str, k: int, cfg: EngineConfig,
-                     _stats: dict | None = None,
-                     _doc_blocks=None) -> list[tuple[int, float]]:
-    """Exact distributed top-k via plans.query.search — the fallback when a
-    driver-volume guard trips (same result contract: score desc, unsigned
-    doc asc). A warm engine's cached doc-sorted scan rides through
-    ``_doc_blocks`` so guard-tripped queries still serve from executor
-    memory; ``_stats`` keeps its documented keys (zeros + a marker)."""
+def _search_fallback(spark: SparkSession, index: Index, query: str, k: int,
+                     cfg: EngineConfig, _stats: dict | None,
+                     table: BlockTable | None) -> list[tuple[int, float]]:
+    """Exact distributed OR top-k via plans.query.search — the fallback when
+    a driver-volume guard trips (same result contract: score desc, unsigned
+    doc asc). ``table`` is the scan to serve from — a warm engine's cached
+    one, or the query's snapshot-pinned one — so guard-tripped queries
+    still serve from executor memory; an OR query reads no metadata. The
+    impact layout decodes to the same posting multiset as the doc-sorted
+    one (test_impact_layout_same_postings), so either table serves exactly.
+    ``_stats`` keeps its documented keys (zeros + a marker)."""
     from alexandria_spark.plans.query import _collect_topk
 
     if _stats is not None:
         _stats.update(blocks_read=0, blocks_total=0, payload_blocks_fetched=0,
                       fetch_jobs=0, blocks_read_p1=0, blocks_fetched_p2=0,
                       n_candidates=0, fallback="distributed")
-    return _collect_topk(spark, index, query, mode, k, cfg, _blocks=_doc_blocks)
+    return _collect_topk(spark, index, query, "or", k, cfg, _table=table)
 
 
 def impact_single_topk(spark: SparkSession, index: Index, query: str,
                        k: int = 10, cfg: EngineConfig | None = None,
                        _stats: dict | None = None,
-                       _blocks=None,
-                       _meta_pinned: pd.DataFrame | None = None,
+                       _impact: BlockTable | None = None,
                        ) -> list[tuple[int, float]]:
     """Exact single-term top-k over the impact table: decode blocks in
     impact order, stop when the kth collected score >= the next block's
@@ -406,25 +393,20 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
     blocks). Payloads are fetched lazily in doubling batches (metadata-only
     scan first), so the driver never materializes blocks the loop never
     reaches. ``_stats`` reports blocks_read / blocks_total /
-    payload_blocks_fetched / fetch_jobs."""
+    payload_blocks_fetched / fetch_jobs. ``_impact`` is ImpactEngine's
+    pinned impact table."""
     cfg = cfg or index.config()
     term_ids = _query_term_ids(query, "or", cfg)
     if len(term_ids) != 1:
         raise ValueError("impact_single_topk serves single-term queries")
     tid = term_ids[0]
-    # fallbacks reuse _blocks when a warm engine passed its cached impact
-    # scan: the impact layout decodes to the identical posting multiset
-    # (test_impact_layout_same_postings), so search() serves exactly from it
     if not deletes_small(index):  # mass deletion: serve distributed
-        return _search_fallback(spark, index, query, "or", k, cfg, _stats,
-                                _doc_blocks=_blocks)
-    if _blocks is None:  # pin meta scan + payload fetches to one snapshot
-        _blocks = _pinned_scan(spark, index, "postings_impact")
-    meta = _impact_meta(spark, index, tid, cfg.num_shards, _blocks,
-                        _meta_pinned)
+        return _search_fallback(spark, index, query, k, cfg, _stats, _impact)
+    if _impact is None:  # pin meta scan + payload fetches to one snapshot
+        _impact = BlockTable(_pinned_scan(spark, index, "postings_impact"), None)
+    meta = _impact_meta_multi(_impact, [tid], cfg.num_shards)[tid]
     if meta is None:  # metadata guard tripped — exact distributed fallback
-        return _search_fallback(spark, index, query, "or", k, cfg, _stats,
-                                _doc_blocks=_blocks)
+        return _search_fallback(spark, index, query, k, cfg, _stats, _impact)
     if len(meta) == 0:
         if _stats is not None:
             _stats.update(blocks_read=0, blocks_total=0,
@@ -434,8 +416,8 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
     # first batch = the smallest impact-order prefix that can hold k postings
     cum = meta["n"].to_numpy(np.int64).cumsum()
     first = int(np.searchsorted(cum, k) + 1)
-    reader = _ImpactBlockReader(spark, index, tid, meta, cfg.num_shards,
-                                min(first, len(meta)), _blocks)
+    reader = _ImpactBlockReader(_impact.scan, tid, meta, cfg.num_shards,
+                                min(first, len(meta)))
     maxs = meta["max_score"].to_numpy(np.float32)
     docs: list[np.ndarray] = []
     scores: list[np.ndarray] = []
@@ -453,11 +435,11 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
             # ANOTHER block would have to stream through the driver: concede
             # and serve exact (the stop test above runs first, so a walk
             # that terminates exactly at the cap keeps its finished work)
-            return _search_fallback(spark, index, query, "or", k, cfg,
-                                    _stats, _doc_blocks=_blocks)
+            return _search_fallback(spark, index, query, k, cfg, _stats,
+                                    _impact)
         bdu, bsc = reader.block(i)
         du, sc = drop_deleted(bdu, bsc, deleted_u)
-        docs.append(du.view(np.int64))
+        docs.append(du)
         scores.append(sc)
         n_collected += len(du)
         read += 1
@@ -466,19 +448,14 @@ def impact_single_topk(spark: SparkSession, index: Index, query: str,
         _stats["blocks_total"] = int(len(meta))
         _stats["payload_blocks_fetched"] = reader.fetched_blocks
         _stats["fetch_jobs"] = reader.fetch_jobs
-    d = np.concatenate(docs)
-    s = np.concatenate(scores)
-    du = d.view(np.uint64)
-    top = np.lexsort((du, -s))[:k]
-    return [(int(d[i]), float(s[i])) for i in top]
+    return _topk_pairs(np.concatenate(docs), np.concatenate(scores), k)
 
 
 def impact_or_topk(spark: SparkSession, index: Index, query: str,
                    k: int = 10, cfg: EngineConfig | None = None,
-                   _stats: dict | None = None, _blocks=None,
-                   _doc_blocks=None,
-                   _meta_pinned: pd.DataFrame | None = None,
-                   _doc_meta_pinned: pd.DataFrame | None = None,
+                   _stats: dict | None = None,
+                   _impact: BlockTable | None = None,
+                   _doc: BlockTable | None = None,
                    ) -> list[tuple[int, float]]:
     """Exact multi-term disjunctive top-k over the impact layout: TAAT with
     per-block upper bounds (the reference's score-ordered serving,
@@ -498,41 +475,38 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     contains no candidate are never read (the two layouts complement each
     other: impact order finds the candidates, doc order completes them).
     Final ranking: exact score desc, unsigned doc asc.
+
+    ``_impact`` and ``_doc`` are ImpactEngine's pinned tables.
     """
     cfg = cfg or index.config()
     term_ids = _query_term_ids(query, "or", cfg)
     if not term_ids:
         return []
     if len(term_ids) == 1:
-        return impact_single_topk(spark, index, query, k, cfg, _stats, _blocks,
-                                  _meta_pinned)
+        return impact_single_topk(spark, index, query, k, cfg, _stats, _impact)
     if not deletes_small(index):  # mass deletion: serve distributed
-        return _search_fallback(spark, index, query, "or", k, cfg, _stats,
-                                _doc_blocks=_doc_blocks)
+        return _search_fallback(spark, index, query, k, cfg, _stats, _doc)
     deleted_u = effective_deletes(spark, index)
 
-    if _blocks is None:  # pin meta scans + payload fetches to one snapshot
-        _blocks = _pinned_scan(spark, index, "postings_impact")
-    if _doc_blocks is None:  # same for the phase-2 completion table
-        _doc_blocks = _pinned_scan(spark, index, "postings")
-    metas = _impact_meta_multi(spark, index, term_ids, cfg.num_shards, _blocks,
-                               _meta_pinned)
+    if _impact is None:  # pin meta scans + payload fetches to one snapshot
+        _impact = BlockTable(_pinned_scan(spark, index, "postings_impact"), None)
+    if _doc is None:  # same for the phase-2 completion table
+        _doc = BlockTable(_pinned_scan(spark, index, "postings"), None)
+    metas = _impact_meta_multi(_impact, term_ids, cfg.num_shards)
     if any(m is None for m in metas.values()):
         # a hot term tripped the metadata guard: the driver-orchestrated
         # impact walk would hold its block list — serve the whole query
         # through the exact distributed path instead (over the warm cached
         # doc-sorted scan when an engine provided one)
-        return _search_fallback(spark, index, query, "or", k, cfg, _stats,
-                                _doc_blocks=_doc_blocks)
+        return _search_fallback(spark, index, query, k, cfg, _stats, _doc)
     readers = {
-        t: _ImpactBlockReader(spark, index, t, m, cfg.num_shards,
-                              first_batch=2, _blocks=_blocks)
+        t: _ImpactBlockReader(_impact.scan, t, m, cfg.num_shards, first_batch=2)
         for t, m in metas.items() if len(m)
     }
     # one combined job seeds every term's first payload batch — with per-term
     # lazy fetches, a warm 3-term OR paid 3 scheduler round-trips before
     # reading a single posting
-    _prefetch_first_batches(_blocks, readers, metas, k)
+    _prefetch_first_batches(_impact.scan, readers, metas, k)
     ptr = {t: 0 for t in readers}
     # per-term decoded prefixes as array chunks — phase 1 stays fully
     # vectorized (no per-posting Python): partial sums come from one
@@ -576,8 +550,8 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
             # and ANOTHER block would have to stream through the driver:
             # concede the walk and serve exact (the stop test above runs
             # first, so terminating exactly at the cap keeps the result)
-            return _search_fallback(spark, index, query, "or", k, cfg,
-                                    _stats, _doc_blocks=_doc_blocks)
+            return _search_fallback(spark, index, query, k, cfg, _stats,
+                                    _doc)
         t = max(live, key=bound.__getitem__)
         bdu, bsc = readers[t].block(ptr[t])
         du, sc = drop_deleted(bdu, bsc, deleted_u)
@@ -621,9 +595,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
                 blocks_fetched_p2=0, n_candidates=0,
                 blocks_drained=drained,
             )
-        di = docs_u_arr.view(np.int64)
-        top = np.lexsort((docs_u_arr, -a_arr))[:k]
-        return [(int(di[i]), float(a_arr[i])) for i in top]
+        return _topk_pairs(docs_u_arr, a_arr, k)
 
     # candidate cut: ub(d) = a(d) + Σ residuals of terms that haven't shown d
     ub = a_arr.copy()
@@ -648,8 +620,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     cand = docs_u_arr[cand_mask].view(np.int64)
 
     exact, p2_blocks = _exact_scores_docsorted(spark, index, term_ids, cand,
-                                               cfg, _doc_blocks,
-                                               _doc_meta_pinned)
+                                               cfg, _doc)
     if _stats is not None:
         _stats.update(
             blocks_read_p1=p1_read,
@@ -659,15 +630,12 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
         )
     d = np.fromiter(exact.keys(), dtype=np.int64)
     s = np.fromiter(exact.values(), dtype=np.float64)
-    top = np.lexsort((d.view(np.uint64), -s))[:k]
-    return [(int(d[i]), float(s[i])) for i in top]
+    return _topk_pairs(d.view(np.uint64), s, k)
 
 
 def _exact_scores_docsorted(spark: SparkSession, index: Index,
                             term_ids: list[int], cand: np.ndarray,
-                            cfg: EngineConfig,
-                            _doc_blocks=None,
-                            _doc_meta_pinned: pd.DataFrame | None = None,
+                            cfg: EngineConfig, _doc: BlockTable | None = None,
                             ) -> tuple[dict[int, float], int]:
     """Exact OR scores for the candidate docs from the doc-sorted postings.
 
@@ -682,14 +650,9 @@ def _exact_scores_docsorted(spark: SparkSession, index: Index,
     bytes (at 500k docs the driver path measured 1.2–1.8 s pulling
     192–288/192–288 blocks; the distributed path bounds the transfer by
     len(cand) regardless of corpus size).
-    ``_doc_blocks`` substitutes ImpactEngine's cached doc-sorted scan."""
-    from alexandria_spark.plans.query import _META_GUARD_ROWS, _decode_map
-
-    shards = sorted({_shard_of(t, cfg.num_shards) for t in term_ids})
-    src = _doc_blocks if _doc_blocks is not None else index.postings(spark)
-    blocks = src.where(
-        F.col("shard").isin(shards) & F.col("term_id").isin(list(term_ids))
-    )
+    ``_doc`` is the doc-sorted table to read (ImpactEngine's pinned one)."""
+    src = _doc.scan if _doc is not None else index.postings(spark)
+    blocks = _term_rows(src, term_ids, cfg.num_shards)
     if len(cand) == 0:
         return {}, 0
 
@@ -742,12 +705,11 @@ def _exact_scores_docsorted(spark: SparkSession, index: Index,
         )
         return {int(r["doc_id"]): float(r["s"]) for r in rows}
 
-    if _doc_meta_pinned is not None:  # warm engine: zero-job block pruning
-        meta = _doc_meta_pinned[_doc_meta_pinned["term_id"].isin(term_ids)]
+    if _doc is not None and _doc.meta is not None:  # zero-job block pruning
+        meta = _doc.meta[_doc.meta["term_id"].isin(term_ids)]
     else:
-        meta = blocks.select("term_id", "salt", "block_id",
-                             "min_doc", "max_doc").limit(_META_GUARD_ROWS + 1).toPandas()
-    if len(meta) > _META_GUARD_ROWS:
+        meta = _guarded_meta(blocks, _PRUNE_COLS)
+    if meta is None:
         # metadata guard: skip driver-side block pruning entirely
         # (candidate set is bounded by the phase-1 prefix)
         return _complete_distributed(), -1
@@ -765,10 +727,7 @@ def _exact_scores_docsorted(spark: SparkSession, index: Index,
         # pruning kept too much to ship to the driver — complete
         # distributed; blocks_fetched_p2 = -len(kept) marks the switch
         return _complete_distributed(), -int(len(kept))
-    keys = spark.createDataFrame(kept[["term_id", "salt", "block_id"]])
-    payload = blocks.join(
-        F.broadcast(keys), ["term_id", "salt", "block_id"], "left_semi"
-    ).toPandas()
+    payload = _semi_join_blocks(spark, blocks, kept).toPandas()
     dec = decode_blocks(payload)
     du = dec["doc_id"].to_numpy().view(np.uint64)
     pos = np.minimum(np.searchsorted(cand_u, du), len(cand_u) - 1)
@@ -796,52 +755,28 @@ class ImpactEngine:
         self.spark = spark
         self.index = index
         self.cfg = cfg or index.config()
-        self.blocks = _read_impact(spark, index)
-        self.doc_blocks = index.postings(spark)
-        self.meta_pinned: pd.DataFrame | None = None
-        self.doc_meta_pinned: pd.DataFrame | None = None
-        if cache:
-            from alexandria_spark.plans.query import _META_GUARD_ROWS, cache_coalesce
-
-            self.blocks = cache_coalesce(
-                self.blocks, os.path.join(index.path, "postings_impact")
-            ).cache()
-            self.blocks.count()
-            self.doc_blocks = cache_coalesce(
-                self.doc_blocks, index.postings_path
-            ).cache()
-            self.doc_blocks.count()
-            # one-time driver pin of BOTH tables' block metadata (payloads
-            # stay on the executors) — a warm query then plans its walk and
-            # its phase-2 pruning without any metadata jobs: the per-query
-            # Spark jobs drop from ~5 to the 1-2 payload fetches. Guarded
-            # exactly like every other driver metadata fetch: past
-            # _META_GUARD_ROWS the engine serves identically via per-query
-            # scans (None => cold-path behavior). The pinned copy is as
-            # consistent as the cached scans it mirrors: both snapshot init
-            # time, so staleness semantics are unchanged.
-            m = (self.blocks.select("term_id", "salt", "block_id", "n",
-                                    "max_score")
-                 .limit(_META_GUARD_ROWS + 1).toPandas())
-            self.meta_pinned = None if len(m) > _META_GUARD_ROWS else m
-            dm = (self.doc_blocks.select("term_id", "salt", "block_id",
-                                         "min_doc", "max_doc")
-                  .limit(_META_GUARD_ROWS + 1).toPandas())
-            self.doc_meta_pinned = None if len(dm) > _META_GUARD_ROWS else dm
+        # both tables' scans cached in executor memory, and their block
+        # metadata pinned on the driver (payloads stay on the executors):
+        # a warm query plans its walk and its phase-2 pruning without any
+        # metadata jobs. Past the guard a table pins no metadata and queries
+        # plan over it as cold ones do. The pinned copies are as consistent
+        # as the cached scans they mirror: both snapshot init time.
+        self.blocks, self.meta = _pin_table(
+            _read_impact(spark, index),
+            os.path.join(index.path, "postings_impact"), _IMPACT_COLS, cache)
+        self.doc_blocks, self.doc_meta = _pin_table(
+            index.postings(spark), index.postings_path, _PRUNE_COLS, cache)
 
     def single_topk(self, query: str, k: int = 10,
                     _stats: dict | None = None) -> list[tuple[int, float]]:
         return impact_single_topk(self.spark, self.index, query, k, self.cfg,
-                                  _stats, _blocks=self.blocks,
-                                  _meta_pinned=self.meta_pinned)
+                                  _stats, BlockTable(self.blocks, self.meta))
 
     def or_topk(self, query: str, k: int = 10,
                 _stats: dict | None = None) -> list[tuple[int, float]]:
         return impact_or_topk(self.spark, self.index, query, k, self.cfg,
-                              _stats, _blocks=self.blocks,
-                              _doc_blocks=self.doc_blocks,
-                              _meta_pinned=self.meta_pinned,
-                              _doc_meta_pinned=self.doc_meta_pinned)
+                              _stats, BlockTable(self.blocks, self.meta),
+                              BlockTable(self.doc_blocks, self.doc_meta))
 
     def unpersist(self) -> None:
         self.blocks.unpersist()

@@ -1,13 +1,14 @@
 """Query engine: top-k conjunctive/disjunctive BM25 over the block index.
 
-Two execution paths, both reading the same block tables:
+Three execution paths over the same block tables:
 
 * ``search`` — the distributed DataFrame path. Partition-pruned scan of the
   query terms' shards (the Spark analogue of the reference's per-token shard
   lookups, sharded.h:121-146), driver-side doc-range block pruning for
   conjunctive queries, vectorized block decode in mapInPandas, then
   groupBy(doc_id) + TakeOrderedAndProject top-k. Scales to posting lists far
-  beyond driver memory.
+  beyond driver memory. ``QueryEngine`` is its warm form: the same call over
+  a cached scan and a driver-pinned copy of the block metadata.
 
 * ``LocalIndex`` — the low-latency serving path (the analogue of the
   reference's RAM-cached readers, index_reader.cpp:59-89): block metadata is
@@ -23,12 +24,21 @@ Two execution paths, both reading the same block tables:
   two-phase block-max pruning (exact top-k) for posting lists beyond one
   node.
 
+These paths and the impact layout's (plans/impact.py) plan through the
+same few helpers below: ``_term_rows`` (the query terms' scan),
+``_guarded_meta`` (a driver-side metadata fetch, None past
+``_META_GUARD_ROWS``), ``_pin_table`` (a warm engine's cached scan plus its
+guarded metadata, as one ``BlockTable``), ``_semi_join_blocks`` (read only
+the kept blocks) and ``_topk_pairs`` (the exact driver-side top-k).
+
 Ordering contract (rank identity): score DESC, then doc_id ASC in *unsigned*
 64-bit order — the reference sorts by score desc with value-asc storage
 order as tie-break (index_manager.cpp:279-282, generic_record.h:50-68).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -46,7 +56,7 @@ from pyspark.sql.types import (
 from alexandria_spark.config import DEFAULT, EngineConfig
 from alexandria_spark.functions.hashing import i64_hash64
 from alexandria_spark.functions.tokenizer import query_terms, tokenize
-from alexandria_spark.plans.blocks import decode_blocks, varint_decode
+from alexandria_spark.plans.blocks import decode_blocks, decode_runs
 from alexandria_spark.plans.build import MIN_I64, Index
 from alexandria_spark.plans.checkpoint import parquet_dir_bytes
 from alexandria_spark.plans.delete import (
@@ -87,6 +97,18 @@ _META_GUARD_ROWS = 200_000
 # pins the metadata once, so warm queries never pay the job either way).
 _PRUNE_MIN_BYTES = 64 << 20
 
+# search_bmw's phase 2: most docs (by the metadata estimate) its remaining
+# buckets may hold before the query is served by search() instead.
+# Adversarial score distributions let the bound prune almost nothing, and
+# ~2M docs' (doc, score) pairs per term is tens of MB of driver transfer for
+# a query the distributed aggregation serves with k rows.
+_BMW_P2_MAX_DOCS = 2_000_000
+
+# the metadata columns AND pruning reads (search, QueryEngine, and the
+# impact layout's phase-2 completion over the doc-sorted table)
+_PRUNE_COLS = ("term_id", "salt", "block_id", "min_doc", "max_doc")
+_BLOCK_KEY = ["term_id", "salt", "block_id"]
+
 
 def _shard_of(term_id: int, num_shards: int) -> int:
     return int(np.int64(term_id).astype(np.uint64) % np.uint64(num_shards))
@@ -94,6 +116,64 @@ def _shard_of(term_id: int, num_shards: int) -> int:
 
 def _u(x: np.ndarray) -> np.ndarray:
     return x.astype(np.int64, copy=False).view(np.uint64)
+
+
+class BlockTable(NamedTuple):
+    """One block table as a query reads it: the scan, and a driver copy of
+    its block metadata. A warm engine passes its cached scan and the copy
+    it pinned once; ``meta`` is None when no copy is held (a cold query, or
+    an engine whose pin tripped the guard), and the query then plans as a
+    cold one over ``scan``."""
+
+    scan: DataFrame
+    meta: pd.DataFrame | None
+
+
+def _term_rows(src: DataFrame, term_ids: list[int], num_shards: int) -> DataFrame:
+    """The query terms' rows of a block table: partition-pruned on shard,
+    term_id pushed down to the parquet reader."""
+    shards = sorted({_shard_of(t, num_shards) for t in term_ids})
+    return src.where(
+        F.col("shard").isin(shards) & F.col("term_id").isin(list(term_ids))
+    )
+
+
+def _guarded_meta(blocks: DataFrame, cols, n_terms: int = 1) -> pd.DataFrame | None:
+    """Driver copy of ``blocks``' metadata columns, or None past the guard
+    of ``n_terms`` x ``_META_GUARD_ROWS`` rows (read at call time, so a
+    patched guard applies). Past it, callers serve without driver-side
+    planning, exactly."""
+    cap = n_terms * _META_GUARD_ROWS
+    rows = blocks.select(*cols).limit(cap + 1).toPandas()
+    return None if len(rows) > cap else rows
+
+
+def _pin_table(df: DataFrame, table_dir: str, cols, cache: bool) -> BlockTable:
+    """A warm engine's hold on one block table: the scan cached right-sized
+    in executor memory and materialized once, plus its guarded metadata
+    pinned on the driver, so queries plan without metadata jobs."""
+    if cache:
+        df = cache_coalesce(df, table_dir).cache()
+        df.count()
+    return BlockTable(df, _guarded_meta(df, cols))
+
+
+def _semi_join_blocks(spark: SparkSession, blocks: DataFrame,
+                      kept: pd.DataFrame) -> DataFrame:
+    """``blocks`` restricted to the blocks in ``kept`` (driver-pruned
+    metadata) by a broadcast left-semi join: pruned payloads are never
+    read."""
+    keys = spark.createDataFrame(kept[_BLOCK_KEY])
+    return blocks.join(F.broadcast(keys), _BLOCK_KEY, "left_semi")
+
+
+def _topk_pairs(docs_u: np.ndarray, scores: np.ndarray,
+                k: int | None) -> list[tuple[int, float]]:
+    """Exact driver-side top-k as (doc_id, score) pairs: score desc, then
+    unsigned doc id asc."""
+    top = np.lexsort((docs_u, -scores))[:k]
+    docs_i = docs_u.view(np.int64)
+    return [(int(docs_i[i]), float(scores[i])) for i in top]
 
 
 def _decode_map(blocks: DataFrame) -> DataFrame:
@@ -173,8 +253,7 @@ def search(
     mode: str = "and",
     k: int | None = 10,
     cfg: EngineConfig | None = None,
-    prune: bool = True,
-    _blocks: DataFrame | None = None,
+    _table: BlockTable | None = None,
     docs: DataFrame | None = None,
     _term_ids: list[int] | None = None,
 ) -> DataFrame:
@@ -192,7 +271,11 @@ def search(
     phrase against an n_grams<W index has no persisted key. With ``docs``
     the query runs two-stage — bigram-AND candidates, then a positional
     verify over the candidates only (see search_phrase_long); without it
-    the historical ValueError stands."""
+    the historical ValueError stands.
+
+    ``_table`` is the term layout as a warm engine holds it (QueryEngine):
+    the query reads its scan, and when it carries metadata an AND query
+    prunes from that copy with no Spark job and no size probe."""
     cfg = cfg or index.config()
     if _term_ids is not None:
         term_ids = _term_ids
@@ -205,40 +288,29 @@ def search(
         term_ids = _query_term_ids(query, mode, cfg)
     if not term_ids:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    shards = sorted({_shard_of(t, cfg.num_shards) for t in term_ids})
+    src = _table.scan if _table is not None else index.postings(spark)
+    blocks = _term_rows(src, term_ids, cfg.num_shards)
 
-    src = _blocks if _blocks is not None else index.postings(spark)
-    blocks = src.where(
-        F.col("shard").isin(shards) & F.col("term_id").isin(term_ids)
-    )
-
-    if (mode == "and" and len(term_ids) > 1 and prune
-            and parquet_dir_bytes(index.postings_path) >= _PRUNE_MIN_BYTES):
-        # metadata-only read (column pruning keeps payloads out of this scan).
-        # Two-sided gate: below _PRUNE_MIN_BYTES on disk the per-query
-        # metadata round-trip (one Spark job) costs more than decoding the
-        # query terms' blocks outright, so the cold path skips straight to
-        # the decode (size probe is a driver-side stat, no job); past
-        # _META_GUARD_ROWS driver-side pruning would hold too much block
-        # metadata, so a pathological query over huge lists also skips it
-        # (the decode path stays exact either way).
-        meta_df = blocks.select("term_id", "salt", "block_id", "min_doc", "max_doc")
-        rows = meta_df.limit(_META_GUARD_ROWS + 1).toPandas()
-        meta = None if len(rows) > _META_GUARD_ROWS else rows
-    else:
-        meta = None
+    meta = None
+    if mode == "and" and len(term_ids) > 1:
+        if _table is not None and _table.meta is not None:
+            meta = _table.meta[_table.meta["term_id"].isin(term_ids)]
+        elif parquet_dir_bytes(index.postings_path) >= _PRUNE_MIN_BYTES:
+            # metadata-only read (column pruning keeps payloads out of this
+            # scan). Two-sided gate: below _PRUNE_MIN_BYTES on disk the
+            # per-query metadata round-trip (one Spark job) costs more than
+            # decoding the query terms' blocks outright, so the cold path
+            # skips straight to the decode (size probe is a driver-side
+            # stat, no job); past the guard, a pathological query over huge
+            # lists also skips the prune (the decode stays exact either way)
+            meta = _guarded_meta(blocks, _PRUNE_COLS)
 
     if meta is not None:
         kept = _prune_and_blocks(meta, term_ids)
         if len(kept) == 0:
             return spark.createDataFrame([], RESULT_SCHEMA)
         if len(kept) < len(meta):
-            keys = spark.createDataFrame(
-                kept[["term_id", "salt", "block_id"]]
-            )
-            blocks = blocks.join(
-                F.broadcast(keys), ["term_id", "salt", "block_id"], "left_semi"
-            )
+            blocks = _semi_join_blocks(spark, blocks, kept)
 
     postings = _decode_map(blocks)
     agg = postings.groupBy("doc_id").agg(
@@ -450,14 +522,9 @@ def search_bmw(
         # deletion makes that a giant array — serve exactly via the
         # distributed path, which anti-joins tombstones on the executors
         return _collect_topk(spark, index, query, mode, k, cfg)
-    shards = sorted({_shard_of(t, cfg.num_shards) for t in term_ids})
-    blocks = index.postings(spark).where(
-        F.col("shard").isin(shards) & F.col("term_id").isin(term_ids)
-    )
-    meta = blocks.select(
-        "term_id", "salt", "block_id", "min_doc", "max_doc", "max_score", "n"
-    ).limit(_META_GUARD_ROWS + 1).toPandas()
-    if len(meta) > _META_GUARD_ROWS:
+    blocks = _term_rows(index.postings(spark), term_ids, cfg.num_shards)
+    meta = _guarded_meta(blocks, _PRUNE_COLS + ("max_score", "n"))
+    if meta is None:
         # metadata overflow (hot terms at scale): the bucket-pruning plan
         # would stall the driver — serve exactly via the fully distributed
         # path instead (same result contract: score desc, unsigned doc asc)
@@ -503,9 +570,7 @@ def search_bmw(
         touch = np.zeros(len(meta), dtype=bool)
         for lo_i, hi_i in zip(lo, hi_inc):
             touch |= (blows <= hi_i) & (bhighs >= lo_i)
-        kept = meta[touch]
-        keys = spark.createDataFrame(kept[["term_id", "salt", "block_id"]])
-        sel = blocks.join(F.broadcast(keys), ["term_id", "salt", "block_id"], "left_semi")
+        sel = _semi_join_blocks(spark, blocks, meta[touch])
         lo_c, hi_c = lo.copy(), hi_inc.copy()  # plain arrays into the closure
 
         def fn(batches):
@@ -549,22 +614,14 @@ def search_bmw(
     # matches reachable.
     p1 = set(phase1)
     remaining = [b for b in order if feasible[b] and b not in p1 and ub[b] >= tau]
-    if remaining and float(sum(docs_est[b] for b in remaining)) > 2_000_000:
-        # adversarial score distribution: the bound prunes almost nothing.
-        # _eval_buckets ships only in-bucket (doc, score) pairs now, but ~2M
-        # docs' pairs per term is still tens of MB of driver transfer for a
-        # query the fully distributed aggregation serves with k rows —
-        # serve exactly via that path instead
+    if remaining and float(sum(docs_est[b] for b in remaining)) > _BMW_P2_MAX_DOCS:
+        # adversarial score distribution: the bound prunes almost nothing
         return _collect_topk(spark, index, query, mode, k, cfg)
     if remaining:
         d2, s2 = drop_deleted(*_eval_buckets(remaining), deleted_u)
         docs_u = np.concatenate([docs_u, d2])
         scores = np.concatenate([scores, s2])
-    if len(docs_u) == 0:
-        return []
-    top = np.lexsort((docs_u, -scores))[:k]
-    docs_i = docs_u.view(np.int64)
-    return [(int(docs_i[i]), float(scores[i])) for i in top]
+    return _topk_pairs(docs_u, scores, k)
 
 
 def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
@@ -598,13 +655,13 @@ def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
 
 def _collect_topk(spark: SparkSession, index: Index, query: str, mode: str,
                   k: int, cfg: EngineConfig,
-                  _blocks: DataFrame | None = None) -> list[tuple[int, float]]:
+                  _table: BlockTable | None = None) -> list[tuple[int, float]]:
     """Exact top-k via the fully distributed path, collected — the shared
     fallback every driver-volume guard routes to (same result contract:
-    score desc, unsigned doc asc). ``_blocks`` substitutes a warm engine's
+    score desc, unsigned doc asc). ``_table`` carries a warm engine's
     cached scan so a guard-tripped query still serves from executor memory
     instead of a cold parquet read."""
-    r = search(spark, index, query, mode=mode, k=k, cfg=cfg, _blocks=_blocks)
+    r = search(spark, index, query, mode=mode, k=k, cfg=cfg, _table=_table)
     return [(int(row["doc_id"]), float(row["score"])) for row in r.collect()]
 
 
@@ -616,8 +673,6 @@ def cache_coalesce(df: DataFrame, table_dir: str) -> DataFrame:
     NEVER below the scan's natural partitioning when the data is large, so
     pinned partitions stay executor-sized and parallelism is preserved at
     scale."""
-    from alexandria_spark.plans.checkpoint import parquet_dir_bytes
-
     natural = df.rdd.getNumPartitions()
     target = min(natural, max(8, -(-parquet_dir_bytes(table_dir) // (64 << 20))))
     return df.coalesce(target) if target < natural else df
@@ -635,43 +690,15 @@ class QueryEngine:
         self.spark = spark
         self.index = index
         self.cfg = cfg or index.config()
-        self.blocks = index.postings(spark)
-        if cache:
-            self.blocks = cache_coalesce(self.blocks, index.postings_path).cache()
-            self.blocks.count()
-        # driver-pinned metadata is guarded like search()/search_bmw(): past
-        # _META_GUARD_ROWS the engine serves WITHOUT driver-side AND-pruning
-        # (still exact — executor-side decode+groupBy carries the query)
-        # instead of holding a 100-TB index's block metadata on the driver
-        rows = self.blocks.select(
-            "term_id", "salt", "block_id", "min_doc", "max_doc"
-        ).limit(_META_GUARD_ROWS + 1).toPandas()
-        self.meta = None if len(rows) > _META_GUARD_ROWS else rows
+        # past the metadata guard nothing is pinned on the driver (meta is
+        # None), and each query plans as a cold one over the cached scan
+        self.blocks, self.meta = _pin_table(
+            index.postings(spark), index.postings_path, _PRUNE_COLS, cache)
 
-    def search(self, query: str, mode: str = "and", k: int = 10) -> DataFrame:
-        cfg = self.cfg
-        term_ids = _query_term_ids(query, mode, cfg)
-        if not term_ids:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        blocks = self.blocks.where(F.col("term_id").isin(term_ids))
-        if mode == "and" and len(term_ids) > 1 and self.meta is not None:
-            meta = self.meta[self.meta["term_id"].isin(term_ids)]
-            kept = _prune_and_blocks(meta, term_ids)
-            if len(kept) == 0:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            if len(kept) < len(meta):
-                keys = self.spark.createDataFrame(kept[["term_id", "salt", "block_id"]])
-                blocks = blocks.join(
-                    F.broadcast(keys), ["term_id", "salt", "block_id"], "left_semi"
-                )
-        agg = _decode_map(blocks).groupBy("doc_id").agg(
-            F.sum(F.col("score").cast("double")).alias("score"),
-            F.count("*").alias("n_terms"),
-        )
-        if mode == "and":
-            agg = agg.where(F.col("n_terms") == len(term_ids))
-        agg = filter_deleted(self.spark, self.index, agg)
-        return top_k(agg.withColumn("n_terms", F.col("n_terms").cast("int")), k)
+    def search(self, query: str, mode: str = "and",
+               k: int | None = 10) -> DataFrame:
+        return search(self.spark, self.index, query, mode, k, self.cfg,
+                      _table=BlockTable(self.blocks, self.meta))
 
 
 
@@ -700,17 +727,8 @@ def _term_map(pdf: pd.DataFrame) -> dict[int, dict]:
 
 def _decode_term(t: dict, which: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Decode the selected blocks of one term → (docs_u64, scores_f32)."""
-    if len(which) == 0:
-        return np.empty(0, np.uint64), np.empty(0, np.float32)
-    deltas = varint_decode(b"".join(t["deltas"][i] for i in which))
-    ns = t["n"][which]
-    starts = np.zeros(len(which), np.int64)
-    np.cumsum(ns[:-1], out=starts[1:])
-    cs = np.cumsum(deltas, dtype=np.uint64)
-    base = cs[starts] - deltas[starts]
-    docs = cs - np.repeat(base, ns)
-    scores = np.frombuffer(b"".join(t["scores"][i] for i in which), dtype="<f4")
-    return docs, scores
+    return decode_runs((t["deltas"][i] for i in which),
+                       (t["scores"][i] for i in which), t["n"][which])
 
 
 def _blocks_containing(t: dict, cand: np.ndarray) -> np.ndarray:
@@ -846,18 +864,7 @@ class LocalIndex:
         if not tids:
             return []
         if mode == "and":
-            res = self._search_and(tids)
+            res = _wand_and(self.terms, tids)
         else:  # or | phrase (a phrase is a single-term disjunction)
-            res = self._search_or(tids, k)
-        docs_u, scores = drop_deleted(*res, self.deleted)
-        if len(docs_u) == 0:
-            return []
-        order = np.lexsort((docs_u, -scores))[:k]
-        docs_i = docs_u.view(np.int64)
-        return [(int(docs_i[i]), float(scores[i])) for i in order]
-
-    def _search_and(self, tids: list[int]):
-        return _wand_and(self.terms, tids)
-
-    def _search_or(self, tids: list[int], k: int):
-        return _wand_or(self.terms, tids, k)
+            res = _wand_or(self.terms, tids, k)
+        return _topk_pairs(*drop_deleted(*res, self.deleted), k)

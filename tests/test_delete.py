@@ -358,3 +358,31 @@ def test_cold_search_jobs_unchanged_by_tombstones(spark, tmp_path):
     delete_docs(spark, idx, victims)
     after = {key: _jobs(spark, fn) for key, fn in calls.items()}
     assert all(after[key] <= before[key] for key in calls), (before, after)
+
+
+def test_warm_query_engine_plans_without_jobs_or_walks(spark, tmp_path,
+                                                       monkeypatch):
+    """A non-cached QueryEngine plans AND and OR queries from its pinned
+    metadata: no Spark job and no postings-size walk before the action,
+    where a cold AND query past the prune gate launches a metadata job.
+    Its answers stay the cold path's."""
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    delete_docs(spark, idx, victims)
+    qe = QueryEngine(spark, idx, CFG, cache=False)
+    assert qe.meta is not None
+    monkeypatch.setattr(query_mod, "_PRUNE_MIN_BYTES", 0)
+    queries = [("def return", "and"), ("def return", "or")]
+    exp = {(q, mode): {r.doc_id for r in search(
+        spark, idx, q, mode, ALL, CFG).collect()} for q, mode in queries}
+    assert _jobs(spark, lambda: search(spark, idx, *queries[0], ALL, CFG)) >= 1
+
+    def no_walk(*_a, **_k):
+        raise AssertionError("a warm query walked the postings directory")
+
+    monkeypatch.setattr(query_mod, "parquet_dir_bytes", no_walk)
+    for q, mode in queries:
+        planned = []
+        assert _jobs(spark, lambda: planned.append(qe.search(q, mode, ALL))) == 0
+        got = {r.doc_id for r in planned[0].collect()}
+        assert got == exp[q, mode] and got, (q, mode)
+        assert not got & set(victims)

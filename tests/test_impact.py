@@ -243,6 +243,38 @@ def test_exact_scores_dense_candidates_go_distributed(spark, idx, monkeypatch):
     assert [d for d, _ in forced] == [d for d, _ in normal]
 
 
+def test_exact_scores_shuffle_completion(spark, idx, monkeypatch):
+    """Past _P2_FLAT_MAX_ROWS (candidates x terms), the distributed phase-2
+    completion must switch from the shuffle-free flat job to the shuffle +
+    groupBy job, with the same exact per-candidate scores."""
+    from alexandria_spark.plans import impact as imod
+    from alexandria_spark.plans.impact import _exact_scores_docsorted
+    from alexandria_spark.plans.query import _query_term_ids
+
+    tids = _query_term_ids("def return", "or", CFG)
+    cand = np.array(
+        [d for d, _ in impact_single_topk(spark, idx, "def", k=20, cfg=CFG)],
+        dtype=np.int64,
+    )
+    decode_maps = []
+    real = imod._decode_map
+
+    def spy(*a, **k):
+        decode_maps.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(imod, "_decode_map", spy)
+    monkeypatch.setattr(imod, "_P2_MAX_DRIVER_BLOCKS", 0)  # go distributed
+    flat, _ = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    assert not decode_maps  # the flat job ran, not the groupBy
+    monkeypatch.setattr(imod, "_P2_FLAT_MAX_ROWS", 0)
+    grouped, _ = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    assert decode_maps  # the shuffle + groupBy completion actually ran
+    assert len(flat) > 0 and set(grouped) == set(flat)
+    for d in flat:
+        assert abs(grouped[d] - flat[d]) <= 1e-9 * max(1.0, abs(flat[d]))
+
+
 
 def test_phase1_walk_cap_falls_back_exact(spark, idx, monkeypatch):
     """When the phase-1 impact walk exceeds its driver block budget (flat

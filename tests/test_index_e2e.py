@@ -211,6 +211,14 @@ def test_query_engine_warm_distributed(spark, synth):
         got = [(r.doc_id, r.score) for r in qe.search(q, mode, k=10).collect()]
         assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
         assert np.allclose([s for _, s in got], [s for _, s in exp], rtol=1e-9)
+        # k=None: the full match set, as search() returns it
+        full = dict((r.doc_id, r.score) for r in
+                    qe.search(q, mode, k=None).collect())
+        cold = dict((r.doc_id, r.score) for r in
+                    search(spark, idx, q, mode, k=None, cfg=CFG).collect())
+        assert set(full) == set(cold) and len(full) >= len(got), (q, mode)
+        assert np.allclose([full[d] for d in cold], list(cold.values()),
+                           rtol=1e-9), (q, mode)
 
 
 def test_bmw_rank_identity(spark, synth):
@@ -266,6 +274,36 @@ def test_bmw_metadata_guard_fallback(spark, synth, monkeypatch):
         assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
         assert np.allclose([s for _, s in got], [s for _, s in exp],
                            rtol=1e-9), (q, mode)
+
+
+def test_bmw_phase2_bailout_both_sides(spark, synth, monkeypatch):
+    """search_bmw's phase-2 bail-out (_BMW_P2_MAX_DOCS): at the default it
+    never trips on this index; forced to 0, every query with buckets left
+    for phase 2 is served by _collect_topk, with identical answers."""
+    from alexandria_spark.plans import query as qmod
+
+    idx, _oracle = synth
+    calls = []
+    real = qmod._collect_topk
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(qmod, "_collect_topk", spy)
+    baseline = {
+        (q, mode): qmod.search_bmw(spark, idx, q, mode, k=10, cfg=CFG,
+                                   n_buckets=16)
+        for q, mode in QUERIES
+    }
+    assert not calls
+    monkeypatch.setattr(qmod, "_BMW_P2_MAX_DOCS", 0)
+    for (q, mode), exp in baseline.items():
+        got = qmod.search_bmw(spark, idx, q, mode, k=10, cfg=CFG, n_buckets=16)
+        assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
+        assert np.allclose([s for _, s in got], [s for _, s in exp],
+                           rtol=1e-9), (q, mode)
+    assert calls
 
 
 def test_local_index_pin_gate(spark, synth):
