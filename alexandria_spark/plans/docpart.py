@@ -44,6 +44,7 @@ from alexandria_spark.plans.build import (
     stream_groups,
     tokenize_docs,
 )
+from alexandria_spark.plans.checkpoint import parquet_dir_bytes
 from alexandria_spark.plans.delete import filter_deleted
 from alexandria_spark.plans.query import (
     RESULT_SCHEMA,
@@ -301,41 +302,32 @@ class DocPartEngine:
     (URL.h:76-78 host_hash % nodes)."""
 
     def __init__(self, spark: SparkSession, index: DocPartitionedIndex,
-                 cfg: EngineConfig | None = None, cache: bool = True,
-                 cache_partitions: int | None = None):
+                 cfg: EngineConfig | None = None):
         self.spark = spark
         self.index = index
         self.cfg = cfg or index.config()
-        self.blocks = index.postings(spark)
-        if cache:
-            # cache bucket-clustered: the file scan yields one partition per
-            # small bucket directory; re-clustering before pinning balances
-            # the per-query kernel tasks (measured 0.91 s -> 0.58 s warm p50
-            # at sf0.1). Partition count sizes to the DATA, clamped: small
-            # tables take fewer/larger partitions (per-query task-launch
-            # overhead dominates — 32 tasks measured 0.42 s p50 where 8
-            # measured 0.32 s on the same table), big tables cap at
-            # shuffle_partitions so each pinned partition stays
-            # executor-sized at scale.
-            if cache_partitions is None:
-                from alexandria_spark.plans.checkpoint import parquet_dir_bytes
-
-                table_bytes = parquet_dir_bytes(index.postings_path)
-                # floor 4, then cap at shuffle_partitions (the cap wins when
-                # the configured parallelism is below the floor). r7 swept
-                # 1/2/4/8 on the sf0.1 table: 4 is the concurrency sweet
-                # spot (8-in-flight 21.8 q/s, p50 0.33 s vs 17.2 q/s / 0.41 s
-                # at 8 partitions — fewer task slots per query means less
-                # slot contention under load) at ~40 ms idle cost; at scale
-                # the 64 MiB size term dominates and the floor is moot.
-                cache_partitions = min(
-                    self.cfg.shuffle_partitions,
-                    max(4, -(-table_bytes // (64 << 20))),
-                )
-            self.blocks = self.blocks.repartition(
-                cache_partitions, F.col("bucket")
-            ).cache()
-            self.blocks.count()  # materialize the cache once
+        # cache bucket-clustered: the file scan yields one partition per
+        # small bucket directory; re-clustering before pinning balances the
+        # per-query kernel tasks (measured 0.91 s -> 0.58 s warm p50 at
+        # sf0.1). Partition count sizes to the DATA, clamped: small tables
+        # take fewer/larger partitions (per-query task-launch overhead
+        # dominates — 32 tasks measured 0.42 s p50 where 8 measured 0.32 s
+        # on the same table), big tables cap at shuffle_partitions so each
+        # pinned partition stays executor-sized at scale.
+        table_bytes = parquet_dir_bytes(index.postings_path)
+        # floor 4, then cap at shuffle_partitions (the cap wins when the
+        # configured parallelism is below the floor). r7 swept 1/2/4/8 on
+        # the sf0.1 table: 4 is the concurrency sweet spot (8-in-flight
+        # 21.8 q/s, p50 0.33 s vs 17.2 q/s / 0.41 s at 8 partitions — fewer
+        # task slots per query means less slot contention under load) at
+        # ~40 ms idle cost; at scale the 64 MiB size term dominates and the
+        # floor is moot.
+        partitions = min(self.cfg.shuffle_partitions,
+                         max(4, -(-table_bytes // (64 << 20))))
+        self.blocks = index.postings(spark).repartition(
+            partitions, F.col("bucket")
+        ).cache()
+        self.blocks.count()  # materialize the cache once
 
     def search(self, query: str, mode: str = "and", k: int = 10) -> DataFrame:
         return search_docpart(self.spark, self.index, query, mode=mode, k=k,

@@ -751,7 +751,7 @@ class ImpactEngine:
     semantics and `_stats` accounting are identical to the cold paths."""
 
     def __init__(self, spark: SparkSession, index: Index,
-                 cfg: EngineConfig | None = None, cache: bool = True):
+                 cfg: EngineConfig | None = None):
         self.spark = spark
         self.index = index
         self.cfg = cfg or index.config()
@@ -763,9 +763,9 @@ class ImpactEngine:
         # as the cached scans they mirror: both snapshot init time.
         self.blocks, self.meta = _pin_table(
             _read_impact(spark, index),
-            os.path.join(index.path, "postings_impact"), _IMPACT_COLS, cache)
+            os.path.join(index.path, "postings_impact"), _IMPACT_COLS)
         self.doc_blocks, self.doc_meta = _pin_table(
-            index.postings(spark), index.postings_path, _PRUNE_COLS, cache)
+            index.postings(spark), index.postings_path, _PRUNE_COLS)
 
     def single_topk(self, query: str, k: int = 10,
                     _stats: dict | None = None) -> list[tuple[int, float]]:

@@ -1,6 +1,6 @@
 """Query engine: top-k conjunctive/disjunctive BM25 over the block index.
 
-Three execution paths over the same block tables:
+Two execution paths over the same block tables:
 
 * ``search`` — the distributed DataFrame path. Partition-pruned scan of the
   query terms' shards (the Spark analogue of the reference's per-token shard
@@ -9,6 +9,7 @@ Three execution paths over the same block tables:
   groupBy(doc_id) + TakeOrderedAndProject top-k. Scales to posting lists far
   beyond driver memory. ``QueryEngine`` is its warm form: the same call over
   a cached scan and a driver-pinned copy of the block metadata.
+  ``search_bmw`` is its collected form, a (doc_id, score) list.
 
 * ``LocalIndex`` — the low-latency serving path (the analogue of the
   reference's RAM-cached readers, index_reader.cpp:59-89): block metadata is
@@ -19,10 +20,6 @@ Three execution paths over the same block tables:
   document retrieval using block-max indexes", SIGIR 2011) — only blocks
   that can still affect the top-k are decoded. This upgrades the reference's
   section-at-a-time early exit (search_engine.h:298-352).
-
-* ``search_bmw`` — the distributed early-termination path: bucket-granular
-  two-phase block-max pruning (exact top-k) for posting lists beyond one
-  node.
 
 These paths and the impact layout's (plans/impact.py) plan through the
 same few helpers below: ``_term_rows`` (the query terms' scan),
@@ -60,7 +57,6 @@ from alexandria_spark.plans.blocks import decode_blocks, decode_runs
 from alexandria_spark.plans.build import MIN_I64, Index
 from alexandria_spark.plans.checkpoint import parquet_dir_bytes
 from alexandria_spark.plans.delete import (
-    deletes_small,
     drop_deleted,
     effective_deletes,
     filter_deleted,
@@ -86,8 +82,8 @@ RESULT_SCHEMA = StructType(
 # Driver-side metadata fetches are guarded at this many rows: pruning pays
 # off only while block metadata is driver-sized. A 100-TB hot-term query
 # (millions of blocks across salts) must not ship tens of MB of metadata to
-# the driver — past the guard, search() skips pruning and search_bmw() falls
-# back to search()'s executor-side exact path.
+# the driver — past the guard, search() skips pruning and serves exactly
+# from its executor-side decode.
 _META_GUARD_ROWS = 200_000
 
 # Below this much postings data on disk, a cold AND query decodes its terms'
@@ -96,13 +92,6 @@ _META_GUARD_ROWS = 200_000
 # round-trip. At warehouse scale the prune always engages (and QueryEngine
 # pins the metadata once, so warm queries never pay the job either way).
 _PRUNE_MIN_BYTES = 64 << 20
-
-# search_bmw's phase 2: most docs (by the metadata estimate) its remaining
-# buckets may hold before the query is served by search() instead.
-# Adversarial score distributions let the bound prune almost nothing, and
-# ~2M docs' (doc, score) pairs per term is tens of MB of driver transfer for
-# a query the distributed aggregation serves with k rows.
-_BMW_P2_MAX_DOCS = 2_000_000
 
 # the metadata columns AND pruning reads (search, QueryEngine, and the
 # impact layout's phase-2 completion over the doc-sorted table)
@@ -148,7 +137,7 @@ def _guarded_meta(blocks: DataFrame, cols, n_terms: int = 1) -> pd.DataFrame | N
     return None if len(rows) > cap else rows
 
 
-def _pin_table(df: DataFrame, table_dir: str, cols, cache: bool) -> BlockTable:
+def _pin_table(df: DataFrame, table_dir: str, cols, cache: bool = True) -> BlockTable:
     """A warm engine's hold on one block table: the scan cached right-sized
     in executor memory and materialized once, plus its guarded metadata
     pinned on the driver, so queries plan without metadata jobs."""
@@ -427,72 +416,6 @@ def decorate(results: DataFrame, docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _bucket_bounds(meta: pd.DataFrame, term_ids: list[int], mode: str,
-                   n_buckets: int):
-    """Doc-space buckets + admissible per-bucket score upper bounds from
-    block METADATA only.
-
-    Bucket boundaries are quantiles of block min_docs (balanced regardless
-    of the doc-id distribution). For each bucket, ub = Σ over terms of the
-    max block max_score overlapping it (terms missing from a bucket
-    contribute 0; in AND mode such buckets are dropped entirely). A doc
-    belongs to exactly one bucket, so evaluating every query-term block
-    overlapping a bucket yields EXACT scores for its docs — which is what
-    makes the two-phase pruning sound.
-    """
-    lows = _u(meta["min_doc"].to_numpy())
-    highs = _u(meta["max_doc"].to_numpy())
-    # quantile edges in exact u64 index space — np.quantile would round-trip
-    # through float64, which cannot represent the top doc-id range (cast back
-    # to uint64 is UB there, found by hypothesis)
-    lo_sorted = np.sort(lows)
-    pick = np.linspace(0, len(lo_sorted) - 1,
-                       n_buckets + 1)[1:-1].round().astype(np.int64)
-    qs = np.unique(lo_sorted[pick])
-    # edges must be STRICTLY increasing: a picked edge equal to an endpoint
-    # would create a zero-width or duplicate bucket, and eval's inclusive
-    # last-bucket / right-edge-minus-one rules would then make two buckets
-    # overlap (u64max edge) or one bucket wrap to the whole space (0-width
-    # [0,0) bucket: 0-1 underflows to u64max) — a doc evaluated in both
-    # phases would double its score
-    qs = qs[(qs != np.uint64(0)) & (qs != np.uint64(0xFFFFFFFFFFFFFFFF))]
-    edges = np.concatenate([[np.uint64(0)], qs, [np.uint64(0xFFFFFFFFFFFFFFFF)]])
-    nb = len(edges) - 1
-    # block b overlaps buckets [lo_idx, hi_idx]; the LAST bucket is inclusive
-    # of u64max (eval treats it so), hence the clip — without it a block
-    # whose range touches u64max lands past every bucket and its docs become
-    # unreachable (feasible stays False: a dropped AND result)
-    lo_idx = np.minimum(np.searchsorted(edges, lows, side="right") - 1, nb - 1)
-    hi_idx = np.minimum(np.searchsorted(edges, highs, side="right") - 1, nb - 1)
-    tids = meta["term_id"].to_numpy(np.int64)
-    ms = meta["max_score"].to_numpy(np.float64)
-    ns = meta["n"].to_numpy(np.int64)
-
-    per_term_max = {t: np.zeros(nb) for t in term_ids}
-    # coverage (any overlapping block) is tracked separately from max_score:
-    # with short_doc_zero a block can have max_score == 0 yet contain valid
-    # zero-score matches, which must stay reachable when fewer than k
-    # positive-score results exist
-    per_term_cover = {t: np.zeros(nb, dtype=bool) for t in term_ids}
-    docs_est = np.zeros(nb)
-    for i in range(len(meta)):
-        rng = slice(lo_idx[i], hi_idx[i] + 1)
-        t = int(tids[i])
-        arr = per_term_max[t]
-        arr[rng] = np.maximum(arr[rng], ms[i])
-        per_term_cover[t][rng] = True
-        docs_est[lo_idx[i]: hi_idx[i] + 1] += ns[i] / (hi_idx[i] + 1 - lo_idx[i])
-    ub = np.zeros(nb)
-    cover_all = np.ones(nb, dtype=bool)
-    cover_any = np.zeros(nb, dtype=bool)
-    for t in term_ids:
-        ub += per_term_max[t]
-        cover_all &= per_term_cover[t]
-        cover_any |= per_term_cover[t]
-    feasible = cover_all if mode == "and" else cover_any
-    return edges, ub, docs_est, feasible
-
-
 def search_bmw(
     spark: SparkSession,
     index: Index,
@@ -500,128 +423,11 @@ def search_bmw(
     mode: str = "and",
     k: int = 10,
     cfg: EngineConfig | None = None,
-    n_buckets: int = 64,
 ) -> list[tuple[int, float]]:
-    """Distributed block-max WAND: two-phase, bucket-granular early
-    termination (exact top-k; collected result).
-
-    Phase 1 evaluates the highest-upper-bound doc-range buckets (enough to
-    cover ~8k docs) exactly — every query-term block overlapping those
-    buckets decodes in one pruned Spark job — producing a lower bound τ̂ =
-    kth best exact score. Phase 2 evaluates only the remaining buckets whose
-    metadata upper bound ≥ τ̂ (often none). Docs in skipped buckets provably
-    score < τ̂. This upgrades the reference's section-at-a-time early exit
-    (search_engine.h:298-352) to per-block max-score bounds at cluster scale.
-    """
-    cfg = cfg or index.config()
-    term_ids = _query_term_ids(query, mode, cfg)
-    if not term_ids:
-        return []
-    if not deletes_small(index):
-        # the bucket walk needs the tombstone set driver-side; a mass
-        # deletion makes that a giant array — serve exactly via the
-        # distributed path, which anti-joins tombstones on the executors
-        return _collect_topk(spark, index, query, mode, k, cfg)
-    blocks = _term_rows(index.postings(spark), term_ids, cfg.num_shards)
-    meta = _guarded_meta(blocks, _PRUNE_COLS + ("max_score", "n"))
-    if meta is None:
-        # metadata overflow (hot terms at scale): the bucket-pruning plan
-        # would stall the driver — serve exactly via the fully distributed
-        # path instead (same result contract: score desc, unsigned doc asc)
-        return _collect_topk(spark, index, query, mode, k, cfg)
-    if len(meta) == 0 or (
-        mode == "and" and set(meta["term_id"]) != set(term_ids)
-    ):
-        return []
-    edges, ub, docs_est, feasible = _bucket_bounds(meta, term_ids, mode, n_buckets)
-
-    order = np.argsort(-ub)
-    covered, phase1 = 0.0, []
-    for b in order:
-        if not feasible[b]:
-            continue
-        phase1.append(b)
-        covered += docs_est[b]
-        if covered >= 8 * k:
-            break
-    if not phase1:
-        return []
-
-    nterms = len(term_ids)
-
-    def _eval_buckets(bucket_ids: list[int], lo_u: np.uint64 | None = None):
-        """Decode blocks overlapping the buckets; exact per-doc scores for
-        docs INSIDE the buckets.
-
-        The in-bucket filter runs INSIDE the pruned Spark job (executor
-        side), so the driver receives one (doc, score) pair per in-bucket
-        posting — bytes proportional to the docs being evaluated — instead
-        of every touched block's whole payload. Row order (partition-major,
-        stream order within partitions) is exactly the order the old
-        driver-side mask produced, so the f64 accumulation is bit-identical."""
-        umax = np.uint64(0xFFFFFFFFFFFFFFFF)
-        bid = np.array(bucket_ids, dtype=np.int64)
-        lo = edges[bid]
-        # bucket i spans [edges[i], edges[i+1]) except the last, which is
-        # inclusive of the max u64 doc id
-        hi_inc = np.where(edges[bid + 1] == umax, umax, edges[bid + 1] - np.uint64(1))
-        blows = _u(meta["min_doc"].to_numpy())
-        bhighs = _u(meta["max_doc"].to_numpy())
-        touch = np.zeros(len(meta), dtype=bool)
-        for lo_i, hi_i in zip(lo, hi_inc):
-            touch |= (blows <= hi_i) & (bhighs >= lo_i)
-        sel = _semi_join_blocks(spark, blocks, meta[touch])
-        lo_c, hi_c = lo.copy(), hi_inc.copy()  # plain arrays into the closure
-
-        def fn(batches):
-            for bpdf in batches:
-                if len(bpdf) == 0:
-                    continue
-                dec = decode_blocks(bpdf)
-                du = dec["doc_id"].to_numpy().view(np.uint64)
-                inside = np.zeros(len(du), dtype=bool)
-                for lo_i, hi_i in zip(lo_c, hi_c):
-                    inside |= (du >= lo_i) & (du <= hi_i)
-                if inside.any():
-                    yield dec.loc[inside, ["doc_id", "score"]]
-
-        pair_schema = StructType([
-            StructField("doc_id", LongType()),
-            StructField("score", FloatType()),
-        ])
-        pdf = sel.mapInPandas(fn, pair_schema).toPandas()
-        if len(pdf) == 0:
-            return np.empty(0, np.uint64), np.empty(0, np.float64)
-        docs_u = _u(pdf["doc_id"].to_numpy())
-        scores = pdf["score"].to_numpy(np.float64)
-        uniq, inv, counts = np.unique(docs_u, return_inverse=True, return_counts=True)
-        summed = np.zeros(len(uniq))
-        np.add.at(summed, inv, scores)
-        if mode == "and":
-            keep = counts == nterms
-            uniq, summed = uniq[keep], summed[keep]
-        return uniq, summed
-
-    deleted_u = effective_deletes(spark, index)
-    docs_u, scores = drop_deleted(*_eval_buckets(phase1), deleted_u)
-    if len(scores) >= k:
-        tau = np.partition(scores, len(scores) - k)[len(scores) - k]
-    else:
-        tau = -np.inf
-    # ub >= tau (not >): a skipped doc scoring exactly tau would tie the kth
-    # score and win the ascending-doc-id tie-break. With tau = -inf (< k
-    # results so far) every feasible bucket is evaluated, keeping zero-score
-    # matches reachable.
-    p1 = set(phase1)
-    remaining = [b for b in order if feasible[b] and b not in p1 and ub[b] >= tau]
-    if remaining and float(sum(docs_est[b] for b in remaining)) > _BMW_P2_MAX_DOCS:
-        # adversarial score distribution: the bound prunes almost nothing
-        return _collect_topk(spark, index, query, mode, k, cfg)
-    if remaining:
-        d2, s2 = drop_deleted(*_eval_buckets(remaining), deleted_u)
-        docs_u = np.concatenate([docs_u, d2])
-        scores = np.concatenate([scores, s2])
-    return _topk_pairs(docs_u, scores, k)
+    """Exact top-k over the term layout as a collected (doc_id, score)
+    list: the distributed ``search()`` path, score desc then unsigned doc
+    id asc. The ``bmw`` engine name of ``query_submit.py`` serves here."""
+    return _collect_topk(spark, index, query, mode, k, cfg)
 
 
 def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
@@ -635,8 +441,8 @@ def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
     length, 1.24 s at 500k docs where docpart held 0.41 s). The
     impact-ordered layout wins SINGLE-term queries decisively (one
     score-ordered prefix read, ~3× faster than docpart at every measured
-    scale); a phrase is a single n-gram key over the term layout, where
-    search_bmw's bucket pruning serves with the least work. Every engine
+    scale); a phrase is a single n-gram key over the term layout, served
+    as "bmw" — the collected distributed path (search_bmw). Every engine
     keeps its own guard-state fallbacks (metadata overflow / mass deletion
     → exact distributed path), so auto only picks the LAYOUT — exactness
     is invariant. A missing layout raises that engine's actionable
@@ -654,7 +460,7 @@ def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
 
 
 def _collect_topk(spark: SparkSession, index: Index, query: str, mode: str,
-                  k: int, cfg: EngineConfig,
+                  k: int, cfg: EngineConfig | None,
                   _table: BlockTable | None = None) -> list[tuple[int, float]]:
     """Exact top-k via the fully distributed path, collected — the shared
     fallback every driver-volume guard routes to (same result contract:
@@ -700,6 +506,8 @@ class QueryEngine:
         return search(self.spark, self.index, query, mode, k, self.cfg,
                       _table=BlockTable(self.blocks, self.meta))
 
+    def unpersist(self) -> None:
+        self.blocks.unpersist()
 
 
 # ---------------------------------------------------- WAND kernel (shared)
@@ -840,17 +648,15 @@ class LocalIndex:
     # QueryEngine/DocPartEngine, whose state stays on the executors
     MAX_PIN_BYTES = 2 << 30
 
-    def __init__(self, spark: SparkSession, index: Index, cfg: EngineConfig | None = None,
-                 max_pin_bytes: int | None = None):
+    def __init__(self, spark: SparkSession, index: Index, cfg: EngineConfig | None = None):
         self.cfg = cfg or index.config()
-        limit = max_pin_bytes if max_pin_bytes is not None else self.MAX_PIN_BYTES
         total = parquet_dir_bytes(index.postings_path)
-        if total > limit:
+        if total > self.MAX_PIN_BYTES:
             raise ValueError(
                 f"postings are {total >> 20} MiB on disk — too large to pin "
-                f"in driver RAM (limit {limit >> 20} MiB). Serve this index "
-                f"through QueryEngine / DocPartEngine / search() instead, "
-                f"or raise max_pin_bytes explicitly."
+                f"in driver RAM (limit {self.MAX_PIN_BYTES >> 20} MiB). Serve "
+                f"this index through QueryEngine / DocPartEngine / search() "
+                f"instead."
             )
         self.deleted = effective_deletes(spark, index)
         pdf = index.postings(spark).select(

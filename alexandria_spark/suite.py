@@ -390,7 +390,7 @@ def q_index_search_or_topk(spark, sf_dir):
 
 
 def q_bmw_search_topk(spark, sf_dir):
-    """Same top-k through the distributed block-max WAND engine
+    """Same top-k through the collected distributed engine
     (plans/query.search_bmw) over the persisted index."""
     from alexandria_spark.plans.query import search_bmw
 
@@ -849,8 +849,8 @@ SQL_BM25_MODES = (
 
 
 def q_engines_search_topk(spark, sf_dir):
-    """The SAME AND top-k through three serving engines — distributed
-    block-max WAND (search_bmw), the warm doc-partitioned engine, and the
+    """The SAME AND top-k through three serving engines — the collected
+    distributed path (search_bmw), the warm doc-partitioned engine, and the
     RAM-pinned LocalIndex — each tagged; all three must equal the oracle.
     A fourth leg serves through the AUTO layout selector (choose_engine,
     query_submit.py --engine auto): the routing decision dispatches for

@@ -290,14 +290,6 @@ def test_reingested_doc_escapes_through_the_fast_path(spark, tmp_path, monkeypat
 def test_mass_deletion_gate_both_sides(spark, tmp_path, monkeypatch):
     idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
     delete_docs(spark, idx, victims)
-    calls = []
-    real = query_mod._collect_topk
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(query_mod, "_collect_topk", spy)
 
     def impact_fallback():
         stats = {}
@@ -310,7 +302,7 @@ def test_mass_deletion_gate_both_sides(spark, tmp_path, monkeypatch):
     probe = spark.createDataFrame([(int(v),) for v in victims], "doc_id long")
     assert deletes_small(idx)
     small = _served(spark, idx)
-    assert not calls and impact_fallback() is None
+    assert impact_fallback() is None
     assert not joins(filter_deleted(spark, idx, probe))  # a literal list
     with monkeypatch.context() as m:  # past the literal-list size
         m.setattr(delete_mod, "_INLINE_DELETES_MAX", 1)
@@ -320,9 +312,7 @@ def test_mass_deletion_gate_both_sides(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(delete_mod, "_BROADCAST_DELETES_MAX_BYTES", 1)
     assert not deletes_small(idx)
-    del calls[:]
     assert _served(spark, idx) == small
-    assert calls  # search_bmw served through the distributed path
     assert impact_fallback() == "distributed"
     assert joins(filter_deleted(spark, idx, probe))
     assert filter_deleted(spark, idx, probe).count() == 0
@@ -345,19 +335,24 @@ def test_block_frames_and_resolved_set_launch_no_jobs(spark, tmp_path):
 def test_cold_search_jobs_unchanged_by_tombstones(spark, tmp_path):
     idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
     dpi = DocPartitionedIndex(idx.path)
-    calls = {
-        (mode, engine): (lambda mode=mode, engine=engine: (
-            search(spark, idx, "def return", mode, 10, CFG) if engine == "dist"
-            else search_docpart(spark, dpi, "def return", mode, 10, CFG)
-        ).collect())
-        for mode in ("and", "or") for engine in ("dist", "docpart")
+    engines = {
+        "dist": lambda mode: search(
+            spark, idx, "def return", mode, 10, CFG).collect(),
+        "docpart": lambda mode: search_docpart(
+            spark, dpi, "def return", mode, 10, CFG).collect(),
+        "bmw": lambda mode: search_bmw(spark, idx, "def return", mode, 10, CFG),
     }
+    calls = {(mode, engine): (lambda mode=mode, fn=fn: fn(mode))
+             for mode in ("and", "or") for engine, fn in engines.items()}
     for fn in calls.values():
         fn()  # first run of each shape outside the count
     before = {key: _jobs(spark, fn) for key, fn in calls.items()}
     delete_docs(spark, idx, victims)
     after = {key: _jobs(spark, fn) for key, fn in calls.items()}
     assert all(after[key] <= before[key] for key in calls), (before, after)
+    # search_bmw runs exactly the jobs of search(...).collect()
+    assert all(jobs[mode, "bmw"] == jobs[mode, "dist"] for jobs in (before, after)
+               for mode in ("and", "or")), (before, after)
 
 
 def test_warm_query_engine_plans_without_jobs_or_walks(spark, tmp_path,

@@ -219,6 +219,9 @@ def test_query_engine_warm_distributed(spark, synth):
         assert set(full) == set(cold) and len(full) >= len(got), (q, mode)
         assert np.allclose([full[d] for d in cold], list(cold.values()),
                            rtol=1e-9), (q, mode)
+    assert qe.blocks.is_cached
+    qe.unpersist()
+    assert not qe.blocks.is_cached
 
 
 def test_bmw_rank_identity(spark, synth):
@@ -227,7 +230,7 @@ def test_bmw_rank_identity(spark, synth):
     idx, oracle = synth
     for q, mode in QUERIES:
         exp = oracle.search(q, mode, k=10)
-        got = search_bmw(spark, idx, q, mode, k=10, cfg=CFG, n_buckets=16)
+        got = search_bmw(spark, idx, q, mode, k=10, cfg=CFG)
         assert [d for d, _ in got] == [d for d, _ in exp], (q, mode, got[:3], exp[:3])
         assert np.allclose([s for _, s in got], [s for _, s in exp], rtol=1e-9), (q, mode)
 
@@ -255,63 +258,13 @@ def test_docpart_rebuild_honors_source_keep_tf(spark, tmp_path):
     assert all(len(b) == 0 for b in tf_bytes)
 
 
-def test_bmw_metadata_guard_fallback(spark, synth, monkeypatch):
-    """When a query's block metadata exceeds the driver guard, search_bmw
-    must fall back to search()'s fully distributed exact path and return
-    identical results (same rank, same scores) — a 100-TB hot-term query
-    must never ship unbounded metadata to the driver."""
-    from alexandria_spark.plans import query as qmod
-
-    idx, oracle = synth
-    baseline = {
-        (q, mode): qmod.search_bmw(spark, idx, q, mode, k=10, cfg=CFG,
-                                   n_buckets=16)
-        for q, mode in QUERIES[:4]
-    }
-    monkeypatch.setattr(qmod, "_META_GUARD_ROWS", 1)  # force the overflow path
-    for (q, mode), exp in baseline.items():
-        got = qmod.search_bmw(spark, idx, q, mode, k=10, cfg=CFG, n_buckets=16)
-        assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
-        assert np.allclose([s for _, s in got], [s for _, s in exp],
-                           rtol=1e-9), (q, mode)
-
-
-def test_bmw_phase2_bailout_both_sides(spark, synth, monkeypatch):
-    """search_bmw's phase-2 bail-out (_BMW_P2_MAX_DOCS): at the default it
-    never trips on this index; forced to 0, every query with buckets left
-    for phase 2 is served by _collect_topk, with identical answers."""
-    from alexandria_spark.plans import query as qmod
-
-    idx, _oracle = synth
-    calls = []
-    real = qmod._collect_topk
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(qmod, "_collect_topk", spy)
-    baseline = {
-        (q, mode): qmod.search_bmw(spark, idx, q, mode, k=10, cfg=CFG,
-                                   n_buckets=16)
-        for q, mode in QUERIES
-    }
-    assert not calls
-    monkeypatch.setattr(qmod, "_BMW_P2_MAX_DOCS", 0)
-    for (q, mode), exp in baseline.items():
-        got = qmod.search_bmw(spark, idx, q, mode, k=10, cfg=CFG, n_buckets=16)
-        assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
-        assert np.allclose([s for _, s in got], [s for _, s in exp],
-                           rtol=1e-9), (q, mode)
-    assert calls
-
-
-def test_local_index_pin_gate(spark, synth):
+def test_local_index_pin_gate(spark, synth, monkeypatch):
     """LocalIndex must refuse to pin a postings table larger than its
     byte budget into driver RAM, with an actionable error."""
     idx, _oracle = synth
+    monkeypatch.setattr(LocalIndex, "MAX_PIN_BYTES", 1)
     with pytest.raises(ValueError, match="QueryEngine"):
-        LocalIndex(spark, idx, CFG, max_pin_bytes=1)
+        LocalIndex(spark, idx, CFG)
 
 
 def test_query_engine_metadata_guard(spark, synth, monkeypatch):

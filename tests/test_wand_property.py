@@ -9,10 +9,7 @@ production kernels and compared against a 10-line numpy brute force:
 * _wand_or   — top-k identity, which is exactly what the quit/continue
   admission boundary (plans/query.py, strict-> rule) must preserve: a doc
   first seen at suffix-bound equality can still tie the kth score and win
-  the ascending-doc-id tie-break;
-* _bucket_bounds — the soundness invariant behind search_bmw's τ̂≥ rule:
-  every doc's bucket is feasible and its metadata upper bound dominates the
-  doc's true score, so skipping ub<τ̂ buckets can never drop a winner.
+  the ascending-doc-id tie-break.
 
 Scores live on a 1/8 grid (exact in f32, sums exact in f64), so every
 comparison is bit-exact — no tolerance that could mask an off-by-one-ulp
@@ -26,9 +23,7 @@ from hypothesis import strategies as st
 
 from alexandria_spark.plans.blocks import build_blocks
 from alexandria_spark.plans.query import (
-    _bucket_bounds,
     _term_map,
-    _u,
     _wand_and,
     _wand_or,
 )
@@ -123,35 +118,6 @@ def test_wand_or_topk_matches_brute_force(postings, block_size, n_salts, k):
     # the kernel may drop docs provably outside the top-k; the top-k itself
     # (including the unsigned-doc-asc tie-break) must be identical
     assert _ranked(got_d, got_s, k) == _ranked(exp_d, exp_s, k)
-
-
-@settings(max_examples=100, deadline=None)
-@given(posting_sets(), st.integers(1, 3), st.sampled_from(["and", "or"]),
-       st.sampled_from([2, 8, 64]))
-def test_bucket_bounds_dominate_true_scores(postings, block_size, mode,
-                                            n_buckets):
-    tids = list(postings)
-    rows = []
-    for t, plist in postings.items():
-        for d, s in plist:
-            rows.append((t, 0, d, s, 1))
-    if not rows:
-        return
-    pdf = pd.DataFrame(rows, columns=["term_id", "salt", "doc_id", "score", "tf"])
-    key_u = pdf["doc_id"].to_numpy(np.int64).view(np.uint64)
-    pdf = pdf.iloc[np.lexsort((key_u, pdf["term_id"].to_numpy()))
-                   ].reset_index(drop=True)
-    meta = build_blocks(pdf, block_size)
-    edges, ub, docs_est, feasible = _bucket_bounds(meta, tids, mode, n_buckets)
-    # edges strictly increasing: equal/zero-width edges would let eval's
-    # inclusive-bucket rules assign one doc to two buckets (double-scoring)
-    assert (np.diff(edges.astype(np.uint64)) > 0).all(), edges
-    exp_d, exp_s = _brute(postings, tids, mode)
-    # the last bucket is inclusive of u64max (mirrors _eval_buckets)
-    bucket = np.minimum(np.searchsorted(edges, exp_d, side="right") - 1,
-                        len(edges) - 2)
-    assert feasible[bucket].all()
-    assert (ub[bucket] >= exp_s - 1e-12).all()
 
 
 def test_bmw_serves_doc_at_u64_max_boundary(spark, tmp_path):
