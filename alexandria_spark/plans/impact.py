@@ -6,10 +6,17 @@ disjunctive serving), search engines keep an *impact-ordered* copy: within
 each (term, salt) group, postings are assigned to blocks by DESCENDING
 score — block 0 holds the term's strongest postings — while docs are
 re-sorted ascending INSIDE each block, so the existing delta+varint codec
-and block metadata work unchanged. A reader walks blocks in impact order
-and stops as soon as the kth collected score is >= the next block's
-max_score: exact top-k after decoding ~k postings instead of the whole
-list.
+and block metadata work unchanged.
+
+Every impact query, one term or many, is served by ONE walk
+(``impact_or_topk``): decode blocks in global impact order and stop as soon
+as the kth partial score exceeds the summed next-block maxima — exact top-k
+after decoding ~k postings per term instead of the whole lists. One exit
+rule follows: while no candidate is left unresolved (unseen by some term
+that still has residual score), the partial sums are the answer; otherwise
+one doc-sorted completion job finishes the candidates. The mass-deletion
+gate, the metadata guard and the walk's block cap share one fallback, and
+``_stats`` has one key set.
 
 The reference's analogue is its section-ordered early exit
 (search_engine.h:298-352) — this layout strengthens the same idea to
@@ -45,7 +52,7 @@ from alexandria_spark.plans.delete import deletes_small, drop_deleted, effective
 from alexandria_spark.plans.query import (
     _PRUNE_COLS,
     BlockTable,
-    _decode_map,
+    _collect_topk,
     _guarded_meta,
     _pin_table,
     _query_term_ids,
@@ -53,19 +60,21 @@ from alexandria_spark.plans.query import (
     _shard_of,
     _term_rows,
     _topk_pairs,
+    search,
 )
 
-# phase-2 completion: most payload blocks a single query may pull to the
-# driver for local numpy summing. Past this, candidate ranges intersect so
-# many blocks that "pruned" ≈ "everything" (dense hot-term ORs), and the
-# fully distributed completion — whose driver transfer is bounded by the
-# candidate count, not the posting volume — is both faster and the only
-# 100-TB-safe shape. 64 blocks ≈ 256k postings ≈ a few MB decoded.
-_P2_MAX_DRIVER_BLOCKS = 64
+# phase-1 prefetch: when a whole query touches at most this many impact
+# blocks (short lists, known from the metadata), its first payload job
+# seeds EVERY block and the walk never pays a mid-walk fetch job. Longer
+# lists seed a k-sized prefix and fetch the rest lazily, so driver bytes
+# stay proportional to the blocks actually read. 64 blocks ≈ 256k
+# postings ≈ a few MB decoded.
+_SEED_ALL_MAX_BLOCKS = 64
 
-# phase-2 flat completion: most (candidate x term) rows one query may ship
-# to the driver as (doc, score) pairs for the shuffle-free completion; past
-# it, the shuffle+groupBy completion bounds the transfer by len(cand).
+# phase-2 completion: most (candidate x term) rows one query may ship to
+# the driver as (doc, score) pairs for the shuffle-free completion; past
+# it, search(k=None) semi-joined to the candidates bounds the transfer by
+# len(cand).
 _P2_FLAT_MAX_ROWS = 2_000_000
 
 # phase-1 impact walk: most payload blocks the driver-orchestrated loop may
@@ -185,14 +194,16 @@ def build_impact_postings(spark: SparkSession, index: Index,
     return out_path
 
 
-def _pinned_scan(spark: SparkSession, index: Index, table: str):
-    """ONE snapshot-pinned scan for a whole query. The cold path used to
-    issue two independent directory reads (metadata scan, then lazy payload
-    fetches); a partial refresh rewriting the shard between those jobs could
-    make the payload fetch miss keys the metadata promised (KeyError) or
-    return payloads inconsistent with the metadata ordering. Pinning both to
-    the HEAD snapshot's file manifest makes the pair read one immutable
-    state; indexes without a snapshot log fall back to the directory read."""
+def _pinned_scan(spark: SparkSession, index: Index, table: str,
+                 snapshot_id: str | None):
+    """ONE snapshot-pinned scan of ``table`` for a whole query. The cold
+    path used to issue two independent directory reads (metadata scan, then
+    lazy payload fetches); a partial refresh rewriting the shard between
+    those jobs could make the payload fetch miss keys the metadata promised
+    (KeyError) or return payloads inconsistent with the metadata ordering.
+    Pinning every read of a query to the one ``snapshot_id`` it resolved
+    (the caller reads HEAD once) makes them read one immutable state;
+    indexes without a snapshot log fall back to the directory read."""
     from alexandria_spark.plans import snapshots
 
     if table == "postings_impact" and not os.path.isdir(
@@ -205,7 +216,7 @@ def _pinned_scan(spark: SparkSession, index: Index, table: str):
             f"engine dist/bmw/local"
         )
     try:
-        return snapshots.read_table(spark, index.path, table)
+        return snapshots.read_table(spark, index.path, table, snapshot_id)
     except (ValueError, FileNotFoundError, OSError):
         if table == "postings":
             return index.postings(spark)
@@ -265,19 +276,15 @@ def _impact_meta_multi(impact: BlockTable, tids: list[int], num_shards: int,
 def _prefetch_first_batches(src, readers: dict[int, "_ImpactBlockReader"],
                             metas: dict[int, pd.DataFrame], k: int) -> None:
     """Seed every reader's first payload batch in ONE job (instead of one
-    first-fetch job per term): per term, the smallest impact-order prefix
-    that can hold k postings — the same sizing impact_single_topk uses.
-    Later misses fall back to the reader's own doubling fetches; pure IO
-    batching, results unchanged."""
+    first-fetch job per term): every block when the whole query touches at
+    most _SEED_ALL_MAX_BLOCKS, else per term the smallest impact-order
+    prefix that can hold k postings. Later misses fall back to the reader's
+    own doubling fetches; pure IO batching, results unchanged."""
     conds, firsts = [], {}
-    # when the whole query touches few blocks (short lists — known from the
-    # metadata), seed EVERYTHING in the one job: the walk then never pays a
-    # mid-loop fetch job. Long lists keep the k-sized prefix + lazy doubling
-    # so driver bytes stay proportional to blocks actually read.
-    total_blocks = sum(len(metas[t]) for t in readers)
+    seed_all = sum(len(metas[t]) for t in readers) <= _SEED_ALL_MAX_BLOCKS
     for t, rd in readers.items():
         m = metas[t]
-        if total_blocks <= _P2_MAX_DRIVER_BLOCKS:
+        if seed_all:
             first = len(m)
         else:
             cum = m["n"].to_numpy(np.int64).cumsum()
@@ -311,12 +318,14 @@ class _ImpactBlockReader:
     """
 
     def __init__(self, scan: DataFrame, tid: int, meta: pd.DataFrame,
-                 num_shards: int, first_batch: int):
+                 num_shards: int):
         self.scan = scan
         self.shard = _shard_of(tid, num_shards)
         self.tid = tid
         self.meta = meta
-        self.batch = max(1, first_batch)
+        # blocks per lazy fetch, doubling; the first payload job
+        # (_prefetch_first_batches) raises it to the prefix it seeded
+        self.batch = 2
         # per-block DECODED postings (docs_u64, scores_f64): each fetched
         # batch is decoded in ONE vectorized decode_blocks call and sliced
         # per block — the walk then consumes plain array views instead of
@@ -360,95 +369,19 @@ class _ImpactBlockReader:
         self.fetch_jobs += 1
 
 
-def _search_fallback(spark: SparkSession, index: Index, query: str, k: int,
-                     cfg: EngineConfig, _stats: dict | None,
-                     table: BlockTable | None) -> list[tuple[int, float]]:
-    """Exact distributed OR top-k via plans.query.search — the fallback when
-    a driver-volume guard trips (same result contract: score desc, unsigned
-    doc asc). ``table`` is the scan to serve from — a warm engine's cached
-    one, or the query's snapshot-pinned one — so guard-tripped queries
-    still serve from executor memory; an OR query reads no metadata. The
-    impact layout decodes to the same posting multiset as the doc-sorted
-    one (test_impact_layout_same_postings), so either table serves exactly.
-    ``_stats`` keeps its documented keys (zeros + a marker)."""
-    from alexandria_spark.plans.query import _collect_topk
-
-    if _stats is not None:
-        _stats.update(blocks_read=0, blocks_total=0, payload_blocks_fetched=0,
-                      fetch_jobs=0, blocks_read_p1=0, blocks_fetched_p2=0,
-                      n_candidates=0, fallback="distributed")
-    return _collect_topk(spark, index, query, "or", k, cfg, _table=table)
-
-
 def impact_single_topk(spark: SparkSession, index: Index, query: str,
                        k: int = 10, cfg: EngineConfig | None = None,
                        _stats: dict | None = None,
                        _impact: BlockTable | None = None,
                        ) -> list[tuple[int, float]]:
-    """Exact single-term top-k over the impact table: decode blocks in
-    impact order, stop when the kth collected score >= the next block's
-    max_score (ties included via >=... strictly: stop when kth > next max,
-    or kth == next max and doc-id tie-break cannot improve — we keep
-    decoding on equality, which stays exact and costs at most the tied
-    blocks). Payloads are fetched lazily in doubling batches (metadata-only
-    scan first), so the driver never materializes blocks the loop never
-    reaches. ``_stats`` reports blocks_read / blocks_total /
-    payload_blocks_fetched / fetch_jobs. ``_impact`` is ImpactEngine's
-    pinned impact table."""
+    """Exact single-term top-k over the impact table: the impact walk of
+    ``impact_or_topk`` for a query of one term, which stops once the kth
+    collected score exceeds the next block's max_score and never needs a
+    completion job. ``_impact`` is ImpactEngine's pinned impact table."""
     cfg = cfg or index.config()
-    term_ids = _query_term_ids(query, "or", cfg)
-    if len(term_ids) != 1:
+    if len(_query_term_ids(query, "or", cfg)) != 1:
         raise ValueError("impact_single_topk serves single-term queries")
-    tid = term_ids[0]
-    if not deletes_small(index):  # mass deletion: serve distributed
-        return _search_fallback(spark, index, query, k, cfg, _stats, _impact)
-    if _impact is None:  # pin meta scan + payload fetches to one snapshot
-        _impact = BlockTable(_pinned_scan(spark, index, "postings_impact"), None)
-    meta = _impact_meta_multi(_impact, [tid], cfg.num_shards)[tid]
-    if meta is None:  # metadata guard tripped — exact distributed fallback
-        return _search_fallback(spark, index, query, k, cfg, _stats, _impact)
-    if len(meta) == 0:
-        if _stats is not None:
-            _stats.update(blocks_read=0, blocks_total=0,
-                          payload_blocks_fetched=0, fetch_jobs=0)
-        return []
-    deleted_u = effective_deletes(spark, index)
-    # first batch = the smallest impact-order prefix that can hold k postings
-    cum = meta["n"].to_numpy(np.int64).cumsum()
-    first = int(np.searchsorted(cum, k) + 1)
-    reader = _ImpactBlockReader(_impact.scan, tid, meta, cfg.num_shards,
-                                min(first, len(meta)))
-    maxs = meta["max_score"].to_numpy(np.float32)
-    docs: list[np.ndarray] = []
-    scores: list[np.ndarray] = []
-    n_collected = 0
-    read = 0
-    for i in range(len(meta)):
-        kth = None
-        if n_collected >= k:
-            allsc = np.concatenate(scores)
-            kth = np.partition(allsc, len(allsc) - k)[len(allsc) - k]
-        if kth is not None and kth > maxs[i]:
-            break  # no remaining block can contribute a better posting
-        if read >= _P1_MAX_DRIVER_BLOCKS:
-            # early termination is not biting (flat score distribution) and
-            # ANOTHER block would have to stream through the driver: concede
-            # and serve exact (the stop test above runs first, so a walk
-            # that terminates exactly at the cap keeps its finished work)
-            return _search_fallback(spark, index, query, k, cfg, _stats,
-                                    _impact)
-        bdu, bsc = reader.block(i)
-        du, sc = drop_deleted(bdu, bsc, deleted_u)
-        docs.append(du)
-        scores.append(sc)
-        n_collected += len(du)
-        read += 1
-    if _stats is not None:
-        _stats["blocks_read"] = read
-        _stats["blocks_total"] = int(len(meta))
-        _stats["payload_blocks_fetched"] = reader.fetched_blocks
-        _stats["fetch_jobs"] = reader.fetch_jobs
-    return _topk_pairs(np.concatenate(docs), np.concatenate(scores), k)
+    return impact_or_topk(spark, index, query, k, cfg, _stats, _impact)
 
 
 def impact_or_topk(spark: SparkSession, index: Index, query: str,
@@ -457,50 +390,78 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
                    _impact: BlockTable | None = None,
                    _doc: BlockTable | None = None,
                    ) -> list[tuple[int, float]]:
-    """Exact multi-term disjunctive top-k over the impact layout: TAAT with
-    per-block upper bounds (the reference's score-ordered serving,
-    sharded_builder.h:216-228, strengthened to per-block bounds).
+    """Exact disjunctive top-k over the impact layout, for one query term or
+    many: TAAT with per-block upper bounds (the reference's score-ordered
+    serving, sharded_builder.h:216-228, strengthened to per-block bounds).
 
-    Phase 1 (impact table): repeatedly decode the unread block with the
+    The walk (impact table): repeatedly decode the unread block with the
     globally largest max_score, accumulating partial scores a(d). With
-    U = Σ_t (next unread block max of term t), any doc not yet seen has
-    true score ≤ U — so once the kth best a(d) exceeds U strictly, no
-    unseen doc can enter the top-k, and the loop stops with
-    θ = kth a(d) (a lower bound of the true kth score).
+    U = Σ_t r_t, r_t the next unread block max of term t (0 once t is
+    exhausted), any doc not yet seen has true score ≤ U — so once the kth
+    best a(d) exceeds U strictly, no unseen doc can enter the top-k, and the
+    loop stops with θ = kth a(d) (a lower bound of the true kth score).
+    When every remaining block is already decoded (the first payload job
+    seeds whole short lists), they are drained with no further job.
 
-    Phase 2 (doc-sorted table): a doc d seen only in some terms' prefixes
-    has upper bound ub(d) = a(d) + Σ_{t: d unseen in t} r_t; every doc with
-    ub(d) ≥ θ is a candidate. Their EXACT scores come from one pruned job
-    over the doc-sorted postings — blocks whose [min_doc, max_doc] range
-    contains no candidate are never read (the two layouts complement each
-    other: impact order finds the candidates, doc order completes them).
-    Final ranking: exact score desc, unsigned doc asc.
+    The exit rule: a doc d has upper bound ub(d) = a(d) + Σ_{t: d unseen in
+    t} r_t, and every doc with ub(d) ≥ θ is a candidate. A candidate is
+    unresolved while some term with r_t > 0 has not shown it. With no
+    unresolved candidate — always for one term, and whenever the lists were
+    exhausted or drained — the top-k of the partial sums is exact. Otherwise
+    the candidates' EXACT scores come from the doc-sorted postings
+    (_exact_scores_docsorted: the two layouts complement each other, impact
+    order finds the candidates, doc order completes them). Final ranking:
+    exact score desc, unsigned doc asc.
+
+    The mass-deletion gate, the metadata guard and the _P1_MAX_DRIVER_BLOCKS
+    cap all concede to one exact distributed fallback.
+    ``_stats`` gets one key set on every path: blocks_read (walk decodes),
+    blocks_drained, blocks_total, payload_blocks_fetched, fetch_jobs (the
+    first payload job counts as one), n_candidates and blocks_fetched_p2
+    (both 0 without a completion); a fallback zeroes them and adds
+    fallback="distributed".
 
     ``_impact`` and ``_doc`` are ImpactEngine's pinned tables.
     """
+    from alexandria_spark.plans.snapshots import head_snapshot_id
+
     cfg = cfg or index.config()
     term_ids = _query_term_ids(query, "or", cfg)
     if not term_ids:
         return []
-    if len(term_ids) == 1:
-        return impact_single_topk(spark, index, query, k, cfg, _stats, _impact)
-    if not deletes_small(index):  # mass deletion: serve distributed
-        return _search_fallback(spark, index, query, k, cfg, _stats, _doc)
-    deleted_u = effective_deletes(spark, index)
+    # HEAD is read ONCE: the impact scan and a completion's doc-sorted scan
+    # pin the same snapshot, so a commit landing mid-query cannot pair one
+    # state's impact blocks with the next state's doc-sorted blocks
+    snap = head_snapshot_id(index.path)
+    if _impact is None:  # pin meta scan + payload fetches to one snapshot
+        _impact = BlockTable(
+            _pinned_scan(spark, index, "postings_impact", snap), None)
 
-    if _impact is None:  # pin meta scans + payload fetches to one snapshot
-        _impact = BlockTable(_pinned_scan(spark, index, "postings_impact"), None)
-    if _doc is None:  # same for the phase-2 completion table
-        _doc = BlockTable(_pinned_scan(spark, index, "postings"), None)
+    def fallback() -> list[tuple[int, float]]:
+        """The one fallback of every guard: exact distributed OR top-k via
+        plans.query.search, over the query's own impact scan (a warm
+        engine's cached one, or the snapshot-pinned one), so guard-tripped
+        queries still serve from executor memory and read no other table.
+        The impact layout decodes to the same posting multiset as the
+        doc-sorted one (test_impact_layout_same_postings), so it serves
+        exactly. ``_stats`` keeps its one key set (zeros + a marker)."""
+        if _stats is not None:
+            _stats.update(blocks_read=0, blocks_drained=0, blocks_total=0,
+                          payload_blocks_fetched=0, fetch_jobs=0,
+                          n_candidates=0, blocks_fetched_p2=0,
+                          fallback="distributed")
+        return _collect_topk(spark, index, query, "or", k, cfg, _table=_impact)
+
+    if not deletes_small(index):  # mass deletion: serve distributed
+        return fallback()
     metas = _impact_meta_multi(_impact, term_ids, cfg.num_shards)
     if any(m is None for m in metas.values()):
         # a hot term tripped the metadata guard: the driver-orchestrated
-        # impact walk would hold its block list — serve the whole query
-        # through the exact distributed path instead (over the warm cached
-        # doc-sorted scan when an engine provided one)
-        return _search_fallback(spark, index, query, k, cfg, _stats, _doc)
+        # walk would hold its block list
+        return fallback()
+    deleted_u = effective_deletes(spark, index)
     readers = {
-        t: _ImpactBlockReader(_impact.scan, t, m, cfg.num_shards, first_batch=2)
+        t: _ImpactBlockReader(_impact.scan, t, m, cfg.num_shards)
         for t, m in metas.items() if len(m)
     }
     # one combined job seeds every term's first payload batch — with per-term
@@ -508,13 +469,12 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     # reading a single posting
     _prefetch_first_batches(_impact.scan, readers, metas, k)
     ptr = {t: 0 for t in readers}
-    # per-term decoded prefixes as array chunks — phase 1 stays fully
+    # per-term decoded prefixes as array chunks — the walk stays fully
     # vectorized (no per-posting Python): partial sums come from one
     # unique+reduceat over the concatenated chunks at each stop check
     chunks: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {
         t: [] for t in readers
     }
-    p1_read = 0
 
     def _r(t: int) -> float:
         m = metas[t]
@@ -532,214 +492,165 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
         uniq, starts = np.unique(du, return_index=True)
         return uniq, np.add.reduceat(sc, starts)
 
+    def _kth(sums: np.ndarray) -> float:
+        return np.partition(sums, len(sums) - k)[len(sums) - k]
+
+    def _decode_next(t: int) -> int:
+        """Decode term t's next block into its chunks; its live postings."""
+        du, sc = drop_deleted(*readers[t].block(ptr[t]), deleted_u)
+        chunks[t].append((du, sc))
+        ptr[t] += 1
+        return len(du)
+
     n_seen_docs = 0
-    while readers:
+    read = 0
+    while True:
         live = [t for t in readers if ptr[t] < len(metas[t])]
         if not live:
             break
         bound = {t: _r(t) for t in live}
-        u_total = sum(bound.values())
         if n_seen_docs >= k:
             _, sums = _accumulate()
-            if len(sums) >= k:
-                theta = np.partition(sums, len(sums) - k)[len(sums) - k]
-                if theta > u_total:
-                    break
-        if p1_read >= _P1_MAX_DRIVER_BLOCKS:
+            if len(sums) >= k and _kth(sums) > sum(bound.values()):
+                break
+        if read >= _P1_MAX_DRIVER_BLOCKS:
             # flat score distributions never satisfy the strict θ > U stop
             # and ANOTHER block would have to stream through the driver:
             # concede the walk and serve exact (the stop test above runs
             # first, so terminating exactly at the cap keeps the result)
-            return _search_fallback(spark, index, query, k, cfg, _stats,
-                                    _doc)
-        t = max(live, key=bound.__getitem__)
-        bdu, bsc = readers[t].block(ptr[t])
-        du, sc = drop_deleted(bdu, bsc, deleted_u)
-        chunks[t].append((du, sc))
-        n_seen_docs += len(du)
-        ptr[t] += 1
-        p1_read += 1
+            return fallback()
+        n_seen_docs += _decode_next(max(live, key=bound.__getitem__))
+        read += 1
 
     drained = 0
     if all(len(rd.dec) >= len(metas[t]) for t, rd in readers.items()):
         # every remaining block's postings are ALREADY decoded on the
-        # driver (the combined prefetch seeds whole short lists): draining
-        # them locally costs zero jobs and makes the sums exact, where the
-        # phase-2 completion would re-decode the same blocks through a
-        # Spark job. Counted as blocks_drained, NOT blocks_read_p1 — the
-        # walk's own early-termination accounting stays meaningful.
-        for t, rd in readers.items():
+        # driver: draining them locally costs zero jobs and makes the sums
+        # exact. Counted as blocks_drained, NOT blocks_read — the walk's
+        # own early-termination accounting stays meaningful.
+        for t in readers:
             while ptr[t] < len(metas[t]):
-                bdu, bsc = rd.block(ptr[t])
-                du, sc = drop_deleted(bdu, bsc, deleted_u)
-                chunks[t].append((du, sc))
-                ptr[t] += 1
+                _decode_next(t)
                 drained += 1
 
-    docs_u_arr, a_arr = _accumulate()
-    if len(docs_u_arr) == 0:
-        if _stats is not None:
-            _stats.update(blocks_read_p1=p1_read, blocks_total=sum(
-                len(m) for m in metas.values()), blocks_fetched_p2=0)
-        return []
-
-    if all(ptr[t] >= len(metas[t]) for t in readers):
-        # the walk exhausted EVERY term's block list (short lists — the
-        # common small-query shape): the accumulated partial sums are
-        # already the exact scores, so the phase-2 completion job would
-        # only recompute them. Skip it.
-        if _stats is not None:
-            _stats.update(
-                blocks_read_p1=p1_read,
-                blocks_total=sum(len(m) for m in metas.values()),
-                blocks_fetched_p2=0, n_candidates=0,
-                blocks_drained=drained,
-            )
-        return _topk_pairs(docs_u_arr, a_arr, k)
-
-    # candidate cut: ub(d) = a(d) + Σ residuals of terms that haven't shown d
-    ub = a_arr.copy()
+    docs_u, sums = _accumulate()
+    ub = sums.copy()
+    unresolved = np.zeros(len(docs_u), dtype=bool)
     for t in readers:
         r_t = _r(t)
         if r_t <= 0.0:
             continue
-        if chunks[t]:
-            seen_t = np.unique(np.concatenate([c[0] for c in chunks[t]]))
-            pos = np.minimum(np.searchsorted(seen_t, docs_u_arr),
-                             max(len(seen_t) - 1, 0))
-            in_seen = seen_t[pos] == docs_u_arr if len(seen_t) else \
-                np.zeros(len(docs_u_arr), dtype=bool)
-        else:
-            in_seen = np.zeros(len(docs_u_arr), dtype=bool)
-        ub[~in_seen] += r_t
-    if len(docs_u_arr) >= k:
-        theta = np.partition(a_arr, len(a_arr) - k)[len(a_arr) - k]
-        cand_mask = ub >= theta
+        seen_t = (np.concatenate([c[0] for c in chunks[t]]) if chunks[t]
+                  else np.empty(0, np.uint64))
+        unseen = ~np.isin(docs_u, seen_t)
+        ub[unseen] += r_t
+        unresolved |= unseen
+    if len(docs_u) >= k:
+        cand_mask = ub >= _kth(sums)
     else:
-        cand_mask = np.ones(len(docs_u_arr), dtype=bool)
-    cand = docs_u_arr[cand_mask].view(np.int64)
-
-    exact, p2_blocks = _exact_scores_docsorted(spark, index, term_ids, cand,
-                                               cfg, _doc)
+        cand_mask = np.ones(len(docs_u), dtype=bool)
+    n_cand, p2_blocks = 0, 0
+    if (unresolved & cand_mask).any():
+        cand = docs_u[cand_mask].view(np.int64)
+        doc = _doc if _doc is not None else BlockTable(
+            _pinned_scan(spark, index, "postings", snap), None)
+        exact, p2_blocks = _exact_scores_docsorted(spark, index, term_ids,
+                                                   cand, cfg, doc)
+        docs_u = np.fromiter(exact.keys(), dtype=np.int64).view(np.uint64)
+        sums = np.fromiter(exact.values(), dtype=np.float64)
+        n_cand = int(len(cand))
     if _stats is not None:
         _stats.update(
-            blocks_read_p1=p1_read,
+            blocks_read=read, blocks_drained=drained,
             blocks_total=sum(len(m) for m in metas.values()),
-            blocks_fetched_p2=p2_blocks,
-            n_candidates=int(len(cand)),
+            payload_blocks_fetched=sum(rd.fetched_blocks
+                                       for rd in readers.values()),
+            fetch_jobs=(1 if readers else 0) + sum(rd.fetch_jobs
+                                                   for rd in readers.values()),
+            n_candidates=n_cand, blocks_fetched_p2=p2_blocks,
         )
-    d = np.fromiter(exact.keys(), dtype=np.int64)
-    s = np.fromiter(exact.values(), dtype=np.float64)
-    return _topk_pairs(d.view(np.uint64), s, k)
+    return _topk_pairs(docs_u, sums, k)
 
 
 def _exact_scores_docsorted(spark: SparkSession, index: Index,
                             term_ids: list[int], cand: np.ndarray,
                             cfg: EngineConfig, _doc: BlockTable | None = None,
                             ) -> tuple[dict[int, float], int]:
-    """Exact OR scores for the candidate docs from the doc-sorted postings.
+    """Exact OR scores for the candidate docs from the doc-sorted postings,
+    completed one of two ways:
 
-    Selective candidate sets (block pruning keeps few blocks): one job
-    pulls only the kept blocks' payloads to the driver and sums in numpy —
-    a single stage, tiny transfer. Dense candidate sets — the common case
-    for hot multi-term ORs at scale, where thousands of uniformly-spread
-    candidates intersect EVERY block's [min_doc, max_doc] range and
-    pruning keeps everything — switch to the fully distributed completion
-    (decode + broadcast semi-join + groupBy): the driver then receives
-    only one summed row per candidate instead of the terms' entire payload
-    bytes (at 500k docs the driver path measured 1.2–1.8 s pulling
-    192–288/192–288 blocks; the distributed path bounds the transfer by
-    len(cand) regardless of corpus size).
-    ``_doc`` is the doc-sorted table to read (ImpactEngine's pinned one)."""
-    src = _doc.scan if _doc is not None else index.postings(spark)
-    blocks = _term_rows(src, term_ids, cfg.num_shards)
+    * while (candidates x terms) stays within _P2_FLAT_MAX_ROWS, ONE
+      shuffle-free job over the metadata-pruned blocks — blocks whose
+      [min_doc, max_doc] range holds no candidate are never read (with the
+      metadata guard tripped, the terms' blocks are read unpruned). Each
+      task decodes, keeps the candidates' postings (sorted-array
+      membership) and ships one (doc, score-f32) row per (term, doc) hit;
+      the driver sums doc-major in a fixed order;
+    * past it (hot ORs with huge candidate sets at scale), ``search(k=None)``
+      over the doc-sorted table, semi-joined to the candidates: the driver
+      then receives one summed row per candidate, regardless of term count.
+
+    Returns (scores, blocks): blocks is the number of pruned blocks the flat
+    job read, or -1 when the terms' blocks were read unpruned.
+    ``_doc`` is the doc-sorted table to read (ImpactEngine's pinned one, or
+    the query's snapshot-pinned one)."""
     if len(cand) == 0:
         return {}, 0
-
-    def _complete_distributed() -> dict[int, float]:
-        # ONE shuffle-free job when (cand x terms) is driver-small: decode,
-        # filter to the candidate set inside the task (sorted-array
-        # membership, no broadcast join), ship one (doc, score-f32) row per
-        # (term, doc) hit, and sum doc-major on the driver — the exact
-        # summation order of the driver-blocks path below, so the two
-        # completions are bit-identical. Past the row cap (hot ORs with
-        # huge candidate sets at scale), the previous shuffle+groupBy path
-        # bounds the driver transfer by len(cand) regardless of term count.
-        if len(cand) * len(term_ids) <= _P2_FLAT_MAX_ROWS:
-            import pyspark.sql.types as T
-
-            cu = np.sort(cand.view(np.uint64))
-            schema = T.StructType([T.StructField("doc_id", T.LongType()),
-                                   T.StructField("score", T.FloatType())])
-
-            def fn(batches):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    dec = decode_blocks(pdf)
-                    du = dec["doc_id"].to_numpy().view(np.uint64)
-                    pos = np.minimum(np.searchsorted(cu, du), len(cu) - 1)
-                    hit = cu[pos] == du
-                    if hit.any():
-                        yield dec.loc[hit, ["doc_id", "score"]]
-
-            pdf = blocks.mapInPandas(fn, schema).toPandas()
-            if len(pdf) == 0:
-                return {}
-            dh = pdf["doc_id"].to_numpy(np.int64)
-            sh = pdf["score"].to_numpy(np.float64)
-            order = np.lexsort((sh, dh))
-            dh, sh = dh[order], sh[order]
-            uniq, starts = np.unique(dh, return_index=True)
-            return dict(zip(uniq.tolist(),
-                            np.add.reduceat(sh, starts).tolist()))
-        keys = spark.createDataFrame(
-            [(int(x),) for x in cand.tolist()], "doc_id long"
-        )
+    if len(cand) * len(term_ids) > _P2_FLAT_MAX_ROWS:
+        keys = spark.createDataFrame(pd.DataFrame({"doc_id": cand}))
         rows = (
-            _decode_map(blocks)
+            search(spark, index, "", "or", None, cfg, _table=_doc,
+                   _term_ids=term_ids)
             .join(F.broadcast(keys), "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.sum(F.col("score").cast("double")).alias("s"))
             .collect()
         )
-        return {int(r["doc_id"]): float(r["s"]) for r in rows}
+        return {int(r["doc_id"]): float(r["score"]) for r in rows}, -1
 
+    src = _doc.scan if _doc is not None else index.postings(spark)
+    blocks = _term_rows(src, term_ids, cfg.num_shards)
     if _doc is not None and _doc.meta is not None:  # zero-job block pruning
         meta = _doc.meta[_doc.meta["term_id"].isin(term_ids)]
     else:
         meta = _guarded_meta(blocks, _PRUNE_COLS)
-    if meta is None:
-        # metadata guard: skip driver-side block pruning entirely
-        # (candidate set is bounded by the phase-1 prefix)
-        return _complete_distributed(), -1
-    if len(meta) == 0:
-        return {}, 0
-    cand_u = np.sort(cand.view(np.uint64))
-    lo = meta["min_doc"].to_numpy(np.int64).view(np.uint64)
-    hi = meta["max_doc"].to_numpy(np.int64).view(np.uint64)
-    a = np.searchsorted(cand_u, lo, side="left")
-    b = np.searchsorted(cand_u, hi, side="right")
-    kept = meta[b > a]
-    if len(kept) == 0:
-        return {}, 0
-    if len(kept) > _P2_MAX_DRIVER_BLOCKS:
-        # pruning kept too much to ship to the driver — complete
-        # distributed; blocks_fetched_p2 = -len(kept) marks the switch
-        return _complete_distributed(), -int(len(kept))
-    payload = _semi_join_blocks(spark, blocks, kept).toPandas()
-    dec = decode_blocks(payload)
-    du = dec["doc_id"].to_numpy().view(np.uint64)
-    pos = np.minimum(np.searchsorted(cand_u, du), len(cand_u) - 1)
-    hit = cand_u[pos] == du
-    dh = dec["doc_id"].to_numpy()[hit]
-    sh = dec["score"].to_numpy(np.float64)[hit]
+    cu = np.sort(cand.view(np.uint64))
+    n_blocks = -1
+    if meta is not None:
+        lo = meta["min_doc"].to_numpy(np.int64).view(np.uint64)
+        hi = meta["max_doc"].to_numpy(np.int64).view(np.uint64)
+        kept = meta[np.searchsorted(cu, hi, side="right")
+                    > np.searchsorted(cu, lo, side="left")]
+        if len(kept) == 0:
+            return {}, 0
+        blocks = _semi_join_blocks(spark, blocks, kept)
+        n_blocks = int(len(kept))
+
+    import pyspark.sql.types as T
+
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("score", T.FloatType())])
+
+    def fn(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            dec = decode_blocks(pdf)
+            du = dec["doc_id"].to_numpy().view(np.uint64)
+            pos = np.minimum(np.searchsorted(cu, du), len(cu) - 1)
+            hit = cu[pos] == du
+            if hit.any():
+                yield dec.loc[hit, ["doc_id", "score"]]
+
+    pdf = blocks.mapInPandas(fn, schema).toPandas()
+    if len(pdf) == 0:
+        return {}, n_blocks
+    dh = pdf["doc_id"].to_numpy(np.int64)
+    sh = pdf["score"].to_numpy(np.float64)
     # one summand per (term, doc): deterministic f64 sum in doc-major order
     order = np.lexsort((sh, dh))
     dh, sh = dh[order], sh[order]
     uniq, starts = np.unique(dh, return_index=True)
-    sums = np.add.reduceat(sh, starts)
-    return dict(zip(uniq.tolist(), sums.tolist())), int(len(kept))
+    return dict(zip(uniq.tolist(),
+                    np.add.reduceat(sh, starts).tolist())), n_blocks
 
 
 class ImpactEngine:

@@ -442,10 +442,12 @@ def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
     impact-ordered layout wins SINGLE-term queries decisively (one
     score-ordered prefix read, ~3× faster than docpart at every measured
     scale); a phrase is a single n-gram key over the term layout, served
-    as "bmw" — the collected distributed path (search_bmw). Every engine
-    keeps its own guard-state fallbacks (metadata overflow / mass deletion
-    → exact distributed path), so auto only picks the LAYOUT — exactness
-    is invariant. A missing layout raises that engine's actionable
+    as "bmw" — the collected distributed path (search_bmw). Guard states
+    never change an answer: ``search()`` skips its driver-side planning
+    past the metadata guard, and the impact walk (single-term and OR alike)
+    sends its mass-deletion, metadata and block-cap guards to one exact
+    ``search()`` fallback, so auto only picks the LAYOUT — exactness is
+    invariant. A missing layout raises that engine's actionable
     FileNotFoundError (how to derive it, which engines serve without it)
     rather than silently degrading.
     """

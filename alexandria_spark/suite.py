@@ -405,8 +405,9 @@ def q_bmw_search_topk(spark, sf_dir):
 
 def q_impact_single_topk(spark, sf_dir):
     """Single-term top-k through the impact-ordered layout (plans/impact.py:
-    blocks decoded in descending-max order with exact early termination),
-    served WARM through ImpactEngine's pinned scans."""
+    the one impact walk decodes blocks in descending-max order with exact
+    early termination, and its partial sums are the answer), served WARM
+    through ImpactEngine's pinned scans."""
     hits = _suite_impact_engine(spark, sf_dir).single_topk(Q_SINGLE, k=40)
     df = spark.createDataFrame(
         [(int(d), float(s)) for d, s in hits], "doc_id long, score double"
@@ -427,10 +428,11 @@ def _suite_impact_engine(spark, sf_dir):
 
 
 def q_impact_or_topk(spark, sf_dir):
-    """Multi-term OR top-k through the impact-ordered layout: TAAT with
-    per-block bounds finds the candidates, one pruned doc-sorted job
-    completes their exact scores (plans/impact.impact_or_topk), served WARM
-    through ImpactEngine's pinned scans."""
+    """Multi-term OR top-k through the impact-ordered layout: the impact
+    walk (TAAT with per-block bounds) finds the candidates, and a pruned
+    doc-sorted job completes their exact scores only when some candidate
+    is still unresolved (plans/impact.impact_or_topk), served WARM through
+    ImpactEngine's pinned scans."""
     hits = _suite_impact_engine(spark, sf_dir).or_topk(" ".join(Q_TOPK), k=40)
     df = spark.createDataFrame(
         [(int(d), float(s)) for d, s in hits], "doc_id long, score double"

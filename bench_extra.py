@@ -268,7 +268,11 @@ def plans(sf_dir: str, out_dir: str) -> None:
 def impact_trace(sf_dir: str, out_dir: str, suffix: str) -> None:
     """Driver-loop 'plan' artifact for the impact engine + bmw: per-query
     Spark-job trace (count + descriptions are the plan of a driver-
-    orchestrated path) plus the explain of the constituent payload jobs."""
+    orchestrated path) plus the explain of the constituent payload jobs.
+    Single-term and OR queries run the same impact walk (``or_topk``); its
+    ``_stats`` line has one key set: blocks_read, blocks_drained,
+    blocks_total, payload_blocks_fetched, fetch_jobs, n_candidates,
+    blocks_fetched_p2."""
     from alexandria_spark.config import EngineConfig
     from alexandria_spark.plans.build import Index, build_index
     from alexandria_spark.plans.impact import ImpactEngine, build_impact_postings

@@ -292,8 +292,10 @@ def test_mass_deletion_gate_both_sides(spark, tmp_path, monkeypatch):
     delete_docs(spark, idx, victims)
 
     def impact_fallback():
-        stats = {}
+        stats, single = {}, {}
         impact_or_topk(spark, idx, "def return", 10, CFG, _stats=stats)
+        impact_single_topk(spark, idx, "def", 10, CFG, _stats=single)
+        assert single.get("fallback") == stats.get("fallback"), (single, stats)
         return stats.get("fallback")
 
     def joins(df):
@@ -344,6 +346,10 @@ def test_cold_search_jobs_unchanged_by_tombstones(spark, tmp_path):
     }
     calls = {(mode, engine): (lambda mode=mode, fn=fn: fn(mode))
              for mode in ("and", "or") for engine, fn in engines.items()}
+    calls["or", "impact_or"] = lambda: impact_or_topk(
+        spark, idx, "def return", 10, CFG)
+    calls["or", "impact_single"] = lambda: impact_single_topk(
+        spark, idx, "def", 10, CFG)
     for fn in calls.values():
         fn()  # first run of each shape outside the count
     before = {key: _jobs(spark, fn) for key, fn in calls.items()}

@@ -70,13 +70,16 @@ def test_impact_single_topk_exact_and_early(spark, idx):
     assert impact_single_topk(spark, idx, "zzz_absent", k=5, cfg=CFG) == []
 
 
-def test_impact_payload_fetch_is_lazy(spark, idx):
-    """Driver IO must track blocks_read, not blocks_total: the payload
-    fetch may over-fetch at most the doubling-batch slack (< 2× blocks
-    actually decoded + the initial k-prefix), and for an early-terminated
-    multi-block term it must stay well under the full list."""
+def test_impact_payload_fetch_is_lazy(spark, idx, monkeypatch):
+    """Past the seed-all threshold, driver IO must track blocks_read, not
+    blocks_total: the payload fetch may over-fetch at most the
+    doubling-batch slack (< 2× blocks actually decoded + the initial
+    k-prefix), and for an early-terminated multi-block term it must stay
+    well under the full list."""
+    from alexandria_spark.plans import impact as imod
     from alexandria_spark.plans.impact import impact_single_topk as topk
 
+    monkeypatch.setattr(imod, "_SEED_ALL_MAX_BLOCKS", 0)
     hit = False
     for term in ["def", "return", "the", "merge"]:
         stats = {}
@@ -88,6 +91,64 @@ def test_impact_payload_fetch_is_lazy(spark, idx):
             assert stats["payload_blocks_fetched"] < stats["blocks_total"], stats
             hit = True
     assert hit  # at least one term exercised real early termination
+
+
+def test_prefetch_seed_all_both_sides(spark, idx, monkeypatch):
+    """Below the seed-all threshold, one payload job seeds every block of
+    the query and the walk runs no mid-walk fetch; past it (threshold 0),
+    the first job seeds only the k-prefix and later misses fetch in
+    doubling batches. Single-term and OR queries alike, with the same
+    answers either way."""
+    from alexandria_spark.plans import impact as imod
+
+    queries = [("def", impact_single_topk), ("return", impact_single_topk),
+               ("def return", impact_or_topk), ("return merge", impact_or_topk)]
+    seeded = {}
+    for q, fn in queries:
+        stats = {}
+        seeded[q] = fn(spark, idx, q, k=3, cfg=CFG, _stats=stats)
+        assert 0 < stats["blocks_total"] <= imod._SEED_ALL_MAX_BLOCKS, stats
+        assert stats["fetch_jobs"] == 1, (q, stats)
+        assert stats["payload_blocks_fetched"] == stats["blocks_total"], (q, stats)
+        assert (stats["blocks_read"] + stats["blocks_drained"]
+                == stats["blocks_total"]), (q, stats)
+
+    monkeypatch.setattr(imod, "_SEED_ALL_MAX_BLOCKS", 0)
+    fetched_later = False
+    for q, fn in queries:
+        stats = {}
+        assert fn(spark, idx, q, k=3, cfg=CFG, _stats=stats) == seeded[q], q
+        assert stats["payload_blocks_fetched"] < stats["blocks_total"], (q, stats)
+        fetched_later |= stats["fetch_jobs"] > 1
+    assert fetched_later  # some walk outran its k-prefix
+
+
+def test_cold_query_reads_one_snapshot(spark, idx, monkeypatch):
+    """A cold OR query resolves HEAD once: a snapshot committed between its
+    impact read and its phase-2 doc-sorted read must not move the second
+    read onto the new snapshot."""
+    from alexandria_spark.plans import impact as imod
+    from alexandria_spark.plans import snapshots
+
+    monkeypatch.setattr(imod, "_SEED_ALL_MAX_BLOCKS", 0)  # phase 2 runs
+    real = snapshots.read_table
+    reads = []
+
+    def spy(spark_, path, table, snapshot_id=None):
+        reads.append((table, snapshot_id or snapshots.head_snapshot_id(path)))
+        df = real(spark_, path, table, snapshot_id)
+        if len(reads) == 1:
+            snapshots.commit_snapshot(path, "concurrent_commit")
+        return df
+
+    monkeypatch.setattr(snapshots, "read_table", spy)
+    stats = {}
+    got = impact_or_topk(spark, idx, "def return", k=3, cfg=CFG, _stats=stats)
+    monkeypatch.undo()
+    assert stats["n_candidates"] > 0, stats
+    assert [t for t, _ in reads] == ["postings_impact", "postings"], reads
+    assert reads[0][1] == reads[1][1], reads
+    assert got == impact_or_topk(spark, idx, "def return", k=3, cfg=CFG)
 
 
 def test_impact_or_topk_rank_identical(spark, idx):
@@ -104,7 +165,7 @@ def test_impact_or_topk_rank_identical(spark, idx):
         assert [(d, round(s, 6)) for d, s in got] == [
             (d, round(s, 6)) for d, s in exp
         ], q
-        if stats["blocks_read_p1"] < stats["blocks_total"]:
+        if stats["blocks_read"] < stats["blocks_total"]:
             stopped_early = True
     assert stopped_early
 
@@ -191,8 +252,8 @@ def test_impact_metadata_guard_fallback(spark, idx, monkeypatch):
 
 def test_exact_scores_distributed_fallback(spark, idx, monkeypatch):
     """Phase-2 completion under a tripped metadata guard must produce the
-    same exact per-candidate OR scores via the distributed decode+semi-join
-    job as the driver-pruned path."""
+    same exact per-candidate OR scores from the flat job over the unpruned
+    blocks as from the flat job over the metadata-pruned ones."""
     from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.impact import _exact_scores_docsorted
     from alexandria_spark.plans.query import _query_term_ids
@@ -206,47 +267,17 @@ def test_exact_scores_distributed_fallback(spark, idx, monkeypatch):
     assert base_blocks > 0
     monkeypatch.setattr(qmod, "_META_GUARD_ROWS", 1)
     got, got_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
-    assert got_blocks == -1  # the distributed branch actually ran
+    assert got_blocks == -1  # the unpruned read actually ran
     assert set(got) == set(base)
     for d in base:
         assert abs(got[d] - base[d]) <= 1e-9 * max(1.0, abs(base[d]))
 
-
-
-def test_exact_scores_dense_candidates_go_distributed(spark, idx, monkeypatch):
-    """When block pruning keeps more than _P2_MAX_DRIVER_BLOCKS blocks (a
-    dense candidate set — every block's doc range holds a candidate, the
-    hot multi-term OR shape at scale), phase-2 completion must switch to
-    the distributed decode+semi-join path instead of pulling the terms'
-    whole payloads to the driver, with identical exact scores."""
-    from alexandria_spark.plans import impact as imod
-    from alexandria_spark.plans.impact import _exact_scores_docsorted
-    from alexandria_spark.plans.query import _query_term_ids
-
-    tids = _query_term_ids("def return", "or", CFG)
-    cand = np.array(
-        [d for d, _ in impact_single_topk(spark, idx, "def", k=20, cfg=CFG)],
-        dtype=np.int64,
-    )
-    base, base_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
-    assert base_blocks > 0  # small index: driver path by default
-    monkeypatch.setattr(imod, "_P2_MAX_DRIVER_BLOCKS", 0)
-    got, got_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
-    assert got_blocks == -base_blocks  # the dense switch actually ran
-    assert set(got) == set(base)
-    for d in base:
-        assert abs(got[d] - base[d]) <= 1e-9 * max(1.0, abs(base[d]))
-    # end-to-end: the whole OR query stays rank-identical under the switch
-    forced = impact_or_topk(spark, idx, "def return", k=10, cfg=CFG)
-    monkeypatch.undo()
-    normal = impact_or_topk(spark, idx, "def return", k=10, cfg=CFG)
-    assert [d for d, _ in forced] == [d for d, _ in normal]
 
 
 def test_exact_scores_shuffle_completion(spark, idx, monkeypatch):
-    """Past _P2_FLAT_MAX_ROWS (candidates x terms), the distributed phase-2
-    completion must switch from the shuffle-free flat job to the shuffle +
-    groupBy job, with the same exact per-candidate scores."""
+    """Past _P2_FLAT_MAX_ROWS (candidates x terms), phase-2 completion must
+    switch from the shuffle-free flat job to search(k=None) semi-joined to
+    the candidates, with the same exact per-candidate scores."""
     from alexandria_spark.plans import impact as imod
     from alexandria_spark.plans.impact import _exact_scores_docsorted
     from alexandria_spark.plans.query import _query_term_ids
@@ -256,24 +287,22 @@ def test_exact_scores_shuffle_completion(spark, idx, monkeypatch):
         [d for d, _ in impact_single_topk(spark, idx, "def", k=20, cfg=CFG)],
         dtype=np.int64,
     )
-    decode_maps = []
-    real = imod._decode_map
+    searches = []
+    real = imod.search
 
     def spy(*a, **k):
-        decode_maps.append(1)
+        searches.append(k.get("k", a[4] if len(a) > 4 else 10))
         return real(*a, **k)
 
-    monkeypatch.setattr(imod, "_decode_map", spy)
-    monkeypatch.setattr(imod, "_P2_MAX_DRIVER_BLOCKS", 0)  # go distributed
-    flat, _ = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
-    assert not decode_maps  # the flat job ran, not the groupBy
+    monkeypatch.setattr(imod, "search", spy)
+    flat, flat_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    assert not searches and flat_blocks > 0  # the pruned flat job ran
     monkeypatch.setattr(imod, "_P2_FLAT_MAX_ROWS", 0)
-    grouped, _ = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
-    assert decode_maps  # the shuffle + groupBy completion actually ran
+    grouped, grouped_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    assert searches == [None] and grouped_blocks == -1  # search(k=None) ran
     assert len(flat) > 0 and set(grouped) == set(flat)
     for d in flat:
         assert abs(grouped[d] - flat[d]) <= 1e-9 * max(1.0, abs(flat[d]))
-
 
 
 def test_phase1_walk_cap_falls_back_exact(spark, idx, monkeypatch):
@@ -326,7 +355,7 @@ def test_phase1_cap_boundary_keeps_terminated_walk(spark, idx, monkeypatch):
 
     # OR: same boundary property on the TAAT walk
     monkeypatch.setattr(imod, "_P1_MAX_DRIVER_BLOCKS",
-                        o_stats["blocks_read_p1"])
+                        o_stats["blocks_read"])
     capped_o = {}
     got_o = impact_or_topk(spark, idx, "def return", k=5, cfg=CFG,
                            _stats=capped_o)
