@@ -45,11 +45,16 @@ from alexandria_spark.plans.build import (
     tokenize_docs,
 )
 from alexandria_spark.plans.checkpoint import parquet_dir_bytes
-from alexandria_spark.plans.delete import filter_deleted
+from alexandria_spark.plans.delete import drop_deleted, effective_deletes, filter_deleted
 from alexandria_spark.plans.query import (
     RESULT_SCHEMA,
+    _empty_result,
+    _head_snapshot,
+    _local_blocks,
     _query_term_ids,
+    _result_frame,
     _term_map,
+    _topk_frame,
     _wand_and,
     _wand_or,
     top_k,
@@ -249,6 +254,13 @@ def search_docpart(
     """One-job distributed WAND: per-bucket exact top-k on executors via the
     shared kernel, global TakeOrdered merge. Returns (doc_id, score, n_terms).
 
+    A cold call with a finite ``k`` runs no Spark job while the whole
+    ``postings_doc`` table (every bucket holds every term) is at most
+    ``_LOCAL_MAX_BYTES`` in the pinned snapshot: the query terms' rows are
+    read with pyarrow and the same per-bucket kernel runs on the driver, one
+    bucket at a time, keeping k plus the tombstone count per bucket so the
+    tombstone drop cannot starve the global top-k.
+
     ``k=None`` returns EVERY match unranked (AND mode only — the OR kernel's
     quit/continue needs a finite k): the candidate feed for a serve pipeline
     whose boosts re-rank before truncation.
@@ -257,36 +269,42 @@ def search_docpart(
     cfg = cfg or index.config()
     term_ids = _query_term_ids(query, mode, cfg)
     if not term_ids:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    source = _blocks if _blocks is not None else index.postings(spark)
-    blocks = source.where(F.col("term_id").isin(term_ids))
-    nt = len(term_ids)
+        return _empty_result(spark)
     kernel_mode = "and" if mode == "and" else "or"
     if k is None and kernel_mode == "or":
         raise ValueError("k=None (full candidate set) requires mode='and'")
+    # AND results match every term by construction; the OR kernel does not
+    # track per-doc match counts
+    n_terms = len(term_ids) if kernel_mode == "and" else 0
 
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_bucket(pdf: pd.DataFrame, top: int | None) -> pd.DataFrame:
         terms = _term_map(pdf)
         if kernel_mode == "and":
             docs_u, scores = _wand_and(terms, term_ids)
         else:
-            docs_u, scores = _wand_or(terms, term_ids, k)
-        if len(docs_u) == 0:
-            return pd.DataFrame({"doc_id": np.empty(0, np.int64),
-                                 "score": np.empty(0, np.float64),
-                                 "n_terms": np.empty(0, np.int32)})
-        order = np.lexsort((docs_u, -scores))[:k]  # local top-k per bucket
-        return pd.DataFrame(
-            {
-                "doc_id": docs_u.view(np.int64)[order],
-                "score": scores[order],
-                # AND results match every term by construction; the OR kernel
-                # does not track per-doc match counts
-                "n_terms": np.int32(nt if kernel_mode == "and" else 0),
-            }
-        )
+            docs_u, scores = _wand_or(terms, term_ids, top)
+        return _topk_frame(docs_u, scores, n_terms, top)  # per-bucket top-k
 
-    per = blocks.groupBy("bucket").applyInPandas(per_bucket, RESULT_SCHEMA)
+    if _blocks is None and k is not None:
+        rows = _local_blocks(index, _head_snapshot(index), "postings_doc",
+                             term_ids, cfg.num_shards)
+        if rows is not None:
+            deleted = effective_deletes(spark, index)
+            # salt is the doc bucket (_scored_to_docpart_blocks)
+            per = [per_bucket(g, k + len(deleted))
+                   for _, g in rows.groupby("salt", sort=False)]
+            if not per:
+                return _empty_result(spark)
+            hits = pd.concat(per, ignore_index=True)
+            docs_u, scores = drop_deleted(
+                hits["doc_id"].to_numpy().view(np.uint64),
+                hits["score"].to_numpy(), deleted)
+            return _result_frame(spark, _topk_frame(docs_u, scores, n_terms, k))
+
+    source = _blocks if _blocks is not None else index.postings(spark)
+    blocks = source.where(F.col("term_id").isin(term_ids))
+    per = blocks.groupBy("bucket").applyInPandas(
+        lambda pdf: per_bucket(pdf, k), RESULT_SCHEMA)
     live = filter_deleted(spark, index, per)
     return live if k is None else top_k(live, k)
 

@@ -54,8 +54,11 @@ from alexandria_spark.plans.query import (
     BlockTable,
     _collect_topk,
     _guarded_meta,
+    _head_snapshot,
+    _local_blocks,
     _pin_table,
     _query_term_ids,
+    _search_local,
     _semi_join_blocks,
     _shard_of,
     _term_rows,
@@ -413,6 +416,12 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     order finds the candidates, doc order completes them). Final ranking:
     exact score desc, unsigned doc asc.
 
+    A cold query whose terms' impact shards total at most
+    ``_LOCAL_MAX_BYTES`` in the pinned snapshot runs no walk and no Spark
+    job: its terms' impact rows are read with pyarrow and served by
+    ``search()``'s driver-local OR (the impact layout decodes to the same
+    postings as the doc-sorted one), with ``_stats`` all zeros.
+
     The mass-deletion gate, the metadata guard and the _P1_MAX_DRIVER_BLOCKS
     cap all concede to one exact distributed fallback.
     ``_stats`` gets one key set on every path: blocks_read (walk decodes),
@@ -429,13 +438,31 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     term_ids = _query_term_ids(query, "or", cfg)
     if not term_ids:
         return []
+
+    def zero_stats(**marker) -> None:
+        """``_stats``' one key set, all zero: no walk ran."""
+        if _stats is not None:
+            _stats.update(blocks_read=0, blocks_drained=0, blocks_total=0,
+                          payload_blocks_fetched=0, fetch_jobs=0,
+                          n_candidates=0, blocks_fetched_p2=0, **marker)
+
     # HEAD is read ONCE: the impact scan and a completion's doc-sorted scan
     # pin the same snapshot, so a commit landing mid-query cannot pair one
     # state's impact blocks with the next state's doc-sorted blocks
-    snap = head_snapshot_id(index.path)
-    if _impact is None:  # pin meta scan + payload fetches to one snapshot
+    if _impact is None:
+        snap = _head_snapshot(index)
+        snap_id = snap["snapshot_id"] if snap is not None else None
+        local = _local_blocks(index, snap, "postings_impact", term_ids,
+                              cfg.num_shards)
+        if local is not None:  # every block is on the driver: no walk
+            zero_stats()
+            hits = _search_local(spark, index, local, term_ids, "or", k)
+            return list(zip(hits["doc_id"].tolist(), hits["score"].tolist()))
+        # pin meta scan + payload fetches to one snapshot
         _impact = BlockTable(
-            _pinned_scan(spark, index, "postings_impact", snap), None)
+            _pinned_scan(spark, index, "postings_impact", snap_id), None)
+    else:
+        snap_id = head_snapshot_id(index.path)
 
     def fallback() -> list[tuple[int, float]]:
         """The one fallback of every guard: exact distributed OR top-k via
@@ -445,11 +472,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
         The impact layout decodes to the same posting multiset as the
         doc-sorted one (test_impact_layout_same_postings), so it serves
         exactly. ``_stats`` keeps its one key set (zeros + a marker)."""
-        if _stats is not None:
-            _stats.update(blocks_read=0, blocks_drained=0, blocks_total=0,
-                          payload_blocks_fetched=0, fetch_jobs=0,
-                          n_candidates=0, blocks_fetched_p2=0,
-                          fallback="distributed")
+        zero_stats(fallback="distributed")
         return _collect_topk(spark, index, query, "or", k, cfg, _table=_impact)
 
     if not deletes_small(index):  # mass deletion: serve distributed
@@ -553,7 +576,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     if (unresolved & cand_mask).any():
         cand = docs_u[cand_mask].view(np.int64)
         doc = _doc if _doc is not None else BlockTable(
-            _pinned_scan(spark, index, "postings", snap), None)
+            _pinned_scan(spark, index, "postings", snap_id), None)
         exact, p2_blocks = _exact_scores_docsorted(spark, index, term_ids,
                                                    cand, cfg, doc)
         docs_u = np.fromiter(exact.keys(), dtype=np.int64).view(np.uint64)

@@ -11,6 +11,17 @@ Two execution paths over the same block tables:
   a cached scan and a driver-pinned copy of the block metadata.
   ``search_bmw`` is its collected form, a (doc_id, score) list.
 
+* the cold driver-local path — a cold query (no warm engine's tables,
+  finite ``k``) whose files in the pinned snapshot total at most
+  ``_LOCAL_MAX_BYTES`` is answered on the driver with no Spark job: HEAD is
+  read once, the snapshot's manifest names the files and their sizes (no
+  directory walk), pyarrow reads only the query terms' rows, and the same
+  decode, tombstone drop and top-k serve them (``_local_blocks``). Every
+  cold entry point (``search``, ``search_bmw``, ``search_docpart``,
+  ``impact_or_topk``, ``impact_single_topk``) takes it; an ``OSError``
+  from the read (a concurrent overwrite removed a listed file) sends the
+  query distributed instead.
+
 * ``LocalIndex`` — the low-latency serving path (the analogue of the
   reference's RAM-cached readers, index_reader.cpp:59-89): block metadata is
   pinned in memory, and queries run a vectorized term-at-a-time
@@ -22,7 +33,8 @@ Two execution paths over the same block tables:
   section-at-a-time early exit (search_engine.h:298-352).
 
 These paths and the impact layout's (plans/impact.py) plan through the
-same few helpers below: ``_term_rows`` (the query terms' scan),
+same few helpers below: ``_local_blocks`` (the cold driver-local read),
+``_term_rows`` (the query terms' scan),
 ``_guarded_meta`` (a driver-side metadata fetch, None past
 ``_META_GUARD_ROWS``), ``_pin_table`` (a warm engine's cached scan plus its
 guarded metadata, as one ``BlockTable``), ``_semi_join_blocks`` (read only
@@ -35,10 +47,12 @@ order as tie-break (index_manager.cpp:279-282, generic_record.h:50-68).
 
 from __future__ import annotations
 
+import os
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -57,10 +71,12 @@ from alexandria_spark.plans.blocks import decode_blocks, decode_runs
 from alexandria_spark.plans.build import MIN_I64, Index
 from alexandria_spark.plans.checkpoint import parquet_dir_bytes
 from alexandria_spark.plans.delete import (
+    deletes_small,
     drop_deleted,
     effective_deletes,
     filter_deleted,
 )
+from alexandria_spark.plans.snapshots import load_snapshot
 
 POSTING_SCHEMA = StructType(
     [
@@ -92,6 +108,18 @@ _META_GUARD_ROWS = 200_000
 # round-trip. At warehouse scale the prune always engages (and QueryEngine
 # pins the metadata once, so warm queries never pay the job either way).
 _PRUNE_MIN_BYTES = 64 << 20
+
+# At most this many bytes of files — the query terms' ``shard=`` partitions
+# of postings / postings_impact, or all of postings_doc, whose every bucket
+# holds every term — per the pinned snapshot's manifest, a cold query reads
+# on the driver instead of in a Spark job. The driver reads, decodes and
+# ranks 1.5 MB of postings in 55-90 ms on 4 cores, so 8 MiB costs about one
+# cold distributed call (two jobs, ~0.45 s) at worst.
+_LOCAL_MAX_BYTES = 8 << 20
+
+# the block columns a driver-local read loads (no tfs: nothing local needs it)
+_LOCAL_COLS = ("term_id", "salt", "block_id", "n", "min_doc", "max_doc",
+               "max_score", "doc_deltas", "scores")
 
 # the metadata columns AND pruning reads (search, QueryEngine, and the
 # impact layout's phase-2 completion over the doc-sorted table)
@@ -163,6 +191,91 @@ def _topk_pairs(docs_u: np.ndarray, scores: np.ndarray,
     top = np.lexsort((docs_u, -scores))[:k]
     docs_i = docs_u.view(np.int64)
     return [(int(docs_i[i]), float(scores[i])) for i in top]
+
+
+def _topk_frame(docs_u: np.ndarray, scores: np.ndarray, n_terms,
+                k: int) -> pd.DataFrame:
+    """The exact driver-side top-k as a RESULT_SCHEMA-shaped pandas frame,
+    ranked like ``_topk_pairs``; ``n_terms`` is per doc, or one value."""
+    top = np.lexsort((docs_u, -scores))[:k]
+    return pd.DataFrame({
+        "doc_id": docs_u[top].view(np.int64),
+        "score": scores[top].astype(np.float64),
+        "n_terms": np.broadcast_to(n_terms, len(docs_u))[top].astype(np.int32),
+    })
+
+
+def _empty_result(spark: SparkSession) -> DataFrame:
+    """An empty RESULT_SCHEMA frame that runs no Spark job: a one-row local
+    relation limited to no rows (an empty one runs a job to collect)."""
+    one = _topk_frame(np.zeros(1, np.uint64), np.zeros(1), 0, 1)
+    return spark.createDataFrame(one, RESULT_SCHEMA).limit(0)
+
+
+def _result_frame(spark: SparkSession, hits: pd.DataFrame) -> DataFrame:
+    """Driver-ranked hits as a DataFrame: a local relation, so collecting
+    it runs no Spark job."""
+    if len(hits) == 0:
+        return _empty_result(spark)
+    return spark.createDataFrame(hits, RESULT_SCHEMA)
+
+
+def _head_snapshot(index: Index) -> dict | None:
+    """The HEAD snapshot record, read once per cold query; None for an
+    index without a snapshot log."""
+    try:
+        return load_snapshot(index.path)
+    except (OSError, ValueError):
+        return None
+
+
+def _snapshot_files(snap: dict | None, index_path: str, table: str,
+                    shards: set[int] | None = None,
+                    ) -> list[tuple[str, int]] | None:
+    """(path, bytes) of ``table``'s data files in snapshot ``snap``, only
+    those under the ``shard=`` partitions ``shards`` when given; None when
+    the snapshot does not record the table."""
+    tab = (snap or {}).get("tables", {}).get(table)
+    if tab is None:
+        return None
+    tdir = os.path.join(index_path, table)
+    dirs = None if shards is None else {f"shard={s}" for s in shards}
+    return [(os.path.join(tdir, f["path"]), int(f["bytes"]))
+            for f in tab["files"]
+            if dirs is None or dirs & set(f["path"].split(os.sep)[:-1])]
+
+
+def _read_local(files: list[str], term_ids: list[int] | None) -> pd.DataFrame:
+    """The ``_LOCAL_COLS`` of ``files``' block rows, read with pyarrow on
+    the driver, only the ``term_ids`` rows when given (the filter skips row
+    groups by their term_id statistics). No Spark job."""
+    if not files:
+        return pd.DataFrame({c: [] for c in _LOCAL_COLS})
+    flt = None if term_ids is None else pads.field("term_id").isin(term_ids)
+    return (pads.dataset(files, format="parquet")
+            .to_table(columns=list(_LOCAL_COLS), filter=flt).to_pandas())
+
+
+def _local_blocks(index: Index, snap: dict | None, table: str,
+                  term_ids: list[int], num_shards: int) -> pd.DataFrame | None:
+    """The query terms' block rows of ``table``, read on the driver from
+    the files of snapshot ``snap``. None — the caller then serves the query
+    distributed — when the snapshot does not record the table, when those
+    files total more than ``_LOCAL_MAX_BYTES``, when the tombstones are too
+    many for the driver, or when the read raises OSError (a concurrent
+    overwrite removed a file the snapshot lists). Every cold entry point
+    falls back here, at this one site."""
+    if snap is None or not deletes_small(index):
+        return None
+    shards = (None if table == "postings_doc"
+              else {_shard_of(t, num_shards) for t in term_ids})
+    files = _snapshot_files(snap, index.path, table, shards)
+    if files is None or sum(b for _, b in files) > _LOCAL_MAX_BYTES:
+        return None
+    try:
+        return _read_local([p for p, _ in files], term_ids)
+    except OSError:
+        return None
 
 
 def _decode_map(blocks: DataFrame) -> DataFrame:
@@ -262,6 +375,12 @@ def search(
     verify over the candidates only (see search_phrase_long); without it
     the historical ValueError stands.
 
+    A cold call with a finite ``k`` whose query-term shards total at most
+    ``_LOCAL_MAX_BYTES`` in the pinned snapshot runs no Spark job: it reads
+    those rows with pyarrow and ranks them on the driver, with the
+    groupBy's semantics (per-doc float64 sum, ``n_terms``, AND keeps docs
+    that match every term), and returns a local relation.
+
     ``_table`` is the term layout as a warm engine holds it (QueryEngine):
     the query reads its scan, and when it carries metadata an AND query
     prunes from that copy with no Spark job and no size probe."""
@@ -276,7 +395,21 @@ def search(
     else:
         term_ids = _query_term_ids(query, mode, cfg)
     if not term_ids:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return _empty_result(spark)
+    hits = _search_terms(spark, index, term_ids, mode, k, cfg, _table)
+    return _result_frame(spark, hits) if isinstance(hits, pd.DataFrame) else hits
+
+
+def _search_terms(spark: SparkSession, index: Index, term_ids: list[int],
+                  mode: str, k: int | None, cfg: EngineConfig,
+                  _table: BlockTable | None) -> pd.DataFrame | DataFrame:
+    """``search`` past query parsing: the ranked hits as a pandas frame
+    when the cold query ran on the driver, else the distributed plan."""
+    snap = _head_snapshot(index) if _table is None else None
+    if k is not None:
+        rows = _local_blocks(index, snap, "postings", term_ids, cfg.num_shards)
+        if rows is not None:
+            return _search_local(spark, index, rows, term_ids, mode, k)
     src = _table.scan if _table is not None else index.postings(spark)
     blocks = _term_rows(src, term_ids, cfg.num_shards)
 
@@ -284,20 +417,22 @@ def search(
     if mode == "and" and len(term_ids) > 1:
         if _table is not None and _table.meta is not None:
             meta = _table.meta[_table.meta["term_id"].isin(term_ids)]
-        elif parquet_dir_bytes(index.postings_path) >= _PRUNE_MIN_BYTES:
+        elif _postings_bytes(index, _snapshot_files(
+                snap, index.path, "postings")) >= _PRUNE_MIN_BYTES:
             # metadata-only read (column pruning keeps payloads out of this
             # scan). Two-sided gate: below _PRUNE_MIN_BYTES on disk the
             # per-query metadata round-trip (one Spark job) costs more than
             # decoding the query terms' blocks outright, so the cold path
-            # skips straight to the decode (size probe is a driver-side
-            # stat, no job); past the guard, a pathological query over huge
-            # lists also skips the prune (the decode stays exact either way)
+            # skips straight to the decode (the size comes from the
+            # snapshot's manifest, no job); past the guard, a pathological
+            # query over huge lists also skips the prune (the decode stays
+            # exact either way)
             meta = _guarded_meta(blocks, _PRUNE_COLS)
 
     if meta is not None:
         kept = _prune_and_blocks(meta, term_ids)
         if len(kept) == 0:
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return _empty_result(spark)
         if len(kept) < len(meta):
             blocks = _semi_join_blocks(spark, blocks, kept)
 
@@ -311,6 +446,36 @@ def search(
     agg = agg.withColumn("n_terms", F.col("n_terms").cast("int"))
     live = filter_deleted(spark, index, agg)
     return live if k is None else top_k(live, k)
+
+
+def _postings_bytes(index: Index, files: list[tuple[str, int]] | None) -> int:
+    """The term layout's bytes on disk: the sum over its snapshot ``files``,
+    or a directory walk for an index without a snapshot record."""
+    if files is None:
+        return parquet_dir_bytes(index.postings_path)
+    return sum(b for _, b in files)
+
+
+def _search_local(spark: SparkSession, index: Index, rows: pd.DataFrame,
+                  term_ids: list[int], mode: str, k: int) -> pd.DataFrame:
+    """The cold query over its terms' block rows, on the driver: decode,
+    drop tombstoned postings, then the groupBy's per-doc sum and term count
+    in a fixed order (doc-major, each doc's scores ascending), the AND
+    filter, and the top-k."""
+    if mode == "and" and len(term_ids) > 1:
+        rows = _prune_and_blocks(rows, term_ids)  # an absent term empties it
+    dec = decode_blocks(rows)
+    docs_u, scores = drop_deleted(dec["doc_id"].to_numpy().view(np.uint64),
+                                  dec["score"].to_numpy(np.float64),
+                                  effective_deletes(spark, index))
+    order = np.lexsort((scores, docs_u))
+    docs_u, starts, n_terms = np.unique(docs_u[order], return_index=True,
+                                        return_counts=True)
+    sums = np.add.reduceat(scores[order], starts) if len(starts) else scores
+    if mode == "and":
+        keep = n_terms == len(term_ids)
+        docs_u, sums, n_terms = docs_u[keep], sums[keep], n_terms[keep]
+    return _topk_frame(docs_u, sums, n_terms, k)
 
 
 def search_phrase_long(
@@ -382,7 +547,7 @@ def search_phrase_long(
     # persist across the caller's action
     phrase_df = ph.count()
     if phrase_df == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return _empty_result(spark)
     meta = index.meta()
     n_docs, avg_dl = int(meta["n_docs"]), float(meta["avg_dl"])
     scored = ph.withColumn("df", F.lit(phrase_df)).withColumn(
@@ -447,7 +612,9 @@ def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
     past the metadata guard, and the impact walk (single-term and OR alike)
     sends its mass-deletion, metadata and block-cap guards to one exact
     ``search()`` fallback, so auto only picks the LAYOUT — exactness is
-    invariant. A missing layout raises that engine's actionable
+    invariant. Below ``_LOCAL_MAX_BYTES`` every engine's cold call runs on
+    the driver with no Spark job, so there the choice moves a few ms at
+    most. A missing layout raises that engine's actionable
     FileNotFoundError (how to derive it, which engines serve without it)
     rather than silently degrading.
     """
@@ -464,13 +631,20 @@ def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
 def _collect_topk(spark: SparkSession, index: Index, query: str, mode: str,
                   k: int, cfg: EngineConfig | None,
                   _table: BlockTable | None = None) -> list[tuple[int, float]]:
-    """Exact top-k via the fully distributed path, collected — the shared
+    """Exact top-k through ``search()``'s path, collected — the shared
     fallback every driver-volume guard routes to (same result contract:
-    score desc, unsigned doc asc). ``_table`` carries a warm engine's
-    cached scan so a guard-tripped query still serves from executor memory
-    instead of a cold parquet read."""
-    r = search(spark, index, query, mode=mode, k=k, cfg=cfg, _table=_table)
-    return [(int(row["doc_id"]), float(row["score"])) for row in r.collect()]
+    score desc, unsigned doc asc). A cold query below the local guard
+    returns the driver-ranked pairs without building a DataFrame.
+    ``_table`` carries a warm engine's cached scan so a guard-tripped query
+    still serves from executor memory instead of a cold parquet read."""
+    cfg = cfg or index.config()
+    term_ids = _query_term_ids(query, mode, cfg)
+    if not term_ids:
+        return []
+    hits = _search_terms(spark, index, term_ids, mode, k, cfg, _table)
+    if isinstance(hits, pd.DataFrame):
+        return list(zip(hits["doc_id"].tolist(), hits["score"].tolist()))
+    return [(int(row["doc_id"]), float(row["score"])) for row in hits.collect()]
 
 
 def cache_coalesce(df: DataFrame, table_dir: str) -> DataFrame:
@@ -652,7 +826,11 @@ class LocalIndex:
 
     def __init__(self, spark: SparkSession, index: Index, cfg: EngineConfig | None = None):
         self.cfg = cfg or index.config()
-        total = parquet_dir_bytes(index.postings_path)
+        # the HEAD snapshot's manifest sizes and lists the files, and pyarrow
+        # loads them (no Spark job); an index without a snapshot record, or
+        # a file removed since HEAD was read, takes the Spark read instead
+        files = _snapshot_files(_head_snapshot(index), index.path, "postings")
+        total = _postings_bytes(index, files)
         if total > self.MAX_PIN_BYTES:
             raise ValueError(
                 f"postings are {total >> 20} MiB on disk — too large to pin "
@@ -661,10 +839,14 @@ class LocalIndex:
                 f"instead."
             )
         self.deleted = effective_deletes(spark, index)
-        pdf = index.postings(spark).select(
-            "term_id", "salt", "block_id", "n", "min_doc", "max_doc",
-            "max_score", "doc_deltas", "scores",
-        ).toPandas()
+        pdf = None
+        if files is not None:
+            try:
+                pdf = _read_local([p for p, _ in files], None)
+            except OSError:
+                pass
+        if pdf is None:
+            pdf = index.postings(spark).select(*_LOCAL_COLS).toPandas()
         self.terms = _term_map(pdf)
 
     def search(self, query: str, mode: str = "and", k: int = 10) -> list[tuple[int, float]]:

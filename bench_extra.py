@@ -8,7 +8,7 @@ optimization work comes from here and is cited in OPTIMIZATION_r07.md.
 Usage:
   python bench_extra.py buildprof <cores> <corpus.parquet|testdata dir>
   python bench_extra.py gencorpus <n_docs> <out.parquet>
-  python bench_extra.py latency <sf_dir>
+  python bench_extra.py latency <sf_dir> [num_shards]
   python bench_extra.py plans <sf_dir> <out_dir>
   python bench_extra.py suitetimes <sf_dir>
 """
@@ -105,18 +105,32 @@ def buildprof(cores: int, sf_dir: str) -> None:
     print(json.dumps(out))
 
 
-def latency(sf_dir: str, reps: int = 5) -> None:
+def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
     """Warm-engine per-query latency (median of reps) for each engine, plus
-    job-count accounting per query (statusTracker job ids)."""
+    job-count accounting per query (statusTracker job ids). The cold legs
+    run each of the five cold entry points with the driver-local guard at
+    its default and at 0 (the distributed side), and report the bytes of
+    the files each query's local read would take per table: fewer shards
+    put the term-layout shards past the guard."""
     from alexandria_spark.config import EngineConfig
+    from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.build import Index, build_index
-    from alexandria_spark.plans.docpart import DocPartEngine, build_docpart_index
-    from alexandria_spark.plans.impact import ImpactEngine, build_impact_postings
-    from alexandria_spark.plans.query import QueryEngine
+    from alexandria_spark.plans.docpart import (
+        DocPartEngine,
+        build_docpart_index,
+        search_docpart,
+    )
+    from alexandria_spark.plans.impact import (
+        ImpactEngine,
+        build_impact_postings,
+        impact_or_topk,
+        impact_single_topk,
+    )
+    from alexandria_spark.plans.query import QueryEngine, search, search_bmw
     from alexandria_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    cfg = EngineConfig(num_shards=64, shuffle_partitions=32, build_waves=2,
+    cfg = EngineConfig(num_shards=num_shards, shuffle_partitions=32, build_waves=2,
                        block_size=4096, max_postings_per_salt=65536, keep_tf=False)
     spark = get_spark(app="lat", cores=cpus, shuffle_partitions=max(32, cpus),
                       extra={"spark.scheduler.mode": "FAIR"})
@@ -159,6 +173,39 @@ def latency(sf_dir: str, reps: int = 5) -> None:
         return res
 
     out = {}
+
+    def local_bytes(index, table, q):
+        tids = qmod._query_term_ids(q, "or", cfg)
+        shards = (None if table == "postings_doc" else
+                  {qmod._shard_of(t, cfg.num_shards) for t in tids})
+        files = qmod._snapshot_files(qmod._head_snapshot(index), index.path,
+                                     table, shards)
+        return sum(b for _, b in files or [])
+
+    out["local_guard_bytes"] = qmod._LOCAL_MAX_BYTES
+    out["local_bytes"] = {
+        name: {"postings": local_bytes(idx, "postings", q),
+               "postings_impact": local_bytes(idx, "postings_impact", q),
+               "postings_doc": local_bytes(dp, "postings_doc", q)}
+        for name, q, _ in QUERIES
+    }
+    ors = [x for x in QUERIES if x[2] == "or"]
+    cold = {
+        "search": (lambda q, m: search(spark, idx, q, m, 10, cfg).collect(), QUERIES),
+        "search_bmw": (lambda q, m: search_bmw(spark, idx, q, m, 10, cfg), QUERIES),
+        "search_docpart": (lambda q, m: search_docpart(spark, dp, q, m, 10, cfg).collect(),
+                           QUERIES),
+        "impact_or": (lambda q, m: impact_or_topk(spark, idx, q, 10, cfg), ors),
+        "impact_single": (lambda q, m: impact_single_topk(spark, idx, q, 10, cfg),
+                          [x for x in ors if len(x[1].split()) == 1]),
+    }
+    default_guard = qmod._LOCAL_MAX_BYTES
+    for side, guard in (("local", default_guard), ("distributed", 0)):
+        qmod._LOCAL_MAX_BYTES = guard
+        for entry, (serve, queries) in cold.items():
+            out[f"{entry}_cold_{side}"] = run(entry, serve, queries)
+    qmod._LOCAL_MAX_BYTES = default_guard
+
     qe = QueryEngine(spark, idx, cfg)
     out["dist_warm"] = run("dist", lambda q, m: qe.search(q, m, 10).collect(), QUERIES[:5])
     dpe = DocPartEngine(spark, dp, cfg)
@@ -348,7 +395,7 @@ if __name__ == "__main__":
     elif mode == "gencorpus":
         gencorpus(int(sys.argv[2]), sys.argv[3])
     elif mode == "latency":
-        latency(sys.argv[2])
+        latency(sys.argv[2], num_shards=int(sys.argv[3]) if len(sys.argv) > 3 else 64)
     elif mode == "conc":
         concurrency(sys.argv[2])
     elif mode == "suitetimes":

@@ -288,6 +288,9 @@ def test_reingested_doc_escapes_through_the_fast_path(spark, tmp_path, monkeypat
 
 
 def test_mass_deletion_gate_both_sides(spark, tmp_path, monkeypatch):
+    """Both sides of the mass-deletion gate serve the same tombstone-free
+    answers, on the driver-local side of the local guard (the default) and
+    on its distributed side (guard 0)."""
     idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
     delete_docs(spark, idx, victims)
 
@@ -302,22 +305,25 @@ def test_mass_deletion_gate_both_sides(spark, tmp_path, monkeypatch):
         return "LeftAnti" in df._jdf.queryExecution().optimizedPlan().toString()
 
     probe = spark.createDataFrame([(int(v),) for v in victims], "doc_id long")
-    assert deletes_small(idx)
-    small = _served(spark, idx)
-    assert impact_fallback() is None
-    assert not joins(filter_deleted(spark, idx, probe))  # a literal list
-    with monkeypatch.context() as m:  # past the literal-list size
-        m.setattr(delete_mod, "_INLINE_DELETES_MAX", 1)
-        assert joins(filter_deleted(spark, idx, probe))
-        assert filter_deleted(spark, idx, probe).count() == 0
-        assert _served(spark, idx) == small
+    for local_max in (query_mod._LOCAL_MAX_BYTES, 0):
+        with monkeypatch.context() as guard:
+            guard.setattr(query_mod, "_LOCAL_MAX_BYTES", local_max)
+            assert deletes_small(idx)
+            small = _served(spark, idx)
+            assert impact_fallback() is None
+            assert not joins(filter_deleted(spark, idx, probe))  # a literal list
+            with monkeypatch.context() as m:  # past the literal-list size
+                m.setattr(delete_mod, "_INLINE_DELETES_MAX", 1)
+                assert joins(filter_deleted(spark, idx, probe))
+                assert filter_deleted(spark, idx, probe).count() == 0
+                assert _served(spark, idx) == small
 
-    monkeypatch.setattr(delete_mod, "_BROADCAST_DELETES_MAX_BYTES", 1)
-    assert not deletes_small(idx)
-    assert _served(spark, idx) == small
-    assert impact_fallback() == "distributed"
-    assert joins(filter_deleted(spark, idx, probe))
-    assert filter_deleted(spark, idx, probe).count() == 0
+            guard.setattr(delete_mod, "_BROADCAST_DELETES_MAX_BYTES", 1)
+            assert not deletes_small(idx)
+            assert _served(spark, idx) == small
+            assert impact_fallback() == "distributed"
+            assert joins(filter_deleted(spark, idx, probe))
+            assert filter_deleted(spark, idx, probe).count() == 0
 
 
 def test_block_frames_and_resolved_set_launch_no_jobs(spark, tmp_path):
@@ -334,7 +340,8 @@ def test_block_frames_and_resolved_set_launch_no_jobs(spark, tmp_path):
     assert _jobs(spark, frames) == 0
 
 
-def test_cold_search_jobs_unchanged_by_tombstones(spark, tmp_path):
+def test_cold_search_jobs_unchanged_by_tombstones(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(query_mod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
     dpi = DocPartitionedIndex(idx.path)
     engines = {
@@ -371,6 +378,7 @@ def test_warm_query_engine_plans_without_jobs_or_walks(spark, tmp_path,
     delete_docs(spark, idx, victims)
     qe = QueryEngine(spark, idx, CFG, cache=False)
     assert qe.meta is not None
+    monkeypatch.setattr(query_mod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     monkeypatch.setattr(query_mod, "_PRUNE_MIN_BYTES", 0)
     queries = [("def return", "and"), ("def return", "or")]
     exp = {(q, mode): {r.doc_id for r in search(

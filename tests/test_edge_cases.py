@@ -59,14 +59,17 @@ def test_punct_only_and_single_doc(spark, tmp_path):
     assert [r.doc_id for r in res] == [2]
 
 
-def test_tie_heavy_corpus_every_engine(spark, tmp_path):
+def test_tie_heavy_corpus_every_engine(spark, tmp_path, monkeypatch):
     """Adversarial tie regime: many byte-identical docs (equal scores at
     every rank boundary — the unsigned-doc-id tiebreak decides everything),
     a term present in EVERY doc, singleton rare terms, and a one-token doc.
     Early-termination engines (LocalIndex quit/continue, bmw bucket bounds,
     impact-order stop rules) must stay EXACTLY rank-identical to brute
     force here — tie boundaries are where a '>' vs '>=' in a bound silently
-    drops the right doc. Re-checked after deleting tied docs."""
+    drops the right doc. Re-checked after deleting tied docs. The cold
+    entry points run on both sides of the local guard: driver-local (the
+    default) and distributed (guard 0)."""
+    from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.delete import delete_docs
     from alexandria_spark.plans.docpart import (
         DocPartitionedIndex,
@@ -100,6 +103,12 @@ def test_tie_heavy_corpus_every_engine(spark, tmp_path):
                ("rare_one rare_two", "or"), ("common alpha gamma", "or")]
 
     def check(tag):
+        for local_max in (qmod._LOCAL_MAX_BYTES, 0):
+            with monkeypatch.context() as m:
+                m.setattr(qmod, "_LOCAL_MAX_BYTES", local_max)
+                check_side((tag, local_max))
+
+    def check_side(tag):
         local = LocalIndex(spark, idx, CFG)
         for q, mode in queries:
             for k in (1, 3, 10, 50):

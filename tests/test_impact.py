@@ -52,22 +52,30 @@ def test_impact_block_zero_is_strongest(spark, idx):
         assert (ms[0] >= ms[1:]).all() if len(ms) > 1 else True
 
 
-def test_impact_single_topk_exact_and_early(spark, idx):
-    local = LocalIndex(spark, idx, CFG)
-    total_reads = []
-    for term in ["def", "return", "merge", "the"]:
-        stats = {}
-        got = impact_single_topk(spark, idx, term, k=5, cfg=CFG, _stats=stats)
-        exp = local.search(term, "or", 5)
-        assert [(d, round(s, 6)) for d, s in got] == [
-            (d, round(s, 6)) for d, s in exp
-        ], term
-        if stats.get("blocks_total", 0) > 2:
-            total_reads.append((stats["blocks_read"], stats["blocks_total"]))
-    # early termination: at least one multi-block term stopped early
-    assert any(r < t for r, t in total_reads), total_reads
+def test_impact_single_topk_exact_and_early(spark, idx, monkeypatch):
+    """Exact on both sides of the local guard; the walk (the distributed
+    side, guard 0) stops early on some multi-block term."""
+    from alexandria_spark.plans import query as qmod
 
-    assert impact_single_topk(spark, idx, "zzz_absent", k=5, cfg=CFG) == []
+    local = LocalIndex(spark, idx, CFG)
+    for local_max in (qmod._LOCAL_MAX_BYTES, 0):
+        monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", local_max)
+        total_reads = []
+        for term in ["def", "return", "merge", "the"]:
+            stats = {}
+            got = impact_single_topk(spark, idx, term, k=5, cfg=CFG,
+                                     _stats=stats)
+            exp = local.search(term, "or", 5)
+            assert [(d, round(s, 6)) for d, s in got] == [
+                (d, round(s, 6)) for d, s in exp
+            ], (term, local_max)
+            if stats.get("blocks_total", 0) > 2:
+                total_reads.append((stats["blocks_read"], stats["blocks_total"]))
+        if local_max == 0:
+            # early termination: at least one multi-block term stopped early
+            assert any(r < t for r, t in total_reads), total_reads
+
+        assert impact_single_topk(spark, idx, "zzz_absent", k=5, cfg=CFG) == []
 
 
 def test_impact_payload_fetch_is_lazy(spark, idx, monkeypatch):
@@ -77,8 +85,10 @@ def test_impact_payload_fetch_is_lazy(spark, idx, monkeypatch):
     k-prefix), and for an early-terminated multi-block term it must stay
     well under the full list."""
     from alexandria_spark.plans import impact as imod
+    from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.impact import impact_single_topk as topk
 
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     monkeypatch.setattr(imod, "_SEED_ALL_MAX_BLOCKS", 0)
     hit = False
     for term in ["def", "return", "the", "merge"]:
@@ -100,7 +110,9 @@ def test_prefetch_seed_all_both_sides(spark, idx, monkeypatch):
     doubling batches. Single-term and OR queries alike, with the same
     answers either way."""
     from alexandria_spark.plans import impact as imod
+    from alexandria_spark.plans import query as qmod
 
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     queries = [("def", impact_single_topk), ("return", impact_single_topk),
                ("def return", impact_or_topk), ("return merge", impact_or_topk)]
     seeded = {}
@@ -128,8 +140,10 @@ def test_cold_query_reads_one_snapshot(spark, idx, monkeypatch):
     impact read and its phase-2 doc-sorted read must not move the second
     read onto the new snapshot."""
     from alexandria_spark.plans import impact as imod
+    from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans import snapshots
 
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     monkeypatch.setattr(imod, "_SEED_ALL_MAX_BLOCKS", 0)  # phase 2 runs
     real = snapshots.read_table
     reads = []
@@ -151,36 +165,44 @@ def test_cold_query_reads_one_snapshot(spark, idx, monkeypatch):
     assert got == impact_or_topk(spark, idx, "def return", k=3, cfg=CFG)
 
 
-def test_impact_or_topk_rank_identical(spark, idx):
+def test_impact_or_topk_rank_identical(spark, idx, monkeypatch):
     """Multi-term OR over the impact layout must rank-match the doc-sorted
-    WAND path exactly, while reading fewer impact blocks than the total."""
+    WAND path exactly — on the driver-local side of the local guard and on
+    its distributed side (guard 0), where the walk reads fewer impact
+    blocks than the total."""
+    from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.impact import impact_or_topk
 
     local = LocalIndex(spark, idx, CFG)
-    stopped_early = False
-    for q in ["def return", "the merge", "def the return"]:
-        stats = {}
-        got = impact_or_topk(spark, idx, q, k=5, cfg=CFG, _stats=stats)
-        exp = local.search(q, "or", 5)
-        assert [(d, round(s, 6)) for d, s in got] == [
-            (d, round(s, 6)) for d, s in exp
-        ], q
-        if stats["blocks_read"] < stats["blocks_total"]:
-            stopped_early = True
-    assert stopped_early
+    for local_max in (qmod._LOCAL_MAX_BYTES, 0):
+        monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", local_max)
+        stopped_early = False
+        for q in ["def return", "the merge", "def the return"]:
+            stats = {}
+            got = impact_or_topk(spark, idx, q, k=5, cfg=CFG, _stats=stats)
+            exp = local.search(q, "or", 5)
+            assert [(d, round(s, 6)) for d, s in got] == [
+                (d, round(s, 6)) for d, s in exp
+            ], (q, local_max)
+            assert (stats["fetch_jobs"] == 0) == (local_max > 0), stats
+            if stats["blocks_read"] < stats["blocks_total"]:
+                stopped_early = True
+        assert stopped_early == (local_max == 0)  # a local call walks nothing
 
-    # single-term delegation + absent terms
-    assert impact_or_topk(spark, idx, "zzz_absent", k=5, cfg=CFG) == []
-    s1 = impact_or_topk(spark, idx, "def", k=5, cfg=CFG)
-    assert s1 == impact_single_topk(spark, idx, "def", k=5, cfg=CFG)
+        # single-term delegation + absent terms
+        assert impact_or_topk(spark, idx, "zzz_absent", k=5, cfg=CFG) == []
+        s1 = impact_or_topk(spark, idx, "def", k=5, cfg=CFG)
+        assert s1 == impact_single_topk(spark, idx, "def", k=5, cfg=CFG)
 
 
-def test_impact_engine_warm_equals_cold(spark, idx):
+def test_impact_engine_warm_equals_cold(spark, idx, monkeypatch):
     """ImpactEngine (pinned scans) must reproduce the cold paths exactly —
     same hits, same early-termination accounting — and its per-query block
     reads must come from the in-memory cache, not parquet."""
+    from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.impact import ImpactEngine, impact_or_topk
 
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the cold walk
     eng = ImpactEngine(spark, idx, CFG)
     try:
         cold_s, warm_s = {}, {}
@@ -312,9 +334,12 @@ def test_phase1_walk_cap_falls_back_exact(spark, idx, monkeypatch):
     distributed fallback with identical ranks — never stream unbounded
     payloads through the driver."""
     from alexandria_spark.plans import impact as imod
+    from alexandria_spark.plans import query as qmod
 
     base_s = impact_single_topk(spark, idx, "def", k=10, cfg=CFG)
     base_o = impact_or_topk(spark, idx, "def return", k=10, cfg=CFG)
+    # the cap bounds payload fetches: only the distributed side has one
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)
     monkeypatch.setattr(imod, "_P1_MAX_DRIVER_BLOCKS", 1)
     got_s = impact_single_topk(spark, idx, "def", k=10, cfg=CFG)
     got_o = impact_or_topk(spark, idx, "def return", k=10, cfg=CFG)
@@ -331,7 +356,10 @@ def test_phase1_cap_boundary_keeps_terminated_walk(spark, idx, monkeypatch):
     (the stop test runs before the cap check — regression for the original
     cap-first ordering)."""
     from alexandria_spark.plans import impact as imod
+    from alexandria_spark.plans import query as qmod
 
+    # the cap bounds payload fetches: only the distributed side has one
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)
     # single-term: pick a term that genuinely terminates early
     for term in ["def", "return", "merge", "the"]:
         stats = {}

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from alexandria_spark.config import EngineConfig
+from alexandria_spark.plans import query as qmod
 from alexandria_spark.plans.build import Index, build_index, with_doc_ids
 from alexandria_spark.plans.delete import compact, delete_docs
 from alexandria_spark.plans.docpart import DocPartEngine, DocPartitionedIndex, rebuild_docpart_from_postings
@@ -46,8 +47,9 @@ def _rank_equiv(got, exp, tag):
 
 
 def _all_engine_results(spark, idx_path, k=10):
-    """The same queries through every engine; assert cross-engine rank
-    identity (tie-aware) and return the distributed path's answers."""
+    """The same queries through every engine, the cold ones on both sides
+    of the local guard; assert cross-engine rank identity (tie-aware) and
+    return the cold search()'s answers."""
     idx = Index(idx_path)
     out = {}
     local = LocalIndex(spark, idx, CFG)
@@ -59,6 +61,15 @@ def _all_engine_results(spark, idx_path, k=10):
                     search(spark, idx, q, mode, k=k, cfg=CFG).collect()]
             _rank_equiv(search_bmw(spark, idx, q, mode, k, CFG), dist,
                         (q, mode, "bmw"))
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # distributed side
+                spark_dist = [(r.doc_id, float(r.score)) for r in search(
+                    spark, idx, q, mode, k=k, cfg=CFG).collect()]
+                spark_bmw = search_bmw(spark, idx, q, mode, k, CFG)
+            for tag, got in (("dist@0", spark_dist), ("bmw@0", spark_bmw)):
+                _rank_equiv(got, dist, (q, mode, tag))
+                for (_, gs), (_, es) in zip(got, dist):
+                    assert abs(gs - es) <= 1e-9 * max(1.0, abs(es)), (q, tag)
             _rank_equiv(local.search(q, mode, k), dist, (q, mode, "local"))
             _rank_equiv([(r.doc_id, float(r.score)) for r in
                          dpe.search(q, mode, k).collect()], dist,
@@ -174,6 +185,10 @@ def _engine_hits(spark, idx_path, q, k=10):
     idx = Index(idx_path)
     out = {"dist": _hits(spark, idx_path, q)}
     out["bmw"] = [d for d, _ in search_bmw(spark, idx, q, "or", k, CFG)]
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
+        out["dist@0"] = _hits(spark, idx_path, q)
+        out["bmw@0"] = [d for d, _ in search_bmw(spark, idx, q, "or", k, CFG)]
     out["local"] = [d for d, _ in LocalIndex(spark, idx, CFG).search(q, "or", k)]
     dpe = DocPartEngine(spark, DocPartitionedIndex(idx_path), CFG)
     ie = ImpactEngine(spark, idx, CFG)

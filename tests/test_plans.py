@@ -49,6 +49,7 @@ def test_cold_prune_gate_small_index(spark, idx, monkeypatch):
     plan) and still return exactly what the pruned path returns."""
     import alexandria_spark.plans.query as qmod
 
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     q = "def return"
     gated = search(spark, idx, q, mode="and", k=10)
     # the tiny fixture index sits far under the 64 MiB gate: no semi join
@@ -60,7 +61,10 @@ def test_cold_prune_gate_small_index(spark, idx, monkeypatch):
            [tuple(r) for r in pruned.collect()]
 
 
-def test_topk_is_take_ordered(spark, idx):
+def test_topk_is_take_ordered(spark, idx, monkeypatch):
+    import alexandria_spark.plans.query as qmod
+
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     q = search(spark, idx, "def return", mode="or", k=10)
     assert "TakeOrderedAndProject" in _plan(q)
 

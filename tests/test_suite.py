@@ -55,6 +55,26 @@ ENTRY_NAMES = sorted(suite.ENTRIES)
 
 @pytest.mark.parametrize("name", ENTRY_NAMES)
 def test_entry_matches_oracle(spark, duck, name):
+    _check_entry(spark, duck, name)
+
+
+# the entries that serve through a cold entry point with a finite k: by
+# default they run on the driver (plans/query.py::_LOCAL_MAX_BYTES), so
+# they are also gated on the distributed side of that guard
+COLD_SERVING = ["engines_search_topk", "index_search_or_topk",
+                "index_search_topk", "merge_search_topk"]
+
+
+@pytest.mark.parametrize("name", COLD_SERVING)
+def test_cold_serving_entry_matches_oracle_distributed(spark, duck, name,
+                                                       monkeypatch):
+    from alexandria_spark.plans import query as qmod
+
+    monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)
+    _check_entry(spark, duck, name)
+
+
+def _check_entry(spark, duck, name):
     fn, sql = suite.ENTRIES[name]
     got = _normalize(fn(spark, SF).toPandas())
     exp = _normalize(duck.sql(sql).df())

@@ -120,13 +120,14 @@ def test_wand_or_topk_matches_brute_force(postings, block_size, n_salts, k):
     assert _ranked(got_d, got_s, k) == _ranked(exp_d, exp_s, k)
 
 
-def test_bmw_serves_doc_at_u64_max_boundary(spark, tmp_path):
+def test_bmw_serves_doc_at_u64_max_boundary(spark, tmp_path, monkeypatch):
     """End-to-end regression for the hypothesis finding: a doc whose id sits
     in the top float64-unrepresentable u64 range (int64 -1 ==
     0xFFFFFFFFFFFFFFFF) used to land past every doc-range bucket, making it
     unreachable to search_bmw's feasibility mask — a silently dropped AND
     result. All engines must return it."""
     from alexandria_spark.config import EngineConfig
+    from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.build import Index, build_index
     from alexandria_spark.plans.query import LocalIndex, search, search_bmw
 
@@ -138,11 +139,14 @@ def test_bmw_serves_doc_at_u64_max_boundary(spark, tmp_path):
         ["doc_id", "text"],
     )
     idx = build_index(spark, docs, str(tmp_path / "idx"), cfg)
-    dist = [(r.doc_id, float(r.score)) for r in
-            search(spark, idx, "alpha beta", "and", k=10, cfg=cfg).collect()]
-    got = {d for d, _ in dist}
-    assert {-1, 5, 2**62} <= got
-    bmw = search_bmw(spark, idx, "alpha beta", "and", 10, cfg)
-    assert [d for d, _ in bmw] == [d for d, _ in dist]
     local = LocalIndex(spark, idx, cfg).search("alpha beta", "and", 10)
-    assert [d for d, _ in local] == [d for d, _ in dist]
+    # the driver-local side of the local guard, then the distributed side
+    for local_max in (qmod._LOCAL_MAX_BYTES, 0):
+        monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", local_max)
+        dist = [(r.doc_id, float(r.score)) for r in
+                search(spark, idx, "alpha beta", "and", k=10, cfg=cfg).collect()]
+        got = {d for d, _ in dist}
+        assert {-1, 5, 2**62} <= got
+        bmw = search_bmw(spark, idx, "alpha beta", "and", 10, cfg)
+        assert [d for d, _ in bmw] == [d for d, _ in dist]
+        assert [d for d, _ in local] == [d for d, _ in dist]
