@@ -242,8 +242,8 @@ def deletes_small(index: Index) -> bool:
 def drop_deleted(docs_u: np.ndarray, scores: np.ndarray,
                  deleted_u: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Drop the sorted unsigned ``deleted_u`` from unsigned doc ids and
-    their scores — the driver-side tombstone filter of the impact walks
-    and LocalIndex."""
+    their scores — the tombstone filter of the impact walk and of the WAND
+    kernels' decode."""
     if len(deleted_u) == 0 or len(docs_u) == 0:
         return docs_u, scores
     pos = np.minimum(np.searchsorted(deleted_u, docs_u), len(deleted_u) - 1)

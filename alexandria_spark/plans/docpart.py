@@ -18,8 +18,9 @@ shuffles standalone; ONE when derived from a co-built term index
 (rebuild_docpart_from_postings).
 
 Query: scan pruned to the query terms (row-group stats on term_id inside
-each bucket dir), groupBy(bucket).applyInPandas(per-bucket WAND kernel),
-global TakeOrdered merge.
+each bucket dir), groupBy(bucket).applyInPandas(the shared WAND kernel,
+tombstones inside), global TakeOrdered merge; below the local guard, one
+kernel pass on the driver over every bucket's rows.
 """
 
 from __future__ import annotations
@@ -45,18 +46,18 @@ from alexandria_spark.plans.build import (
     tokenize_docs,
 )
 from alexandria_spark.plans.checkpoint import parquet_dir_bytes
-from alexandria_spark.plans.delete import drop_deleted, effective_deletes, filter_deleted
+from alexandria_spark.plans.delete import deletes_small, effective_deletes
 from alexandria_spark.plans.query import (
     RESULT_SCHEMA,
     _empty_result,
     _head_snapshot,
     _local_blocks,
     _query_term_ids,
+    _rank_distributed,
     _result_frame,
     _term_map,
     _topk_frame,
-    _wand_and,
-    _wand_or,
+    _wand,
     top_k,
 )
 
@@ -252,14 +253,19 @@ def search_docpart(
     _blocks: DataFrame | None = None,
 ) -> DataFrame:
     """One-job distributed WAND: per-bucket exact top-k on executors via the
-    shared kernel, global TakeOrdered merge. Returns (doc_id, score, n_terms).
+    shared kernel, global TakeOrdered merge. Returns (doc_id, score, n_terms),
+    n_terms being the query's term count for AND and 0 for OR.
+
+    The kernel takes the resolved tombstone set (closure state) and drops
+    tombstoned postings before any cutoff, so a bucket's top k are live
+    docs. Past the mass-deletion gate the set is not shipped: the query
+    runs ``search()``'s distributed ranking over the same block rows.
 
     A cold call with a finite ``k`` runs no Spark job while the whole
     ``postings_doc`` table (every bucket holds every term) is at most
     ``_LOCAL_MAX_BYTES`` in the pinned snapshot: the query terms' rows are
-    read with pyarrow and the same per-bucket kernel runs on the driver, one
-    bucket at a time, keeping k plus the tombstone count per bucket so the
-    tombstone drop cannot starve the global top-k.
+    read with pyarrow and the same kernel runs on the driver, in one pass
+    over every bucket's rows.
 
     ``k=None`` returns EVERY match unranked (AND mode only — the OR kernel's
     quit/continue needs a finite k): the candidate feed for a serve pipeline
@@ -273,40 +279,30 @@ def search_docpart(
     kernel_mode = "and" if mode == "and" else "or"
     if k is None and kernel_mode == "or":
         raise ValueError("k=None (full candidate set) requires mode='and'")
-    # AND results match every term by construction; the OR kernel does not
-    # track per-doc match counts
     n_terms = len(term_ids) if kernel_mode == "and" else 0
 
-    def per_bucket(pdf: pd.DataFrame, top: int | None) -> pd.DataFrame:
-        terms = _term_map(pdf)
-        if kernel_mode == "and":
-            docs_u, scores = _wand_and(terms, term_ids)
-        else:
-            docs_u, scores = _wand_or(terms, term_ids, top)
-        return _topk_frame(docs_u, scores, n_terms, top)  # per-bucket top-k
+    def kernel(pdf: pd.DataFrame, deleted: np.ndarray) -> pd.DataFrame:
+        docs_u, scores, _ = _wand(_term_map(pdf), term_ids, kernel_mode, k,
+                                  deleted)
+        return _topk_frame(docs_u, scores, n_terms, k)
 
     if _blocks is None and k is not None:
+        # salt is the doc bucket (_scored_to_docpart_blocks): one kernel
+        # pass over all buckets' rows ranks the whole table
         rows = _local_blocks(index, _head_snapshot(index), "postings_doc",
                              term_ids, cfg.num_shards)
         if rows is not None:
-            deleted = effective_deletes(spark, index)
-            # salt is the doc bucket (_scored_to_docpart_blocks)
-            per = [per_bucket(g, k + len(deleted))
-                   for _, g in rows.groupby("salt", sort=False)]
-            if not per:
-                return _empty_result(spark)
-            hits = pd.concat(per, ignore_index=True)
-            docs_u, scores = drop_deleted(
-                hits["doc_id"].to_numpy().view(np.uint64),
-                hits["score"].to_numpy(), deleted)
-            return _result_frame(spark, _topk_frame(docs_u, scores, n_terms, k))
+            return _result_frame(spark, kernel(rows, effective_deletes(spark, index)))
 
     source = _blocks if _blocks is not None else index.postings(spark)
     blocks = source.where(F.col("term_id").isin(term_ids))
+    if not deletes_small(index):
+        return _rank_distributed(spark, index, blocks, len(term_ids),
+                                 kernel_mode, k).withColumn("n_terms", F.lit(n_terms))
+    deleted = effective_deletes(spark, index)
     per = blocks.groupBy("bucket").applyInPandas(
-        lambda pdf: per_bucket(pdf, k), RESULT_SCHEMA)
-    live = filter_deleted(spark, index, per)
-    return live if k is None else top_k(live, k)
+        lambda pdf: kernel(pdf, deleted), RESULT_SCHEMA)
+    return per if k is None else top_k(per, k)
 
 
 class DocPartEngine:

@@ -58,7 +58,7 @@ from alexandria_spark.plans.query import (
     _local_blocks,
     _pin_table,
     _query_term_ids,
-    _search_local,
+    _rank_local,
     _semi_join_blocks,
     _shard_of,
     _term_rows,
@@ -418,9 +418,9 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
 
     A cold query whose terms' impact shards total at most
     ``_LOCAL_MAX_BYTES`` in the pinned snapshot runs no walk and no Spark
-    job: its terms' impact rows are read with pyarrow and served by
-    ``search()``'s driver-local OR (the impact layout decodes to the same
-    postings as the doc-sorted one), with ``_stats`` all zeros.
+    job: its terms' impact rows are read with pyarrow and ranked by one OR
+    pass of the shared WAND kernel, tombstones inside (``_rank_local``; the
+    kernel reads any block order), with ``_stats`` all zeros.
 
     The mass-deletion gate, the metadata guard and the _P1_MAX_DRIVER_BLOCKS
     cap all concede to one exact distributed fallback.
@@ -456,7 +456,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
                               cfg.num_shards)
         if local is not None:  # every block is on the driver: no walk
             zero_stats()
-            hits = _search_local(spark, index, local, term_ids, "or", k)
+            hits = _rank_local(spark, index, local, term_ids, "or", k)
             return list(zip(hits["doc_id"].tolist(), hits["score"].tolist()))
         # pin meta scan + payload fetches to one snapshot
         _impact = BlockTable(

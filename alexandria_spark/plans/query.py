@@ -15,26 +15,30 @@ Two execution paths over the same block tables:
   finite ``k``) whose files in the pinned snapshot total at most
   ``_LOCAL_MAX_BYTES`` is answered on the driver with no Spark job: HEAD is
   read once, the snapshot's manifest names the files and their sizes (no
-  directory walk), pyarrow reads only the query terms' rows, and the same
-  decode, tombstone drop and top-k serve them (``_local_blocks``). Every
-  cold entry point (``search``, ``search_bmw``, ``search_docpart``,
+  directory walk), pyarrow reads only the query terms' rows
+  (``_local_blocks``), and one pass of the WAND kernel below ranks them.
+  Every cold entry point (``search``, ``search_bmw``, ``search_docpart``,
   ``impact_or_topk``, ``impact_single_topk``) takes it; an ``OSError``
   from the read (a concurrent overwrite removed a listed file) sends the
   query distributed instead.
 
 * ``LocalIndex`` — the low-latency serving path (the analogue of the
-  reference's RAM-cached readers, index_reader.cpp:59-89): block metadata is
-  pinned in memory, and queries run a vectorized term-at-a-time
-  quit/continue evaluation (the max_score family of Turtle & Flood, "Query
-  evaluation: strategies and optimizations", 1995) with per-block max-score
-  skipping in the spirit of Block-Max WAND (Ding & Suel, "Faster top-k
-  document retrieval using block-max indexes", SIGIR 2011) — only blocks
-  that can still affect the top-k are decoded. This upgrades the reference's
-  section-at-a-time early exit (search_engine.h:298-352).
+  reference's RAM-cached readers, index_reader.cpp:59-89): the whole
+  term layout's blocks are pinned in driver memory, and each query is one
+  pass of the same kernel.
+
+The WAND kernel (``_wand``) is the one driver-side ranking: vectorized
+term-at-a-time quit/continue (the max_score family of Turtle & Flood,
+"Query evaluation: strategies and optimizations", 1995) with per-block
+max-score skipping in the spirit of Block-Max WAND (Ding & Suel, SIGIR
+2011), upgrading the reference's section-at-a-time early exit
+(search_engine.h:298-352). It drops tombstoned postings as it decodes,
+before any cutoff, and counts each doc's matched terms (``n_terms``).
 
 These paths and the impact layout's (plans/impact.py) plan through the
 same few helpers below: ``_local_blocks`` (the cold driver-local read),
-``_term_rows`` (the query terms' scan),
+``_rank_local`` (a kernel pass over those rows), ``_term_rows`` (the
+query terms' scan), ``_rank_distributed`` (the decode + groupBy ranking),
 ``_guarded_meta`` (a driver-side metadata fetch, None past
 ``_META_GUARD_ROWS``), ``_pin_table`` (a warm engine's cached scan plus its
 guarded metadata, as one ``BlockTable``), ``_semi_join_blocks`` (read only
@@ -278,14 +282,6 @@ def _local_blocks(index: Index, snap: dict | None, table: str,
         return None
 
 
-def _decode_map(blocks: DataFrame) -> DataFrame:
-    def fn(batches):
-        for pdf in batches:
-            yield decode_blocks(pdf)[["term_id", "doc_id", "score"]]
-
-    return blocks.mapInPandas(fn, POSTING_SCHEMA)
-
-
 def _prune_and_blocks(meta: pd.DataFrame, term_ids: list[int]) -> pd.DataFrame:
     """Driver-side conjunctive block pruning on metadata only.
 
@@ -377,9 +373,10 @@ def search(
 
     A cold call with a finite ``k`` whose query-term shards total at most
     ``_LOCAL_MAX_BYTES`` in the pinned snapshot runs no Spark job: it reads
-    those rows with pyarrow and ranks them on the driver, with the
-    groupBy's semantics (per-doc float64 sum, ``n_terms``, AND keeps docs
-    that match every term), and returns a local relation.
+    those rows with pyarrow and ranks them on the driver with one WAND
+    kernel pass, with the groupBy's semantics (per-doc float64 sum,
+    ``n_terms``, AND keeps docs that match every term), and returns a
+    local relation.
 
     ``_table`` is the term layout as a warm engine holds it (QueryEngine):
     the query reads its scan, and when it carries metadata an AND query
@@ -409,7 +406,7 @@ def _search_terms(spark: SparkSession, index: Index, term_ids: list[int],
     if k is not None:
         rows = _local_blocks(index, snap, "postings", term_ids, cfg.num_shards)
         if rows is not None:
-            return _search_local(spark, index, rows, term_ids, mode, k)
+            return _rank_local(spark, index, rows, term_ids, mode, k)
     src = _table.scan if _table is not None else index.postings(spark)
     blocks = _term_rows(src, term_ids, cfg.num_shards)
 
@@ -435,14 +432,24 @@ def _search_terms(spark: SparkSession, index: Index, term_ids: list[int],
             return _empty_result(spark)
         if len(kept) < len(meta):
             blocks = _semi_join_blocks(spark, blocks, kept)
+    return _rank_distributed(spark, index, blocks, len(term_ids), mode, k)
 
-    postings = _decode_map(blocks)
-    agg = postings.groupBy("doc_id").agg(
+
+def _rank_distributed(spark: SparkSession, index: Index, blocks: DataFrame,
+                      n_query_terms: int, mode: str, k: int | None) -> DataFrame:
+    """The distributed ranking of the query terms' block rows: decode,
+    per-doc float64 sum and term count, AND keeps docs that match every
+    term, tombstone anti-join, then the top k (every match for None)."""
+    def decode(batches):
+        for pdf in batches:
+            yield decode_blocks(pdf)[["term_id", "doc_id", "score"]]
+
+    agg = blocks.mapInPandas(decode, POSTING_SCHEMA).groupBy("doc_id").agg(
         F.sum(F.col("score").cast("double")).alias("score"),
         F.count("*").alias("n_terms"),
     )
     if mode == "and":
-        agg = agg.where(F.col("n_terms") == len(term_ids))
+        agg = agg.where(F.col("n_terms") == n_query_terms)
     agg = agg.withColumn("n_terms", F.col("n_terms").cast("int"))
     live = filter_deleted(spark, index, agg)
     return live if k is None else top_k(live, k)
@@ -456,26 +463,12 @@ def _postings_bytes(index: Index, files: list[tuple[str, int]] | None) -> int:
     return sum(b for _, b in files)
 
 
-def _search_local(spark: SparkSession, index: Index, rows: pd.DataFrame,
-                  term_ids: list[int], mode: str, k: int) -> pd.DataFrame:
-    """The cold query over its terms' block rows, on the driver: decode,
-    drop tombstoned postings, then the groupBy's per-doc sum and term count
-    in a fixed order (doc-major, each doc's scores ascending), the AND
-    filter, and the top-k."""
-    if mode == "and" and len(term_ids) > 1:
-        rows = _prune_and_blocks(rows, term_ids)  # an absent term empties it
-    dec = decode_blocks(rows)
-    docs_u, scores = drop_deleted(dec["doc_id"].to_numpy().view(np.uint64),
-                                  dec["score"].to_numpy(np.float64),
-                                  effective_deletes(spark, index))
-    order = np.lexsort((scores, docs_u))
-    docs_u, starts, n_terms = np.unique(docs_u[order], return_index=True,
-                                        return_counts=True)
-    sums = np.add.reduceat(scores[order], starts) if len(starts) else scores
-    if mode == "and":
-        keep = n_terms == len(term_ids)
-        docs_u, sums, n_terms = docs_u[keep], sums[keep], n_terms[keep]
-    return _topk_frame(docs_u, sums, n_terms, k)
+def _rank_local(spark: SparkSession, index: Index, rows: pd.DataFrame,
+                term_ids: list[int], mode: str, k: int) -> pd.DataFrame:
+    """A cold query over its terms' block rows, on the driver: one kernel
+    pass with the resolved tombstone set inside, then the top k."""
+    deleted = effective_deletes(spark, index)
+    return _topk_frame(*_wand(_term_map(rows), term_ids, mode, k, deleted), k)
 
 
 def search_phrase_long(
@@ -687,32 +680,50 @@ class QueryEngine:
 
 
 # ---------------------------------------------------- WAND kernel (shared)
-# Used by LocalIndex (whole-index, driver RAM) and by the doc-partitioned
-# layout (per-bucket, inside applyInPandas on executors).
+# One pass of ``_wand`` is every driver-side ranking: the cold local side
+# of each entry point (docpart's over all its buckets' rows at once) and
+# LocalIndex; docpart's executor-side per-bucket ranking runs it inside
+# applyInPandas. Tombstoned postings drop as they decode, so no freeze
+# decision or top-k counts a doc that cannot be in the answer.
+
+_NO_DELETES = np.empty(0, np.uint64)
+
 
 def _term_map(pdf: pd.DataFrame) -> dict[int, dict]:
-    """Block rows → per-term arrays (metadata + encoded payloads)."""
+    """Block rows → per-term arrays (metadata + encoded payloads): one
+    stable sort by (term_id, salt, block_id) — doc-sorted runs per salt in
+    the doc-sorted layouts — split at term boundaries."""
+    if len(pdf) == 0:
+        return {}
+    tid = pdf["term_id"].to_numpy(np.int64)
+    order = np.lexsort((pdf["block_id"].to_numpy(), pdf["salt"].to_numpy(), tid))
+    tid = tid[order]
+    cols = {
+        "min": _u(pdf["min_doc"].to_numpy()[order]),
+        "max": _u(pdf["max_doc"].to_numpy()[order]),
+        "ms": pdf["max_score"].to_numpy(np.float32)[order],
+        "n": pdf["n"].to_numpy(np.int64)[order],
+        "deltas": pdf["doc_deltas"].to_numpy()[order],
+        "scores": pdf["scores"].to_numpy()[order],
+    }
+    cuts = np.flatnonzero(tid[1:] != tid[:-1]) + 1
     terms: dict[int, dict] = {}
-    for tid, g in pdf.groupby("term_id", sort=False):
-        # order blocks by (salt, block_id) => unsigned-doc-sorted runs per salt
-        g = g.sort_values(["salt", "block_id"], kind="stable")
-        terms[int(tid)] = {
-            "min": _u(g["min_doc"].to_numpy()),
-            "max": _u(g["max_doc"].to_numpy()),
-            "ms": g["max_score"].to_numpy(np.float32),
-            "n": g["n"].to_numpy(np.int64),
-            "deltas": g["doc_deltas"].tolist(),
-            "scores": g["scores"].tolist(),
-            "np": int(g["n"].sum()),
-            "S": float(g["max_score"].max()) if len(g) else 0.0,
-        }
+    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(tid)]):
+        t = {c: a[lo:hi] for c, a in cols.items()}
+        t["np"], t["S"] = int(t["n"].sum()), float(t["ms"].max())
+        terms[int(tid[lo])] = t
     return terms
 
 
-def _decode_term(t: dict, which: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Decode the selected blocks of one term → (docs_u64, scores_f32)."""
-    return decode_runs((t["deltas"][i] for i in which),
-                       (t["scores"][i] for i in which), t["n"][which])
+def _decode_term(t: dict, which: np.ndarray,
+                 deleted: np.ndarray = _NO_DELETES) -> tuple[np.ndarray, np.ndarray]:
+    """Decode the selected blocks of one term, drop the sorted unsigned
+    ``deleted`` docs → (docs_u64 ascending, scores_f64)."""
+    docs, scores = drop_deleted(*decode_runs(t["deltas"][which],
+                                             t["scores"][which], t["n"][which]),
+                                deleted)
+    o = np.argsort(docs, kind="stable")
+    return docs[o], scores[o].astype(np.float64)
 
 
 def _blocks_containing(t: dict, cand: np.ndarray) -> np.ndarray:
@@ -722,102 +733,90 @@ def _blocks_containing(t: dict, cand: np.ndarray) -> np.ndarray:
     return np.nonzero(hi > lo)[0]
 
 
-def _wand_and(terms: dict[int, dict], tids: list[int]) -> tuple[np.ndarray, np.ndarray]:
-    """Conjunctive evaluation: rarest list drives; other terms decode only
-    blocks containing surviving candidates."""
+def _wand_and(terms: dict[int, dict], tids: list[int],
+              deleted: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Conjunctive evaluation: the rarest list drives (the reference's
+    shortest-list-first intersection, intersection.h:43-51), its tombstoned
+    docs dropped as it decodes; the other terms decode only blocks
+    containing surviving candidates. Every doc returned matches all
+    ``tids``."""
     empty = (np.empty(0, np.uint64), np.empty(0, np.float64))
-    infos = []
-    for tid in tids:
-        t = terms.get(tid)
-        if t is None:
-            return empty
-        infos.append(t)
-    infos.sort(key=lambda t: t["np"])  # rarest list drives
-    drv = infos[0]
-    cand, cscore = _decode_term(drv, np.arange(len(drv["n"])))
-    order = np.argsort(cand, kind="stable")
-    cand, cscore = cand[order], cscore[order].astype(np.float64)
+    if any(t not in terms for t in tids):
+        return empty
+    infos = sorted((terms[t] for t in tids), key=lambda t: t["np"])
+    cand, cscore = _decode_term(infos[0], np.arange(len(infos[0]["n"])), deleted)
     for t in infos[1:]:
-        if len(cand) == 0:
-            return empty
-        which = _blocks_containing(t, cand)
-        docs, scores = _decode_term(t, which)
+        docs, scores = _decode_term(t, _blocks_containing(t, cand))
         if len(docs) == 0:
             return empty
-        o = np.argsort(docs, kind="stable")
-        docs, scores = docs[o], scores[o]
-        pos = np.searchsorted(docs, cand, side="left")
-        pos_c = np.minimum(pos, len(docs) - 1)
+        pos_c = np.minimum(np.searchsorted(docs, cand), len(docs) - 1)
         hit = docs[pos_c] == cand
-        cand, cscore = cand[hit], cscore[hit] + scores[pos_c[hit]].astype(np.float64)
+        cand, cscore = cand[hit], cscore[hit] + scores[pos_c[hit]]
     return cand, cscore
 
 
-def _wand_or(terms: dict[int, dict], tids: list[int], k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Disjunctive term-at-a-time quit/continue with block-max skipping."""
-    infos = [terms[t] for t in tids if t in terms]
-    if not infos:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
-    infos.sort(key=lambda t: -t["S"])  # highest potential first
-    suffix = np.zeros(len(infos) + 1)
-    for i in range(len(infos) - 1, -1, -1):
-        suffix[i] = suffix[i + 1] + infos[i]["S"]
+def _wand_or(terms: dict[int, dict], tids: list[int], k: int,
+             deleted: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Disjunctive term-at-a-time quit/continue with block-max skipping over
+    live postings. Terms go in decreasing max-score order; once the kth
+    accumulated score beats the remaining terms' summed max-scores, no new
+    doc can enter the top k, and later terms only decode blocks whose doc
+    range holds an accumulated doc. Each term's tombstoned docs drop as it
+    decodes, so that kth score is a live doc's. Returns (docs, scores,
+    n_terms): n_terms is each doc's matched-term count, exact for every
+    returned doc."""
+    infos = sorted((terms[t] for t in tids if t in terms), key=lambda t: -t["S"])
+    # suffix[i]: the summed max-scores of terms i.. (0 past the last)
+    suffix = np.r_[np.cumsum([t["S"] for t in infos[::-1]])[::-1], 0.0]
 
     acc_docs = np.empty(0, np.uint64)
     acc_scores = np.empty(0, np.float64)
+    acc_n = np.empty(0, np.int64)
     frozen = False  # True => no new accumulators (quit -> continue phase)
     for i, t in enumerate(infos):
-        if not frozen and len(acc_docs) >= k:
+        if not frozen and 0 < k <= len(acc_docs):
             kth = np.partition(acc_scores, len(acc_scores) - k)[len(acc_scores) - k]
             # strict >: an unseen doc reaching exactly suffix[i] ties the kth
             # score and can win the ascending-doc-id tie-break, so it must
             # still be admitted as a new accumulator
-            if kth > suffix[i]:
-                frozen = True  # docs unseen so far can never reach top-k
+            frozen = kth > suffix[i]  # docs unseen so far can never reach top-k
         if frozen:
-            which = _blocks_containing(t, acc_docs)
-        else:
-            which = np.arange(len(t["n"]))
-        docs, scores = _decode_term(t, which)
-        if len(docs) == 0:
-            continue
-        o = np.argsort(docs, kind="stable")
-        docs, scores = docs[o], scores[o].astype(np.float64)
-        if frozen:
-            pos = np.searchsorted(acc_docs, docs)
-            pos_c = np.minimum(pos, len(acc_docs) - 1)
+            # accumulated docs are live: no tombstone to drop
+            docs, scores = _decode_term(t, _blocks_containing(t, acc_docs))
+            pos_c = np.minimum(np.searchsorted(acc_docs, docs), len(acc_docs) - 1)
             hit = acc_docs[pos_c] == docs
-            np.add.at(acc_scores, pos_c[hit], scores[hit])
+            acc_scores[pos_c[hit]] += scores[hit]  # a term holds a doc once
+            acc_n[pos_c[hit]] += 1
         else:
-            both = np.concatenate([acc_docs, docs])
-            vals = np.concatenate([acc_scores, scores])
-            uniq, inv = np.unique(both, return_inverse=True)
-            summed = np.zeros(len(uniq), np.float64)
-            np.add.at(summed, inv, vals)
-            acc_docs, acc_scores = uniq, summed
-    return acc_docs, acc_scores
+            docs, scores = _decode_term(t, np.arange(len(t["n"])), deleted)
+            uniq, inv = np.unique(np.concatenate([acc_docs, docs]),
+                                  return_inverse=True)
+            old, new = inv[:len(acc_docs)], inv[len(acc_docs):]
+            summed, n = np.zeros(len(uniq)), np.zeros(len(uniq), np.int64)
+            summed[old], n[old] = acc_scores, acc_n
+            summed[new] += scores
+            n[new] += 1
+            acc_docs, acc_scores, acc_n = uniq, summed, n
+    return acc_docs, acc_scores, acc_n
+
+
+def _wand(terms: dict[int, dict], tids: list[int], mode: str, k: int | None,
+          deleted: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray | int]:
+    """One pass of the kernels for ``mode`` (and | or; phrase is a
+    single-term or): (docs_u, scores, n_terms) of the live docs that can
+    be in the top k. ``k=None`` (every match) is AND-only."""
+    if mode == "and":
+        return (*_wand_and(terms, tids, deleted), len(tids))
+    return _wand_or(terms, tids, k, deleted)
 
 
 # ------------------------------------------------------------------ local
 
 class LocalIndex:
-    """RAM-pinned block index for low-latency serving.
-
-    Holds per-term block metadata + encoded payloads in numpy arrays;
-    ``search`` runs term-at-a-time quit/continue with block-max skipping:
-
-    * terms are processed in decreasing global max-score order;
-    * once the running kth-best score beats the summed max-scores of the
-      remaining terms, no NEW candidate docs can enter the top-k — the
-      evaluation switches to *continue* mode, where remaining terms only
-      update existing candidates and only blocks whose doc-id range
-      contains a candidate are decoded (block-max skipping);
-    * conjunctive mode drives from the rarest term (the reference's
-      shortest-list-first intersection, intersection.h:43-51) and decodes
-      only blocks containing surviving candidates.
-
-    Results are exact top-k (the skipped work provably cannot change them).
-    """
+    """RAM-pinned block index for low-latency serving: every block of the
+    term layout held on the driver as per-term arrays (``_term_map``), and
+    each query one exact pass of the WAND kernel (``_wand``) with the
+    resolved tombstone set, read once at load, inside it."""
 
     # refuse to pin more than this many parquet bytes of postings into
     # driver RAM (decoded pandas is larger still); past it, serve through
@@ -853,8 +852,5 @@ class LocalIndex:
         tids = _query_term_ids(query, mode, self.cfg)
         if not tids:
             return []
-        if mode == "and":
-            res = _wand_and(self.terms, tids)
-        else:  # or | phrase (a phrase is a single-term disjunction)
-            res = _wand_or(self.terms, tids, k)
-        return _topk_pairs(*drop_deleted(*res, self.deleted), k)
+        docs_u, scores, _ = _wand(self.terms, tids, mode, k, self.deleted)
+        return _topk_pairs(docs_u, scores, k)

@@ -105,13 +105,51 @@ def buildprof(cores: int, sf_dir: str) -> None:
     print(json.dumps(out))
 
 
+# the driver-time layers of a cold call on the local side, and the
+# functions whose wall time each one sums, per module that calls them
+_LOCAL_LAYERS = {
+    "read": (("query", "_read_local"),),
+    "tombstones": (("query", "effective_deletes"), ("docpart", "effective_deletes")),
+    "kernel": (("query", "_term_map"), ("query", "_wand"),
+               ("docpart", "_term_map"), ("docpart", "_wand")),
+    "frame": (("query", "_result_frame"), ("docpart", "_result_frame")),
+}
+
+
+def _layer_timers(layers: dict) -> tuple[dict, list]:
+    """Wrap every function ``layers`` names so each call adds its wall time
+    to its layer's total; returns (totals, [(module, name, original)])."""
+    import importlib
+
+    totals = dict.fromkeys([*layers, "collect"], 0.0)
+    saved = []
+    for layer, targets in layers.items():
+        for mod_name, name in targets:
+            mod = importlib.import_module(f"alexandria_spark.plans.{mod_name}")
+            fn = getattr(mod, name)
+
+            def timed(*a, _fn=fn, _layer=layer, **kw):
+                t0 = time.perf_counter()
+                try:
+                    return _fn(*a, **kw)
+                finally:
+                    totals[_layer] += time.perf_counter() - t0
+
+            saved.append((mod, name, fn))
+            setattr(mod, name, timed)
+    return totals, saved
+
+
 def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
     """Warm-engine per-query latency (median of reps) for each engine, plus
     job-count accounting per query (statusTracker job ids). The cold legs
     run each of the five cold entry points with the driver-local guard at
     its default and at 0 (the distributed side), and report the bytes of
     the files each query's local read would take per table: fewer shards
-    put the term-layout shards past the guard."""
+    put the term-layout shards past the guard. On the local side each
+    query also reports the median split of its driver time: the pyarrow
+    read, the tombstone set, the kernel, the result frame, the collect and
+    the rest (planning, snapshot and manifest reads)."""
     from alexandria_spark.config import EngineConfig
     from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.build import Index, build_index
@@ -154,23 +192,40 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
     ]
     st = spark.sparkContext.statusTracker()
 
+    split = None  # the layer totals while the local side is timed
+
     def run(tag, serve, queries):
         res = {}
         for name, q, m in queries:
             serve(q, m)  # warm
             jobs0 = len(st.getJobIdsForGroup() or [])
-            lat = []
+            lat, layers = [], []
             for _ in range(reps):
+                if split is not None:
+                    split.update(dict.fromkeys(split, 0.0))
                 t0 = time.time()
                 serve(q, m)
                 lat.append(time.time() - t0)
+                if split is not None:
+                    layers.append({**split, "other": lat[-1] - sum(split.values())})
             res[name] = {
                 "p50_sec": round(statistics.median(lat), 4),
                 "min_sec": round(min(lat), 4),
                 "jobs_per_query": ((len(st.getJobIdsForGroup() or []) - jobs0)
                                    / reps),
             }
+            if layers:
+                res[name]["split_ms_p50"] = {
+                    k: round(1000 * statistics.median(x[k] for x in layers), 2)
+                    for k in layers[0]}
         return res
+
+    def collect(df):
+        t0 = time.perf_counter()
+        rows = df.collect()
+        if split is not None:
+            split["collect"] += time.perf_counter() - t0
+        return rows
 
     out = {}
 
@@ -191,9 +246,9 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
     }
     ors = [x for x in QUERIES if x[2] == "or"]
     cold = {
-        "search": (lambda q, m: search(spark, idx, q, m, 10, cfg).collect(), QUERIES),
+        "search": (lambda q, m: collect(search(spark, idx, q, m, 10, cfg)), QUERIES),
         "search_bmw": (lambda q, m: search_bmw(spark, idx, q, m, 10, cfg), QUERIES),
-        "search_docpart": (lambda q, m: search_docpart(spark, dp, q, m, 10, cfg).collect(),
+        "search_docpart": (lambda q, m: collect(search_docpart(spark, dp, q, m, 10, cfg)),
                            QUERIES),
         "impact_or": (lambda q, m: impact_or_topk(spark, idx, q, 10, cfg), ors),
         "impact_single": (lambda q, m: impact_single_topk(spark, idx, q, 10, cfg),
@@ -202,8 +257,12 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
     default_guard = qmod._LOCAL_MAX_BYTES
     for side, guard in (("local", default_guard), ("distributed", 0)):
         qmod._LOCAL_MAX_BYTES = guard
+        split, saved = _layer_timers(_LOCAL_LAYERS) if side == "local" else (None, [])
         for entry, (serve, queries) in cold.items():
             out[f"{entry}_cold_{side}"] = run(entry, serve, queries)
+        for mod, name, fn in saved:
+            setattr(mod, name, fn)
+        split = None
     qmod._LOCAL_MAX_BYTES = default_guard
 
     qe = QueryEngine(spark, idx, cfg)
