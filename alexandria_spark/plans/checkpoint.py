@@ -67,21 +67,6 @@ class CheckpointLog:
         return out
 
 
-def parquet_dir_bytes(path: str) -> int:
-    """Total bytes of .parquet files under ``path`` (0 if absent) — the
-    shared size probe behind the driver-volume gates (broadcast hints,
-    LocalIndex pin budget, warm-cache partition sizing)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
-
-
 def atomic_swap_dir(new_dir: str, dst: str) -> None:
     """Replace directory ``dst`` with ``new_dir`` without a window where
     ``dst`` is missing-and-unrecoverable: the old copy is renamed aside to

@@ -11,7 +11,8 @@ Which tombstoned docs are hidden depends on doc_lengths too (a re-ingested,
 refreshed doc escapes its tombstone), so the writers resolve the effective
 set once per state and store it; queries read that file instead of joining
 tombstones to doc_lengths on every call — as the reference's readers take
-their deletions from already-built state (index_reader.cpp:59-89).
+their deletions from already-built state (index_reader.cpp:59-89), checked
+against the snapshot record they serve from.
 """
 
 from __future__ import annotations
@@ -31,11 +32,13 @@ from alexandria_spark.config import EngineConfig
 from alexandria_spark.plans.build import Index
 from alexandria_spark.plans.checkpoint import atomic_swap_dir, recover_swap
 from alexandria_spark.plans.merge import rebuild_from_term_doc
+from alexandria_spark.plans.snapshots import SnapshotView, commit_snapshot
 
 # The effective hidden set, resolved by the writers: the doc ids sorted in
 # unsigned order, with the state they were resolved from in the file's
-# metadata. Spark skips "_"-prefixed files, so tombstone reads never see it,
-# and compact's rmtree of the tombstone directory removes it with them.
+# metadata. Spark and the snapshot manifests skip "_"-prefixed files, so
+# tombstone reads never see it, and compact's rmtree of the tombstone
+# directory removes it with them.
 EFFECTIVE_FILE = "_effective.parquet"
 _STAMP_KEY = b"alexandria.resolved_from"
 
@@ -51,12 +54,17 @@ _BROADCAST_DELETES_MAX_BYTES = 64 * 1024 * 1024
 _INLINE_DELETES_MAX = 1024
 
 
-def deletes_path(index: Index) -> str:
+def deletes_path(index: Index | SnapshotView) -> str:
     return os.path.join(index.path, "deletes")
 
 
-def effective_path(index: Index) -> str:
+def effective_path(index: Index | SnapshotView) -> str:
     return os.path.join(deletes_path(index), EFFECTIVE_FILE)
+
+
+def _view(src: Index | SnapshotView) -> SnapshotView:
+    """The caller's view, or a fresh HEAD view of an index."""
+    return src if isinstance(src, SnapshotView) else SnapshotView.head(src.path)
 
 
 def delete_docs(spark: SparkSession, index: Index, doc_ids) -> None:
@@ -67,18 +75,16 @@ def delete_docs(spark: SparkSession, index: Index, doc_ids) -> None:
     remove). A later re-ingest gets a higher version and escapes the
     tombstone, so delete→re-ingest needs no interposed compact.
 
-    Each call appends one tombstone file, then re-resolves the effective
-    set. The old resolved file goes first, so a crash in between leaves no
-    set that claims to be current."""
+    Each call appends one tombstone file, commits a ``delete`` snapshot,
+    then re-resolves the effective set; readers see the delete from the
+    commit on. A crash before the commit leaves the file unlisted until the
+    next commit by any writer; a crash after it leaves a stale stamp, and
+    readers resolve the set with Spark until the next resolve."""
     from alexandria_spark.plans.versioning import current_version
 
     v = current_version(index.path)
     d = deletes_path(index)
     os.makedirs(d, exist_ok=True)
-    try:
-        os.remove(effective_path(index))
-    except FileNotFoundError:
-        pass
     if isinstance(doc_ids, DataFrame):
         doc_ids.select("doc_id").withColumn(
             "version", F.lit(v).cast("long")
@@ -88,6 +94,7 @@ def delete_docs(spark: SparkSession, index: Index, doc_ids) -> None:
         _write_atomic(pa.table({"doc_id": ids,
                                 "version": np.full(len(ids), v, np.int64)}),
                       os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+    commit_snapshot(index.path, "delete", {"version": v})
     resolve_deletes(spark, index)
 
 
@@ -99,46 +106,41 @@ def _write_atomic(table: pa.Table, path: str) -> None:
     os.replace(tmp, path)
 
 
-def load_tombstones(spark: SparkSession, index: Index) -> DataFrame | None:
-    """Raw tombstones as (doc_id, del_version), max per doc — the shape the
-    physical paths (compact / doc-store GC) filter rows against. Tombstone
-    files written before versioning read as LEGACY_DELETE_VERSION (hide
-    every version until a compact clears them)."""
-    from alexandria_spark.plans.versioning import (
-        ID_VERSION_SCHEMA,
-        LEGACY_DELETE_VERSION,
-    )
+def _max_versions(tombs: DataFrame) -> DataFrame:
+    """Raw tombstone rows as (doc_id, del_version), max per doc — the shape
+    the physical paths (compact / doc-store GC) filter rows against. Files
+    written before versioning read as LEGACY_DELETE_VERSION (hide every
+    version until a compact clears them)."""
+    from alexandria_spark.plans.versioning import LEGACY_DELETE_VERSION
 
-    p = deletes_path(index)
-    if not os.path.exists(p):
-        return None
-    return spark.read.schema(ID_VERSION_SCHEMA).parquet(p).groupBy("doc_id").agg(
+    return tombs.groupBy("doc_id").agg(
         F.max(F.coalesce(F.col("version"), F.lit(LEGACY_DELETE_VERSION)))
         .alias("del_version")
     )
 
 
-def load_deletes(spark: SparkSession, index: Index) -> DataFrame | None:
+def load_deletes(spark: SparkSession,
+                 index: Index | SnapshotView) -> DataFrame | None:
     """The EFFECTIVE hidden doc set: docs whose current version (per the
     last-refreshed doc_lengths) is <= their tombstoned version. A doc
     re-ingested at a higher version AND folded in by a refresh escapes its
     tombstone; one re-ingested but not yet refreshed stays hidden (its
     servable postings are still the old content). Returns (doc_id) rows.
-    This is the Spark resolution; serving paths take the set through
-    ``effective_deletes`` / ``filter_deleted``, which read the copy the
-    writers resolved."""
-    from alexandria_spark.plans.versioning import read_doc_versions
+    This is the Spark resolution, over the view's files; serving paths take
+    the set through ``effective_deletes`` / ``filter_deleted``, which read
+    the copy the writers resolved."""
+    from alexandria_spark.plans.versioning import ID_VERSION_SCHEMA, with_version
 
-    tombs = load_tombstones(spark, index)
-    if tombs is None:
+    view = _view(index)
+    if not view.files("deletes"):
         return None
-    dl_path = os.path.join(index.path, "doc_lengths")
-    if not os.path.exists(dl_path):
+    tombs = _max_versions(view.scan(spark, "deletes", schema=ID_VERSION_SCHEMA))
+    if not view.files("doc_lengths"):
         return tombs.select("doc_id")
     # slim two-column scan of doc_lengths joined to the (small) tombstone
     # set; output is at most the tombstone count
-    dl = read_doc_versions(spark, dl_path).select(
-        "doc_id", F.col("version").alias("cur_version"))
+    dl = with_version(view.scan(spark, "doc_lengths", schema=ID_VERSION_SCHEMA)
+                      ).select("doc_id", F.col("version").alias("cur_version"))
     return (
         tombs.join(dl, "doc_id", "left")
         .where(F.col("cur_version").isNull()
@@ -147,39 +149,18 @@ def load_deletes(spark: SparkSession, index: Index) -> DataFrame | None:
     )
 
 
-def _visible_files(d: str) -> list[list]:
-    """[name, size, mtime_ns] of each file a Spark read of ``d`` sees (it
-    skips "_" and "." names); [] when ``d`` is missing. A file that vanishes
-    while listed gets size -1, which no stamp carries."""
-    try:
-        names = sorted(os.listdir(d))
-    except FileNotFoundError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith(("_", ".")):
-            continue
-        try:
-            st = os.stat(os.path.join(d, n))
-            out.append([n, st.st_size, st.st_mtime_ns])
-        except FileNotFoundError:
-            out.append([n, -1, -1])
-    return out
-
-
-def _state(index: Index) -> dict | None:
-    """The state the effective set is resolved from: the tombstone files
-    and the doc_lengths files. None when nothing is tombstoned."""
-    tombs = _visible_files(deletes_path(index))
+def _state(view: SnapshotView) -> dict | None:
+    """The state the effective set is resolved from: the record's tombstone
+    files and doc_lengths files. None when nothing is tombstoned."""
+    tombs = view.entries("deletes")
     if not tombs:
         return None
-    return {"deletes": tombs,
-            "doc_lengths": _visible_files(os.path.join(index.path, "doc_lengths"))}
+    return {"deletes": tombs, "doc_lengths": view.entries("doc_lengths") or []}
 
 
-def _resolve(spark: SparkSession, index: Index) -> np.ndarray:
+def _resolve(spark: SparkSession, view: SnapshotView) -> np.ndarray:
     """The Spark resolution, collected: sorted unsigned doc ids."""
-    dels = load_deletes(spark, index)
+    dels = load_deletes(spark, view)
     if dels is None:
         return np.empty(0, np.uint64)
     # Arrow toPandas, not collect(): Row objects cost ~100x the numpy bytes
@@ -188,22 +169,23 @@ def _resolve(spark: SparkSession, index: Index) -> np.ndarray:
 
 def resolve_deletes(spark: SparkSession, index: Index) -> None:
     """Resolve the effective set with Spark and store it as one small
-    parquet file, stamped with the state it was resolved from. Every writer
-    of the tombstones or of doc_lengths calls it after its change, so
-    readers load the set without a Spark job. Commits that leave both alone
-    (derived layouts, stream appends) keep the stamp valid. A no-op while
-    nothing is tombstoned."""
-    state = _state(index)
+    parquet file, stamped with the state it was resolved from: HEAD's
+    tombstone and doc_lengths files. Every writer of the tombstones or of
+    doc_lengths calls it after its commit, so readers load the set without
+    a Spark job. Commits that leave both alone (derived layouts, stream
+    appends) keep the stamp valid. A no-op while nothing is tombstoned."""
+    view = SnapshotView.head(index.path)
+    state = _state(view)
     if state is None:
         return
-    ids = _resolve(spark, index)
+    ids = _resolve(spark, view)
     table = pa.table({"doc_id": ids.view(np.int64)})
     _write_atomic(
         table.replace_schema_metadata({_STAMP_KEY: json.dumps(state)}),
         effective_path(index))
 
 
-def _load_resolved(index: Index, state: dict) -> np.ndarray | None:
+def _load_resolved(index: Index | SnapshotView, state: dict) -> np.ndarray | None:
     """The resolved set when its stamp matches ``state``, else None."""
     try:
         table = pq.read_table(effective_path(index))
@@ -215,20 +197,23 @@ def _load_resolved(index: Index, state: dict) -> np.ndarray | None:
     return table.column("doc_id").to_numpy().view(np.uint64)
 
 
-def effective_deletes(spark: SparkSession, index: Index) -> np.ndarray:
-    """The effective hidden set as sorted unsigned doc ids (empty when
-    nothing is tombstoned). Read with pyarrow when the writers' resolved
-    file matches the current state; otherwise (a crash before the resolve,
-    tombstones from before resolved sets existed) resolved with Spark —
-    slower, never wrong. Readers never write the file."""
-    state = _state(index)
+def effective_deletes(spark: SparkSession,
+                      index: Index | SnapshotView) -> np.ndarray:
+    """The effective hidden set of a view (an index's fresh HEAD view) as
+    sorted unsigned doc ids (empty when nothing is tombstoned). Read with
+    pyarrow when the writers' resolved file matches the view's record;
+    otherwise (a crash before the resolve, tombstones from before resolved
+    sets existed) resolved with Spark — slower, never wrong. Readers never
+    write the file."""
+    view = _view(index)
+    state = _state(view)
     if state is None:
         return np.empty(0, np.uint64)
-    ids = _load_resolved(index, state)
-    return ids if ids is not None else _resolve(spark, index)
+    ids = _load_resolved(view, state)
+    return ids if ids is not None else _resolve(spark, view)
 
 
-def deletes_small(index: Index) -> bool:
+def deletes_small(index: Index | SnapshotView) -> bool:
     """The mass-deletion gate: may the effective set pass through the
     driver? One stat of the resolved file. Tombstones without a resolved
     file count as large, so callers take the distributed path, which is
@@ -236,7 +221,7 @@ def deletes_small(index: Index) -> bool:
     try:
         return os.stat(effective_path(index)).st_size <= _BROADCAST_DELETES_MAX_BYTES
     except FileNotFoundError:
-        return not os.path.exists(deletes_path(index))
+        return not _view(index).files("deletes")
 
 
 def drop_deleted(docs_u: np.ndarray, scores: np.ndarray,
@@ -251,18 +236,21 @@ def drop_deleted(docs_u: np.ndarray, scores: np.ndarray,
     return docs_u[keep], scores[keep]
 
 
-def filter_deleted(spark: SparkSession, index: Index, results: DataFrame) -> DataFrame:
-    """Anti-join results against the effective deletes (no-op without any).
-    A resolved set filters as a literal list or joins as a broadcast local
-    relation; a stale or missing one is resolved inside the plan, and a mass
-    deletion's join strategy is left to AQE."""
-    state = _state(index)
+def filter_deleted(spark: SparkSession, index: Index | SnapshotView,
+                   results: DataFrame) -> DataFrame:
+    """Anti-join results against the effective deletes of a view (an
+    index's fresh HEAD view; no-op without any). A resolved set filters as
+    a literal list or joins as a broadcast local relation; a stale or
+    missing one is resolved inside the plan, and a mass deletion's join
+    strategy is left to AQE."""
+    view = _view(index)
+    state = _state(view)
     if state is None:
         return results
-    small = deletes_small(index)
-    ids = _load_resolved(index, state) if small else None
+    small = deletes_small(view)
+    ids = _load_resolved(view, state) if small else None
     if ids is None:
-        dels = load_deletes(spark, index)
+        dels = load_deletes(spark, view)
     elif len(ids) == 0:
         return results
     elif len(ids) <= _INLINE_DELETES_MAX:
@@ -288,6 +276,7 @@ def compact(spark: SparkSession, index: Index,
     /root/reference/tests/test_hash_table.cpp), so a data-retention delete
     leaves no bytes behind anywhere."""
     from alexandria_spark.plans.versioning import (
+        ID_VERSION_SCHEMA,
         latest_versions_only,
         read_term_doc,
         version_span,
@@ -298,7 +287,9 @@ def compact(spark: SparkSession, index: Index,
     recover_swap(td_path)  # repair a crash from a previous compact
     if not os.path.exists(td_path):
         raise ValueError("compact requires a materialized stage-1 term_doc table")
-    dels = load_tombstones(spark, index)
+    p = deletes_path(index)  # a writer: the directory, committed or not
+    dels = (_max_versions(spark.read.schema(ID_VERSION_SCHEMA).parquet(p))
+            if os.path.exists(p) else None)
     td = read_term_doc(spark, td_path)
     # physical cleanup is row-level and version-aware: a tombstone at
     # del_version drops only rows up to that version, so a doc re-ingested
@@ -346,7 +337,7 @@ def compact(spark: SparkSession, index: Index,
     import shutil
     idx = rebuild_from_term_doc(
         spark, read_term_doc(spark, td_path), index.path, cfg, run_id="compact")
-    p = deletes_path(index)
     if os.path.exists(p):
         shutil.rmtree(p)
+        commit_snapshot(index.path, "compact")
     return idx

@@ -45,12 +45,10 @@ from alexandria_spark.plans.build import (
     stream_groups,
     tokenize_docs,
 )
-from alexandria_spark.plans.checkpoint import parquet_dir_bytes
 from alexandria_spark.plans.delete import deletes_small, effective_deletes
 from alexandria_spark.plans.query import (
     RESULT_SCHEMA,
     _empty_result,
-    _head_snapshot,
     _local_blocks,
     _query_term_ids,
     _rank_distributed,
@@ -60,25 +58,13 @@ from alexandria_spark.plans.query import (
     _wand,
     top_k,
 )
+from alexandria_spark.plans.snapshots import SnapshotView
 
 
 class DocPartitionedIndex(Index):
     @property
     def postings_path(self) -> str:
         return os.path.join(self.path, "postings_doc")
-
-    def postings(self, spark: SparkSession) -> DataFrame:
-        # "layout never built" is a clear error, not an unresolved-column
-        # failure downstream; a layout built over an empty corpus reads as
-        # an empty relation with the bucket column
-        if not os.path.isdir(self.postings_path):
-            raise FileNotFoundError(
-                f"no doc-partitioned layout under {self.postings_path!r} — "
-                f"build one with build_docpart_index (CLI: build_submit.py "
-                f"--layout docpart|both), or query the term layout with "
-                f"engine dist/bmw"
-            )
-        return super().postings(spark)
 
 
 def build_docpart_index(
@@ -263,7 +249,7 @@ def search_docpart(
 
     A cold call with a finite ``k`` runs no Spark job while the whole
     ``postings_doc`` table (every bucket holds every term) is at most
-    ``_LOCAL_MAX_BYTES`` in the pinned snapshot: the query terms' rows are
+    ``_LOCAL_MAX_BYTES`` in its snapshot view: the query terms' rows are
     read with pyarrow and the same kernel runs on the driver, in one pass
     over every bucket's rows.
 
@@ -271,7 +257,9 @@ def search_docpart(
     quit/continue needs a finite k): the candidate feed for a serve pipeline
     whose boosts re-rank before truncation.
 
-    ``_blocks`` lets ``DocPartEngine`` substitute its cached scan."""
+    ``_blocks`` lets ``DocPartEngine`` substitute its cached scan; the
+    tombstones come from a fresh HEAD view either way. A never-built
+    layout raises the view's actionable FileNotFoundError."""
     cfg = cfg or index.config()
     term_ids = _query_term_ids(query, mode, cfg)
     if not term_ids:
@@ -286,20 +274,20 @@ def search_docpart(
                                   deleted)
         return _topk_frame(docs_u, scores, n_terms, k)
 
+    view = SnapshotView.head(index.path)
     if _blocks is None and k is not None:
         # salt is the doc bucket (_scored_to_docpart_blocks): one kernel
         # pass over all buckets' rows ranks the whole table
-        rows = _local_blocks(index, _head_snapshot(index), "postings_doc",
-                             term_ids, cfg.num_shards)
+        rows = _local_blocks(view, "postings_doc", term_ids, cfg.num_shards)
         if rows is not None:
-            return _result_frame(spark, kernel(rows, effective_deletes(spark, index)))
+            return _result_frame(spark, kernel(rows, effective_deletes(spark, view)))
 
-    source = _blocks if _blocks is not None else index.postings(spark)
+    source = _blocks if _blocks is not None else view.scan(spark, "postings_doc")
     blocks = source.where(F.col("term_id").isin(term_ids))
-    if not deletes_small(index):
-        return _rank_distributed(spark, index, blocks, len(term_ids),
+    if not deletes_small(view):
+        return _rank_distributed(spark, view, blocks, len(term_ids),
                                  kernel_mode, k).withColumn("n_terms", F.lit(n_terms))
-    deleted = effective_deletes(spark, index)
+    deleted = effective_deletes(spark, view)
     per = blocks.groupBy("bucket").applyInPandas(
         lambda pdf: kernel(pdf, deleted), RESULT_SCHEMA)
     return per if k is None else top_k(per, k)
@@ -327,8 +315,10 @@ class DocPartEngine:
         # take fewer/larger partitions (per-query task-launch overhead
         # dominates — 32 tasks measured 0.42 s p50 where 8 measured 0.32 s
         # on the same table), big tables cap at shuffle_partitions so each
-        # pinned partition stays executor-sized at scale.
-        table_bytes = parquet_dir_bytes(index.postings_path)
+        # pinned partition stays executor-sized at scale. The scan and its
+        # size come from one HEAD view.
+        view = SnapshotView.head(index.path)
+        table_bytes = view.bytes("postings_doc")
         # floor 4, then cap at shuffle_partitions (the cap wins when the
         # configured parallelism is below the floor). r7 swept 1/2/4/8 on
         # the sf0.1 table: 4 is the concurrency sweet spot (8-in-flight
@@ -338,7 +328,7 @@ class DocPartEngine:
         # floor is moot.
         partitions = min(self.cfg.shuffle_partitions,
                          max(4, -(-table_bytes // (64 << 20))))
-        self.blocks = index.postings(spark).repartition(
+        self.blocks = view.scan(spark, "postings_doc").repartition(
             partitions, F.col("bucket")
         ).cache()
         self.blocks.count()  # materialize the cache once

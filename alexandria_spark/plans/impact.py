@@ -42,29 +42,25 @@ from pyspark.sql import DataFrame, SparkSession
 
 from alexandria_spark.config import EngineConfig
 from alexandria_spark.plans.blocks import build_blocks, decode_blocks
-from alexandria_spark.plans.build import (
-    BLOCK_SCHEMA,
-    Index,
-    block_read_schema,
-    decode_block_frame,
-)
+from alexandria_spark.plans.build import BLOCK_SCHEMA, Index, decode_block_frame
 from alexandria_spark.plans.delete import deletes_small, drop_deleted, effective_deletes
 from alexandria_spark.plans.query import (
     _PRUNE_COLS,
     BlockTable,
     _collect_topk,
     _guarded_meta,
-    _head_snapshot,
     _local_blocks,
     _pin_table,
     _query_term_ids,
     _rank_local,
     _semi_join_blocks,
     _shard_of,
+    _shards_of,
     _term_rows,
     _topk_pairs,
     search,
 )
+from alexandria_spark.plans.snapshots import SnapshotView
 
 # phase-1 prefetch: when a whole query touches at most this many impact
 # blocks (short lists, known from the metadata), its first payload job
@@ -195,41 +191,6 @@ def build_impact_postings(spark: SparkSession, index: Index,
     commit_snapshot(index.path, "impact_build",
                     {} if shards is None else {"shards": list(shards)})
     return out_path
-
-
-def _pinned_scan(spark: SparkSession, index: Index, table: str,
-                 snapshot_id: str | None):
-    """ONE snapshot-pinned scan of ``table`` for a whole query. The cold
-    path used to issue two independent directory reads (metadata scan, then
-    lazy payload fetches); a partial refresh rewriting the shard between
-    those jobs could make the payload fetch miss keys the metadata promised
-    (KeyError) or return payloads inconsistent with the metadata ordering.
-    Pinning every read of a query to the one ``snapshot_id`` it resolved
-    (the caller reads HEAD once) makes them read one immutable state;
-    indexes without a snapshot log fall back to the directory read."""
-    from alexandria_spark.plans import snapshots
-
-    if table == "postings_impact" and not os.path.isdir(
-        os.path.join(index.path, table)
-    ):
-        raise FileNotFoundError(
-            f"no impact-ordered layout under {index.path!r}/postings_impact — "
-            f"derive one with build_impact_postings (CLI: maintain_submit.py "
-            f"--op derive-impact), or query the doc-sorted layout with "
-            f"engine dist/bmw/local"
-        )
-    try:
-        return snapshots.read_table(spark, index.path, table, snapshot_id)
-    except (ValueError, FileNotFoundError, OSError):
-        if table == "postings":
-            return index.postings(spark)
-        return _read_impact(spark, index)
-
-
-def _read_impact(spark: SparkSession, index: Index):
-    """Directory read of the impact table, with its explicit schema."""
-    return spark.read.schema(block_read_schema("postings_impact")).parquet(
-        os.path.join(index.path, "postings_impact"))
 
 
 def _block_key_pd(pdf: pd.DataFrame) -> pd.Series:
@@ -416,11 +377,15 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     order finds the candidates, doc order completes them). Final ranking:
     exact score desc, unsigned doc asc.
 
-    A cold query whose terms' impact shards total at most
-    ``_LOCAL_MAX_BYTES`` in the pinned snapshot runs no walk and no Spark
-    job: its terms' impact rows are read with pyarrow and ranked by one OR
-    pass of the shared WAND kernel, tombstones inside (``_rank_local``; the
-    kernel reads any block order), with ``_stats`` all zeros.
+    Every read of a call — the local read, the impact scan, the
+    completion's doc-sorted scan and the tombstone set — comes from one
+    HEAD view, so a commit landing mid-query cannot pair one state's impact
+    blocks with the next state's doc-sorted blocks. A cold query whose
+    terms' impact shards total at most ``_LOCAL_MAX_BYTES`` in that view
+    runs no walk and no Spark job: its terms' impact rows are read with
+    pyarrow and ranked by one OR pass of the shared WAND kernel, tombstones
+    inside (``_rank_local``; the kernel reads any block order), with
+    ``_stats`` all zeros.
 
     The mass-deletion gate, the metadata guard and the _P1_MAX_DRIVER_BLOCKS
     cap all concede to one exact distributed fallback.
@@ -432,8 +397,6 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
 
     ``_impact`` and ``_doc`` are ImpactEngine's pinned tables.
     """
-    from alexandria_spark.plans.snapshots import head_snapshot_id
-
     cfg = cfg or index.config()
     term_ids = _query_term_ids(query, "or", cfg)
     if not term_ids:
@@ -446,43 +409,35 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
                           payload_blocks_fetched=0, fetch_jobs=0,
                           n_candidates=0, blocks_fetched_p2=0, **marker)
 
-    # HEAD is read ONCE: the impact scan and a completion's doc-sorted scan
-    # pin the same snapshot, so a commit landing mid-query cannot pair one
-    # state's impact blocks with the next state's doc-sorted blocks
+    view = SnapshotView.head(index.path)
+    shards = _shards_of(term_ids, cfg.num_shards)
     if _impact is None:
-        snap = _head_snapshot(index)
-        snap_id = snap["snapshot_id"] if snap is not None else None
-        local = _local_blocks(index, snap, "postings_impact", term_ids,
-                              cfg.num_shards)
+        local = _local_blocks(view, "postings_impact", term_ids, cfg.num_shards)
         if local is not None:  # every block is on the driver: no walk
             zero_stats()
-            hits = _rank_local(spark, index, local, term_ids, "or", k)
+            hits = _rank_local(spark, view, local, term_ids, "or", k)
             return list(zip(hits["doc_id"].tolist(), hits["score"].tolist()))
-        # pin meta scan + payload fetches to one snapshot
-        _impact = BlockTable(
-            _pinned_scan(spark, index, "postings_impact", snap_id), None)
-    else:
-        snap_id = head_snapshot_id(index.path)
+        _impact = BlockTable(view.scan(spark, "postings_impact", shards), None)
 
     def fallback() -> list[tuple[int, float]]:
         """The one fallback of every guard: exact distributed OR top-k via
         plans.query.search, over the query's own impact scan (a warm
-        engine's cached one, or the snapshot-pinned one), so guard-tripped
+        engine's cached one, or the view's), so guard-tripped
         queries still serve from executor memory and read no other table.
         The impact layout decodes to the same posting multiset as the
         doc-sorted one (test_impact_layout_same_postings), so it serves
         exactly. ``_stats`` keeps its one key set (zeros + a marker)."""
         zero_stats(fallback="distributed")
-        return _collect_topk(spark, index, query, "or", k, cfg, _table=_impact)
+        return _collect_topk(spark, index, query, "or", k, cfg, _impact, view)
 
-    if not deletes_small(index):  # mass deletion: serve distributed
+    if not deletes_small(view):  # mass deletion: serve distributed
         return fallback()
     metas = _impact_meta_multi(_impact, term_ids, cfg.num_shards)
     if any(m is None for m in metas.values()):
         # a hot term tripped the metadata guard: the driver-orchestrated
         # walk would hold its block list
         return fallback()
-    deleted_u = effective_deletes(spark, index)
+    deleted_u = effective_deletes(spark, view)
     readers = {
         t: _ImpactBlockReader(_impact.scan, t, m, cfg.num_shards)
         for t, m in metas.items() if len(m)
@@ -576,7 +531,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
     if (unresolved & cand_mask).any():
         cand = docs_u[cand_mask].view(np.int64)
         doc = _doc if _doc is not None else BlockTable(
-            _pinned_scan(spark, index, "postings", snap_id), None)
+            view.scan(spark, "postings", shards), None)
         exact, p2_blocks = _exact_scores_docsorted(spark, index, term_ids,
                                                    cand, cfg, doc)
         docs_u = np.fromiter(exact.keys(), dtype=np.int64).view(np.uint64)
@@ -616,7 +571,7 @@ def _exact_scores_docsorted(spark: SparkSession, index: Index,
     Returns (scores, blocks): blocks is the number of pruned blocks the flat
     job read, or -1 when the terms' blocks were read unpruned.
     ``_doc`` is the doc-sorted table to read (ImpactEngine's pinned one, or
-    the query's snapshot-pinned one)."""
+    the query's view's; a fresh HEAD view's when None)."""
     if len(cand) == 0:
         return {}, 0
     if len(cand) * len(term_ids) > _P2_FLAT_MAX_ROWS:
@@ -629,7 +584,8 @@ def _exact_scores_docsorted(spark: SparkSession, index: Index,
         )
         return {int(r["doc_id"]): float(r["score"]) for r in rows}, -1
 
-    src = _doc.scan if _doc is not None else index.postings(spark)
+    src = _doc.scan if _doc is not None else SnapshotView.head(index.path).scan(
+        spark, "postings", _shards_of(term_ids, cfg.num_shards))
     blocks = _term_rows(src, term_ids, cfg.num_shards)
     if _doc is not None and _doc.meta is not None:  # zero-job block pruning
         meta = _doc.meta[_doc.meta["term_id"].isin(term_ids)]
@@ -682,7 +638,8 @@ class ImpactEngine:
     completion table are pinned in executor memory once, so per-query work
     is metadata lookups + lazy payload fetches against the in-memory
     columnar cache (no parquet IO, no re-planning). Early-termination
-    semantics and `_stats` accounting are identical to the cold paths."""
+    semantics and `_stats` accounting are identical to the cold paths.
+    Each query takes its tombstones from a fresh HEAD view."""
 
     def __init__(self, spark: SparkSession, index: Index,
                  cfg: EngineConfig | None = None):
@@ -693,13 +650,13 @@ class ImpactEngine:
         # metadata pinned on the driver (payloads stay on the executors):
         # a warm query plans its walk and its phase-2 pruning without any
         # metadata jobs. Past the guard a table pins no metadata and queries
-        # plan over it as cold ones do. The pinned copies are as consistent
-        # as the cached scans they mirror: both snapshot init time.
-        self.blocks, self.meta = _pin_table(
-            _read_impact(spark, index),
-            os.path.join(index.path, "postings_impact"), _IMPACT_COLS)
-        self.doc_blocks, self.doc_meta = _pin_table(
-            index.postings(spark), index.postings_path, _PRUNE_COLS)
+        # plan over it as cold ones do. Both tables come from one HEAD
+        # view, and the pinned copies mirror the cached scans.
+        view = SnapshotView.head(index.path)
+        self.blocks, self.meta = _pin_table(spark, view, "postings_impact",
+                                            _IMPACT_COLS)
+        self.doc_blocks, self.doc_meta = _pin_table(spark, view, "postings",
+                                                    _PRUNE_COLS)
 
     def single_topk(self, query: str, k: int = 10,
                     _stats: dict | None = None) -> list[tuple[int, float]]:

@@ -12,15 +12,13 @@ Two execution paths over the same block tables:
   ``search_bmw`` is its collected form, a (doc_id, score) list.
 
 * the cold driver-local path — a cold query (no warm engine's tables,
-  finite ``k``) whose files in the pinned snapshot total at most
-  ``_LOCAL_MAX_BYTES`` is answered on the driver with no Spark job: HEAD is
-  read once, the snapshot's manifest names the files and their sizes (no
-  directory walk), pyarrow reads only the query terms' rows
-  (``_local_blocks``), and one pass of the WAND kernel below ranks them.
-  Every cold entry point (``search``, ``search_bmw``, ``search_docpart``,
-  ``impact_or_topk``, ``impact_single_topk``) takes it; an ``OSError``
-  from the read (a concurrent overwrite removed a listed file) sends the
-  query distributed instead.
+  finite ``k``) whose files in its snapshot view total at most
+  ``_LOCAL_MAX_BYTES`` is answered on the driver with no Spark job:
+  pyarrow reads only the query terms' rows (``_local_blocks``), and one
+  pass of the WAND kernel below ranks them. Every cold entry point
+  (``search``, ``search_bmw``, ``search_docpart``, ``impact_or_topk``,
+  ``impact_single_topk``) takes it; a failed read sends the query
+  distributed instead.
 
 * ``LocalIndex`` — the low-latency serving path (the analogue of the
   reference's RAM-cached readers, index_reader.cpp:59-89): the whole
@@ -35,10 +33,13 @@ max-score skipping in the spirit of Block-Max WAND (Ding & Suel, SIGIR
 (search_engine.h:298-352). It drops tombstoned postings as it decodes,
 before any cutoff, and counts each doc's matched terms (``n_terms``).
 
-These paths and the impact layout's (plans/impact.py) plan through the
-same few helpers below: ``_local_blocks`` (the cold driver-local read),
-``_rank_local`` (a kernel pass over those rows), ``_term_rows`` (the
-query terms' scan), ``_rank_distributed`` (the decode + groupBy ranking),
+A cold call takes every read from one ``SnapshotView``; a warm engine
+pins its tables from one and takes its tombstones from a fresh HEAD view
+per query. These paths and the impact layout's (plans/impact.py) plan
+through the same few helpers below: ``_local_blocks`` (the cold
+driver-local read), ``_rank_local`` (a kernel pass over those rows),
+``_term_rows`` (the query terms' scan), ``_rank_distributed`` (the
+decode + groupBy ranking),
 ``_guarded_meta`` (a driver-side metadata fetch, None past
 ``_META_GUARD_ROWS``), ``_pin_table`` (a warm engine's cached scan plus its
 guarded metadata, as one ``BlockTable``), ``_semi_join_blocks`` (read only
@@ -51,12 +52,10 @@ order as tie-break (index_manager.cpp:279-282, generic_record.h:50-68).
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-import pyarrow.dataset as pads
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -73,14 +72,13 @@ from alexandria_spark.functions.hashing import i64_hash64
 from alexandria_spark.functions.tokenizer import query_terms, tokenize
 from alexandria_spark.plans.blocks import decode_blocks, decode_runs
 from alexandria_spark.plans.build import MIN_I64, Index
-from alexandria_spark.plans.checkpoint import parquet_dir_bytes
 from alexandria_spark.plans.delete import (
     deletes_small,
     drop_deleted,
     effective_deletes,
     filter_deleted,
 )
-from alexandria_spark.plans.snapshots import load_snapshot
+from alexandria_spark.plans.snapshots import SnapshotView
 
 POSTING_SCHEMA = StructType(
     [
@@ -115,7 +113,7 @@ _PRUNE_MIN_BYTES = 64 << 20
 
 # At most this many bytes of files — the query terms' ``shard=`` partitions
 # of postings / postings_impact, or all of postings_doc, whose every bucket
-# holds every term — per the pinned snapshot's manifest, a cold query reads
+# holds every term — per its snapshot view's record, a cold query reads
 # on the driver instead of in a Spark job. The driver reads, decodes and
 # ranks 1.5 MB of postings in 55-90 ms on 4 cores, so 8 MiB costs about one
 # cold distributed call (two jobs, ~0.45 s) at worst.
@@ -150,12 +148,16 @@ class BlockTable(NamedTuple):
     meta: pd.DataFrame | None
 
 
+def _shards_of(term_ids: list[int], num_shards: int) -> set[int]:
+    return {_shard_of(t, num_shards) for t in term_ids}
+
+
 def _term_rows(src: DataFrame, term_ids: list[int], num_shards: int) -> DataFrame:
     """The query terms' rows of a block table: partition-pruned on shard,
     term_id pushed down to the parquet reader."""
-    shards = sorted({_shard_of(t, num_shards) for t in term_ids})
     return src.where(
-        F.col("shard").isin(shards) & F.col("term_id").isin(list(term_ids))
+        F.col("shard").isin(sorted(_shards_of(term_ids, num_shards)))
+        & F.col("term_id").isin(list(term_ids))
     )
 
 
@@ -169,13 +171,20 @@ def _guarded_meta(blocks: DataFrame, cols, n_terms: int = 1) -> pd.DataFrame | N
     return None if len(rows) > cap else rows
 
 
-def _pin_table(df: DataFrame, table_dir: str, cols, cache: bool = True) -> BlockTable:
-    """A warm engine's hold on one block table: the scan cached right-sized
+def _pin_table(spark: SparkSession, view: SnapshotView, table: str,
+               cols) -> BlockTable:
+    """A warm engine's hold on one block table of its view: the scan cached
     in executor memory and materialized once, plus its guarded metadata
-    pinned on the driver, so queries plan without metadata jobs."""
-    if cache:
-        df = cache_coalesce(df, table_dir).cache()
-        df.count()
+    pinned on the driver, so queries plan without metadata jobs. The cache
+    coalesces to ~64 MiB per partition (floor 8) — per-query task launches
+    dominate small cached tables (25 tasks measured 0.45 s warm p50 where 8
+    measured 0.35 s on the same sf0.1 table) — but never below the scan's
+    natural partitioning, so large tables keep their parallelism."""
+    df = view.scan(spark, table)
+    natural = df.rdd.getNumPartitions()
+    target = min(natural, max(8, -(-view.bytes(table) // (64 << 20))))
+    df = (df.coalesce(target) if target < natural else df).cache()
+    df.count()
     return BlockTable(df, _guarded_meta(df, cols))
 
 
@@ -224,60 +233,21 @@ def _result_frame(spark: SparkSession, hits: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(hits, RESULT_SCHEMA)
 
 
-def _head_snapshot(index: Index) -> dict | None:
-    """The HEAD snapshot record, read once per cold query; None for an
-    index without a snapshot log."""
-    try:
-        return load_snapshot(index.path)
-    except (OSError, ValueError):
-        return None
-
-
-def _snapshot_files(snap: dict | None, index_path: str, table: str,
-                    shards: set[int] | None = None,
-                    ) -> list[tuple[str, int]] | None:
-    """(path, bytes) of ``table``'s data files in snapshot ``snap``, only
-    those under the ``shard=`` partitions ``shards`` when given; None when
-    the snapshot does not record the table."""
-    tab = (snap or {}).get("tables", {}).get(table)
-    if tab is None:
-        return None
-    tdir = os.path.join(index_path, table)
-    dirs = None if shards is None else {f"shard={s}" for s in shards}
-    return [(os.path.join(tdir, f["path"]), int(f["bytes"]))
-            for f in tab["files"]
-            if dirs is None or dirs & set(f["path"].split(os.sep)[:-1])]
-
-
-def _read_local(files: list[str], term_ids: list[int] | None) -> pd.DataFrame:
-    """The ``_LOCAL_COLS`` of ``files``' block rows, read with pyarrow on
-    the driver, only the ``term_ids`` rows when given (the filter skips row
-    groups by their term_id statistics). No Spark job."""
-    if not files:
-        return pd.DataFrame({c: [] for c in _LOCAL_COLS})
-    flt = None if term_ids is None else pads.field("term_id").isin(term_ids)
-    return (pads.dataset(files, format="parquet")
-            .to_table(columns=list(_LOCAL_COLS), filter=flt).to_pandas())
-
-
-def _local_blocks(index: Index, snap: dict | None, table: str,
-                  term_ids: list[int], num_shards: int) -> pd.DataFrame | None:
+def _local_blocks(view: SnapshotView, table: str, term_ids: list[int],
+                  num_shards: int) -> pd.DataFrame | None:
     """The query terms' block rows of ``table``, read on the driver from
-    the files of snapshot ``snap``. None — the caller then serves the query
-    distributed — when the snapshot does not record the table, when those
-    files total more than ``_LOCAL_MAX_BYTES``, when the tombstones are too
-    many for the driver, or when the read raises OSError (a concurrent
-    overwrite removed a file the snapshot lists). Every cold entry point
-    falls back here, at this one site."""
-    if snap is None or not deletes_small(index):
+    the files of ``view``. None — the caller then serves the query
+    distributed — when those files total more than ``_LOCAL_MAX_BYTES``,
+    when the tombstones are too many for the driver, or when the read
+    raises OSError even after the view's directory fallback. Every cold
+    entry point falls back here, at this one site."""
+    if not deletes_small(view):
         return None
-    shards = (None if table == "postings_doc"
-              else {_shard_of(t, num_shards) for t in term_ids})
-    files = _snapshot_files(snap, index.path, table, shards)
-    if files is None or sum(b for _, b in files) > _LOCAL_MAX_BYTES:
+    shards = None if table == "postings_doc" else _shards_of(term_ids, num_shards)
+    if view.bytes(table, shards) > _LOCAL_MAX_BYTES:
         return None
     try:
-        return _read_local([p for p, _ in files], term_ids)
+        return view.read(table, _LOCAL_COLS, shards, term_ids)
     except OSError:
         return None
 
@@ -372,7 +342,7 @@ def search(
     the historical ValueError stands.
 
     A cold call with a finite ``k`` whose query-term shards total at most
-    ``_LOCAL_MAX_BYTES`` in the pinned snapshot runs no Spark job: it reads
+    ``_LOCAL_MAX_BYTES`` in its snapshot view runs no Spark job: it reads
     those rows with pyarrow and ranks them on the driver with one WAND
     kernel pass, with the groupBy's semantics (per-doc float64 sum,
     ``n_terms``, AND keeps docs that match every term), and returns a
@@ -399,29 +369,32 @@ def search(
 
 def _search_terms(spark: SparkSession, index: Index, term_ids: list[int],
                   mode: str, k: int | None, cfg: EngineConfig,
-                  _table: BlockTable | None) -> pd.DataFrame | DataFrame:
+                  _table: BlockTable | None,
+                  view: SnapshotView | None = None) -> pd.DataFrame | DataFrame:
     """``search`` past query parsing: the ranked hits as a pandas frame
-    when the cold query ran on the driver, else the distributed plan."""
-    snap = _head_snapshot(index) if _table is None else None
-    if k is not None:
-        rows = _local_blocks(index, snap, "postings", term_ids, cfg.num_shards)
+    when the cold query ran on the driver, else the distributed plan. The
+    blocks come from ``_table`` or from ``view`` (a fresh HEAD view when
+    None), the tombstones from ``view``."""
+    view = view or SnapshotView.head(index.path)
+    if _table is None and k is not None:
+        rows = _local_blocks(view, "postings", term_ids, cfg.num_shards)
         if rows is not None:
-            return _rank_local(spark, index, rows, term_ids, mode, k)
-    src = _table.scan if _table is not None else index.postings(spark)
+            return _rank_local(spark, view, rows, term_ids, mode, k)
+    src = _table.scan if _table is not None else view.scan(
+        spark, "postings", _shards_of(term_ids, cfg.num_shards))
     blocks = _term_rows(src, term_ids, cfg.num_shards)
 
     meta = None
     if mode == "and" and len(term_ids) > 1:
         if _table is not None and _table.meta is not None:
             meta = _table.meta[_table.meta["term_id"].isin(term_ids)]
-        elif _postings_bytes(index, _snapshot_files(
-                snap, index.path, "postings")) >= _PRUNE_MIN_BYTES:
+        elif view.bytes("postings") >= _PRUNE_MIN_BYTES:
             # metadata-only read (column pruning keeps payloads out of this
             # scan). Two-sided gate: below _PRUNE_MIN_BYTES on disk the
             # per-query metadata round-trip (one Spark job) costs more than
             # decoding the query terms' blocks outright, so the cold path
             # skips straight to the decode (the size comes from the
-            # snapshot's manifest, no job); past the guard, a pathological
+            # snapshot view's record, no job); past the guard, a pathological
             # query over huge lists also skips the prune (the decode stays
             # exact either way)
             meta = _guarded_meta(blocks, _PRUNE_COLS)
@@ -432,10 +405,10 @@ def _search_terms(spark: SparkSession, index: Index, term_ids: list[int],
             return _empty_result(spark)
         if len(kept) < len(meta):
             blocks = _semi_join_blocks(spark, blocks, kept)
-    return _rank_distributed(spark, index, blocks, len(term_ids), mode, k)
+    return _rank_distributed(spark, view, blocks, len(term_ids), mode, k)
 
 
-def _rank_distributed(spark: SparkSession, index: Index, blocks: DataFrame,
+def _rank_distributed(spark: SparkSession, view: SnapshotView, blocks: DataFrame,
                       n_query_terms: int, mode: str, k: int | None) -> DataFrame:
     """The distributed ranking of the query terms' block rows: decode,
     per-doc float64 sum and term count, AND keeps docs that match every
@@ -451,23 +424,15 @@ def _rank_distributed(spark: SparkSession, index: Index, blocks: DataFrame,
     if mode == "and":
         agg = agg.where(F.col("n_terms") == n_query_terms)
     agg = agg.withColumn("n_terms", F.col("n_terms").cast("int"))
-    live = filter_deleted(spark, index, agg)
+    live = filter_deleted(spark, view, agg)
     return live if k is None else top_k(live, k)
 
 
-def _postings_bytes(index: Index, files: list[tuple[str, int]] | None) -> int:
-    """The term layout's bytes on disk: the sum over its snapshot ``files``,
-    or a directory walk for an index without a snapshot record."""
-    if files is None:
-        return parquet_dir_bytes(index.postings_path)
-    return sum(b for _, b in files)
-
-
-def _rank_local(spark: SparkSession, index: Index, rows: pd.DataFrame,
+def _rank_local(spark: SparkSession, view: SnapshotView, rows: pd.DataFrame,
                 term_ids: list[int], mode: str, k: int) -> pd.DataFrame:
     """A cold query over its terms' block rows, on the driver: one kernel
-    pass with the resolved tombstone set inside, then the top k."""
-    deleted = effective_deletes(spark, index)
+    pass with the view's resolved tombstone set inside, then the top k."""
+    deleted = effective_deletes(spark, view)
     return _topk_frame(*_wand(_term_map(rows), term_ids, mode, k, deleted), k)
 
 
@@ -623,34 +588,23 @@ def choose_engine(query: str, mode: str, cfg: EngineConfig) -> str:
 
 def _collect_topk(spark: SparkSession, index: Index, query: str, mode: str,
                   k: int, cfg: EngineConfig | None,
-                  _table: BlockTable | None = None) -> list[tuple[int, float]]:
+                  _table: BlockTable | None = None,
+                  view: SnapshotView | None = None) -> list[tuple[int, float]]:
     """Exact top-k through ``search()``'s path, collected — the shared
     fallback every driver-volume guard routes to (same result contract:
     score desc, unsigned doc asc). A cold query below the local guard
     returns the driver-ranked pairs without building a DataFrame.
     ``_table`` carries a warm engine's cached scan so a guard-tripped query
-    still serves from executor memory instead of a cold parquet read."""
+    still serves from executor memory instead of a cold parquet read;
+    ``view`` is the caller's snapshot view (a fresh HEAD view when None)."""
     cfg = cfg or index.config()
     term_ids = _query_term_ids(query, mode, cfg)
     if not term_ids:
         return []
-    hits = _search_terms(spark, index, term_ids, mode, k, cfg, _table)
+    hits = _search_terms(spark, index, term_ids, mode, k, cfg, _table, view)
     if isinstance(hits, pd.DataFrame):
         return list(zip(hits["doc_id"].tolist(), hits["score"].tolist()))
     return [(int(row["doc_id"]), float(row["score"])) for row in hits.collect()]
-
-
-def cache_coalesce(df: DataFrame, table_dir: str) -> DataFrame:
-    """Right-size a scan about to be pinned for warm serving: coalesce down
-    to ~64 MiB-per-partition (floor 8) when the table is small — per-query
-    task-launch overhead dominates small cached tables (25 tasks measured
-    0.45 s warm p50 where 8 measured 0.35 s on the same sf0.1 table) — but
-    NEVER below the scan's natural partitioning when the data is large, so
-    pinned partitions stay executor-sized and parallelism is preserved at
-    scale."""
-    natural = df.rdd.getNumPartitions()
-    target = min(natural, max(8, -(-parquet_dir_bytes(table_dir) // (64 << 20))))
-    return df.coalesce(target) if target < natural else df
 
 
 class QueryEngine:
@@ -658,17 +612,19 @@ class QueryEngine:
     the block METADATA on the driver (one-time), so each query plans its
     pruning without extra jobs and decodes from cache — the distributed
     analogue of the reference's RAM-cached readers (index_reader.cpp:59-89)
-    for posting lists too large for one node."""
+    for posting lists too large for one node. Each query takes its
+    tombstones from a fresh HEAD view, so a doc deleted after the engine
+    started stays hidden."""
 
     def __init__(self, spark: SparkSession, index: Index,
-                 cfg: EngineConfig | None = None, cache: bool = True):
+                 cfg: EngineConfig | None = None):
         self.spark = spark
         self.index = index
         self.cfg = cfg or index.config()
         # past the metadata guard nothing is pinned on the driver (meta is
         # None), and each query plans as a cold one over the cached scan
         self.blocks, self.meta = _pin_table(
-            index.postings(spark), index.postings_path, _PRUNE_COLS, cache)
+            spark, SnapshotView.head(index.path), "postings", _PRUNE_COLS)
 
     def search(self, query: str, mode: str = "and",
                k: int | None = 10) -> DataFrame:
@@ -825,11 +781,10 @@ class LocalIndex:
 
     def __init__(self, spark: SparkSession, index: Index, cfg: EngineConfig | None = None):
         self.cfg = cfg or index.config()
-        # the HEAD snapshot's manifest sizes and lists the files, and pyarrow
-        # loads them (no Spark job); an index without a snapshot record, or
-        # a file removed since HEAD was read, takes the Spark read instead
-        files = _snapshot_files(_head_snapshot(index), index.path, "postings")
-        total = _postings_bytes(index, files)
+        # the HEAD view sizes and lists the files, and pyarrow loads them
+        # (no Spark job)
+        view = SnapshotView.head(index.path)
+        total = view.bytes("postings")
         if total > self.MAX_PIN_BYTES:
             raise ValueError(
                 f"postings are {total >> 20} MiB on disk — too large to pin "
@@ -837,16 +792,8 @@ class LocalIndex:
                 f"this index through QueryEngine / DocPartEngine / search() "
                 f"instead."
             )
-        self.deleted = effective_deletes(spark, index)
-        pdf = None
-        if files is not None:
-            try:
-                pdf = _read_local([p for p, _ in files], None)
-            except OSError:
-                pass
-        if pdf is None:
-            pdf = index.postings(spark).select(*_LOCAL_COLS).toPandas()
-        self.terms = _term_map(pdf)
+        self.deleted = effective_deletes(spark, view)
+        self.terms = _term_map(view.read("postings", _LOCAL_COLS))
 
     def search(self, query: str, mode: str = "and", k: int = 10) -> list[tuple[int, float]]:
         tids = _query_term_ids(query, mode, self.cfg)

@@ -6,21 +6,23 @@ the part of the Iceberg model the engine actually relies on — immutable
 snapshots of explicit file manifests with an atomically-swapped HEAD
 pointer — directly on the parquet layout:
 
-- a *snapshot* is a JSON manifest listing, per table (postings, doc_lengths,
-  term_stats, term_doc), the exact data files (path, size) plus a parent
-  pointer, timestamp and operation summary — Iceberg's snapshot + manifest
-  list collapsed into one small file (the index has thousands of files, not
-  millions);
+- a *snapshot* is a JSON manifest listing, per table (``TABLES``: the three
+  block layouts, doc_lengths, term_stats, term_doc and the tombstones), the
+  exact data files (path, size) plus a parent pointer, timestamp and
+  operation summary — Iceberg's snapshot + manifest list collapsed into one
+  small file (the index has thousands of files, not millions);
 - ``HEAD`` is flipped via tmp+rename, so commits are atomic and a crashed
   writer leaves the previous snapshot intact;
-- readers pin a snapshot's explicit file list (``spark.read.parquet(*files)``)
-  instead of listing directories, so an in-flight rebuild/compaction can
-  never tear a read — snapshot isolation — and any older snapshot remains
-  queryable (time travel) until its files are garbage-collected.
+- readers take a table's files from one record (``SnapshotView``), never
+  from a directory listing, as Delta Lake's and Iceberg's readers take
+  theirs from the log, so a commit landing mid-query cannot tear a read.
+  Writers keep reading the directories they write.
 
-The swap-based rebuild (plans/merge.py, plans/delete.py) plus this log give
-readers the same guarantees an Iceberg catalog would: monotonically
-advancing, never-torn table state with history.
+Time travel is partial: the writers still remove superseded files (a
+directory swap, or a partial refresh's in-place partition overwrite), so
+an older snapshot reads only until one of them rewrites its files; it then
+raises FileNotFoundError. Keeping them until ``expire_snapshots`` needs
+writers that only add files (ROADMAP D10's writer half).
 """
 
 from __future__ import annotations
@@ -30,12 +32,28 @@ import os
 import time
 import uuid
 
+import pandas as pd
+import pyarrow.dataset as pads
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from alexandria_spark.plans.build import BLOCK_TABLE_PARTITIONS, block_read_schema
 
 TABLES = ("postings", "postings_doc", "postings_impact",
-          "doc_lengths", "term_stats", "term_doc")
+          "doc_lengths", "term_stats", "term_doc", "deletes")
+
+# the actionable errors of a query against a derived layout never built
+_NO_LAYOUT = {
+    "postings_impact": (
+        "no impact-ordered layout under {path!r}/postings_impact — derive "
+        "one with build_impact_postings (CLI: maintain_submit.py --op "
+        "derive-impact), or query the doc-sorted layout with engine "
+        "dist/bmw/local"),
+    "postings_doc": (
+        "no doc-partitioned layout under {table_dir!r} — build one with "
+        "build_docpart_index (CLI: build_submit.py --layout docpart|both), "
+        "or query the term layout with engine dist/bmw"),
+}
 
 
 def _snap_dir(index_path: str) -> str:
@@ -43,26 +61,25 @@ def _snap_dir(index_path: str) -> str:
 
 
 def _data_files(table_dir: str) -> list[dict]:
+    """The parquet files a Spark read of ``table_dir`` sees, in a fixed
+    order: names starting with "_" or "." are skipped (staging dirs, the
+    resolved tombstone set, temporary files), as Spark skips them."""
     out = []
-    for root, _dirs, files in os.walk(table_dir):
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
         for f in sorted(files):
-            if f.endswith(".parquet"):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
                 p = os.path.join(root, f)
-                out.append({
-                    "path": os.path.relpath(p, table_dir),
-                    "bytes": os.path.getsize(p),
-                })
+                try:
+                    size = os.path.getsize(p)
+                except FileNotFoundError:  # removed while listed
+                    continue
+                out.append({"path": os.path.relpath(p, table_dir), "bytes": size})
     return out
 
 
-def commit_snapshot(index_path: str, operation: str,
-                    summary: dict | None = None) -> dict:
-    """Record the current state of every index table as a new snapshot and
-    atomically advance HEAD. Returns the snapshot record."""
-    sdir = _snap_dir(index_path)
-    os.makedirs(sdir, exist_ok=True)
-    parent = head_snapshot_id(index_path)
-    snap_id = uuid.uuid4().hex[:16]
+def _tables(index_path: str) -> dict:
+    """Every index table's data files as they are on disk now."""
     tables = {}
     for t in TABLES:
         tdir = os.path.join(index_path, t)
@@ -73,13 +90,24 @@ def commit_snapshot(index_path: str, operation: str,
                 "n_files": len(files),
                 "bytes": sum(f["bytes"] for f in files),
             }
+    return tables
+
+
+def commit_snapshot(index_path: str, operation: str,
+                    summary: dict | None = None) -> dict:
+    """Record the current state of every index table as a new snapshot and
+    atomically advance HEAD. Returns the snapshot record."""
+    sdir = _snap_dir(index_path)
+    os.makedirs(sdir, exist_ok=True)
+    parent = head_snapshot_id(index_path)
+    snap_id = uuid.uuid4().hex[:16]
     rec = {
         "snapshot_id": snap_id,
         "parent_id": parent,
         "timestamp": time.time(),
         "operation": operation,
         "summary": summary or {},
-        "tables": tables,
+        "tables": _tables(index_path),
     }
     tmp = os.path.join(sdir, f".tmp-{snap_id}")
     with open(tmp, "w") as fh:
@@ -124,27 +152,126 @@ def history(index_path: str) -> list[dict]:
     return sorted(recs, key=lambda r: r["timestamp"])
 
 
+def _read_files(files: list[str], columns, term_ids: list[int] | None) -> pd.DataFrame:
+    """``columns`` of ``files`` read with pyarrow on the driver, only the
+    ``term_ids`` rows when given (row groups skip by their statistics)."""
+    if not files:
+        return pd.DataFrame({c: [] for c in columns})
+    flt = None if term_ids is None else pads.field("term_id").isin(term_ids)
+    return (pads.dataset(files, format="parquet")
+            .to_table(columns=list(columns), filter=flt).to_pandas())
+
+
+class SnapshotView:
+    """One snapshot record, as every query-side read takes it: file lists
+    and sizes, pyarrow reads, Spark scans and (plans/delete.py) the
+    resolved tombstone set. ``head`` holds HEAD's record, or builds one
+    with ``commit_snapshot``'s walk when the index has no snapshot log.
+
+    The one directory fallback: a HEAD view whose record lacks a table on
+    disk, or whose read hits a missing file (a writer's swap or overwrite
+    removed it), rebuilds itself once from the walk. A view pinned to an
+    explicit snapshot never falls back: it raises FileNotFoundError."""
+
+    def __init__(self, index_path: str, rec: dict | None, pinned: bool = False):
+        self.path, self.pinned = index_path, pinned
+        # a walked record has no snapshot id
+        self.rec = rec or {"snapshot_id": None, "tables": _tables(index_path)}
+
+    @classmethod
+    def head(cls, index_path: str) -> SnapshotView:
+        try:
+            return cls(index_path, load_snapshot(index_path))
+        except (OSError, ValueError):
+            return cls(index_path, None)
+
+    def _fallback(self) -> bool:
+        """Rebuild a HEAD view from the walk, once; False when it may not."""
+        if self.pinned or self.rec["snapshot_id"] is None:
+            return False
+        self.rec = SnapshotView(self.path, None).rec
+        return True
+
+    def _missing(self, err: Exception) -> None:
+        """A file the record lists is gone: fall back, or raise."""
+        if self.pinned:
+            raise FileNotFoundError(
+                f"snapshot {self.rec['snapshot_id']} of {self.path!r} lists a "
+                f"file that no longer exists: {err}") from err
+        if not self._fallback():
+            raise err
+
+    def entries(self, table: str) -> list[dict] | None:
+        """The record's file entries of ``table``; None without it."""
+        tab = self.rec["tables"].get(table)
+        if (tab is None and os.path.isdir(os.path.join(self.path, table))
+                and self._fallback()):
+            tab = self.rec["tables"].get(table)
+        return None if tab is None else tab["files"]
+
+    def files(self, table: str, shards=None) -> list[tuple[str, int]]:
+        """(path, bytes) of ``table``'s files, only those under ``shard=``
+        dirs ``shards`` when given; a never-built derived layout raises
+        its actionable FileNotFoundError."""
+        tdir = os.path.join(self.path, table)
+        entries = self.entries(table)
+        if entries is None:
+            if table in _NO_LAYOUT:
+                raise FileNotFoundError(
+                    _NO_LAYOUT[table].format(path=self.path, table_dir=tdir))
+            return []
+        dirs = None if shards is None else {f"shard={s}" for s in shards}
+        return [(os.path.join(tdir, f["path"]), int(f["bytes"]))
+                for f in entries
+                if dirs is None or dirs & set(f["path"].split(os.sep)[:-1])]
+
+    def bytes(self, table: str, shards=None) -> int:
+        return sum(b for _, b in self.files(table, shards))
+
+    def read(self, table: str, columns, shards=None,
+             term_ids: list[int] | None = None) -> pd.DataFrame:
+        """``_read_files`` of ``table``'s files."""
+        while True:
+            try:
+                return _read_files([p for p, _ in self.files(table, shards)],
+                                   columns, term_ids)
+            except OSError as err:
+                self._missing(err)
+
+    def scan(self, spark: SparkSession, table: str, shards=None,
+             schema=None) -> DataFrame:
+        """A Spark scan of ``table``'s files (of ``shards`` when given),
+        partition columns recovered with basePath; block tables read with
+        their explicit schema, others with ``schema`` when given (no
+        inference job either way)."""
+        if schema is None and table in BLOCK_TABLE_PARTITIONS:
+            schema = block_read_schema(table)
+        while True:
+            files = [p for p, _ in self.files(table, shards)]
+            if not files:
+                if schema is None:
+                    raise ValueError(f"snapshot has no files for table {table!r}")
+                return spark.createDataFrame([], schema)
+            reader = spark.read.option("basePath", os.path.join(self.path, table))
+            if schema is not None:
+                reader = reader.schema(schema)
+            try:
+                return reader.parquet(*files)
+            except AnalysisException as err:
+                if err.getCondition() != "PATH_NOT_FOUND":
+                    raise
+                self._missing(err)
+
+
 def read_table(spark: SparkSession, index_path: str, table: str,
                snapshot_id: str | None = None) -> DataFrame:
     """Read a table pinned to a snapshot's exact file manifest (HEAD by
     default) — never a live directory listing, so concurrent rebuilds
-    cannot tear the read and old snapshots stay queryable (time travel).
-
-    Partition columns (wave=/shard=/bucket= path segments) are recovered
-    with basePath so the frame matches a directory read of that state;
-    block tables read with their explicit schema (no inference job).
-    """
+    cannot tear the read."""
+    if snapshot_id is None:
+        return SnapshotView.head(index_path).scan(spark, table)
     rec = load_snapshot(index_path, snapshot_id)
-    if rec is None or table not in rec["tables"]:
-        raise ValueError(f"no snapshot data for table {table!r}")
-    tdir = os.path.join(index_path, table)
-    files = [os.path.join(tdir, f["path"]) for f in rec["tables"][table]["files"]]
-    if not files:
-        raise ValueError(f"snapshot has no files for table {table!r}")
-    reader = spark.read.option("basePath", tdir)
-    if table in BLOCK_TABLE_PARTITIONS:
-        reader = reader.schema(block_read_schema(table))
-    return reader.parquet(*files)
+    return SnapshotView(index_path, rec, pinned=True).scan(spark, table)
 
 
 def _dir_age_sec(path: str) -> float:
@@ -168,17 +295,17 @@ def expire_snapshots(index_path: str, keep_last: int = 3,
     ``keep_last`` snapshots (always including HEAD), drop the older
     snapshot records, and delete every data file that (a) is referenced by
     at least one expired snapshot and (b) is referenced by NO retained
-    snapshot. Files unknown to any snapshot are never touched, so at a real
-    refresh cadence the warehouse stops growing without bound while
-    retained history remains fully queryable.
+    snapshot. Files unknown to any snapshot are never touched.
 
-    Note on reachability: ``commit_snapshot`` manifests a table's whole
-    directory and rebuilds retire old files via atomic dir swap, so in
-    normal operation a file on disk is always referenced by the latest
-    snapshot — the dead-file scan is defense in depth. The recurring
-    garbage this call actually reclaims is (a) expired snapshot records and
-    (b) crash leftovers: ``<table>_rebuilding`` staging dirs and
-    ``<table>_old`` swap remnants (after ``recover_swap`` adjudicates them).
+    Note on reachability: today's writers remove the files they supersede
+    themselves (a dir swap, a partial refresh's partition overwrite,
+    compact's tombstone rmtree), so the files only an expired snapshot
+    lists are usually gone already — as is time travel to it (module
+    docstring) — and the dead-file scan rarely finds one; it becomes the
+    one deleter once writers only add files. What this call reclaims today
+    is (a) expired snapshot records and (b) crash leftovers:
+    ``<table>_rebuilding`` staging dirs and ``<table>_old`` swap remnants
+    (after ``recover_swap`` adjudicates them).
 
     ``_rebuilding`` staging dirs are AGE-GATED (Iceberg's
     ``remove_orphan_files`` does the same): deleted only when nothing

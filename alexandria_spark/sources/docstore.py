@@ -544,8 +544,8 @@ def load_doc_store(spark: SparkSession, name: str = "ax_doc_store") -> DataFrame
     Streaming appends land via a CLONED microbatch session whose cache
     invalidation does not propagate to this one, so a serve composed of
     several actions can never mix postings-snapshot candidates with a
-    newer store state mid-pipeline (the serving analogue of the impact
-    cold path's manifest pin, plans/impact.py _pinned_scan); re-calling
+    newer store state mid-pipeline (the serving analogue of a cold query's
+    one snapshot view, plans/snapshots.py SnapshotView); re-calling
     load_doc_store is the explicit act that advances the pin. In a fresh
     session over the in-memory catalog, an orphaned warehouse store is
     re-adopted first (module docstring)."""

@@ -108,8 +108,10 @@ def buildprof(cores: int, sf_dir: str) -> None:
 # the driver-time layers of a cold call on the local side, and the
 # functions whose wall time each one sums, per module that calls them
 _LOCAL_LAYERS = {
-    "read": (("query", "_read_local"),),
-    "tombstones": (("query", "effective_deletes"), ("docpart", "effective_deletes")),
+    "view": (("snapshots", "load_snapshot"),),
+    "read": (("snapshots", "_read_files"),),
+    "tombstones": (("delete", "_state"), ("delete", "_load_resolved"),
+                   ("delete", "_resolve")),
     "kernel": (("query", "_term_map"), ("query", "_wand"),
                ("docpart", "_term_map"), ("docpart", "_wand")),
     "frame": (("query", "_result_frame"), ("docpart", "_result_frame")),
@@ -147,9 +149,10 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
     its default and at 0 (the distributed side), and report the bytes of
     the files each query's local read would take per table: fewer shards
     put the term-layout shards past the guard. On the local side each
-    query also reports the median split of its driver time: the pyarrow
-    read, the tombstone set, the kernel, the result frame, the collect and
-    the rest (planning, snapshot and manifest reads)."""
+    query also reports the median split of its driver time: the snapshot
+    view (HEAD and its record), the pyarrow read, the tombstone set, the
+    kernel, the result frame, the collect and the rest (planning). The
+    warm engines report their init time."""
     from alexandria_spark.config import EngineConfig
     from alexandria_spark.plans import query as qmod
     from alexandria_spark.plans.build import Index, build_index
@@ -164,7 +167,8 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
         impact_or_topk,
         impact_single_topk,
     )
-    from alexandria_spark.plans.query import QueryEngine, search, search_bmw
+    from alexandria_spark.plans.query import LocalIndex, QueryEngine, search, search_bmw
+    from alexandria_spark.plans.snapshots import SnapshotView
     from alexandria_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -232,10 +236,8 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
     def local_bytes(index, table, q):
         tids = qmod._query_term_ids(q, "or", cfg)
         shards = (None if table == "postings_doc" else
-                  {qmod._shard_of(t, cfg.num_shards) for t in tids})
-        files = qmod._snapshot_files(qmod._head_snapshot(index), index.path,
-                                     table, shards)
-        return sum(b for _, b in files or [])
+                  qmod._shards_of(tids, cfg.num_shards))
+        return SnapshotView.head(index.path).bytes(table, shards)
 
     out["local_guard_bytes"] = qmod._LOCAL_MAX_BYTES
     out["local_bytes"] = {
@@ -265,12 +267,21 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
         split = None
     qmod._LOCAL_MAX_BYTES = default_guard
 
-    qe = QueryEngine(spark, idx, cfg)
+    init = out["warm_init_sec"] = {}
+
+    def timed_init(name, make):
+        t0 = time.time()
+        engine = make()
+        init[name] = round(time.time() - t0, 4)
+        return engine
+
+    qe = timed_init("query_engine", lambda: QueryEngine(spark, idx, cfg))
     out["dist_warm"] = run("dist", lambda q, m: qe.search(q, m, 10).collect(), QUERIES[:5])
-    dpe = DocPartEngine(spark, dp, cfg)
+    dpe = timed_init("docpart_engine", lambda: DocPartEngine(spark, dp, cfg))
     out["docpart_warm"] = run("docpart", lambda q, m: dpe.search(q, m, 10).collect(),
                               [x for x in QUERIES if "zzz" not in x[1]])
-    ie = ImpactEngine(spark, idx, cfg)
+    timed_init("local_index", lambda: LocalIndex(spark, idx, cfg))
+    ie = timed_init("impact_engine", lambda: ImpactEngine(spark, idx, cfg))
     out["impact_warm"] = run("impact", lambda q, m: ie.or_topk(q, 10),
                              [x for x in QUERIES if x[2] == "or"])
     shutil.rmtree(tmp, ignore_errors=True)

@@ -31,7 +31,7 @@ from alexandria_spark.plans.impact import (
     impact_single_topk,
 )
 from alexandria_spark.plans.query import LocalIndex, QueryEngine, search, search_bmw
-from alexandria_spark.plans.snapshots import read_table
+from alexandria_spark.plans.snapshots import SnapshotView, read_table
 from alexandria_spark.sources.tables import synth_corpus, synth_corpus_pdf
 from tests.oracle import OracleIndex
 
@@ -53,8 +53,9 @@ def test_delete_and_compact(spark, tmp_path):
     assert not set(victims) & set(after)
     local = LocalIndex(spark, idx, CFG)
     assert not set(victims) & {d for d, _ in local.search("def", "or", 5)}
-    qe = QueryEngine(spark, idx, CFG, cache=False)
+    qe = QueryEngine(spark, idx, CFG)
     assert not set(victims) & {r.doc_id for r in qe.search("def", "or", 5).collect()}
+    qe.unpersist()
     from alexandria_spark.plans.query import search_bmw
 
     assert not set(victims) & {d for d, _ in search_bmw(spark, idx, "def", "or", 5, CFG)}
@@ -247,8 +248,10 @@ def test_crash_before_resolve_keeps_doc_hidden(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="injected crash"):
         delete_docs(spark, idx, victims[1:])
     monkeypatch.undo()
-    # the pre-append resolved file is gone, not left claiming to be current
-    assert not os.path.exists(effective_path(idx))
+    # the delete was committed before the crash: the stored set's stamp
+    # names the record before it, so it no longer claims to be current
+    head = SnapshotView.head(idx.path)
+    assert delete_mod._load_resolved(head, delete_mod._state(head)) is None
     assert np.array_equal(effective_deletes(spark, idx), _u64(victims))
     assert all(not (ids & set(victims)) for ids in _served(spark, idx).values())
 
@@ -370,13 +373,13 @@ def test_cold_search_jobs_unchanged_by_tombstones(spark, tmp_path, monkeypatch):
 
 def test_warm_query_engine_plans_without_jobs_or_walks(spark, tmp_path,
                                                        monkeypatch):
-    """A non-cached QueryEngine plans AND and OR queries from its pinned
-    metadata: no Spark job and no postings-size walk before the action,
+    """A QueryEngine plans AND and OR queries from its pinned metadata: no
+    Spark job and no directory walk before the action,
     where a cold AND query past the prune gate launches a metadata job.
     Its answers stay the cold path's."""
     idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
     delete_docs(spark, idx, victims)
-    qe = QueryEngine(spark, idx, CFG, cache=False)
+    qe = QueryEngine(spark, idx, CFG)
     assert qe.meta is not None
     monkeypatch.setattr(query_mod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     monkeypatch.setattr(query_mod, "_PRUNE_MIN_BYTES", 0)
@@ -388,10 +391,11 @@ def test_warm_query_engine_plans_without_jobs_or_walks(spark, tmp_path,
     def no_walk(*_a, **_k):
         raise AssertionError("a warm query walked the postings directory")
 
-    monkeypatch.setattr(query_mod, "parquet_dir_bytes", no_walk)
+    monkeypatch.setattr(os, "walk", no_walk)
     for q, mode in queries:
         planned = []
         assert _jobs(spark, lambda: planned.append(qe.search(q, mode, ALL))) == 0
         got = {r.doc_id for r in planned[0].collect()}
         assert got == exp[q, mode] and got, (q, mode)
         assert not got & set(victims)
+    qe.unpersist()

@@ -145,17 +145,17 @@ def test_cold_query_reads_one_snapshot(spark, idx, monkeypatch):
 
     monkeypatch.setattr(qmod, "_LOCAL_MAX_BYTES", 0)  # the distributed side
     monkeypatch.setattr(imod, "_SEED_ALL_MAX_BLOCKS", 0)  # phase 2 runs
-    real = snapshots.read_table
+    real = snapshots.SnapshotView.scan
     reads = []
 
-    def spy(spark_, path, table, snapshot_id=None):
-        reads.append((table, snapshot_id or snapshots.head_snapshot_id(path)))
-        df = real(spark_, path, table, snapshot_id)
+    def spy(view, spark_, table, shards=None, schema=None):
+        reads.append((table, view.rec["snapshot_id"]))
+        df = real(view, spark_, table, shards, schema)
         if len(reads) == 1:
-            snapshots.commit_snapshot(path, "concurrent_commit")
+            snapshots.commit_snapshot(view.path, "concurrent_commit")
         return df
 
-    monkeypatch.setattr(snapshots, "read_table", spy)
+    monkeypatch.setattr(snapshots.SnapshotView, "scan", spy)
     stats = {}
     got = impact_or_topk(spark, idx, "def return", k=3, cfg=CFG, _stats=stats)
     monkeypatch.undo()

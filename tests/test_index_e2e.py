@@ -275,13 +275,14 @@ def test_query_engine_metadata_guard(spark, synth, monkeypatch):
 
     idx, oracle = synth
     monkeypatch.setattr(qmod, "_META_GUARD_ROWS", 1)
-    qe = qmod.QueryEngine(spark, idx, CFG, cache=False)
+    qe = qmod.QueryEngine(spark, idx, CFG)
     assert qe.meta is None  # guard tripped — nothing pinned on the driver
     for q, mode in QUERIES[:6]:
         exp = oracle.search(q, mode, k=10)
         got = [(r.doc_id, r.score) for r in qe.search(q, mode, k=10).collect()]
         assert [d for d, _ in got] == [d for d, _ in exp], (q, mode)
         assert np.allclose([s for _, s in got], [s for _, s in exp], rtol=1e-9)
+    qe.unpersist()
 
 
 def test_docpart_rank_identity(spark, synth, tmp_path_factory):

@@ -10,20 +10,23 @@ import pytest
 
 from alexandria_spark.config import EngineConfig
 from alexandria_spark.plans import query as query_mod
+from alexandria_spark.plans import snapshots as snapshots_mod
 from alexandria_spark.plans.build import build_index, with_doc_ids
 from alexandria_spark.plans.delete import delete_docs
 from alexandria_spark.plans.docpart import (
+    DocPartEngine,
     DocPartitionedIndex,
     rebuild_docpart_from_postings,
     search_docpart,
 )
 from alexandria_spark.plans.impact import (
+    ImpactEngine,
     build_impact_postings,
     impact_or_topk,
     impact_single_topk,
 )
-from alexandria_spark.plans.query import LocalIndex, search, search_bmw
-from alexandria_spark.plans.snapshots import commit_snapshot, load_snapshot
+from alexandria_spark.plans.query import LocalIndex, QueryEngine, search, search_bmw
+from alexandria_spark.plans.snapshots import commit_snapshot, load_snapshot, read_table
 from alexandria_spark.sources.tables import synth_corpus
 
 CFG = EngineConfig(num_shards=8, block_size=8, shuffle_partitions=8,
@@ -148,7 +151,7 @@ def test_cold_and_and_local_index_never_walk_the_directory(spark, tombstoned,
     def no_walk(*_a, **_k):
         raise AssertionError("a cold query walked the postings directory")
 
-    monkeypatch.setattr(query_mod, "parquet_dir_bytes", no_walk)
+    monkeypatch.setattr(os, "walk", no_walk)
     for local_max in (query_mod._LOCAL_MAX_BYTES, 0):
         for prune_min in (query_mod._PRUNE_MIN_BYTES, 0):
             with monkeypatch.context() as m:
@@ -186,7 +189,7 @@ def test_local_read_opens_exactly_the_resolved_snapshot(spark, tmp_path,
     tids = query_mod._query_term_ids("def return", "or", CFG)
     shards = {query_mod._shard_of(t, CFG.num_shards) for t in tids}
 
-    real_load, real_read = query_mod.load_snapshot, query_mod._read_local
+    real_load, real_read = snapshots_mod.load_snapshot, snapshots_mod._read_files
     resolved, opened, added = [], [], []
 
     def racing_load(index_path, snapshot_id=None):
@@ -201,12 +204,12 @@ def test_local_read_opens_exactly_the_resolved_snapshot(spark, tmp_path,
         commit_snapshot(index_path, "racing_append")
         return rec
 
-    def spy_read(files, term_ids):
+    def spy_read(files, columns, term_ids):
         opened.append({os.path.relpath(f, path) for f in files})
-        return real_read(files, term_ids)
+        return real_read(files, columns, term_ids)
 
-    monkeypatch.setattr(query_mod, "load_snapshot", racing_load)
-    monkeypatch.setattr(query_mod, "_read_local", spy_read)
+    monkeypatch.setattr(snapshots_mod, "load_snapshot", racing_load)
+    monkeypatch.setattr(snapshots_mod, "_read_files", spy_read)
     for call, table in zip(calls, ("postings", "postings_doc", "postings_impact")):
         resolved.clear()
         opened.clear()
@@ -228,22 +231,82 @@ def test_local_read_opens_exactly_the_resolved_snapshot(spark, tmp_path,
 
 
 def test_local_read_error_serves_distributed(spark, tombstoned, monkeypatch):
-    """A local read that raises FileNotFoundError (a file the snapshot
-    lists was removed by a concurrent overwrite) serves the distributed
-    answer; LocalIndex takes its Spark read."""
+    """A local read that raises FileNotFoundError even after the view's
+    directory fallback serves the distributed answer; a LocalIndex whose
+    first read fails loads from the view's fallback."""
     idx, _ = tombstoned
     with monkeypatch.context() as m:
         m.setattr(query_mod, "_LOCAL_MAX_BYTES", 0)
         dist = {c: _call(spark, idx, *c) for c in CALLS}
     pinned = LocalIndex(spark, idx, CFG).search("def return", "or", K)
+    real_read = snapshots_mod._read_files
 
-    def vanished(files, _term_ids):
+    def vanished(files, _columns, _term_ids):
         raise FileNotFoundError(files[0] if files else "no file")
 
-    monkeypatch.setattr(query_mod, "_read_local", vanished)
+    monkeypatch.setattr(snapshots_mod, "_read_files", vanished)
     for call in CALLS:
         got = []
         jobs = _jobs(spark, lambda c=call: got.append(_call(spark, idx, *c)))
         assert jobs > 0, call
         _assert_same(got[0], dist[call], call)
+    failed = []
+
+    def vanished_once(files, columns, term_ids):
+        if not failed:
+            failed.append(files)
+            vanished(files, columns, term_ids)
+        return real_read(files, columns, term_ids)
+
+    monkeypatch.setattr(snapshots_mod, "_read_files", vanished_once)
     assert LocalIndex(spark, idx, CFG).search("def return", "or", K) == pinned
+    assert failed
+
+
+def test_moved_block_files_serve_from_the_directory_fallback(spark, tmp_path,
+                                                             monkeypatch):
+    """A writer's swap or overwrite renames every block file HEAD lists.
+    Every cold entry point, on both sides of the local guard, and every
+    warm engine built afterwards serve the answer from before the rename,
+    through the HEAD view's one directory fallback. A read pinned to an
+    explicit older snapshot raises FileNotFoundError instead."""
+    idx, _ = _index(spark, str(tmp_path / "idx"), 97)
+    expected = {c: _call(spark, idx, *c) for c in CALLS}
+    old = load_snapshot(idx.path)
+    for table in ("postings", "postings_impact", "postings_doc"):
+        for f in old["tables"][table]["files"]:
+            src = os.path.join(idx.path, table, f["path"])
+            os.replace(src, src.replace(".parquet", "-moved.parquet"))
+    for local_max in (query_mod._LOCAL_MAX_BYTES, 0):
+        with monkeypatch.context() as m:
+            m.setattr(query_mod, "_LOCAL_MAX_BYTES", local_max)
+            for call in CALLS:
+                _assert_same(_call(spark, idx, *call), expected[call],
+                             (call, local_max))
+
+    def rows(df):
+        return [(int(r.doc_id), float(r.score)) for r in df.collect()]
+
+    engines = (QueryEngine(spark, idx, CFG),
+               DocPartEngine(spark, DocPartitionedIndex(idx.path), CFG),
+               ImpactEngine(spark, idx, CFG))
+    qe, dpe, ie = engines
+    local = LocalIndex(spark, idx, CFG)
+    try:
+        for q, mode in (("def return", "and"), ("def return", "or")):
+            _assert_same(rows(qe.search(q, mode, K)), expected["search", q, mode], q)
+            _assert_same(local.search(q, mode, K), expected["search", q, mode], q)
+            _assert_same(rows(dpe.search(q, mode, K)),
+                         expected["search_docpart", q, mode], q)
+        _assert_same(ie.or_topk("def return", K),
+                     expected["impact_or_topk", "def return", "or"], "impact")
+        _assert_same(ie.single_topk("def", K),
+                     expected["impact_single_topk", "def", "or"], "single")
+    finally:
+        for engine in engines:
+            engine.unpersist()
+
+    commit_snapshot(idx.path, "after_move")
+    assert read_table(spark, idx.path, "postings").count() > 0
+    with pytest.raises(FileNotFoundError, match=old["snapshot_id"]):
+        read_table(spark, idx.path, "postings", old["snapshot_id"])

@@ -4,6 +4,7 @@
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from alexandria_spark.config import EngineConfig
 from alexandria_spark.plans.build import build_index, with_doc_ids
@@ -68,7 +69,8 @@ def test_rebuild_advances_history(spark, tmp_path):
     delete_docs(spark, idx, victims)
     compact(spark, idx, CFG)
     ops = [r["operation"] for r in history(idx.path)]
-    assert ops == ["build", "rebuild"]
+    assert ops == ["build", "delete", "rebuild", "compact"]
+    assert "deletes" not in load_snapshot(idx.path)["tables"]
     # HEAD-pinned postings reflect the compaction (victims gone)
     from alexandria_spark.plans.blocks import decode_blocks
 
@@ -156,3 +158,31 @@ def test_expire_snapshots_gc(spark, tmp_path):
 
     # idempotent: nothing more to delete on a second run
     assert expire_snapshots(idx.path, keep_last=1)["deleted_files"] == 0
+
+
+@pytest.mark.xfail(strict=True, raises=FileNotFoundError,
+                   reason="a partial refresh overwrites the partitions it "
+                          "touches in place, removing files that older "
+                          "snapshots list (ROADMAP D10, writer half)")
+def test_partial_refresh_keeps_older_snapshot_readable(spark, tmp_path):
+    """Time travel across a partial refresh: the snapshot taken before it
+    still reads its own postings afterwards."""
+    from alexandria_spark.streaming.incremental import ingest_stream, refresh_index
+
+    in_dir, idx_path = str(tmp_path / "incoming"), str(tmp_path / "idx")
+    schema = "doc_id long, text string"
+    rows = [(i, f"common kw{i} body {i % 5}") for i in range(1, 51)]
+    base = spark.createDataFrame(rows, schema)
+    base.coalesce(1).write.parquet(in_dir)
+    ingest_stream(spark, in_dir, idx_path, base.schema, CFG)
+    refresh_index(spark, idx_path, CFG, mode="full")
+    s1 = head_snapshot_id(idx_path)
+    before = sorted(map(tuple, read_table(spark, idx_path, "postings", s1).collect()))
+
+    extra = spark.createDataFrame([(51, "common kw51 body fresh")], schema)
+    extra.coalesce(1).write.mode("append").parquet(in_dir)
+    ingest_stream(spark, in_dir, idx_path, extra.schema, CFG)
+    refresh_index(spark, idx_path, CFG, mode="partial")
+    assert history(idx_path)[-1]["operation"] == "partial_refresh"
+    after = sorted(map(tuple, read_table(spark, idx_path, "postings", s1).collect()))
+    assert after == before
