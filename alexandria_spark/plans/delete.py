@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 import numpy as np
@@ -75,26 +76,30 @@ def delete_docs(spark: SparkSession, index: Index, doc_ids) -> None:
     remove). A later re-ingest gets a higher version and escapes the
     tombstone, so delete→re-ingest needs no interposed compact.
 
-    Each call appends one tombstone file, commits a ``delete`` snapshot,
+    Each call adds its tombstone file to HEAD's in a ``delete`` snapshot,
     then re-resolves the effective set; readers see the delete from the
-    commit on. A crash before the commit leaves the file unlisted until the
-    next commit by any writer; a crash after it leaves a stale stamp, and
-    readers resolve the set with Spark until the next resolve."""
+    commit on. A crash before the commit leaves the doc served, as the
+    call's error says: no later commit lists the file (only the tombstone
+    writers change that table) and compact removes it unread. A crash
+    after the commit leaves a stale stamp, and readers resolve the set
+    with Spark until the next resolve."""
     from alexandria_spark.plans.versioning import current_version
 
     v = current_version(index.path)
     d = deletes_path(index)
-    os.makedirs(d, exist_ok=True)
+    listed = SnapshotView.head(index.path).entries("deletes") or []
     if isinstance(doc_ids, DataFrame):
-        doc_ids.select("doc_id").withColumn(
-            "version", F.lit(v).cast("long")
-        ).coalesce(1).write.mode("append").parquet(d)
-    else:
-        ids = np.array([int(x) for x in doc_ids], dtype=np.int64)
-        _write_atomic(pa.table({"doc_id": ids,
-                                "version": np.full(len(ids), v, np.int64)}),
-                      os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
-    commit_snapshot(index.path, "delete", {"version": v})
+        # the resolve below collects the whole effective set anyway
+        doc_ids = doc_ids.select("doc_id").toPandas()["doc_id"]
+    ids = np.array([int(x) for x in doc_ids], dtype=np.int64)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    os.makedirs(d, exist_ok=True)
+    _write_atomic(pa.table({"doc_id": ids,
+                            "version": np.full(len(ids), v, np.int64)}),
+                  os.path.join(d, name))
+    listed = listed + [{"path": name,
+                        "bytes": os.path.getsize(os.path.join(d, name))}]
+    commit_snapshot(index.path, "delete", {"version": v}, deletes=listed)
     resolve_deletes(spark, index)
 
 
@@ -287,9 +292,9 @@ def compact(spark: SparkSession, index: Index,
     recover_swap(td_path)  # repair a crash from a previous compact
     if not os.path.exists(td_path):
         raise ValueError("compact requires a materialized stage-1 term_doc table")
-    p = deletes_path(index)  # a writer: the directory, committed or not
-    dels = (_max_versions(spark.read.schema(ID_VERSION_SCHEMA).parquet(p))
-            if os.path.exists(p) else None)
+    view = SnapshotView.head(index.path)  # only committed tombstones
+    dels = (_max_versions(view.scan(spark, "deletes", schema=ID_VERSION_SCHEMA))
+            if view.files("deletes") else None)
     td = read_term_doc(spark, td_path)
     # physical cleanup is row-level and version-aware: a tombstone at
     # del_version drops only rows up to that version, so a doc re-ingested
@@ -334,10 +339,10 @@ def compact(spark: SparkSession, index: Index,
         "wave"
     ).mode("overwrite").parquet(tmp)
     atomic_swap_dir(tmp, td_path)
-    import shutil
     idx = rebuild_from_term_doc(
         spark, read_term_doc(spark, td_path), index.path, cfg, run_id="compact")
+    p = deletes_path(index)
     if os.path.exists(p):
         shutil.rmtree(p)
-        commit_snapshot(index.path, "compact")
+        commit_snapshot(index.path, "compact", deletes=[])
     return idx

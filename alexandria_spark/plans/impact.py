@@ -53,12 +53,12 @@ from alexandria_spark.plans.query import (
     _pin_table,
     _query_term_ids,
     _rank_local,
+    _search_terms,
     _semi_join_blocks,
     _shard_of,
     _shards_of,
     _term_rows,
     _topk_pairs,
-    search,
 )
 from alexandria_spark.plans.snapshots import SnapshotView
 
@@ -533,7 +533,7 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
         doc = _doc if _doc is not None else BlockTable(
             view.scan(spark, "postings", shards), None)
         exact, p2_blocks = _exact_scores_docsorted(spark, index, term_ids,
-                                                   cand, cfg, doc)
+                                                   cand, cfg, doc, view)
         docs_u = np.fromiter(exact.keys(), dtype=np.int64).view(np.uint64)
         sums = np.fromiter(exact.values(), dtype=np.float64)
         n_cand = int(len(cand))
@@ -552,8 +552,8 @@ def impact_or_topk(spark: SparkSession, index: Index, query: str,
 
 def _exact_scores_docsorted(spark: SparkSession, index: Index,
                             term_ids: list[int], cand: np.ndarray,
-                            cfg: EngineConfig, _doc: BlockTable | None = None,
-                            ) -> tuple[dict[int, float], int]:
+                            cfg: EngineConfig, doc: BlockTable,
+                            view: SnapshotView) -> tuple[dict[int, float], int]:
     """Exact OR scores for the candidate docs from the doc-sorted postings,
     completed one of two ways:
 
@@ -564,31 +564,29 @@ def _exact_scores_docsorted(spark: SparkSession, index: Index,
       task decodes, keeps the candidates' postings (sorted-array
       membership) and ships one (doc, score-f32) row per (term, doc) hit;
       the driver sums doc-major in a fixed order;
-    * past it (hot ORs with huge candidate sets at scale), ``search(k=None)``
-      over the doc-sorted table, semi-joined to the candidates: the driver
-      then receives one summed row per candidate, regardless of term count.
+    * past it (hot ORs with huge candidate sets at scale), ``search``'s
+      distributed ranking (k=None) over the doc-sorted table, semi-joined to
+      the candidates: the driver then receives one summed row per
+      candidate, regardless of term count.
 
     Returns (scores, blocks): blocks is the number of pruned blocks the flat
     job read, or -1 when the terms' blocks were read unpruned.
-    ``_doc`` is the doc-sorted table to read (ImpactEngine's pinned one, or
-    the query's view's; a fresh HEAD view's when None)."""
+    ``doc`` is the doc-sorted table to read (ImpactEngine's pinned one, or
+    the query view's scan); the tombstones come from the query's ``view``."""
     if len(cand) == 0:
         return {}, 0
     if len(cand) * len(term_ids) > _P2_FLAT_MAX_ROWS:
         keys = spark.createDataFrame(pd.DataFrame({"doc_id": cand}))
         rows = (
-            search(spark, index, "", "or", None, cfg, _table=_doc,
-                   _term_ids=term_ids)
+            _search_terms(spark, index, term_ids, "or", None, cfg, doc, view)
             .join(F.broadcast(keys), "doc_id", "left_semi")
             .collect()
         )
         return {int(r["doc_id"]): float(r["score"]) for r in rows}, -1
 
-    src = _doc.scan if _doc is not None else SnapshotView.head(index.path).scan(
-        spark, "postings", _shards_of(term_ids, cfg.num_shards))
-    blocks = _term_rows(src, term_ids, cfg.num_shards)
-    if _doc is not None and _doc.meta is not None:  # zero-job block pruning
-        meta = _doc.meta[_doc.meta["term_id"].isin(term_ids)]
+    blocks = _term_rows(doc.scan, term_ids, cfg.num_shards)
+    if doc.meta is not None:  # zero-job block pruning
+        meta = doc.meta[doc.meta["term_id"].isin(term_ids)]
     else:
         meta = _guarded_meta(blocks, _PRUNE_COLS)
     cu = np.sort(cand.view(np.uint64))

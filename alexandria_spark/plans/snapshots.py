@@ -78,36 +78,44 @@ def _data_files(table_dir: str) -> list[dict]:
     return out
 
 
+def _entry(files: list[dict]) -> dict:
+    return {"files": files, "n_files": len(files),
+            "bytes": sum(f["bytes"] for f in files)}
+
+
 def _tables(index_path: str) -> dict:
     """Every index table's data files as they are on disk now."""
-    tables = {}
-    for t in TABLES:
-        tdir = os.path.join(index_path, t)
-        if os.path.isdir(tdir):
-            files = _data_files(tdir)
-            tables[t] = {
-                "files": files,
-                "n_files": len(files),
-                "bytes": sum(f["bytes"] for f in files),
-            }
-    return tables
+    return {t: _entry(_data_files(os.path.join(index_path, t)))
+            for t in TABLES if os.path.isdir(os.path.join(index_path, t))}
 
 
 def commit_snapshot(index_path: str, operation: str,
-                    summary: dict | None = None) -> dict:
+                    summary: dict | None = None,
+                    deletes: list[dict] | None = None) -> dict:
     """Record the current state of every index table as a new snapshot and
-    atomically advance HEAD. Returns the snapshot record."""
+    atomically advance HEAD. Returns the snapshot record.
+
+    Only the tombstone writers change the ``deletes`` table: a commit
+    carries HEAD's tombstone files over unless ``deletes`` gives the new
+    list (delete_docs, compact), so the file of a delete that crashed
+    before its commit is never published by a later one. A commit with
+    ``deletes`` copies HEAD's other tables instead of walking them."""
     sdir = _snap_dir(index_path)
     os.makedirs(sdir, exist_ok=True)
-    parent = head_snapshot_id(index_path)
+    head = SnapshotView.head(index_path)
+    if deletes is None:
+        tables = _tables(index_path)
+        tables["deletes"] = _entry(head.entries("deletes") or [])
+    else:
+        tables = {**head.rec["tables"], "deletes": _entry(deletes)}
     snap_id = uuid.uuid4().hex[:16]
     rec = {
         "snapshot_id": snap_id,
-        "parent_id": parent,
+        "parent_id": head_snapshot_id(index_path),
         "timestamp": time.time(),
         "operation": operation,
         "summary": summary or {},
-        "tables": _tables(index_path),
+        "tables": tables,
     }
     tmp = os.path.join(sdir, f".tmp-{snap_id}")
     with open(tmp, "w") as fh:
@@ -168,10 +176,11 @@ class SnapshotView:
     resolved tombstone set. ``head`` holds HEAD's record, or builds one
     with ``commit_snapshot``'s walk when the index has no snapshot log.
 
-    The one directory fallback: a HEAD view whose record lacks a table on
-    disk, or whose read hits a missing file (a writer's swap or overwrite
-    removed it), rebuilds itself once from the walk. A view pinned to an
-    explicit snapshot never falls back: it raises FileNotFoundError."""
+    The directory fallback: a HEAD view whose read hits a missing file (a
+    writer's swap or overwrite removed it) rebuilds itself once from the
+    walk, and one whose record lacks a table on disk walks that table
+    alone. A view pinned to an explicit snapshot never falls back: it
+    raises FileNotFoundError."""
 
     def __init__(self, index_path: str, rec: dict | None, pinned: bool = False):
         self.path, self.pinned = index_path, pinned
@@ -185,28 +194,26 @@ class SnapshotView:
         except (OSError, ValueError):
             return cls(index_path, None)
 
-    def _fallback(self) -> bool:
-        """Rebuild a HEAD view from the walk, once; False when it may not."""
-        if self.pinned or self.rec["snapshot_id"] is None:
-            return False
-        self.rec = SnapshotView(self.path, None).rec
-        return True
-
     def _missing(self, err: Exception) -> None:
-        """A file the record lists is gone: fall back, or raise."""
+        """A file the record lists is gone: rebuild a HEAD view from the
+        walk, once, or raise."""
         if self.pinned:
             raise FileNotFoundError(
                 f"snapshot {self.rec['snapshot_id']} of {self.path!r} lists a "
                 f"file that no longer exists: {err}") from err
-        if not self._fallback():
+        if self.rec["snapshot_id"] is None:  # already the walk
             raise err
+        self.rec = SnapshotView(self.path, None).rec
 
     def entries(self, table: str) -> list[dict] | None:
-        """The record's file entries of ``table``; None without it."""
-        tab = self.rec["tables"].get(table)
-        if (tab is None and os.path.isdir(os.path.join(self.path, table))
-                and self._fallback()):
-            tab = self.rec["tables"].get(table)
+        """The record's file entries of ``table``; None without it. A HEAD
+        record that predates a table on disk gets that table's walk alone,
+        once (its other tables stay as recorded)."""
+        tables = self.rec["tables"]
+        tdir = os.path.join(self.path, table)
+        if table not in tables and not self.pinned and os.path.isdir(tdir):
+            tables[table] = _entry(_data_files(tdir))
+        tab = tables.get(table)
         return None if tab is None else tab["files"]
 
     def files(self, table: str, shards=None) -> list[tuple[str, int]]:
@@ -297,31 +304,21 @@ def expire_snapshots(index_path: str, keep_last: int = 3,
     at least one expired snapshot and (b) is referenced by NO retained
     snapshot. Files unknown to any snapshot are never touched.
 
-    Note on reachability: today's writers remove the files they supersede
-    themselves (a dir swap, a partial refresh's partition overwrite,
-    compact's tombstone rmtree), so the files only an expired snapshot
-    lists are usually gone already — as is time travel to it (module
-    docstring) — and the dead-file scan rarely finds one; it becomes the
-    one deleter once writers only add files. What this call reclaims today
-    is (a) expired snapshot records and (b) crash leftovers:
-    ``<table>_rebuilding`` staging dirs and ``<table>_old`` swap remnants
-    (after ``recover_swap`` adjudicates them).
-
-    ``_rebuilding`` staging dirs are AGE-GATED (Iceberg's
-    ``remove_orphan_files`` does the same): deleted only when nothing
-    inside has been modified for ``leftover_min_age_sec`` (default 6 h) —
-    a LIVE rebuild keeps writing into its staging dir, so fresh mtimes mean
-    a writer may be mid-flight and the dir is left for a later run; genuine
-    crash leftovers age past the gate. ``_old`` swap remnants are NOT
-    age-gated (their files carry historical mtimes regardless of writer
-    liveness, so mtime says nothing): they are adjudicated immediately via
-    ``recover_swap`` — restored as the live table when the table dir is
-    missing (crash mid-swap; waiting would serve FileNotFoundError until
-    the gate expired), deleted when the table dir exists (the swap
-    completed). The dst-missing window of a live swap is two renames wide;
-    a writer losing that race fails its maintenance job cleanly (both
-    copies intact) and reruns — ``atomic_swap_dir``'s deletes tolerate the
-    benign double-delete.
+    Today's writers remove the files they supersede themselves (a dir
+    swap, a partial refresh's partition overwrite, compact's tombstone
+    rmtree), so the dead-file scan rarely finds a file (and time travel to
+    an expired snapshot is usually gone already, module docstring); it
+    becomes the one deleter once writers only add files. What this call
+    reclaims today is expired snapshot records and crash leftovers:
+    ``<table>_rebuilding`` staging dirs, deleted only when nothing inside
+    has been modified for ``leftover_min_age_sec`` (Iceberg's
+    ``remove_orphan_files`` gates the same way: a LIVE rebuild keeps
+    writing into its dir), and ``<table>_old`` swap remnants, adjudicated
+    at once by ``recover_swap`` — restored as the live table when the table
+    dir is missing (a crash mid-swap), deleted when it exists. Their mtimes
+    say nothing about writer liveness, so they are not age-gated; a writer
+    losing the two-renames-wide race fails cleanly with both copies intact
+    and reruns.
 
     Returns {"expired": [ids], "deleted_files": n, "retained": [ids],
     "leftover_dirs": [deleted paths], "recovered_dirs": [restored paths]}.

@@ -267,12 +267,14 @@ def latency(sf_dir: str, reps: int = 5, num_shards: int = 64) -> None:
         split = None
     qmod._LOCAL_MAX_BYTES = default_guard
 
-    init = out["warm_init_sec"] = {}
+    init, init_jobs = out["warm_init_sec"], out["warm_init_jobs"] = {}, {}
 
     def timed_init(name, make):
+        jobs0 = len(st.getJobIdsForGroup() or [])
         t0 = time.time()
         engine = make()
         init[name] = round(time.time() - t0, 4)
+        init_jobs[name] = len(st.getJobIdsForGroup() or []) - jobs0
         return engine
 
     qe = timed_init("query_engine", lambda: QueryEngine(spark, idx, cfg))

@@ -1,5 +1,6 @@
 """Tombstone deletes + compaction (doc-store remove/versioning analogue)."""
 
+import json
 import os
 import uuid
 
@@ -31,7 +32,7 @@ from alexandria_spark.plans.impact import (
     impact_single_topk,
 )
 from alexandria_spark.plans.query import LocalIndex, QueryEngine, search, search_bmw
-from alexandria_spark.plans.snapshots import SnapshotView, read_table
+from alexandria_spark.plans.snapshots import SnapshotView, commit_snapshot, read_table
 from alexandria_spark.sources.tables import synth_corpus, synth_corpus_pdf
 from tests.oracle import OracleIndex
 
@@ -254,6 +255,81 @@ def test_crash_before_resolve_keeps_doc_hidden(spark, tmp_path, monkeypatch):
     assert delete_mod._load_resolved(head, delete_mod._state(head)) is None
     assert np.array_equal(effective_deletes(spark, idx), _u64(victims))
     assert all(not (ids & set(victims)) for ids in _served(spark, idx).values())
+
+
+def _no_spark_resolution(*_a, **_k):
+    raise AssertionError("a reader fell back to the Spark resolution")
+
+
+def test_crash_before_commit_leaves_doc_served(spark, tmp_path, monkeypatch):
+    """A delete that crashes between its file write and its commit did not
+    happen: the doc stays served, a later commit by another writer does not
+    publish the file (no reader resolves with Spark), and compact removes
+    the file without applying it."""
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    delete_docs(spark, idx, victims[:1])
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash between append and commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(delete_mod, "commit_snapshot", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            delete_docs(spark, idx, victims[1:])
+    assert len(os.listdir(deletes_path(idx))) == 3  # both tombstones, the set
+    commit_snapshot(idx.path, "append")  # an unrelated writer commits
+    with monkeypatch.context() as m:
+        m.setattr(delete_mod, "_resolve", _no_spark_resolution)
+        assert np.array_equal(effective_deletes(spark, idx), _u64(victims[:1]))
+        served = _served(spark, idx)
+    assert all(victims[0] not in ids for ids in served.values())
+    assert all(victims[1] in ids for key, ids in served.items()
+               if not (isinstance(key, tuple) and key[2] == "and"))
+    idx = compact(spark, idx, CFG)
+    assert not os.path.exists(deletes_path(idx))
+    kept = {r.doc_id for r in search(spark, idx, "def", "or", ALL, CFG).collect()}
+    assert victims[1] in kept and victims[0] not in kept
+
+
+def test_head_without_tombstone_entry_walks_deletes_alone(spark, tmp_path,
+                                                          monkeypatch):
+    """A HEAD record that predates the tombstone table (files on disk, no
+    ``deletes`` entry) still hides the docs. A reader walks ``deletes``
+    alone, at most once per call, and the stored set still matches."""
+    idx, victims = _tombstone_index(spark, str(tmp_path / "idx"))
+    delete_docs(spark, idx, victims)
+    sdir = os.path.join(idx.path, "_snapshots")
+    with open(os.path.join(sdir, "HEAD")) as fh:
+        rec_path = os.path.join(sdir, f"snap-{fh.read().strip()}.json")
+    with open(rec_path) as fh:
+        rec = json.load(fh)
+    del rec["tables"]["deletes"]
+    with open(rec_path, "w") as fh:
+        json.dump(rec, fh)
+
+    walks, real_walk = [], os.walk
+
+    def spy(top, *a, **k):
+        walks.append(os.path.relpath(top, idx.path))
+        return real_walk(top, *a, **k)
+
+    calls = {
+        "search": lambda: search(spark, idx, "def", "or", ALL, CFG).collect(),
+        "search_bmw": lambda: search_bmw(spark, idx, "def", "or", ALL, CFG),
+        "docpart": lambda: search_docpart(
+            spark, DocPartitionedIndex(idx.path), "def", "or", ALL, CFG).collect(),
+        "impact_or": lambda: impact_or_topk(spark, idx, "def return", ALL, CFG),
+        "local": lambda: LocalIndex(spark, idx, CFG),
+    }
+    with monkeypatch.context() as m:
+        m.setattr(os, "walk", spy)
+        m.setattr(delete_mod, "_resolve", _no_spark_resolution)
+        for name, call in calls.items():
+            walks.clear()
+            call()
+            assert walks in ([], ["deletes"]), (name, walks)
+        served = _served(spark, idx)
+    assert all(not (ids & set(victims)) for ids in served.values())
 
 
 def test_reingested_doc_escapes_through_the_fast_path(spark, tmp_path, monkeypatch):

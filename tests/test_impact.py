@@ -12,7 +12,8 @@ from alexandria_spark.plans.impact import (
     impact_or_topk,
     impact_single_topk,
 )
-from alexandria_spark.plans.query import LocalIndex
+from alexandria_spark.plans.query import BlockTable, LocalIndex
+from alexandria_spark.plans.snapshots import SnapshotView
 from alexandria_spark.sources.tables import synth_corpus
 
 CFG = EngineConfig(num_shards=8, block_size=8, shuffle_partitions=8,
@@ -285,10 +286,14 @@ def test_exact_scores_distributed_fallback(spark, idx, monkeypatch):
         [d for d, _ in impact_single_topk(spark, idx, "def", k=20, cfg=CFG)],
         dtype=np.int64,
     )
-    base, base_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    view = SnapshotView.head(idx.path)
+    doc = BlockTable(view.scan(spark, "postings"), None)
+    base, base_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG,
+                                                doc, view)
     assert base_blocks > 0
     monkeypatch.setattr(qmod, "_META_GUARD_ROWS", 1)
-    got, got_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    got, got_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG,
+                                              doc, view)
     assert got_blocks == -1  # the unpruned read actually ran
     assert set(got) == set(base)
     for d in base:
@@ -310,17 +315,21 @@ def test_exact_scores_shuffle_completion(spark, idx, monkeypatch):
         dtype=np.int64,
     )
     searches = []
-    real = imod.search
+    real = imod._search_terms
 
-    def spy(*a, **k):
-        searches.append(k.get("k", a[4] if len(a) > 4 else 10))
-        return real(*a, **k)
+    def spy(*a):
+        searches.append(a[4])
+        return real(*a)
 
-    monkeypatch.setattr(imod, "search", spy)
-    flat, flat_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    monkeypatch.setattr(imod, "_search_terms", spy)
+    view = SnapshotView.head(idx.path)
+    doc = BlockTable(view.scan(spark, "postings"), None)
+    flat, flat_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG,
+                                                doc, view)
     assert not searches and flat_blocks > 0  # the pruned flat job ran
     monkeypatch.setattr(imod, "_P2_FLAT_MAX_ROWS", 0)
-    grouped, grouped_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG)
+    grouped, grouped_blocks = _exact_scores_docsorted(spark, idx, tids, cand, CFG,
+                                                      doc, view)
     assert searches == [None] and grouped_blocks == -1  # search(k=None) ran
     assert len(flat) > 0 and set(grouped) == set(flat)
     for d in flat:

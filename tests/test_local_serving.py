@@ -190,10 +190,12 @@ def test_local_read_opens_exactly_the_resolved_snapshot(spark, tmp_path,
     shards = {query_mod._shard_of(t, CFG.num_shards) for t in tids}
 
     real_load, real_read = snapshots_mod.load_snapshot, snapshots_mod._read_files
-    resolved, opened, added = [], [], []
+    resolved, opened, added, committing = [], [], [], []
 
     def racing_load(index_path, snapshot_id=None):
         rec = real_load(index_path, snapshot_id)
+        if committing:  # a commit reads HEAD too
+            return rec
         resolved.append(rec)
         for t in tables:
             for f in rec["tables"][t]["files"]:
@@ -201,8 +203,13 @@ def test_local_read_opens_exactly_the_resolved_snapshot(spark, tmp_path,
                 dst = src.replace(".parquet", "-racing.parquet")
                 shutil.copy(src, dst)
                 added.append(dst)
-        commit_snapshot(index_path, "racing_append")
+        commit(index_path, "racing_append")
         return rec
+
+    def commit(index_path, operation):
+        committing.append(operation)
+        commit_snapshot(index_path, operation)
+        committing.clear()
 
     def spy_read(files, columns, term_ids):
         opened.append({os.path.relpath(f, path) for f in files})
@@ -227,7 +234,7 @@ def test_local_read_opens_exactly_the_resolved_snapshot(spark, tmp_path,
         for f in added:
             os.remove(f)
         added.clear()
-        commit_snapshot(path, "racing_undo")
+        commit(path, "racing_undo")
 
 
 def test_local_read_error_serves_distributed(spark, tombstoned, monkeypatch):

@@ -70,7 +70,7 @@ def test_rebuild_advances_history(spark, tmp_path):
     compact(spark, idx, CFG)
     ops = [r["operation"] for r in history(idx.path)]
     assert ops == ["build", "delete", "rebuild", "compact"]
-    assert "deletes" not in load_snapshot(idx.path)["tables"]
+    assert load_snapshot(idx.path)["tables"]["deletes"]["files"] == []
     # HEAD-pinned postings reflect the compaction (victims gone)
     from alexandria_spark.plans.blocks import decode_blocks
 
